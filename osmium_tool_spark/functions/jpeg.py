@@ -658,6 +658,8 @@ def decode(data: bytes) -> np.ndarray:
         raise ValueError("JPEG: missing SOF0/SOS")
     fw, fh, comps = frame
     sel, entropy_pos = scan
+    if len(sel) != len(comps):  # decoding it as interleaved would garble the pixels
+        raise ValueError(f"JPEG: scan names {len(sel)} of {len(comps)} components; need one interleaved scan")
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
     if hmax > 2 or vmax > 2:

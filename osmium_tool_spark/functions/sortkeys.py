@@ -33,7 +33,3 @@ def canonical_sort(df: DataFrame, extra_first: list[str] | None = None) -> DataF
     keys = [F.col(c) for c in (extra_first or [])]
     keys += [F.col("type"), id_sort_key(F.col("id")), F.col("version")]
     return df.orderBy(*keys)
-
-
-def type_rank(type_col: Column) -> Column:
-    return type_col  # already 0/1/2 in our encoding

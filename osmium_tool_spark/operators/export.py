@@ -194,17 +194,10 @@ def way_length_m(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     )
 
 
-def _ring_area2(coords) -> float:
-    x = [c[0] for c in coords]
-    y = [c[1] for c in coords]
-    n = len(coords)
-    return sum(x[i] * y[(i + 1) % n] - x[(i + 1) % n] * y[i] for i in range(n - 1))
-
-
 def _stitch_rings_impl():
     """Ring-stitching kernel, returned as a self-contained closure so the
-    grouped UDF ships it by value (executors do not have this package on
-    sys.path — see .claude/skills/verify gotchas)."""
+    grouped UDF ships it by value: executors do not have this package on
+    sys.path, so a kernel imported from it by name would fail there."""
 
     def stitch(segments):
         # simplified osmium-area-assembler: endpoint matching, no

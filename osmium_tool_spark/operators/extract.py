@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.fixpoint import CLOSURE_ROUNDS, fixpoint
 from ..functions.geometry import Extract
 from ..functions.sortkeys import canonical_sort
 from ..schema import NODE, RELATION, WAY
@@ -306,37 +307,25 @@ def _mark_relations_first_member(
     return _union([n, w]).select("extract_id", F.col("rel_id").alias("id")).distinct()
 
 
-def _relation_parent_closure(members: DataFrame, marked_rels: DataFrame, max_iters: int = 50) -> DataFrame:
+def _relation_parent_closure(members: DataFrame, marked_rels: DataFrame) -> DataFrame:
     """Fixpoint: add parents of marked relations, recursively
-    (strategy_complete_ways.cpp:36-43,178-186). Relation nesting depth is
-    tiny in practice; each round is one equi-join on the (small) rel-in-rel
-    edge set, so we localCheckpoint the frontier to truncate lineage."""
-    edges = (
-        members.filter(F.col("mtype") == RELATION)
-        .select(F.col("rel_id").alias("parent_id"), F.col("ref").alias("member_id"))
-        .persist()
-    )
+    (strategy_complete_ways.cpp:36-43,178-186). Relation nesting is rare,
+    so the rel-in-rel edge set is probed once and the fixpoint skipped
+    when it is empty."""
+    edges = members.filter(F.col("mtype") == RELATION).select(F.col("ref").alias("id"), "rel_id").persist()
     if edges.isEmpty():
         edges.unpersist()
         return marked_rels
-    acc = marked_rels.localCheckpoint(eager=True)
-    frontier = acc
-    for _ in range(max_iters):
-        parents = (
-            edges.join(
-                frontier.withColumnRenamed("id", "member_id"),
-                on="member_id",
-            )
-            .select("extract_id", F.col("parent_id").alias("id"))
-            .distinct()
-        )
-        new = parents.join(acc, on=["extract_id", "id"], how="left_anti").localCheckpoint(eager=True)
-        if new.isEmpty():
-            break
-        acc = acc.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
+    closed, converged, sizes = fixpoint(
+        marked_rels,
+        lambda frontier, _: edges.join(frontier, "id").select("extract_id", F.col("rel_id").alias("id")),
+        ["extract_id", "id"],
+        CLOSURE_ROUNDS,
+    )
     edges.unpersist()
-    return acc
+    if not converged:
+        raise ValueError(f"extract: relations nested over {CLOSURE_ROUNDS} deep, frontier sizes {sizes}")
+    return closed
 
 
 def _emit(entities: DataFrame, per_type_ids: dict[int, DataFrame]) -> DataFrame:

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.fixpoint import CLOSURE_ROUNDS, fixpoint
 from ..functions.sortkeys import canonical_sort, id_sort_key
 from ..schema import NODE, RELATION, WAY
 
@@ -119,7 +120,6 @@ def getid(
     entities: DataFrame,
     ids: dict[int, list[int]],
     recursive: bool = False,
-    max_iters: int = 50,
     persist_input: bool = True,
 ) -> DataFrame:
     """Semi-join by explicit (type,id) list; `recursive` follows references
@@ -132,8 +132,8 @@ def getid(
             entities = entities.persist()  # scanned per closure round
         rels = entities.filter(F.col("type") == RELATION)
         rel_edges = (
-            rels.select(F.col("id").alias("parent_id"), F.explode("members").alias("m"))
-            .select("parent_id", F.col("m.mtype").alias("mtype"), F.col("m.ref").alias("ref"))
+            rels.select("id", F.explode("members").alias("m"))
+            .select("id", F.col("m.mtype").alias("mtype"), F.col("m.ref").alias("ref"))
             .persist()
         )
         # 1) close relation->relation downward. Rel-in-rel edges are rare
@@ -143,23 +143,16 @@ def getid(
         rel_member_edges = rel_edges.filter(F.col("mtype") == RELATION)
         rel_ids = sel.filter(F.col("type") == RELATION).select("id")
         if not rel_member_edges.isEmpty():
-            rel_ids = rel_ids.localCheckpoint(eager=True)
-            frontier = rel_ids
-            for _ in range(max_iters):
-                children = (
-                    rel_member_edges
-                    .join(frontier.withColumnRenamed("id", "parent_id"), on="parent_id")
-                    .select(F.col("ref").alias("id"))
-                    .distinct()
-                    .join(rel_ids, on="id", how="left_anti")
-                    .localCheckpoint(eager=True)
-                )
-                if children.isEmpty():
-                    break
-                rel_ids = rel_ids.unionByName(children).localCheckpoint(eager=True)
-                frontier = children
+            rel_ids, converged, sizes = fixpoint(
+                rel_ids,
+                lambda frontier, _: rel_member_edges.join(frontier, "id").select(F.col("ref").alias("id")),
+                ["id"],
+                CLOSURE_ROUNDS,
+            )
+            if not converged:
+                raise ValueError(f"getid: relations nested over {CLOSURE_ROUNDS} deep, frontier sizes {sizes}")
         # 2) way/node members of all selected relations
-        mem = rel_edges.join(rel_ids.withColumnRenamed("id", "parent_id"), on="parent_id")
+        mem = rel_edges.join(rel_ids, "id")
         way_ids = (
             sel.filter(F.col("type") == WAY)
             .select("id")

@@ -188,7 +188,7 @@ def crop_images(
             for iid, ep, png_b, x, y, cw, ch, flip in cols:
                 img = decode(bytes(png_b))
                 if img.ndim == 3:
-                    img = img[:, :, 0] if img.shape[2] == 1 else luma(img)
+                    img = np.clip(np.rint(luma(img)), 0, 255).astype(np.uint8)
                 x, y, cw, ch = int(x), int(y), int(cw), int(ch)
                 sub = img[y:y + ch, x:x + cw]
                 if bool(flip):
@@ -281,7 +281,7 @@ def resize_images_real(
     from ..functions import png as _png
 
     enc_gray, enc_rgb = _png.encode_gray, _png.encode_rgb
-    cols = images.select(F.col(id_col).alias("image_id"), "bytes")
+    cols = images.select(F.col(id_col).cast("string").alias("image_id"), "bytes")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.fixpoint import fixpoint
+
 
 def way_edges(ways: DataFrame, id_col: str = "id", refs_col: str = "refs") -> DataFrame:
     """Undirected edge list from way geometry: one (u, v) row per
@@ -103,26 +105,14 @@ def hop_distance(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=True)
 
-    settled = (
-        sources.select(F.col(sources.columns[0]).alias("node"))
-        .distinct()
-        .withColumn("hops", F.lit(0))
-        .localCheckpoint(eager=True)
+    settled, _, _ = fixpoint(
+        sources.select(F.col(sources.columns[0]).alias("node"), F.lit(0).alias("hops")).distinct(),
+        lambda frontier, h: frontier.join(adj, frontier["node"] == adj["u"]).select(
+            F.col("v").alias("node"), F.lit(h).alias("hops")
+        ),
+        ["node"],
+        max_hops,
     )
-    frontier = settled
-    for h in range(1, max_hops + 1):
-        reached = (
-            frontier.join(adj, frontier["node"] == adj["u"])
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(settled.select("node"), "node", "left_anti")
-            .withColumn("hops", F.lit(h))
-        )
-        reached = reached.localCheckpoint(eager=True)
-        if reached.isEmpty():
-            break
-        settled = settled.unionByName(reached).localCheckpoint(eager=True)
-        frontier = reached
     return settled
 
 
@@ -141,7 +131,8 @@ def shortest_distance(
     exit) or `max_rounds` (a distance then reflects the best path of
     <= max_rounds edges — the screening contract; weighted exact
     routing beyond that belongs to a router over the extracted
-    subgraph). localCheckpoint truncates lineage per round.
+    subgraph). localCheckpoint truncates lineage per round. Not
+    functions/fixpoint: a round replaces rows rather than appending.
 
     Returns (node, dist) — dist = minimal edge-weight sum from the
     nearest source (0 for sources). Unreached nodes are absent."""

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.fixpoint import CLOSURE_ROUNDS, fixpoint
 from ..functions.sortkeys import canonical_sort
 from ..functions.tagexpr import CompiledFilter
 from ..schema import NODE, RELATION, WAY
@@ -31,30 +32,6 @@ from ..schema import NODE, RELATION, WAY
 
 def _xor(col, invert: bool):
     return ~col if invert else col
-
-
-def _rel_member_closure(rel_edges: DataFrame, start_ids: DataFrame, max_iters: int = 50) -> DataFrame:
-    """Descendant relations of `start_ids` over parent->member edges
-    (mark_rel_ids, command_tags_filter.cpp:247-254). Returns referenced
-    relation ids (start ids NOT included unless reachable)."""
-    acc = None
-    frontier = start_ids.localCheckpoint(eager=True)
-    for _ in range(max_iters):
-        children = (
-            rel_edges.join(frontier.withColumnRenamed("id", "parent_id"), on="parent_id")
-            .select(F.col("member_id").alias("id"))
-            .distinct()
-        )
-        if acc is not None:
-            children = children.join(acc, on="id", how="left_anti")
-        children = children.localCheckpoint(eager=True)
-        if children.isEmpty():
-            break
-        acc = children if acc is None else acc.unionByName(children).localCheckpoint(eager=True)
-        frontier = children
-    if acc is None:
-        return start_ids.limit(0)
-    return acc
 
 
 def tags_filter(
@@ -89,17 +66,23 @@ def tags_filter(
             F.col("m.mtype").alias("mtype"), F.col("m.ref").alias("ref")
         )
         rel_edges = (
-            rels.select(F.col("id").alias("parent_id"), F.explode("members").alias("m"))
+            rels.select("id", F.explode("members").alias("m"))
             .filter(F.col("m.mtype") == RELATION)
-            .select("parent_id", F.col("m.ref").alias("member_id"))
+            .select("id", F.col("m.ref").alias("member_id"))
         )
-        ref_rel_ids = _rel_member_closure(rel_edges, matching_rel_ids)
-        # members of matching + referenced relations
-        ref_members = rels.join(
-            matching_rel_ids.unionByName(ref_rel_ids).distinct(), on="id", how="left_semi"
-        ).select(F.explode("members").alias("m")).select(
-            F.col("m.mtype").alias("mtype"), F.col("m.ref").alias("ref")
+        # descendants over parent->member edges (mark_rel_ids, command_tags_filter.cpp:247-254);
+        # the seed ids all match, so counting them as referenced leaves emit unchanged
+        ref_rel_ids, converged, sizes = fixpoint(
+            matching_rel_ids,
+            lambda frontier, _: rel_edges.join(frontier, "id").select(F.col("member_id").alias("id")),
+            ["id"],
+            CLOSURE_ROUNDS,
         )
+        if not converged:
+            raise ValueError(f"tags_filter: relations nested over {CLOSURE_ROUNDS} deep, frontier sizes {sizes}")
+        ref_members = rels.join(ref_rel_ids, on="id", how="left_semi").select(
+            F.explode("members").alias("m")
+        ).select(F.col("m.mtype").alias("mtype"), F.col("m.ref").alias("ref"))
         ref_node_ids = ref_members.filter(F.col("mtype") == NODE).select(F.col("ref").alias("id")).distinct()
         ref_way_ids = ref_members.filter(F.col("mtype") == WAY).select(F.col("ref").alias("id")).distinct()
 

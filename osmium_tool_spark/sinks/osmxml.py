@@ -133,10 +133,6 @@ def make_row_serializer(with_visible: bool = False, indent: int = 2):
     return ser
 
 
-def serialize_osm_xml_row(r: dict, with_visible: bool = False, indent: int = 2) -> str:
-    return make_row_serializer(with_visible, indent)(r)
-
-
 def _deg(v: float) -> str:
     s = f"{v:.7f}".rstrip("0").rstrip(".")
     return s if s else "0"

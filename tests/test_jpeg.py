@@ -121,6 +121,16 @@ class TestErrors:
         with pytest.raises(ValueError, match="non-baseline"):
             jpeg.decode(bytes(b))
 
+    def test_scan_with_fewer_components_rejected(self):
+        # an SOS naming 1 of the frame's 3 components is a non-interleaved
+        # scan layout; decoding it as interleaved would garble the pixels
+        b = bytearray(jpeg.encode_rgb(smooth_rgb(16, 16), 90))
+        i = b.find(b"\xff\xda")
+        assert b[i + 4] == 3
+        b[i + 4] = 1
+        with pytest.raises(ValueError, match="scan names 1 of 3 components"):
+            jpeg.decode(bytes(b))
+
     def test_truncated_entropy(self):
         b = jpeg.encode_gray(smooth_gray(32, 32), 90)
         with pytest.raises(ValueError):

@@ -171,6 +171,45 @@ class TestCropImages:
         for r in out:
             assert r.px_sum > 0 and r.px_wsum > 0
 
+    @pytest.mark.parametrize("channels", [2, 3])
+    def test_colour_inputs_crop_luma(self, spark, channels):
+        """RGB and gray+alpha payloads crop to their rounded uint8 luma
+        (the float luma used to crash encode_gray)."""
+        import struct
+        import zlib
+
+        import numpy as np
+
+        from osmium_tool_spark.functions import png as P
+        from osmium_tool_spark.operators.multimodal import crop_images
+
+        h, w = 20, 24
+        rng = np.random.default_rng(channels)
+        src = rng.integers(0, 256, (h, w, channels), dtype=np.uint8)
+        if channels == 3:
+            payload = P.encode_rgb(src)
+        else:  # 8-bit gray+alpha PNG (color type 4)
+            raw = np.concatenate(
+                [np.zeros((h, 1), np.uint8), src.reshape(h, w * 2)], axis=1)
+
+            def chunk(typ, data):
+                return (struct.pack(">I", len(data)) + typ + data
+                        + struct.pack(">I", zlib.crc32(typ + data)))
+
+            payload = (P.SIGNATURE
+                       + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 4, 0, 0, 0))
+                       + chunk(b"IDAT", zlib.compress(raw.tobytes()))
+                       + chunk(b"IEND", b""))
+        imgs = spark.createDataFrame(
+            [(i, payload, w, h) for i in range(4)],
+            "image_id long, bytes binary, w int, h int")
+        gray = np.clip(np.rint(P.luma(src)), 0, 255).astype(np.uint8)
+        for r in crop_images(imgs, epoch=4).collect():
+            sub = gray[r.crop_y:r.crop_y + r.h, r.crop_x:r.crop_x + r.w]
+            if r.flip:
+                sub = np.fliplr(sub)
+            assert np.array_equal(P.decode(bytes(r.bytes))[:, :, 0], sub)
+
 
 class TestResizeImagesReal:
     def test_png_gray_exact_nearest(self, spark):
@@ -224,6 +263,18 @@ class TestResizeImagesReal:
         assert (small.w, small.h) == (6, 8)
         assert np.array_equal(
             _png.decode(bytes(small.bytes))[:, :, 0], small_src)
+
+    def test_long_ids(self, spark):
+        import numpy as np
+
+        from osmium_tool_spark.functions import png as _png
+        from osmium_tool_spark.operators.multimodal import resize_images_real
+
+        df = spark.createDataFrame(
+            [(7, _png.encode_gray(np.full((8, 6), 9, np.uint8)))],
+            "image_id long, bytes binary")
+        r = resize_images_real(df, max_side=4).collect()[0]
+        assert (r.image_id, r.w, r.h) == ("7", 3, 4)
 
     def test_bad_args(self, spark):
         import pytest as _pytest
