@@ -657,7 +657,7 @@ def q_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
     PNGs with the from-spec codec, pick the first grid² images per
     res-4 cell (WindowGroupLimit pre-trim), decode+thumbnail+paste into
     one mosaic PNG per cell, then DECODE the mosaic back
-    (decode_png_meta) — the oracle predicts the decoded mean luma by
+    (decode_codec_meta) — the oracle predicts the decoded mean luma by
     pure arithmetic: thumbnails of constants are constants and the
     mosaic area is a power of two, so mean == sum(vals)/grid² exactly
     in binary doubles. A wrong byte anywhere in either codec direction,
@@ -665,7 +665,7 @@ def q_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmium_tool_spark.operators.multimodal import mosaic_tiles
     from osmium_tool_spark.sources import testdata as td
     from osmium_tool_spark.sources.images import (
-        decode_png_meta,
+        decode_codec_meta,
         encode_gray_png_images,
     )
 
@@ -679,11 +679,10 @@ def q_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     imgs = encode_gray_png_images(nodes)
     tiles = mosaic_tiles(imgs, res=4, grid=2, thumb=8, order_col="id").persist()
-    meta = decode_png_meta(
+    meta = decode_codec_meta(
         tiles.select(
             F.col("cell").cast("string").alias("image_id"),
             F.col("png").alias("bytes"),
-            F.lit("png").alias("fmt"),
         )
     )
     return tiles.select("cell", "n_imgs").join(
@@ -1923,16 +1922,15 @@ def q_tile_render_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash."""
     from osmium_tool_spark.operators.tiles import render_density_tiles
     from osmium_tool_spark.sources import testdata as td
-    from osmium_tool_spark.sources.images import decode_png_meta
+    from osmium_tool_spark.sources.images import decode_codec_meta
 
     nodes = td.nodes_from_part(spark, sf_dir)
     tiles = render_density_tiles(nodes, res=10, tile_shift=6, saturation=4)
     imgs = tiles.select(
         F.concat_ws("_", "tile_ix", "tile_iy").alias("image_id"),
         F.col("png").alias("bytes"),
-        F.lit("png").alias("fmt"),
     )
-    meta = decode_png_meta(imgs)
+    meta = decode_codec_meta(imgs)
     return meta.select(
         F.col("image_id").alias("image_id"),
         F.col("w").cast("int").alias("w"),

@@ -743,12 +743,3 @@ def decode(data: bytes) -> np.ndarray:
         return gray[:, :, None]
     ycc = np.stack([planes[c[0]] for c in order], axis=2)
     return ycbcr_to_rgb(ycc)
-
-
-def luma(img: np.ndarray) -> np.ndarray:
-    """Rec.601 luma as float64 — shape contract shared with png.luma."""
-    c = img.shape[2]
-    if c in (1, 2):
-        return img[:, :, 0].astype(np.float64)
-    rgb = img[:, :, :3].astype(np.float64)
-    return 0.299 * rgb[:, :, 0] + 0.587 * rgb[:, :, 1] + 0.114 * rgb[:, :, 2]

@@ -8,10 +8,11 @@ non-interlaced, color types 0 (gray), 2 (RGB), 3 (palette), 4
 tile renderer emits plus the overwhelming majority of web map/chart
 PNGs; anything else (16-bit, interlaced, sub-byte depths) fails LOUD.
 
-This makes PNG a REAL codec path in the multimodal pipeline (the
-container has no PIL/libvips — `sources/images.decode_real` stays the
-guard-imported production swap-in for JPEG/WebP), so the PSNR
-invariant chain can run against genuinely decoded pixels. The encoder
+This makes PNG a REAL codec path in the multimodal pipeline with no
+image library (`sources/images.any_decode_fns` routes PNG payloads
+here, baseline JPEG to `functions/jpeg.py`, and only other formats to
+Pillow), so the PSNR invariant chain runs against genuinely decoded
+pixels; `luma` serves both codecs. The encoder
 is the same construction `tiles.render_density_tiles` inlines in its
 executor kernel (nested there so executors need no repo path; kept
 byte-identical — tests pin encode/decode parity between the two).

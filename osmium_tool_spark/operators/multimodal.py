@@ -3,10 +3,10 @@
 The image/audio/video payload rides as an opaque `binary` column with
 typed metadata (schema.IMAGE_SCHEMA, per BASELINE.json input_hint). The
 Spark-side plumbing here — schemas, Arrow batch shapes, partitioning,
-pure-Column index math — is real and oracled; the pixel/codec kernels
-are deterministic fakes (codec libraries are absent in this container;
-`sources/images.decode_real` documents the swap-in point). Production
-drops PIL/libvips/ffmpeg into the SAME mapInPandas bodies.
+pure-Column index math — is real and oracled. Pixel stages decode real
+payloads through `sources/images.any_decode_fns`; `resize_images` and
+`extract_features` stay deterministic fakes for the caption-text
+payloads of the `multimodal_*` registry rows.
 
 Scale shape: every stage is embarrassingly parallel over the fact table
 (no shuffle at all); frame sampling is pure Column math (sequence +
@@ -135,8 +135,8 @@ def crop_images(
     id_col: str = "image_id",
 ) -> DataFrame:
     """APPLY the per-epoch augmentation draws to real pixels: decode the
-    grayscale PNG payload with the from-spec codec (functions/png.py —
-    no image library), slice the crop rectangle, mirror when the flip
+    payload (`sources/images.any_decode_fns` — no image library
+    needed for PNG/JPEG), slice the crop rectangle, mirror when the flip
     draw says so, re-encode — (image_id, epoch, w, h, crop_x, crop_y,
     flip, bytes) where (w, h) are the crop dims and `bytes` is a valid
     PNG of the augmented image.
@@ -159,10 +159,8 @@ def crop_images(
             ).items()
         ],
     )
-    from ..sources.images import _png_by_value, any_decode_fns
-
-    _png_by_value()
     from ..functions import png as _png
+    from ..sources.images import any_decode_fns
 
     # decode dispatches PNG/JPEG (r5 mixed-table support); the crop is
     # always re-encoded as lossless PNG so the augmented pixels stay
@@ -186,7 +184,7 @@ def crop_images(
                 pdf["__crop_h"], pdf["__flip"],
             )
             for iid, ep, png_b, x, y, cw, ch, flip in cols:
-                img = decode(bytes(png_b))
+                _, img = decode(bytes(png_b))
                 if img.ndim == 3:
                     img = np.clip(np.rint(luma(img)), 0, 255).astype(np.uint8)
                 x, y, cw, ch = int(x), int(y), int(cw), int(ch)
@@ -215,9 +213,9 @@ def resize_images(images: DataFrame, max_side: int) -> DataFrame:
 
     Dimension math is real (resize_dims); the pixel resample is a
     deterministic fake — output bytes are the input truncated
-    proportionally to the pixel-count ratio — so byte counts behave like
-    a real resampler's buffers while staying codec-free. Output schema:
-    (image_id, w, h, fmt, caption, phash, bytes) with the new dims."""
+    proportionally to the pixel-count ratio. Kept because the registry
+    row `multimodal_resize` feeds it caption-text bytes, which no codec
+    can decode. Output: (image_id, w, h, fmt, caption, phash, bytes)."""
     out_w, out_h = resize_dims(F.col("w"), F.col("h"), max_side)
     staged = images.select(
         "image_id", "bytes", "fmt", "caption", "phash",
@@ -289,7 +287,7 @@ def resize_images_real(
         for pdf in batches:
             out = {"image_id": [], "w": [], "h": [], "fmt": [], "bytes": []}
             for iid, payload in zip(pdf["image_id"], pdf["bytes"]):
-                img = decode(bytes(payload))
+                _, img = decode(bytes(payload))
                 h0, w0 = img.shape[:2]
                 side = max(w0, h0)
                 if side > max_side:
@@ -325,8 +323,8 @@ def sample_frames(videos: DataFrame, every_n: int, max_frames: int = 240) -> Dat
     real container would read it from the header), every `every_n`-th
     frame index is emitted via sequence + posexplode (whole-stage
     codegen), each with its byte offset into the payload. The per-frame
-    DECODE that would follow is the pandas_udf stage of
-    `sources/images.decode_stub_meta` / `decode_real`.
+    DECODE that would follow is the mapInPandas stage of
+    `sources/images.decode_codec_meta`.
     Returns (image_id, frame_idx, n_frames, byte_off)."""
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
@@ -354,9 +352,9 @@ def extract_features(images: DataFrame, dim: int = 64) -> DataFrame:
     """Feature-extraction stage: Arrow-batched mapInPandas producing an
     `array<float>` embedding column (the input shape for the ANN / near-
     dup operators). The embedding is a deterministic fake derived from
-    phash (a real encoder runs a vision model over the decoded pixels in
-    this exact batch shape); values are portable integer math so the gate
-    oracle reproduces them. Returns (image_id, embedding)."""
+    phash, in portable integer math the gate oracle reproduces; kept
+    because the registry row `multimodal_features` feeds it caption-text
+    bytes, which no codec can decode. Returns (image_id, embedding)."""
 
     def fake_encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -403,8 +401,8 @@ def mosaic_tiles(
     of (small) image payloads, independent of corpus size. The paste
     kernel is groupBy(cell).applyInPandas over groups bounded at grid²
     rows — executor memory is bounded by the mosaic contract
-    (grid²·thumb² + payload bytes), never by the data. Decode/encode is
-    `functions/png.py` shipped by value (no repo on executor paths).
+    (grid²·thumb² + payload bytes), never by the data. Decode/encode use
+    the codecs shipped by value (no repo on executor paths).
 
     Nearest-neighbor index math is exact integer floor division
     (src_row = y·h // thumb), identical for up- and down-sampling, so a
@@ -418,10 +416,8 @@ def mosaic_tiles(
     from pyspark.sql import Window
 
     from ..functions.cells import cell_id
-    from ..sources.images import _png_by_value, any_decode_fns
-
-    _png_by_value()
     from ..functions import png as _png
+    from ..sources.images import any_decode_fns
 
     _any_decode, _any_luma = any_decode_fns()  # r5: mixed PNG+JPEG in
 
@@ -444,7 +440,7 @@ def mosaic_tiles(
         mosaic = np.zeros((side, side), np.uint8)
         n = 0
         for rk, payload in zip(pdf["__rk"], pdf["bytes"]):
-            img = _any_luma(_any_decode(bytes(payload)))
+            img = _any_luma(_any_decode(bytes(payload))[1])
             h, w = img.shape
             ys = np.arange(thumb) * h // thumb
             xs = np.arange(thumb) * w // thumb
@@ -469,8 +465,8 @@ def mosaic_tiles(
 
 
 def image_dhash(images: DataFrame, grid: int = 8) -> DataFrame:
-    """Difference hash (dHash) over REAL decoded pixels: decode each PNG
-    payload with the from-spec codec (`functions/png.py`), area-reduce
+    """Difference hash (dHash) over REAL decoded pixels: decode each
+    payload (`sources/images.any_decode_fns`), area-reduce
     the luma to a (grid+1)×grid block grid by EXACT integer block sums,
     and emit one bit per horizontally adjacent block pair
     (bit = 1 iff left sum > right sum) — the standard gradient-structure
@@ -509,7 +505,7 @@ def image_dhash(images: DataFrame, grid: int = 8) -> DataFrame:
             out = {"image_id": [], "w": [], "h": [],
                    "dhash_hi": [], "dhash_lo": []}
             for iid, payload in zip(pdf["image_id"], pdf["bytes"]):
-                img = _luma(_decode(bytes(payload)))
+                img = _luma(_decode(bytes(payload))[1])
                 h, w = img.shape
                 if w % (grid + 1) or h % grid:
                     raise ValueError(
@@ -729,7 +725,7 @@ def png_pixel_checksums(images: DataFrame, bytes_col: str = "bytes") -> DataFram
             out = {c: pdf[c] for c in keep}
             ps, ws = [], []
             for b in pdf[bytes_col]:
-                img = decode(bytes(b))
+                _, img = decode(bytes(b))
                 if img.ndim == 3:
                     img = img[:, :, 0] if img.shape[2] == 1 else luma(img)
                 a = img.astype(np.int64)

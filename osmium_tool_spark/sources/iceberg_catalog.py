@@ -30,6 +30,8 @@ this adapter adds zero driver-side data movement.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 
 _JAR_HINT = (
@@ -147,28 +149,35 @@ class IcebergTable:
     def merge_into(
         self,
         source: DataFrame,
-        on_cols: list[str],
-        update_cols: list[str] | None = None,
-        insert: bool = True,
-        delete_unmatched_source: bool = False,
+        on: list[str] | str,
+        when_matched: str = "update",
+        insert_not_matched: bool = True,
     ) -> None:
-        """SnapshotTable.merge_into: ANSI MERGE with the same clause
-        shape (matched -> update, not-matched -> insert, optional
-        source-delete), executed by the Iceberg runtime with its
-        native row-level-operation planning."""
-        if not on_cols:
-            raise ValueError("merge_into: need at least one join column")
-        source.createOrReplaceTempView("__merge_src")
-        on = " AND ".join(f"t.{c} = s.{c}" for c in on_cols)
-        clauses = []
-        if delete_unmatched_source:
-            clauses.append("WHEN MATCHED THEN DELETE")
-        elif update_cols:
-            sets = ", ".join(f"t.{c} = s.{c}" for c in update_cols)
-            clauses.append(f"WHEN MATCHED THEN UPDATE SET {sets}")
-        if insert:
-            clauses.append("WHEN NOT MATCHED THEN INSERT *")
-        self.spark.sql(
-            f"MERGE INTO {self.identifier} t USING __merge_src s "
-            f"ON {on} " + " ".join(clauses)
+        """SnapshotTable.merge_into with the same keywords: matched
+        target rows are replaced by the source row (`when_matched=
+        "update"`) or deleted (`"delete"`); unmatched source rows are
+        inserted unless `insert_not_matched=False`. Runs as one ANSI
+        MERGE planned by the Iceberg runtime. The source is exposed
+        through a temp view unique to this call, dropped afterwards,
+        so concurrent merges never see each other's source."""
+        keys = [on] if isinstance(on, str) else list(on)
+        if not keys:
+            raise ValueError("merge_into: empty key list")
+        if when_matched not in ("update", "delete"):
+            raise ValueError(
+                f"merge_into: when_matched must be update|delete, got {when_matched!r}"
+            )
+        view = f"__merge_src_{uuid.uuid4().hex}"
+        cond = " AND ".join(f"t.{c} = s.{c}" for c in keys)
+        matched = "DELETE" if when_matched == "delete" else "UPDATE SET *"
+        sql = (
+            f"MERGE INTO {self.identifier} t USING {view} s ON {cond} "
+            f"WHEN MATCHED THEN {matched}"
         )
+        if insert_not_matched:
+            sql += " WHEN NOT MATCHED THEN INSERT *"
+        source.createOrReplaceTempView(view)
+        try:
+            self.spark.sql(sql)
+        finally:
+            self.spark.catalog.dropTempView(view)

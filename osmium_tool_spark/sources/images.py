@@ -12,14 +12,13 @@ fixed-point lon/lat derive from its phash via the same Knuth-multiplicative
 mix used everywhere else — so the whole osmium operator suite (extract /
 tags-filter / sort / tiling) runs unchanged over images.
 
-Image DECODING (r5): PNG and baseline JPEG both decode for REAL via
-the from-spec codecs (`functions/png.py`, `functions/jpeg.py` —
-stdlib + numpy, no image library): `decode_codec_meta` /
-`decode_codec_pixels` dispatch on magic bytes, and `decode_real`
-falls back to them when Pillow is absent (with PIL installed it takes
-the PIL path for broader format coverage — WebP etc. still need it
-and fail loud naming it). `decode_stub_meta` keeps the
-deterministic-fake path for plumbing tests over synthetic payloads.
+Image decoding: `any_decode_fns` dispatches on magic bytes to the
+from-spec PNG and baseline-JPEG codecs (`functions/png.py`,
+`functions/jpeg.py`; stdlib + numpy), and to Pillow for anything else
+when it is installed. `decode_codec_meta` / `decode_codec_pixels` are
+the decode stages over it. `decode_stub_meta` is the fake kept for the
+synthetic tables above, whose `bytes` are caption text no codec can
+decode.
 """
 
 from __future__ import annotations
@@ -46,6 +45,7 @@ def _phash(k):
 
     return (k * MIX) % F.lit(16777216) + ((k * MIX2) % F.lit(16777216)) * F.lit(16777216)
 
+# a tag only: decoding dispatches on the payload's magic bytes, never on fmt
 FMTS = ("png", "jpeg", "webp")
 
 
@@ -125,10 +125,11 @@ def decode_stub_meta(images: DataFrame) -> DataFrame:
     """Arrow-batched 'decode' stage: real plumbing, fake pixels.
 
     The mapInPandas stage receives the binary column in Arrow batches
-    exactly as a real decoder would; per-image stats are derived
-    deterministically (mean_luma = phash % 256) instead of decoding, since
-    codec libs are absent here. Batch shape / schema / partitioning match
-    the production decode stage 1:1."""
+    exactly as `decode_codec_meta` does, but derives per-image stats
+    deterministically (mean_luma = phash % 256) instead of decoding.
+    It is kept because the registry row `multimodal_decode` feeds it
+    the caption-text `bytes` of `synth_images_from_documents`, which no
+    codec can decode."""
 
     cols = images.select("image_id", "bytes", "w", "h", "fmt", "phash")
 
@@ -149,279 +150,65 @@ def decode_stub_meta(images: DataFrame) -> DataFrame:
     return cols.mapInPandas(fake_decode, schema=DECODE_META_SCHEMA)
 
 
-def _pil_available() -> bool:
-    try:
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_real(images: DataFrame) -> DataFrame:
-    """Real pixel decode: PIL where installed, else the from-spec
-    PNG + baseline-JPEG codecs by magic-byte dispatch (r5 — closes the
-    "lossy decode needs PIL" gap: the PSNR>=40dB invariant now runs on
-    real JPEG payloads in this codec-library-free container too; only
-    formats outside {png, baseline jpeg} still require Pillow and fail
-    loud naming it).
-
-    Same mapInPandas shape and output schema as `decode_stub_meta`, but
-    w/h/mean_luma come from the DECODED image — upholding the per-row
-    invariant chain: decoded-pixel allclose (PSNR>=40dB for lossy
-    formats) + caption equality (BASELINE.json input_hint) is then
-    checked by operators/invariants.pixel_invariant_violations over
-    `decode_pixels` output."""
-    if not _pil_available():
-        return decode_codec_meta(images)
-    cols = images.select("image_id", "bytes", "fmt")
-
-    def pil_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import numpy as np
-        import pandas as pd
-        from PIL import Image  # executors need Pillow too — fail loud
-
-        for pdf in batches:
-            out = {"image_id": [], "w": [], "h": [], "fmt": [],
-                   "n_bytes": [], "mean_luma": []}
-            for iid, payload, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                         pdf["fmt"]):
-                img = Image.open(io.BytesIO(payload))
-                luma = np.asarray(img.convert("L"), dtype=np.float64)
-                out["image_id"].append(iid)
-                out["w"].append(img.width)
-                out["h"].append(img.height)
-                out["fmt"].append((img.format or fmt or "").lower())
-                out["n_bytes"].append(len(payload))
-                out["mean_luma"].append(float(luma.mean()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(pil_decode, schema=DECODE_META_SCHEMA)
-
-
 PIXELS_SCHEMA = "image_id string, w int, h int, pixels array<double>"
 
 
-def decode_pixels(images: DataFrame) -> DataFrame:
-    """Decoded grayscale samples as array<double> per image — the input
-    the PSNR>=40dB invariant consumes (operators/invariants.py). PIL
-    where installed, else the from-spec PNG/JPEG dispatch (r5), like
-    decode_real. Pixel arrays are large; run this on the (small) sample
-    under invariant check, not the full corpus."""
-    if not _pil_available():
-        return decode_codec_pixels(images)
-    cols = images.select("image_id", "bytes")
-
-    def pil_pixels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import numpy as np
-        import pandas as pd
-        from PIL import Image
-
-        for pdf in batches:
-            out = {"image_id": [], "w": [], "h": [], "pixels": []}
-            for iid, payload in zip(pdf["image_id"], pdf["bytes"]):
-                img = Image.open(io.BytesIO(payload))
-                luma = np.asarray(img.convert("L"), dtype=np.float64)
-                out["image_id"].append(iid)
-                out["w"].append(img.width)
-                out["h"].append(img.height)
-                out["pixels"].append(luma.ravel())
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(pil_pixels, schema=PIXELS_SCHEMA)
-
-
-def _png_by_value() -> None:
-    """Ship functions/png.py INTO the pickled kernel (cloudpickle's
-    public register_pickle_by_value API) so executors decode without
-    the repo on their sys.path — the same guarantee the nested-kernel
-    house pattern gives, without duplicating an 80-line codec."""
-    from pyspark import cloudpickle
-
-    from ..functions import png
-
-    cloudpickle.register_pickle_by_value(png)
-
-
-def _codecs_by_value() -> None:
-    """Ship BOTH from-spec codecs (png + jpeg) into the pickle for the
-    magic-dispatch kernels."""
+def _codecs():
+    """The from-spec codec modules (`functions/png.py`,
+    `functions/jpeg.py`), registered with cloudpickle's public
+    register_pickle_by_value so every kernel that references them
+    ships them to executors that lack the repo on their sys.path."""
     from pyspark import cloudpickle
 
     from ..functions import jpeg, png
 
     cloudpickle.register_pickle_by_value(png)
     cloudpickle.register_pickle_by_value(jpeg)
+    return png, jpeg
 
 
 def any_decode_fns():
-    """(decode, luma) closures dispatching on magic bytes — PNG
-    signature or JPEG SOI — with both from-spec codecs shipped into the
-    pickle by value. Image-consuming kernels (mosaic, dhash, pixel
-    checksums, crops) use this so MIXED PNG+JPEG tables work without
-    any codec library; anything else fails loud naming the Pillow
-    swap-in."""
-    _codecs_by_value()
-    from ..functions import jpeg as _jpeg
-    from ..functions import png as _png
-
-    sig = _png.SIGNATURE
+    """(decode, luma) for executor kernels. `decode(payload)` returns
+    (fmt, pixels) with pixels an (h, w, c) uint8 array; `luma` is
+    `png.luma` (Rec.601, float64). This is the one place that decides
+    the format, by magic bytes: the PNG signature goes to
+    `functions/png.py`, the JPEG SOI (FFD8) to `functions/jpeg.py`, and
+    anything else to Pillow when the executor can import it; without
+    Pillow it fails loud."""
+    png, jpeg = _codecs()
+    sig = png.SIGNATURE
 
     def decode(payload: bytes):
         if payload[:8] == sig:
-            return _png.decode(payload)
+            return "png", png.decode(payload)
         if payload[:2] == b"\xff\xd8":
-            return _jpeg.decode(payload)
-        raise NotImplementedError(
-            "decode: payload is neither PNG nor baseline JPEG — "
-            "other formats need Pillow"
-        )
+            return "jpeg", jpeg.decode(payload)
+        try:
+            from PIL import Image
+        except ImportError:
+            raise NotImplementedError(
+                "decode: payload is neither PNG nor baseline JPEG — "
+                "other formats need Pillow"
+            ) from None
+        import io
 
-    return decode, _png.luma
-
-
-def decode_png_meta(images: DataFrame) -> DataFrame:
-    """REAL decode stage for PNG payloads — no image library, no stub.
-
-    The from-spec codec (`functions/png.py`: chunk CRC walk, inflate,
-    all five filter types) runs inside the same Arrow-batched
-    mapInPandas shape as `decode_stub_meta`/`decode_real`; w/h come
-    from the decoded IHDR and mean_luma from the decoded pixels
-    (Rec.601 for color). Rows whose payload is not a PNG fail LOUD —
-    route mixed-format tables through fmt first (JPEG/WebP stay on the
-    PIL swap-in `decode_real`)."""
-    _png_by_value()
-    from ..functions import png as _png
-
-    cols = images.select("image_id", "bytes", "fmt")
-
-    def png_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "w": [], "h": [], "fmt": [],
-                   "n_bytes": [], "mean_luma": []}
-            for iid, payload in zip(pdf["image_id"], pdf["bytes"]):
-                img = _png.decode(bytes(payload))
-                out["image_id"].append(iid)
-                out["w"].append(img.shape[1])
-                out["h"].append(img.shape[0])
-                out["fmt"].append("png")
-                out["n_bytes"].append(len(payload))
-                out["mean_luma"].append(float(_png.luma(img).mean()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(png_decode, schema=DECODE_META_SCHEMA)
-
-
-def decode_png_pixels(images: DataFrame) -> DataFrame:
-    """Decoded grayscale samples per PNG image (PIXELS_SCHEMA) via the
-    from-spec codec — the PSNR>=40dB invariant
-    (operators/invariants.pixel_invariant_violations) now runs against
-    REAL pixels for PNG without any codec library."""
-    _png_by_value()
-    from ..functions import png as _png
-
-    cols = images.select("image_id", "bytes")
-
-    def png_pixels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "w": [], "h": [], "pixels": []}
-            for iid, payload in zip(pdf["image_id"], pdf["bytes"]):
-                img = _png.decode(bytes(payload))
-                out["image_id"].append(iid)
-                out["w"].append(img.shape[1])
-                out["h"].append(img.shape[0])
-                out["pixels"].append(_png.luma(img).ravel())
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(png_pixels, schema=PIXELS_SCHEMA)
-
-
-def encode_gray_png_images(df: DataFrame) -> DataFrame:
-    """REAL synthetic PNG payloads: for each row (image_id, w, h, val)
-    encode a constant-gray w×h image with the from-spec codec — the
-    binary column is genuine spec-conformant PNG bytes any decoder can
-    open, while every pixel stays an arithmetic function of the row, so
-    SQL oracles can predict downstream decoded statistics exactly.
-    Passthrough of all other columns; adds `bytes` + fmt='png'."""
-    _png_by_value()
-    from ..functions import png as _png
-
-    keep = [c for c in df.columns if c not in ("bytes", "fmt")]
-    cols = df.select(*keep)
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in cols.schema.fields
-    ) + ", bytes binary, fmt string"
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        for pdf in batches:
-            payloads = [
-                _png.encode_gray(np.full((int(h), int(w)), int(v) & 0xFF, np.uint8))
-                for w, h, v in zip(pdf["w"], pdf["h"], pdf["val"])
-            ]
-            pdf = pdf.copy()
-            pdf["bytes"] = payloads
-            pdf["fmt"] = "png"
-            yield pdf
+        img = Image.open(io.BytesIO(payload))
+        gray = img.mode in ("1", "L", "LA")
+        pixels = np.asarray(img.convert("L" if gray else "RGB"))
+        return (img.format or "").lower(), pixels[:, :, None] if gray else pixels
 
-    return cols.mapInPandas(enc, schema=schema)
-
-
-def encode_pattern_png_images(df: DataFrame) -> DataFrame:
-    """REAL synthetic PNG payloads with per-pixel STRUCTURE: for each row
-    (image_id, w, h, val) encode a w×h gradient pattern
-    pixel(x, y) = (val*31 + x*7 + y*13) % 256 with the from-spec codec.
-    Unlike `encode_gray_png_images` the content varies within the image,
-    so structure-sensitive kernels downstream (dHash block comparisons)
-    get non-degenerate input while every pixel stays exact integer
-    arithmetic a SQL oracle can recompute. Passthrough of all other
-    columns; adds `bytes` + fmt='png'."""
-    _png_by_value()
-    from ..functions import png as _png
-
-    keep = [c for c in df.columns if c not in ("bytes", "fmt")]
-    cols = df.select(*keep)
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in cols.schema.fields
-    ) + ", bytes binary, fmt string"
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for w, h, v in zip(pdf["w"], pdf["h"], pdf["val"]):
-                xs = (np.arange(int(w), dtype=np.int64) * 7)
-                ys = (np.arange(int(h), dtype=np.int64) * 13)
-                img = ((int(v) * 31 + ys[:, None] + xs[None, :]) % 256).astype(
-                    np.uint8
-                )
-                payloads.append(_png.encode_gray(img))
-            pdf = pdf.copy()
-            pdf["bytes"] = payloads
-            pdf["fmt"] = "png"
-            yield pdf
-
-    return cols.mapInPandas(enc, schema=schema)
+    return decode, png.luma
 
 
 def decode_codec_meta(images: DataFrame) -> DataFrame:
-    """REAL decode for mixed PNG + baseline-JPEG tables without any
-    image library: magic-byte dispatch (PNG signature / FFD8 SOI) to
-    the two from-spec codecs (`functions/png.py`, `functions/jpeg.py`).
-    Same Arrow-batched mapInPandas shape and DECODE_META_SCHEMA as
-    `decode_stub_meta`/`decode_real`; payloads that are neither format
-    fail LOUD naming the Pillow swap-in. This is what `decode_real`
-    falls back to when PIL is absent."""
+    """REAL decode stage: w/h/mean_luma from the decoded pixels of each
+    (image_id, bytes) row, fmt from the payload's magic bytes (the
+    input's fmt column, if any, is ignored). Same Arrow-batched
+    mapInPandas shape and DECODE_META_SCHEMA as `decode_stub_meta`;
+    payloads `any_decode_fns` cannot decode fail loud."""
     decode, luma = any_decode_fns()
-    # fmt is RE-DERIVED from the payload magic (the input fmt column,
-    # if any, is not required — r5 fix: the drive found the old select
-    # failing on tables without one)
     cols = images.select("image_id", "bytes")
 
     def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -430,13 +217,11 @@ def decode_codec_meta(images: DataFrame) -> DataFrame:
                    "n_bytes": [], "mean_luma": []}
             for iid, payload in zip(pdf["image_id"], pdf["bytes"]):
                 payload = bytes(payload)
-                img = decode(payload)
+                fmt, img = decode(payload)
                 out["image_id"].append(iid)
                 out["w"].append(img.shape[1])
                 out["h"].append(img.shape[0])
-                out["fmt"].append(
-                    "jpeg" if payload[:2] == b"\xff\xd8" else "png"
-                )
+                out["fmt"].append(fmt)
                 out["n_bytes"].append(len(payload))
                 out["mean_luma"].append(float(luma(img).mean()))
             yield pd.DataFrame(out)
@@ -445,9 +230,11 @@ def decode_codec_meta(images: DataFrame) -> DataFrame:
 
 
 def decode_codec_pixels(images: DataFrame) -> DataFrame:
-    """Decoded grayscale samples (PIXELS_SCHEMA) for mixed PNG + JPEG
-    payloads via the from-spec codecs — the PSNR>=40dB invariant runs
-    on real LOSSY pixels in-sandbox through this path (r5)."""
+    """Decoded luma samples (PIXELS_SCHEMA) per (image_id, bytes) row,
+    through the same dispatch as `decode_codec_meta` — the input the
+    PSNR>=40dB invariant consumes (operators/invariants.py). Pixel
+    arrays are large; run this on the sample under check, not the
+    full corpus."""
     decode, luma = any_decode_fns()
     cols = images.select("image_id", "bytes")
 
@@ -455,7 +242,7 @@ def decode_codec_pixels(images: DataFrame) -> DataFrame:
         for pdf in batches:
             out = {"image_id": [], "w": [], "h": [], "pixels": []}
             for iid, payload in zip(pdf["image_id"], pdf["bytes"]):
-                img = decode(bytes(payload))
+                _, img = decode(bytes(payload))
                 out["image_id"].append(iid)
                 out["w"].append(img.shape[1])
                 out["h"].append(img.shape[0])
@@ -465,38 +252,68 @@ def decode_codec_pixels(images: DataFrame) -> DataFrame:
     return cols.mapInPandas(dec, schema=PIXELS_SCHEMA)
 
 
-def encode_pattern_jpeg_images(df: DataFrame, quality: int = 92) -> DataFrame:
-    """REAL synthetic baseline-JPEG payloads: the same deterministic
-    gradient pattern as `encode_pattern_png_images` — pixel(x, y) =
-    (val*31 + x*7 + y*13) % 256 — but run through the from-spec LOSSY
-    encoder (`functions/jpeg.py`). The decoded pixels are no longer an
-    exact SQL-predictable function of the row (that is the point of a
-    lossy fixture); the exact pattern remains the PSNR reference the
-    invariant chain compares against. Adds `bytes` + fmt='jpeg'."""
-    _codecs_by_value()
-    from ..functions import jpeg as _jpeg
-
-    keep = [c for c in df.columns if c not in ("bytes", "fmt")]
-    cols = df.select(*keep)
+def _encode_images(df: DataFrame, fmt: str, gradient: bool, encode) -> DataFrame:
+    """Shared body of the synthetic encoders: for each row (image_id, w,
+    h, val) build a w×h gray image — constant `val & 0xFF`, or with
+    `gradient` the pattern pixel(x, y) = (val*31 + x*7 + y*13) % 256 —
+    and store `encode(image)` as `bytes`. Every other column passes
+    through; `fmt` is set to the given constant."""
+    cols = df.select(*[c for c in df.columns if c not in ("bytes", "fmt")])
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in cols.schema.fields
     ) + ", bytes binary, fmt string"
 
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pixels(w: int, h: int, v: int):
         import numpy as np
 
+        if not gradient:
+            return np.full((h, w), v & 0xFF, np.uint8)
+        xs = np.arange(w, dtype=np.int64) * 7
+        ys = np.arange(h, dtype=np.int64) * 13
+        return ((v * 31 + ys[:, None] + xs[None, :]) % 256).astype(np.uint8)
+
+    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = []
-            for w, h, v in zip(pdf["w"], pdf["h"], pdf["val"]):
-                xs = (np.arange(int(w), dtype=np.int64) * 7)
-                ys = (np.arange(int(h), dtype=np.int64) * 13)
-                img = ((int(v) * 31 + ys[:, None] + xs[None, :]) % 256).astype(
-                    np.uint8
-                )
-                payloads.append(_jpeg.encode_gray(img, quality=quality))
             pdf = pdf.copy()
-            pdf["bytes"] = payloads
-            pdf["fmt"] = "jpeg"
+            pdf["bytes"] = [
+                encode(pixels(int(w), int(h), int(v)))
+                for w, h, v in zip(pdf["w"], pdf["h"], pdf["val"])
+            ]
+            pdf["fmt"] = fmt
             yield pdf
 
     return cols.mapInPandas(enc, schema=schema)
+
+
+def encode_gray_png_images(df: DataFrame) -> DataFrame:
+    """REAL synthetic PNG payloads: a constant-gray w×h image per row
+    (image_id, w, h, val), encoded with the from-spec codec — genuine
+    spec-conformant PNG bytes whose every pixel is an arithmetic
+    function of the row, so SQL oracles can predict downstream decoded
+    statistics exactly. Adds `bytes` + fmt='png'."""
+    png, _ = _codecs()
+    return _encode_images(df, "png", False, png.encode_gray)
+
+
+def encode_pattern_png_images(df: DataFrame) -> DataFrame:
+    """REAL synthetic PNG payloads with per-pixel STRUCTURE: the
+    gradient pixel(x, y) = (val*31 + x*7 + y*13) % 256 per row
+    (image_id, w, h, val), so structure-sensitive kernels downstream
+    (dHash block comparisons) get non-degenerate input while every
+    pixel stays exact integer arithmetic a SQL oracle can recompute.
+    Adds `bytes` + fmt='png'."""
+    png, _ = _codecs()
+    return _encode_images(df, "png", True, png.encode_gray)
+
+
+def encode_pattern_jpeg_images(df: DataFrame, quality: int = 92) -> DataFrame:
+    """REAL synthetic baseline-JPEG payloads: the same gradient pattern
+    as `encode_pattern_png_images`, run through the from-spec LOSSY
+    encoder. The decoded pixels are no longer an exact SQL-predictable
+    function of the row (that is the point of a lossy fixture); the
+    exact pattern remains the PSNR reference the invariant chain
+    compares against. Adds `bytes` + fmt='jpeg'."""
+    _, jpeg = _codecs()
+    return _encode_images(
+        df, "jpeg", True, lambda img: jpeg.encode_gray(img, quality=quality)
+    )

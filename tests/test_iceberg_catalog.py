@@ -7,6 +7,8 @@ pattern); the always-run tests pin the availability probe and the
 loud, actionable error contract so the swap-in point cannot rot.
 """
 
+import re
+
 import pytest
 
 from osmium_tool_spark.sources.iceberg_catalog import (
@@ -32,6 +34,38 @@ class TestContractAlwaysRun:
     def test_identifier_validation(self, spark):
         with pytest.raises(ValueError, match="catalog.namespace.table"):
             IcebergTable(spark, "just_a_table")
+
+
+class _SqlRecorder:
+    """Stands in for the session of an IcebergTable built without the
+    jar: records the SQL it is sent, keeps the real temp-view catalog."""
+
+    def __init__(self, spark):
+        self.catalog = spark.catalog
+        self.statements = []
+
+    def sql(self, text):
+        self.statements.append(text)
+
+
+def test_merge_into_sql_and_source_views(spark):
+    t = IcebergTable.__new__(IcebergTable)
+    t.spark = rec = _SqlRecorder(spark)
+    t.identifier = "local.db.t"
+    src = spark.createDataFrame([(1, 2)], "id long, v long")
+    t.merge_into(src, on="id", when_matched="delete", insert_not_matched=False)
+    t.merge_into(src, on=["id", "v"])
+    views = [re.search(r" USING (\S+) s ON ", m).group(1) for m in rec.statements]
+    assert len(views) == 2 and views[0] != views[1]
+    assert rec.statements == [
+        f"MERGE INTO local.db.t t USING {views[0]} s ON t.id = s.id "
+        "WHEN MATCHED THEN DELETE",
+        f"MERGE INTO local.db.t t USING {views[1]} s ON t.id = s.id AND "
+        "t.v = s.v WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+    ]
+    assert not any(spark.catalog.tableExists(v) for v in views)
+    with pytest.raises(ValueError, match="when_matched"):
+        t.merge_into(src, on="id", when_matched="upsert")
 
 
 class TestIntegration:
@@ -67,6 +101,6 @@ class TestIntegration:
         src = spark.createDataFrame(
             [(2, 99), (10, 100)], "id long, v long"
         )
-        t.merge_into(src, on_cols=["id"], update_cols=["v"])
+        t.merge_into(src, on=["id"])
         got = {r.id: r.v for r in t.read().collect()}
         assert got[2] == 99 and got[10] == 100 and len(got) == 5

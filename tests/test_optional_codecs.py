@@ -1,8 +1,8 @@
-"""Optional-codec paths (round-4): lz4/zstd PBF blobs and the PIL
-decode swap-in. The container ships neither library, so the positive
-tests skip-mark cleanly and the ALWAYS-run tests pin the loud-error
-contract (silent empty reads / silent stub fallbacks are the failure
-mode these guard against)."""
+"""Optional-codec paths: lz4/zstd PBF blobs and the Pillow branch of
+the image decode dispatch (sources/images.any_decode_fns). Without
+those libraries the positive tests skip-mark cleanly and the
+ALWAYS-run tests pin the loud-error contract (silent empty reads /
+silent stub fallbacks are the failure mode these guard against)."""
 
 import struct
 
@@ -144,25 +144,24 @@ def _recompress(src, dst, codec):
 
 
 class TestDecodeRealContract:
+    """The real (non-stub) decode stages over the magic-byte dispatch."""
+
     @pytest.mark.skipif(HAS_PIL, reason="PIL installed: loud error N/A")
-    def test_decode_real_non_codec_payload_is_loud_without_pil(self, spark):
-        """r5: without PIL decode_real now FALLS BACK to the from-spec
-        PNG/JPEG dispatch instead of raising up front — the loud error
-        moves to execution time, only for payloads that are neither
-        format (synth_images bytes are hex text)."""
-        from osmium_tool_spark.sources.images import decode_real, synth_images
+    def test_non_codec_payload_is_loud_without_pil(self, spark):
+        """Payloads that are neither PNG nor JPEG fail loud at execution
+        time when Pillow is absent (synth_images bytes are hex text)."""
+        from osmium_tool_spark.sources.images import decode_codec_meta, synth_images
 
         with pytest.raises(Exception, match="neither PNG nor baseline"):
-            decode_real(synth_images(spark, 4)).collect()
+            decode_codec_meta(synth_images(spark, 4)).collect()
 
-    def test_decode_real_from_spec_jpeg_fallback(self, spark):
-        """Without PIL, decode_real must decode real baseline-JPEG
-        payloads via functions/jpeg.py (with PIL it takes the PIL
-        path — either way this runs, no skip)."""
+    def test_from_spec_jpeg_decode(self, spark):
+        """Baseline-JPEG payloads decode through functions/jpeg.py
+        whether or not Pillow is installed."""
         import numpy as np
 
         from osmium_tool_spark.functions import jpeg as _jpeg
-        from osmium_tool_spark.sources.images import decode_real
+        from osmium_tool_spark.sources.images import decode_codec_meta
 
         rows = []
         for i in range(4):
@@ -173,7 +172,7 @@ class TestDecodeRealContract:
         df = spark.createDataFrame(
             rows, "image_id string, bytes binary, w int, h int, fmt string,"
                   " caption string, phash long")
-        got = {r["image_id"]: r for r in decode_real(df).collect()}
+        got = {r["image_id"]: r for r in decode_codec_meta(df).collect()}
         assert len(got) == 4
         assert all(r["w"] == 24 and r["h"] == 16 and r["fmt"] == "jpeg"
                    for r in got.values())
@@ -191,7 +190,7 @@ class TestDecodeRealContract:
         from osmium_tool_spark.operators.invariants import (
             pixel_invariant_violations,
         )
-        from osmium_tool_spark.sources.images import decode_pixels
+        from osmium_tool_spark.sources.images import decode_codec_pixels
 
         rng = np.random.default_rng(11)
         rows_a, rows_b, rows_bad = [], [], []
@@ -214,36 +213,40 @@ class TestDecodeRealContract:
                             "image_id")
 
         good = pixel_invariant_violations(
-            with_meta(A, decode_pixels(A)), with_meta(B, decode_pixels(B)))
+            with_meta(A, decode_codec_pixels(A)),
+            with_meta(B, decode_codec_pixels(B)))
         assert good.count() == 0
         bad = pixel_invariant_violations(
-            with_meta(A, decode_pixels(A)),
-            with_meta(BAD, decode_pixels(BAD)))
+            with_meta(A, decode_codec_pixels(A)),
+            with_meta(BAD, decode_codec_pixels(BAD)))
         assert bad.filter("reason = 'psnr_below_threshold'").count() == 4
 
     @pytest.mark.skipif(not HAS_PIL, reason="Pillow not installed")
-    def test_decode_real_png(self, spark, tmp_path):
+    def test_pillow_branch_decodes_bmp(self, spark):
+        """Formats outside PNG/JPEG reach the Pillow branch: BMP rows
+        decode to the pixels they were written from."""
         import io
 
         import numpy as np
         from PIL import Image
 
-        rows = []
+        from osmium_tool_spark.functions import png as _png
+        from osmium_tool_spark.sources.images import decode_codec_meta
+
+        rows, want = [], {}
         rng = np.random.default_rng(7)
         for i in range(6):
             arr = rng.integers(0, 256, size=(8, 12, 3), dtype=np.uint8)
             buf = io.BytesIO()
-            Image.fromarray(arr).save(buf, format="PNG")
-            rows.append((f"img{i}", buf.getvalue(), 12, 8, "png",
-                         f"cap{i}", i))
-        df = spark.createDataFrame(
-            rows, "image_id string, bytes binary, w int, h int, fmt string,"
-                  " caption string, phash long")
-        from osmium_tool_spark.sources.images import decode_real
-
-        got = {r["image_id"]: r for r in decode_real(df).collect()}
+            Image.fromarray(arr).save(buf, format="BMP")
+            rows.append((f"img{i}", buf.getvalue()))
+            want[f"img{i}"] = float(_png.luma(arr).mean())
+        df = spark.createDataFrame(rows, "image_id string, bytes binary")
+        got = {r["image_id"]: r for r in decode_codec_meta(df).collect()}
         assert len(got) == 6
-        assert all(r["w"] == 12 and r["h"] == 8 for r in got.values())
+        assert all((r["w"], r["h"], r["fmt"]) == (12, 8, "bmp")
+                   for r in got.values())
+        assert all(got[k]["mean_luma"] == v for k, v in want.items())
 
     @pytest.mark.skipif(not HAS_PIL, reason="Pillow not installed")
     def test_psnr_invariant_real_jpeg(self, spark):
@@ -258,7 +261,7 @@ class TestDecodeRealContract:
         from osmium_tool_spark.operators.invariants import (
             pixel_invariant_violations,
         )
-        from osmium_tool_spark.sources.images import decode_pixels
+        from osmium_tool_spark.sources.images import decode_codec_pixels
 
         rng = np.random.default_rng(11)
         rows_a, rows_b, rows_bad = [], [], []
@@ -284,8 +287,8 @@ class TestDecodeRealContract:
             return pix.join(df.select("image_id", "fmt", "caption"),
                             "image_id")
 
-        pa = with_meta(A, decode_pixels(A))
-        pb = with_meta(B, decode_pixels(B))
-        pbad = with_meta(BAD, decode_pixels(BAD))
+        pa = with_meta(A, decode_codec_pixels(A))
+        pb = with_meta(B, decode_codec_pixels(B))
+        pbad = with_meta(BAD, decode_codec_pixels(BAD))
         assert pixel_invariant_violations(pa, pb).count() == 0
         assert pixel_invariant_violations(pa, pbad).count() > 0

@@ -1,5 +1,5 @@
-"""From-spec PNG codec (functions/png.py) and the real PNG decode
-stages (sources/images.decode_png_meta / decode_png_pixels).
+"""From-spec PNG codec (functions/png.py) and the real decode stages
+(sources/images.decode_codec_meta / decode_codec_pixels).
 
 The filter-type tests build filtered scanlines with an INDEPENDENT
 per-spec reference implementation written here, so the decoder's
@@ -123,37 +123,50 @@ def test_luma_rec601():
     assert abs(lm[0, 1] - 0.587 * 255) < 1e-9
 
 
-def test_decode_png_meta_spark(spark):
-    # real PNGs through the Arrow-batched decode stage: rendered tiles
+def test_decode_codec_meta_spark(spark):
+    # gray PNG (rendered tiles), RGB PNG and baseline-JPEG rows through
+    # the Arrow-batched decode stage, checked against the codecs
+    # called directly in the driver
+    from osmium_tool_spark.functions import jpeg
     from osmium_tool_spark.operators.tiles import render_density_tiles
-    from osmium_tool_spark.sources.images import decode_png_meta
+    from osmium_tool_spark.sources.images import decode_codec_meta
 
     pts = spark.range(300).select(
         ((F.col("id") * 2654435761) % 3_600_000_000 - 1_800_000_000).alias("lon"),
         ((F.col("id") * 2246822519) % 1_800_000_000 - 900_000_000).alias("lat"),
     )
     tiles = render_density_tiles(pts, res=6, tile_shift=3)
-    imgs = tiles.select(
-        F.concat_ws("_", "tile_ix", "tile_iy").alias("image_id"),
-        F.col("png").alias("bytes"),
-        F.lit("png").alias("fmt"),
-        F.col("n_px"),
-    )
-    meta = {r.image_id: r for r in decode_png_meta(imgs).collect()}
-    assert len(meta) == tiles.count()
-    for r in meta.values():
-        assert (r.w, r.h, r.fmt) == (8, 8, "png")
-    # driver-side truth: decode each PNG here and compare mean_luma
-    for row in imgs.collect():
-        img = png.decode(bytes(row.bytes))
-        assert abs(meta[row.image_id].mean_luma - png.luma(img).mean()) < 1e-12
+    rows = [
+        (r.image_id, bytes(r.bytes))
+        for r in tiles.select(
+            F.concat_ws("_", "tile_ix", "tile_iy").alias("image_id"),
+            F.col("png").alias("bytes"),
+        ).collect()
+    ]
+    rgb = _rng_img(9, 13, 3, 1)
+    gray = _rng_img(16, 24, 1, 2)[:, :, 0]
+    rows += [
+        ("rgb_png", png.encode_rgb(rgb)),
+        ("gray_jpeg", jpeg.encode_gray(gray, 90)),
+        ("rgb_jpeg", jpeg.encode_rgb(rgb, 90)),
+    ]
+    imgs = spark.createDataFrame(rows, "image_id string, bytes binary")
+    meta = {r.image_id: r for r in decode_codec_meta(imgs).collect()}
+    assert len(meta) == len(rows) == tiles.count() + 3
+    for iid, payload in rows:
+        fmt = "jpeg" if iid.endswith("_jpeg") else "png"
+        img = (jpeg if fmt == "jpeg" else png).decode(payload)
+        r = meta[iid]
+        assert (r.w, r.h, r.fmt, r.n_bytes) == (img.shape[1], img.shape[0], fmt, len(payload))
+        assert r.mean_luma == png.luma(img).mean()
+    assert (meta["rgb_png"].w, meta["rgb_jpeg"].h, meta["gray_jpeg"].w) == (13, 9, 24)
 
 
 def test_psnr_invariant_on_real_pixels(spark):
     # lossless re-encode of REAL decoded pixels -> zero violations;
     # a tampered pixel -> exactly one violation.
     from osmium_tool_spark.operators.invariants import pixel_invariant_violations
-    from osmium_tool_spark.sources.images import decode_png_pixels
+    from osmium_tool_spark.sources.images import decode_codec_pixels
 
     rng = np.random.default_rng(3)
     payloads = [
@@ -161,7 +174,7 @@ def test_psnr_invariant_on_real_pixels(spark):
         ("b", png.encode_gray(rng.integers(0, 256, (8, 8)).astype(np.uint8))),
     ]
     imgs = spark.createDataFrame(payloads, "image_id string, bytes binary")
-    before = decode_png_pixels(imgs).withColumn("fmt", F.lit("png")).withColumn(
+    before = decode_codec_pixels(imgs).withColumn("fmt", F.lit("png")).withColumn(
         "caption", F.col("image_id")
     )
     # re-encode the decoded pixels and decode again (lossless loop)
@@ -169,7 +182,7 @@ def test_psnr_invariant_on_real_pixels(spark):
     for iid, data in payloads:
         img = png.decode(data)[:, :, 0]
         redec.append((iid, png.encode_gray(img)))
-    after = decode_png_pixels(
+    after = decode_codec_pixels(
         spark.createDataFrame(redec, "image_id string, bytes binary")
     ).withColumn("caption", F.col("image_id"))
     assert pixel_invariant_violations(before, after).count() == 0
@@ -180,7 +193,7 @@ def test_psnr_invariant_on_real_pixels(spark):
     tampered = [(iid, d) for iid, d in redec if iid == "a"] + [
         ("b", png.encode_gray(img_b))
     ]
-    after2 = decode_png_pixels(
+    after2 = decode_codec_pixels(
         spark.createDataFrame(tampered, "image_id string, bytes binary")
     ).withColumn("caption", F.col("image_id"))
     bad = pixel_invariant_violations(before, after2).collect()
