@@ -48,6 +48,21 @@ def _iy(lat: Column, res: int) -> Column:
     return F.least(F.floor(raw).cast("long"), F.lit(n - 1))
 
 
+def ord_x(c: Column, res: int) -> Column:
+    """Cell x ordinate at `res` clamped to [0, 2^res - 1] on both sides
+    (_ix clamps only the top); double division of exactly-representable
+    longs, mirrored verbatim in the DuckDB oracle twins."""
+    n = 1 << res
+    raw = ((c - F.lit(_LON_MIN)) * n) / F.lit(_LON_SPAN)
+    return F.greatest(F.least(F.floor(raw).cast("long"), F.lit(n - 1)), F.lit(0))
+
+
+def ord_y(c: Column, res: int) -> Column:
+    n = 1 << res
+    raw = ((c - F.lit(_LAT_MIN)) * n) / F.lit(_LAT_SPAN)
+    return F.greatest(F.least(F.floor(raw).cast("long"), F.lit(n - 1)), F.lit(0))
+
+
 def _interleave(x: Column, y: Column, res: int) -> Column:
     """Interleave res-bit x and y into a 2*res-bit Morton code (Column)."""
     code = F.lit(0).cast("long")

@@ -19,12 +19,16 @@ Semantics-parity notes (vs the reference, /root/reference):
 Implementation is numpy-vectorized (Arrow batches via mapInPandas), never
 per-row Python: for each batch we group points by band and evaluate the
 (points_in_band × segments_in_band) crossing matrix with broadcasting.
-The band index is built once on the driver and broadcast.
+This module is the only numpy PIP code. Executor kernels (extract's
+large-polygon path, spatial_join's index builder and verifier) close over
+BandIndex/CellCover objects after `ship_by_value()`, so the classes travel
+with the pickled closure to executors that lack the package on sys.path.
 """
 
 from __future__ import annotations
 
 import json
+import sys
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -33,6 +37,23 @@ from ..schema import fp
 
 SEGMENTS_PER_BAND = 10
 MAX_BANDS = 10_000
+
+
+def ship_by_value() -> None:
+    """Register this module with cloudpickle's register_pickle_by_value so
+    every kernel closure that references BandIndex/CellCover ships the
+    classes with it. Call it where the kernel is built, and pass the
+    objects in the closure, never through `sc.broadcast`: broadcast uses
+    plain pickle, which pickles classes by reference."""
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def rings_from_structs(rings) -> list[np.ndarray]:
+    """A `rings` cell of array<array<struct<x:long,y:long>>> as delivered
+    to a pandas kernel -> list of (k,2) int64 arrays for BandIndex.build."""
+    return [np.asarray([[p["x"], p["y"]] for p in ring], dtype=np.int64) for ring in rings]
 
 
 def signed_area2(ring: np.ndarray) -> int:
@@ -61,7 +82,7 @@ def normalize_ring(ring: np.ndarray, outer: bool) -> np.ndarray:
 
 @dataclass
 class BandIndex:
-    """Broadcastable y-band segment index of one (multi)polygon."""
+    """Y-band segment index of one (multi)polygon."""
 
     # segments: (N,4) int64 [x1,y1,x2,y2]
     segs: np.ndarray
@@ -141,14 +162,6 @@ class BandIndex:
             out[sel] = on_vertex.any(axis=1) | inside
         return out
 
-    # --- serialization for broadcast across Arrow workers -----------------
-    def to_tuple(self):
-        return (self.segs, self.minx, self.miny, self.maxx, self.maxy, self.num_bands, self.dy, self.bands)
-
-    @classmethod
-    def from_tuple(cls, t):
-        return cls(*t)
-
 
 @dataclass
 class CellCover:
@@ -167,15 +180,12 @@ class CellCover:
     in boundary cells by construction, where the ray cast decides).
     """
 
-    minx: int
-    miny: int
+    index: BandIndex
     gx: int  # cell width  (fixed-point units)
     gy: int  # cell height
-    ncols: int
-    nrows: int
-    classes: np.ndarray  # int8, shape (nrows, ncols)
+    classes: np.ndarray  # int8, shape (nrows, ncols), origin (index.minx, index.miny)
 
-    MAX_CELLS = 16384  # ~128x128: 16 KiB broadcast per polygon
+    MAX_CELLS = 16384  # ~128x128: 16 KiB shipped per polygon
 
     @classmethod
     def build(cls, index: BandIndex, max_cells: int = MAX_CELLS) -> "CellCover | None":
@@ -205,13 +215,22 @@ class CellCover:
             cx = index.minx + cols.astype(np.int64) * gx + gx // 2
             cy = index.miny + rows.astype(np.int64) * gy + gy // 2
             grid[rows, cols] = index.contains(cx, cy).astype(np.int8)
-        return cls(index.minx, index.miny, gx, gy, ncols, nrows, grid)
+        return cls(index, gx, gy, grid)
 
-    def classify(self, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
-        """Per-point class (0/1/2) for points WITHIN the envelope."""
-        col = (xs - self.minx) // self.gx
-        row = (ys - self.miny) // self.gy
-        return self.classes[row, col]
+    def contains(self, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
+        """Same verdicts as `index.contains`: envelope test, then the
+        cell lookup; only points in boundary cells run the ray cast."""
+        xs = np.asarray(xs, dtype=np.int64)
+        ys = np.asarray(ys, dtype=np.int64)
+        idx = self.index
+        out = np.zeros(len(xs), dtype=bool)
+        env = (xs >= idx.minx) & (xs <= idx.maxx) & (ys >= idx.miny) & (ys <= idx.maxy)
+        sel = np.flatnonzero(env)
+        cls = self.classes[(ys[sel] - idx.miny) // self.gy, (xs[sel] - idx.minx) // self.gx]
+        out[sel[cls == 1]] = True
+        edge = sel[cls == 2]
+        out[edge] = idx.contains(xs[edge], ys[edge])
+        return out
 
 
 @dataclass

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.fixpoint import CLOSURE_ROUNDS, fixpoint
-from ..functions.geometry import Extract
+from ..functions.geometry import CellCover, Extract, ship_by_value
 from ..functions.sortkeys import canonical_sort
 from ..schema import NODE, RELATION, WAY
 
@@ -163,77 +163,22 @@ def assign_extracts(
         if salt_partitions:
             cand = cand.repartition(salt_partitions)  # defuse dense-region skew
 
-        spark = nodes.sparkSession
-        # broadcast PLAIN data (ints + numpy arrays), not package classes:
-        # executors only need numpy, not osmium_tool_spark on sys.path.
-        # The cell cover (S2/H3-style interior covering, CellCover
+        # the cell cover (S2/H3-style interior covering, CellCover
         # docstring) classifies grid cells driver-side ONCE so executors
-        # ray-cast only the points in boundary cells — at planet scale the
-        # interior of a large region is the overwhelming majority and its
-        # points resolve with one int8 lookup each.
-        from ..functions.geometry import CellCover
-
-        payload = []
-        for e in polys:
-            cover = CellCover.build(e.index)
-            cov = (
-                (cover.classes, cover.minx, cover.miny, cover.gx, cover.gy)
-                if cover is not None
-                else None
-            )
-            payload.append(
-                (e.extract_id, e.minx, e.miny, e.maxx, e.maxy, e.index.dy, e.index.bands, cov)
-            )
-        bc = spark.sparkContext.broadcast(payload)
-        pass_cols = list(payload_cols)
+        # ray-cast only the points in boundary cells
+        ship_by_value()
+        regions = [(e.extract_id, CellCover.build(e.index)) for e in polys]
 
         def pip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np  # local import: runs on bare executors
-
-            def raycast(xs, ys, sel, res, miny, dy, bands):
-                # exact int64 even-odd ray cast; endpoint == point -> inside
-                # (parity with reference extract_polygon.cpp:103-156)
-                band_of = (ys - miny) // dy
-                for b in np.unique(band_of[sel]):
-                    segs = bands[int(b)]
-                    pick = sel[band_of[sel] == b]
-                    if len(segs) == 0:
-                        continue
-                    px, py = xs[pick][:, None], ys[pick][:, None]
-                    x1, y1, x2, y2 = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
-                    on_vertex = ((px == x1) & (py == y1)) | ((px == x2) & (py == y2))
-                    straddle = (y2 > py) != (y1 > py)
-                    ax, ay = x1 - x2, y1 - y2
-                    comp = (px - x2) * ay < ax * (py - y2)
-                    toggle = straddle & ((ay > 0) == comp)
-                    res[pick] = on_vertex.any(axis=1) | (toggle.sum(axis=1) & 1).astype(bool)
-
-            def contains(xs, ys, minx, miny, maxx, maxy, dy, bands, cov):
-                res = np.zeros(len(xs), dtype=bool)
-                env = (xs >= minx) & (xs <= maxx) & (ys >= miny) & (ys <= maxy)
-                if not env.any():
-                    return res
-                sel = np.flatnonzero(env)
-                if cov is not None:
-                    grid, cminx, cminy, gx, gy = cov
-                    cls = grid[(ys[sel] - cminy) // gy, (xs[sel] - cminx) // gx]
-                    res[sel[cls == 1]] = True  # interior cell: O(1) verdict
-                    sel = sel[cls == 2]  # only boundary cells ray-cast
-                    if not len(sel):
-                        return res
-                raycast(xs, ys, sel, res, miny, dy, bands)
-                return res
-
-            exs = bc.value
             for pdf in batches:
                 xs = pdf["lon"].to_numpy("int64")
                 ys = pdf["lat"].to_numpy("int64")
                 frames = []
-                for eid, minx, miny, maxx, maxy, dy, bands, cov in exs:
-                    mask = contains(xs, ys, minx, miny, maxx, maxy, dy, bands, cov)
+                for eid, region in regions:
+                    mask = region.contains(xs, ys)
                     if mask.any():
                         cols = {"extract_id": eid, "id": pdf["id"].to_numpy()[mask]}
-                        for c in pass_cols:
+                        for c in payload_cols:
                             cols[c] = pdf[c].to_numpy()[mask]
                         frames.append(pd.DataFrame(cols))
                 if frames:

@@ -35,9 +35,10 @@ would make the interior shortcut quietly disappear.
 
 Polygon geometry rides a DataFrame column: rings as
 array<array<struct<x:long,y:long>>> (outer + inner pooled, even-odd —
-the multipolygon model of functions/geometry.BandIndex). Kernels are
-nested closures (serialized by value — executors never import this
-package).
+the multipolygon model of functions/geometry.BandIndex). Both kernels
+turn a polygon's rings into a geometry.BandIndex and run its exact
+`contains`; geometry.ship_by_value() lets the nested closures carry that
+module to executors that do not have this package on sys.path.
 """
 
 from __future__ import annotations
@@ -49,42 +50,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import _LAT_MIN, _LAT_SPAN, _LON_MIN, _LON_SPAN, cell_id
+from ..functions.cells import _LAT_MIN, _LAT_SPAN, _LON_MIN, _LON_SPAN, cell_id, ord_x, ord_y
+from ..functions.geometry import BandIndex, rings_from_structs, ship_by_value
 
 RINGS_TYPE = "array<array<struct<x:long,y:long>>>"
-
-# kernel source shared by the index builder and the verifier; exec'd inside
-# each closure so cloudpickle ships it by value (executors have numpy only)
-_KERNELS = r"""
-import numpy as np
-
-
-def segments_of(rings):
-    segs = []
-    for ring in rings:
-        r = np.asarray([[p["x"], p["y"]] for p in ring], dtype=np.int64)
-        if len(r) < 2:
-            continue
-        a, b = r[:-1], r[1:]
-        keep = ~np.all(a == b, axis=1)
-        segs.append(np.hstack([a[keep], b[keep]]))
-    return np.vstack(segs) if segs else np.empty((0, 4), dtype=np.int64)
-
-
-def raycast(segs, xs, ys):
-    # exact int64 even-odd PIP, endpoint==point -> inside
-    # (parity with reference extract_polygon.cpp:103-156)
-    if len(segs) == 0:
-        return np.zeros(len(xs), dtype=bool)
-    px, py = xs[:, None], ys[:, None]
-    x1, y1, x2, y2 = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
-    on_vertex = ((px == x1) & (py == y1)) | ((px == x2) & (py == y2))
-    straddle = (y2 > py) != (y1 > py)
-    ax, ay = x1 - x2, y1 - y2
-    comp = (px - x2) * ay < ax * (py - y2)
-    toggle = straddle & ((ay > 0) == comp)
-    return on_vertex.any(axis=1) | (toggle.sum(axis=1) & 1).astype(bool)
-"""
 
 
 def build_polygon_cell_index(
@@ -102,19 +71,15 @@ def build_polygon_cell_index(
     r = int(res)
     n = 1 << r
     cap = int(max_cells_per_polygon)
-    kernels_src = _KERNELS
     lon_min, lon_span = _LON_MIN, _LON_SPAN
     lat_min, lat_span = _LAT_MIN, _LAT_SPAN
     pid_name, rings_name = poly_id, rings_col
+    ship_by_value()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import math
 
         import numpy as np
-
-        env: dict = {}
-        exec(kernels_src, env)
-        segments_of, raycast = env["segments_of"], env["raycast"]
 
         def ordinate(v, vmin, span):
             # parity with cells._ix/_iy: exact long difference scaled by n,
@@ -132,17 +97,14 @@ def build_polygon_cell_index(
         for pdf in batches:
             cells_out, pid_out, int_out = [], [], []
             for pid, rings in zip(pdf[pid_name], pdf[rings_name]):
-                segs = segments_of(rings)
+                index = BandIndex.build(rings_from_structs(rings))
+                segs = index.segs
                 if len(segs) == 0:
                     continue
-                minx = int(min(segs[:, 0].min(), segs[:, 2].min()))
-                maxx = int(max(segs[:, 0].max(), segs[:, 2].max()))
-                miny = int(min(segs[:, 1].min(), segs[:, 3].min()))
-                maxy = int(max(segs[:, 1].max(), segs[:, 3].max()))
-                ix0 = int(ordinate(np.array([minx]), lon_min, lon_span)[0])
-                ix1 = int(ordinate(np.array([maxx]), lon_min, lon_span)[0])
-                iy0 = int(ordinate(np.array([miny]), lat_min, lat_span)[0])
-                iy1 = int(ordinate(np.array([maxy]), lat_min, lat_span)[0])
+                ix0 = int(ordinate(np.array([index.minx]), lon_min, lon_span)[0])
+                ix1 = int(ordinate(np.array([index.maxx]), lon_min, lon_span)[0])
+                iy0 = int(ordinate(np.array([index.miny]), lat_min, lat_span)[0])
+                iy1 = int(ordinate(np.array([index.maxy]), lat_min, lat_span)[0])
                 ncells = (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
                 if ncells > cap:
                     fit = max(1, r - math.ceil(math.log2(ncells / cap) / 2))
@@ -197,7 +159,7 @@ def build_polygon_cell_index(
                 mix, miy = gx_i + ix0, gy_i + iy0
                 cx = lon_min + ((mix * 2 + 1) * lon_span) // (2 * n)
                 cy = lat_min + ((miy * 2 + 1) * lat_span) // (2 * n)
-                inside = raycast(segs, cx, cy)
+                inside = index.contains(cx, cy)
                 cells_i = morton(mix[inside], miy[inside])
                 cells_out.extend([cells_b, cells_i])
                 pid_out.extend(
@@ -262,26 +224,19 @@ def spatial_join(
     geoms = polygons.select(
         F.col(poly_id).alias("poly_id"), F.col(rings_col).alias("__rings")
     )
-    pass_cols = list(payload_cols)
-    kernels_src = _KERNELS
+    ship_by_value()
 
     def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        env: dict = {}
-        exec(kernels_src, env)
-        segs = env["segments_of"](pdf["__rings"].iloc[0])
-        ok = env["raycast"](
-            segs, pdf["lon"].to_numpy(np.int64), pdf["lat"].to_numpy(np.int64)
-        )
+        index = BandIndex.build(rings_from_structs(pdf["__rings"].iloc[0]))
+        ok = index.contains(pdf["lon"].to_numpy("int64"), pdf["lat"].to_numpy("int64"))
         cols = {"poly_id": pdf["poly_id"][ok], "id": pdf["id"][ok]}
-        for c in pass_cols:
+        for c in payload_cols:
             cols[c] = pdf[c][ok]
         return pd.DataFrame(cols)
 
     dtypes = dict(border.dtypes)
     schema = f"poly_id {dtypes['poly_id']}, id {dtypes['id']}"
-    for c in pass_cols:
+    for c in payload_cols:
         schema += f", {c} {dtypes[c]}"
     verified = border.join(geoms, on="poly_id").groupBy("poly_id").applyInPandas(
         verify, schema=schema
@@ -397,21 +352,6 @@ def grid_cluster(
     ).select("id", "gkey", "cluster_id", "cluster_size")
 
 
-def _ord_x(c: Column, res: int) -> Column:
-    """Clamped x cell ordinate at `res` (same equirectangular math as
-    functions/cells._ix; double division of exactly-representable longs,
-    mirrored verbatim in the DuckDB oracle twins)."""
-    n = 1 << res
-    raw = ((c - F.lit(_LON_MIN)) * n) / F.lit(_LON_SPAN)
-    return F.greatest(F.least(F.floor(raw).cast("long"), F.lit(n - 1)), F.lit(0))
-
-
-def _ord_y(c: Column, res: int) -> Column:
-    n = 1 << res
-    raw = ((c - F.lit(_LAT_MIN)) * n) / F.lit(_LAT_SPAN)
-    return F.greatest(F.least(F.floor(raw).cast("long"), F.lit(n - 1)), F.lit(0))
-
-
 def _segment_cells(
     segs: DataFrame, res: int, cap: int, pad_x: int = 0, pad_y: int = 0
 ) -> DataFrame:
@@ -425,10 +365,10 @@ def _segment_cells(
     n = 1 << res
     boxed = segs.select(
         "way_id", "seq", "x1", "y1", "x2", "y2",
-        F.greatest(_ord_x(F.least("x1", "x2"), res) - pad_x, F.lit(0)).alias("cxmin"),
-        F.least(_ord_x(F.greatest("x1", "x2"), res) + pad_x, F.lit(n - 1)).alias("cxmax"),
-        F.greatest(_ord_y(F.least("y1", "y2"), res) - pad_y, F.lit(0)).alias("cymin"),
-        F.least(_ord_y(F.greatest("y1", "y2"), res) + pad_y, F.lit(n - 1)).alias("cymax"),
+        F.greatest(ord_x(F.least("x1", "x2"), res) - pad_x, F.lit(0)).alias("cxmin"),
+        F.least(ord_x(F.greatest("x1", "x2"), res) + pad_x, F.lit(n - 1)).alias("cxmax"),
+        F.greatest(ord_y(F.least("y1", "y2"), res) - pad_y, F.lit(0)).alias("cymin"),
+        F.least(ord_y(F.greatest("y1", "y2"), res) + pad_y, F.lit(n - 1)).alias("cymax"),
     ).filter(
         # loud cap as a FILTER predicate (a projected assert column would
         # be pruned away by Catalyst the moment it's dropped)
@@ -729,8 +669,8 @@ def snap_points(
     pts = points.select(
         F.col("point_id"),
         F.col("lon").alias("px"), F.col("lat").alias("py"),
-        _ord_x(F.col("lon"), res).alias("cx"),
-        _ord_y(F.col("lat"), res).alias("cy"),
+        ord_x(F.col("lon"), res).alias("cx"),
+        ord_y(F.col("lat"), res).alias("cy"),
     )
     cand = pts.join(cells, on=["cx", "cy"])
 

@@ -29,6 +29,8 @@ from ..functions.cells import (
     _LON_SPAN,
     cell_id,
     cell_parent,
+    ord_x,
+    ord_y,
 )
 
 
@@ -359,7 +361,7 @@ def polygon_rasterize(
          bands are outside by definition and die in the inner join.
       4. per (poly_id, cx, cy): even-odd parity of the strict raycast
          count (+ the center-on-vertex => inside rule, matching
-         spatial_join's numpy raycast kernel exactly).
+         functions/geometry.BandIndex.contains exactly).
 
     Exactness: centers are represented in 2n-scaled integer space
     (PX = 2n*lon_min + (2cx+1)*lon_span — no floats anywhere); the
@@ -374,18 +376,6 @@ def polygon_rasterize(
     n = 1 << r
     cap = int(max_cells_per_polygon)
     pid = F.col(poly_id).alias("pid")
-
-    def ord_x(c: Column) -> Column:
-        raw = ((c - F.lit(_LON_MIN)) * n) / F.lit(_LON_SPAN)
-        return F.greatest(
-            F.least(F.floor(raw).cast("long"), F.lit(n - 1)), F.lit(0)
-        )
-
-    def ord_y(c: Column) -> Column:
-        raw = ((c - F.lit(_LAT_MIN)) * n) / F.lit(_LAT_SPAN)
-        return F.greatest(
-            F.least(F.floor(raw).cast("long"), F.lit(n - 1)), F.lit(0)
-        )
 
     # -- edges, banded by the y-range each covers ------------------------
     ring = polygons.select(pid, F.explode(rings_col).alias("ring"))
@@ -410,7 +400,7 @@ def polygon_rasterize(
     edges = segs.select(
         "pid", "x1", "y1", "x2", "y2",
         F.explode(
-            F.sequence(ord_y(F.least("y1", "y2")), ord_y(F.greatest("y1", "y2")))
+            F.sequence(ord_y(F.least("y1", "y2"), r), ord_y(F.greatest("y1", "y2"), r))
         ).alias("cy"),
     )
 
@@ -420,8 +410,8 @@ def polygon_rasterize(
     ys = F.transform(flat, lambda p: p["y"])
     boxed = polygons.select(
         pid,
-        ord_x(F.array_min(xs)).alias("ix0"), ord_x(F.array_max(xs)).alias("ix1"),
-        ord_y(F.array_min(ys)).alias("iy0"), ord_y(F.array_max(ys)).alias("iy1"),
+        ord_x(F.array_min(xs), r).alias("ix0"), ord_x(F.array_max(xs), r).alias("ix1"),
+        ord_y(F.array_min(ys), r).alias("iy0"), ord_y(F.array_max(ys), r).alias("iy1"),
     ).filter(
         F.when(
             (F.col("ix1") - F.col("ix0") + 1) * (F.col("iy1") - F.col("iy0") + 1)

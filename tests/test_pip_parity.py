@@ -1,19 +1,25 @@
-"""Property test: the two PIP implementations (JVM Column math and the
-numpy y-band kernel) agree with each other and with a direct
+"""Property tests: the JVM Column PIP (`extract._pip_column`), the numpy
+y-band kernel (`functions/geometry.BandIndex.contains`) and its cell-cover
+shortcut (`CellCover.contains`) agree with each other and with a direct
 transliteration of the reference crossing rule
-(/root/reference/src/extract/extract_polygon.cpp:103-156) on random
-polygons and points — including vertices and degenerate shapes."""
+(src/extract/extract_polygon.cpp:103-156) on random polygons and points —
+including vertices and degenerate shapes — and `assign_extracts` runs the
+numpy kernel on executors for polygons above MAX_JVM_PIP_SEGMENTS."""
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from osmium_tool_spark.functions.geometry import BandIndex
-from osmium_tool_spark.operators.extract import _pip_column, _segs_literal
-from osmium_tool_spark.functions.geometry import Extract
+from osmium_tool_spark.functions.geometry import BandIndex, CellCover, Extract
+from osmium_tool_spark.operators.extract import (
+    MAX_JVM_PIP_SEGMENTS,
+    _pip_column,
+    _segs_literal,
+    assign_extracts,
+)
 
 
 def ref_contains(px: int, py: int, segs) -> bool:
@@ -102,43 +108,27 @@ def test_world_scale_coordinates_no_overflow(spark):
 @settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(ring=ring_strategy(), seed=st.integers(min_value=0, max_value=2**31))
 def test_cell_cover_matches_raycast(ring, seed):
-    """CellCover short-circuit (interior/exterior cells) must be
+    """CellCover.contains (interior/exterior cell shortcut) must be
     bit-identical to the plain band ray cast — including on vertices and
     with a coarse grid that forces real interior cells."""
-    from osmium_tool_spark.functions.geometry import CellCover
-
     idx = BandIndex.build([ring])
+    assume(len(idx.segs) > 0)
     cover = CellCover.build(idx, max_cells=16)  # coarse: multi-point cells
     rng = np.random.default_rng(seed)
     xs = rng.integers(-60, 60, size=300).astype(np.int64)
     ys = rng.integers(-60, 60, size=300).astype(np.int64)
     xs = np.concatenate([xs, ring[:, 0]])
     ys = np.concatenate([ys, ring[:, 1]])
-    want = idx.contains(xs, ys)
-
-    got = np.zeros(len(xs), dtype=bool)
-    env = (xs >= idx.minx) & (xs <= idx.maxx) & (ys >= idx.miny) & (ys <= idx.maxy)
-    sel = np.flatnonzero(env)
-    if cover is not None and len(sel):
-        cls = cover.classify(xs[sel], ys[sel])
-        got[sel[cls == 1]] = True
-        sel = sel[cls == 2]
-    if len(sel):
-        got[sel] = idx.contains(xs[sel], ys[sel])
-    assert (got == want).all()
+    assert (cover.contains(xs, ys) == idx.contains(xs, ys)).all()
 
 
 def test_cell_cover_empty_polygon():
-    from osmium_tool_spark.functions.geometry import CellCover
-
     assert CellCover.build(BandIndex.build([])) is None
 
 
 def test_cell_cover_has_interior_cells():
     """A fat rectangle at fine resolution must classify interior cells as
     inside=1 (the speedup exists) and its edges as boundary=2."""
-    from osmium_tool_spark.functions.geometry import CellCover
-
     ring = np.array(
         [(0, 0), (1000, 0), (1000, 1000), (0, 1000), (0, 0)], dtype=np.int64
     )
@@ -147,3 +137,36 @@ def test_cell_cover_has_interior_cells():
     by = dict(zip(vals.tolist(), counts.tolist()))
     assert by.get(1, 0) > by.get(2, 0)  # interior dominates boundary
     assert by.get(2, 0) > 0
+
+
+def ngon(n: int, r: int) -> np.ndarray:
+    """Closed regular n-gon of radius r around the origin, int64 vertices."""
+    t = 2 * np.pi * np.arange(n) / n
+    pts = np.stack([np.round(r * np.cos(t)), np.round(r * np.sin(t))], axis=1)
+    return np.vstack([pts, pts[:1]]).astype(np.int64)
+
+
+def test_assign_extracts_large_polygon_with_hole(spark):
+    """A 200-gon with a 200-gon hole takes the numpy path (above
+    MAX_JVM_PIP_SEGMENTS): the executor kernel's rows, payload included,
+    must match the reference rule on random points and on every vertex."""
+    outer, inner = ngon(200, 1_000_000), ngon(200, 500_000)[::-1]
+    ex = Extract.polygon(3, [outer, inner])
+    assert len(ex.index.segs) > MAX_JVM_PIP_SEGMENTS
+    cover = CellCover.build(ex.index)
+    rng = np.random.default_rng(11)
+    xs = np.concatenate([rng.integers(-1_100_000, 1_100_001, 2000), outer[:, 0], inner[:, 0]])
+    ys = np.concatenate([rng.integers(-1_100_000, 1_100_001, 2000), outer[:, 1], inner[:, 1]])
+    env = (xs >= ex.minx) & (xs <= ex.maxx) & (ys >= ex.miny) & (ys <= ex.maxy)
+    cls = cover.classes[(ys[env] - ex.miny) // cover.gy, (xs[env] - ex.minx) // cover.gx]
+    # both executor branches run: interior-cell lookup and boundary ray cast
+    assert (cls == 1).any() and (cls == 2).any()
+
+    rows = [(i, int(x), int(y), i % 7) for i, (x, y) in enumerate(zip(xs, ys))]
+    nodes = spark.createDataFrame(rows, "id long, lon long, lat long, tag long")
+    got = assign_extracts(nodes, [ex], payload_cols=["tag"]).collect()
+    segs = [tuple(int(v) for v in s_) for s_ in ex.index.segs]
+    want = {i for i, x, y, _ in rows if ref_contains(x, y, segs)}
+    assert {r.id for r in got} == want and len(got) == len(want)
+    assert all(r.extract_id == 3 and r.tag == r.id % 7 for r in got)
+    assert 0 < len(want) < len(rows)
