@@ -348,51 +348,6 @@ def parse_geojson(text: str) -> list[np.ndarray]:
     raise ValueError(f"unsupported GeoJSON geometry type: {t!r}")
 
 
-def _parse_osm_xml(text: str):
-    """Minimal .osm XML -> (node locations, way refs, mp relations').
-    Covers the reference's extract polygon fixtures (node/way/relation with
-    nd/member/tag children)."""
-    import xml.etree.ElementTree as ET
-
-    root = ET.fromstring(text)
-    nodes: dict[int, tuple[int, int]] = {}
-    ways: dict[int, list[int]] = {}
-    rels: list[list[int]] = []
-    for el in root:
-        if el.tag == "node":
-            nodes[int(el.get("id"))] = (fp(float(el.get("lon"))), fp(float(el.get("lat"))))
-        elif el.tag == "way":
-            ways[int(el.get("id"))] = [int(nd.get("ref")) for nd in el if nd.tag == "nd"]
-        elif el.tag == "relation":
-            tags = {t.get("k"): t.get("v") for t in el if t.tag == "tag"}
-            if tags.get("type") in ("multipolygon", "boundary"):
-                rels.append(
-                    [int(m.get("ref")) for m in el if m.tag == "member" and m.get("type") == "way"]
-                )
-    return nodes, ways, rels
-
-
-def _parse_osm_opl(text: str):
-    """OPL lines -> (node locations, way refs, mp relations' way members)."""
-    from ..sources.opl import _make_parser
-
-    parse_line = _make_parser()
-    nodes: dict[int, tuple[int, int]] = {}
-    ways: dict[int, list[int]] = {}
-    rels: list[list[int]] = []
-    for ln in text.splitlines():
-        row = parse_line(ln)
-        if row is None:
-            continue
-        if row["type"] == 0 and row["lon"] is not None:
-            nodes[row["id"]] = (row["lon"], row["lat"])
-        elif row["type"] == 1:
-            ways[row["id"]] = list(row["refs"] or [])
-        elif row["type"] == 2 and row["tags"].get("type") in ("multipolygon", "boundary"):
-            rels.append([m["ref"] for m in (row["members"] or []) if m["mtype"] == 1])
-    return nodes, ways, rels
-
-
 def parse_osm_file(text: str, fmt: str = "xml") -> list[np.ndarray]:
     """OSM file as polygon source -> normalized rings.
 
@@ -409,7 +364,26 @@ def parse_osm_file(text: str, fmt: str = "xml") -> list[np.ndarray]:
     """
     from ..operators.export import _stitch_rings_impl
 
-    nodes, ways, rels = (_parse_osm_opl if fmt == "opl" else _parse_osm_xml)(text)
+    if fmt == "opl":
+        from ..sources.opl import _make_parser
+
+        rows = map(_make_parser(), text.splitlines())
+    else:
+        from ..sources.osmxml import parse_osm_xml
+
+        rows = parse_osm_xml(text)
+    nodes: dict[int, tuple[int, int]] = {}
+    ways: dict[int, list[int]] = {}
+    rels: list[list[int]] = []
+    for row in rows:
+        if row is None:
+            continue
+        if row["type"] == 0 and row["lon"] is not None:
+            nodes[row["id"]] = (row["lon"], row["lat"])
+        elif row["type"] == 1:
+            ways[row["id"]] = list(row["refs"] or [])
+        elif row["type"] == 2 and dict(row["tags"]).get("type") in ("multipolygon", "boundary"):
+            rels.append([m["ref"] for m in (row["members"] or []) if m["mtype"] == 1])
     if not rels:
         raise ValueError("No multipolygon/boundary relations found in the OSM file.")
     stitch = _stitch_rings_impl()

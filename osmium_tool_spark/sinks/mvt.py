@@ -14,7 +14,8 @@ layer per slippy tile entirely from integer arithmetic:
     function of its feature deltas, which is what the DuckDB oracle
     recomputes (any framing/varint/zigzag bug shifts it);
   - one shuffle keyed by tile (groupBy -> applyInPandas, one task per
-    tile, stdlib-only kernel), features ordered by id within the tile.
+    tile; the kernel's protobuf framing is functions/protowire.py,
+    shipped by value), features ordered by id within the tile.
 
 Layer shape kept deliberately minimal-but-conformant: version 2, one
 layer, POINT features with an integer id and no attributes (keys/values
@@ -26,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.protowire import key, ld, ship_by_value, svarint, varint
 
 EXTENT = 4096
 
@@ -81,11 +84,14 @@ def write_mvt_tiles(
     pair. This is the complete attribute path; multi-key maps differ
     only in fan-out.
 
+    Feature ids are uint64 in MVT: a negative id fails the encode task
+    with a ValueError naming it.
+
     Returns (tile_x, tile_y, n_features, mvt: binary, mvt_bytes: long).
     Scale shape: one exchange keyed by tile; the encode kernel is
-    stdlib-only Python over the tile's features (bounded by tile
-    occupancy; dense metros are exactly the cells the salting machinery
-    elsewhere splits).
+    Python over the tile's features (bounded by tile occupancy; dense
+    metros are exactly the cells the salting machinery elsewhere
+    splits), calling the protowire encoders, which ship by value.
     """
     if not 0 <= res <= 18:
         raise ValueError(f"res 0..18, got {res}")
@@ -103,27 +109,15 @@ def write_mvt_tiles(
     with_attr = attr_col is not None
     key_b = attr_key.encode("utf-8")
 
+    ship_by_value()
+
     def _encode(pdf):
         import pandas as pd
 
-        def varint(v: int) -> bytes:
-            out = bytearray()
-            while True:
-                b = v & 0x7F
-                v >>= 7
-                if v:
-                    out.append(b | 0x80)
-                else:
-                    out.append(b)
-                    return bytes(out)
-
-        def zigzag(d: int) -> int:
-            return (d << 1) ^ (d >> 63)
-
-        def field(num: int, wire: int) -> bytes:
-            return varint((num << 3) | wire)
-
         pdf = pdf.sort_values(["fid"], kind="mergesort")
+        low = int(pdf["fid"].iloc[0])
+        if low < 0:
+            raise ValueError(f"MVT feature ids are uint64; got negative id {low}")
         vidx = {}
         if with_attr:
             for i, v in enumerate(sorted(set(int(v) for v in pdf["attr"]))):
@@ -132,35 +126,32 @@ def write_mvt_tiles(
         for row in pdf.itertuples(index=False):
             geom = (
                 varint((1 << 3) | 1)  # MoveTo, count 1
-                + varint(zigzag(int(row.px)))
-                + varint(zigzag(int(row.py)))
+                + svarint(int(row.px))
+                + svarint(int(row.py))
             )
             tags = b""
             if with_attr:
-                pair = varint(0) + varint(vidx[int(row.attr)])
-                tags = field(2, 2) + varint(len(pair)) + pair
+                tags = key(2, 2) + ld(varint(0) + varint(vidx[int(row.attr)]))
             body = (
-                field(1, 0) + varint(int(row.fid))  # id
+                key(1, 0) + varint(int(row.fid))  # id
                 + tags  # packed [key_idx, value_idx]
-                + field(3, 0) + varint(1)  # type POINT
-                + field(4, 2) + varint(len(geom)) + geom  # geometry
+                + key(3, 0) + varint(1)  # type POINT
+                + key(4, 2) + ld(geom)  # geometry
             )
-            feats += field(2, 2) + varint(len(body)) + body  # Layer.features
-        name_b = lname.encode("utf-8")
+            feats += key(2, 2) + ld(body)  # Layer.features
         kv = b""
         if with_attr:
-            kv = field(3, 2) + varint(len(key_b)) + key_b  # Layer.keys
+            kv = key(3, 2) + ld(key_b)  # Layer.keys
             for v in sorted(vidx):  # Layer.values: Value{int_value}
-                msg = field(4, 0) + varint(v)
-                kv += field(4, 2) + varint(len(msg)) + msg
+                kv += key(4, 2) + ld(key(4, 0) + varint(v))
         layer = (
-            field(15, 0) + varint(2)  # version
-            + field(1, 2) + varint(len(name_b)) + name_b
+            key(15, 0) + varint(2)  # version
+            + key(1, 2) + ld(lname.encode("utf-8"))
             + bytes(feats)
             + kv
-            + field(5, 0) + varint(EXTENT)
+            + key(5, 0) + varint(EXTENT)
         )
-        tile = field(3, 2) + varint(len(layer)) + layer
+        tile = key(3, 2) + ld(layer)
         return pd.DataFrame(
             [
                 {

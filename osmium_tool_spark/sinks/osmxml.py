@@ -52,37 +52,13 @@ def _attr(v) -> str:
 
 
 def make_row_serializer(with_visible: bool = False, indent: int = 2):
-    """Row-dict -> XML element string. SELF-CONTAINED closure: captures
-    only plain data and imports only the stdlib, so the mapInArrow
-    executors never need the package on their sys.path (same rule as
-    the PBF block encoder, sinks/pbf.py:106)."""
-    type_names = dict(TYPE_NAMES)
-    node, way, relation = NODE, WAY, RELATION
-    coord_scale = COORD_SCALE
+    """Row-dict -> XML element string: the Python oracle that the tests
+    compare xml_element_col's output against, byte for byte."""
     pad = " " * indent
     cpad = " " * (indent + 2)
 
-    def _coord(v):
-        # exact integer fixed-point rendering (libosmium prints digit
-        # strings from the int32, never via float — Location::as_string)
-        sign = "-" if v < 0 else ""
-        av = -v if v < 0 else v
-        ip, fp = divmod(av, coord_scale)
-        frac = f"{fp:07d}".rstrip("0")
-        return f"{sign}{ip}.{frac}" if frac else f"{sign}{ip}"
-
-    def _ts(ts):
-        import time
-
-        return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime(ts // 1_000_000))
-
-    def _attr(v):
-        from xml.sax.saxutils import quoteattr
-
-        return quoteattr(str(v))
-
     def ser(r: dict) -> str:
-        tag = type_names[r["type"]]
+        tag = TYPE_NAMES[r["type"]]
         parts = [f'<{tag} id="{r["id"]}"']
         # 0 = unset for version/timestamp/changeset (libosmium convention;
         # --clean zeroes attributes and the reference XML omits them —
@@ -101,10 +77,10 @@ def make_row_serializer(with_visible: bool = False, indent: int = 2):
             parts.append(f' changeset="{r["changeset"]}"')
         if with_visible:
             parts.append(f' visible="{"true" if r.get("visible", True) else "false"}"')
-        if r["type"] == node and r.get("lat") is not None:
+        if r["type"] == NODE and r.get("lat") is not None:
             parts.append(f' lat="{_coord(r["lat"])}" lon="{_coord(r["lon"])}"')
         children = []
-        if r["type"] == way:
+        if r["type"] == WAY:
             refs = list(r.get("refs") or [])
             locs = list(r.get("locations") or [])
             if locs and len(locs) == len(refs):
@@ -116,9 +92,9 @@ def make_row_serializer(with_visible: bool = False, indent: int = 2):
                 ]
             else:
                 children += [f'{cpad}<nd ref="{ref}"/>' for ref in refs]
-        elif r["type"] == relation:
+        elif r["type"] == RELATION:
             children += [
-                f'{cpad}<member type="{type_names[m["mtype"]]}" ref="{m["ref"]}" '
+                f'{cpad}<member type="{TYPE_NAMES[m["mtype"]]}" ref="{m["ref"]}" '
                 f"role={_attr(m['role'] or '')}/>"
                 for m in (r.get("members") or [])
             ]

@@ -5,10 +5,11 @@ Public wire format (wiki.openstreetmap.org/wiki/O5m): a byte-stream of
 length-prefixed datasets (0x10 node, 0x11 way, 0x12 relation, 0xDB
 bbox, 0xDC file timestamp, 0xE0 header, 0xFF delta-reset, 0xFE end).
 Numbers are 7-bit little-endian varints (signed = lowest-bit sign with
-offset), ids/coords/timestamps/changesets/refs delta-coded against
-running counters, and strings flow through a 15000-entry
-most-recently-used reference table. Deleted objects (change files)
-carry only their id + version block.
+offset, i.e. protobuf zigzag; both decode via functions/protowire.py),
+ids/coords/timestamps/changesets/refs delta-coded against running
+counters, and strings flow through a 15000-entry most-recently-used
+reference table. Deleted objects (change files) carry only their id +
+version block.
 
 Unlike PBF, o5m has no independently decodable blocks — the string
 table and delta counters thread through the whole stream, so a split
@@ -21,6 +22,8 @@ belongs in PBF/OPL/parquet. A size guard enforces this honestly.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..functions.protowire import read_varint, unzigzag
 
 # driver-side parse guard; o5m is not splittable (see module docstring)
 MAX_O5M_BYTES = 1 << 30
@@ -37,19 +40,11 @@ class _Reader:
         return b
 
     def uvarint(self) -> int:
-        result = 0
-        shift = 0
-        while True:
-            b = self.buf[self.pos]
-            self.pos += 1
-            result |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return result
-            shift += 7
+        v, self.pos = read_varint(self.buf, self.pos)
+        return v
 
     def svarint(self) -> int:
-        v = self.uvarint()
-        return -(v >> 1) - 1 if v & 1 else v >> 1
+        return unzigzag(self.uvarint())
 
     def cstring(self) -> bytes:
         end = self.buf.index(0, self.pos)

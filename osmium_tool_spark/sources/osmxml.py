@@ -27,6 +27,7 @@ consume XML inputs transparently.
 from __future__ import annotations
 
 import calendar
+import sys
 import time as _time
 import xml.etree.ElementTree as ET
 
@@ -59,6 +60,9 @@ def _parse_ts(v: str | None) -> int | None:
 
 
 def _parse_object(el: ET.Element, in_delete: bool = False) -> dict | None:
+    """One <node>/<way>/<relation> element -> entity row dict (None for
+    other elements). Tags are a (key, value) entries list in document
+    order; a repeated key keeps its last value."""
     t = NAME_TO_TYPE.get(el.tag)
     if t is None:
         return None
@@ -73,7 +77,7 @@ def _parse_object(el: ET.Element, in_delete: bool = False) -> dict | None:
         "ts": _parse_ts(el.get("timestamp")),
         "uid": int(el.get("uid")) if el.get("uid") else None,
         "user": el.get("user"),
-        "tags": {c.get("k"): c.get("v") for c in el if c.tag == "tag"},
+        "tags": list({c.get("k"): c.get("v") for c in el if c.tag == "tag"}.items()),
         "lon": None,
         "lat": None,
         "refs": None,
@@ -168,66 +172,18 @@ def _snap_to_element(f, pos: int, end: int) -> int | None:
 
 
 def _make_xml_range_parser(path: str):
-    """Self-contained executor closure: (start,end) byte ranges ->
-    entity rows. Ships by value — executors do not have this package on
-    sys.path (same pattern as sources/pbf.py)."""
+    """mapInPandas closure: (start, end) byte ranges -> entity rows via
+    the driver's `_parse_object`, which ships by value with it (this
+    module is registered with cloudpickle), so executors need only
+    stdlib + pandas."""
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cols = [f.name for f in ENTITY_SCHEMA.fields]
 
     def parse(batches):
-        import calendar
-        import time as _time
-        import xml.etree.ElementTree as ET
-
         import pandas as pd
 
-        name_to_type = {"node": 0, "way": 1, "relation": 2}
-        scale = 10_000_000
-
-        def parse_ts(v):
-            if not v:
-                return None
-            return calendar.timegm(_time.strptime(v, "%Y-%m-%dT%H:%M:%SZ")) * 1_000_000
-
-        def obj_row(el):
-            t = name_to_type.get(el.tag)
-            if t is None:
-                return None
-            vis = el.get("visible")
-            row = {
-                "type": t,
-                "id": int(el.get("id")),
-                "version": int(el.get("version")) if el.get("version") else None,
-                "visible": vis != "false",
-                "changeset": int(el.get("changeset")) if el.get("changeset") else None,
-                "ts": parse_ts(el.get("timestamp")),
-                "uid": int(el.get("uid")) if el.get("uid") else None,
-                "user": el.get("user"),
-                "tags": [
-                    {"key": c.get("k"), "value": c.get("v")}
-                    for c in el
-                    if c.tag == "tag"
-                ],
-                "lon": None, "lat": None, "refs": None, "members": None,
-            }
-            if el.tag == "node":
-                if el.get("lon") is not None:
-                    row["lon"] = int(round(float(el.get("lon")) * scale))
-                    row["lat"] = int(round(float(el.get("lat")) * scale))
-            elif el.tag == "way":
-                row["refs"] = [int(c.get("ref")) for c in el if c.tag == "nd"]
-            else:
-                row["members"] = [
-                    {
-                        "mtype": name_to_type[c.get("type")],
-                        "ref": int(c.get("ref")),
-                        "role": c.get("role") or "",
-                    }
-                    for c in el
-                    if c.tag == "member"
-                ]
-            return row
-
-        cols = ["type", "id", "version", "visible", "changeset", "ts",
-                "uid", "user", "tags", "lon", "lat", "refs", "members"]
         with open(path, "rb") as f:
             for pdf in batches:
                 rows = []
@@ -236,7 +192,7 @@ def _make_xml_range_parser(path: str):
                     frag = f.read(int(end) - int(start))
                     root = ET.fromstring(b"<osm>" + frag + b"</osm>")
                     for el in root:
-                        row = obj_row(el)
+                        row = _parse_object(el)
                         if row is not None:
                             rows.append(row)
                 yield pd.DataFrame(rows, columns=cols)
@@ -291,8 +247,6 @@ def _read_osm_xml_driver(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     rows = parse_osm_xml(_read_text(path))
-    for r in rows:
-        r["tags"] = list(r["tags"].items())
     df = spark.createDataFrame(rows, _tag_entries_schema())
     return df.withColumn("tags", F.map_from_entries("tags")).select(
         *[f.name for f in ENTITY_SCHEMA.fields]

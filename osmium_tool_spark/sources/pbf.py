@@ -8,12 +8,14 @@ a string table, dense or plain nodes, ways, and relations; coordinates
 are (offset + granularity * raw) nanodegrees, ids/coords/refs/member
 ids delta-coded, sint fields zigzag-encoded.
 
-Decoding is hand-rolled varint protobuf (no codegen or proto deps) and
-runs DISTRIBUTED: the driver makes one seek-only pass over the framing
-to index blob byte ranges (blobs are independently decompressible — the
-property that makes PBF splittable), then executors decode blobs in
-parallel via mapInPandas. The decoder ships as a self-contained closure
-(executors do not have this package on sys.path).
+Decoding is hand-rolled varint protobuf (functions/protowire.py; no
+codegen or proto deps) and runs DISTRIBUTED: the driver makes one
+seek-only pass over the framing to index blob byte ranges (blobs are
+independently decompressible — the property that makes PBF splittable),
+then executors decode blobs in parallel via mapInPandas. The decoder
+calls this module's `decompress_blob` and the protowire functions; both
+modules ship by value with it (`protowire.ship_by_value`), so executors
+need no package on sys.path and run the same codec code as the driver.
 """
 
 from __future__ import annotations
@@ -22,49 +24,13 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.protowire import fields, ship_by_value, unpack, unzigzag
 from ..schema import ENTITY_SCHEMA
 
-
-def _read_varint(buf: bytes, i: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
-    while True:
-        b = buf[i]
-        i += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, i
-        shift += 7
-
-
-def _fields(buf: bytes):
-    """Yield (tag, wiretype, value) triples of a protobuf message."""
-    i = 0
-    n = len(buf)
-    while i < n:
-        key, i = _read_varint(buf, i)
-        tag, wt = key >> 3, key & 7
-        if wt == 0:
-            val, i = _read_varint(buf, i)
-        elif wt == 2:
-            ln, i = _read_varint(buf, i)
-            val = buf[i:i + ln]
-            i += ln
-        elif wt == 5:
-            val = buf[i:i + 4]
-            i += 4
-        elif wt == 1:
-            val = buf[i:i + 8]
-            i += 8
-        else:
-            raise ValueError(f"unsupported wire type {wt}")
-        yield tag, wt, val
-
-
 # Blob compression fields by protobuf tag (fileformat.proto). raw (1),
-# zlib (3), lzma (4) and bzip2 (5) are implemented (the latter two via
-# stdlib); the reference throws on codecs it was not built with, and so
-# do we for lz4/zstd rather than silently skipping blobs.
+# zlib (3), lzma (4) and bzip2 (5) decode via the stdlib, lz4 (6) and
+# zstd (7) via their optional packages; like the reference built
+# without a codec, a missing package raises rather than skipping blobs.
 _BLOB_CODECS = {1: "raw", 3: "zlib", 4: "lzma", 5: "bzip2", 6: "lz4", 7: "zstd"}
 
 # HeaderBlock required_features the reader actually honors
@@ -87,7 +53,7 @@ def decompress_blob(blob: bytes) -> bytes:
 
     raw_size = None
     data = None
-    for tag, _wt, val in _fields(blob):
+    for tag, _wt, val in fields(blob):
         if tag == 2:
             raw_size = val  # uncompressed size (required by lz4 blocks)
         elif tag in _BLOB_CODECS:
@@ -137,7 +103,7 @@ def _check_header_features(blob: bytes) -> None:
     """Parse the OSMHeader HeaderBlock and reject unknown
     required_features (tag 4), mirroring the reference's error."""
     header_block = decompress_blob(blob)
-    for tag, _wt, val in _fields(header_block):
+    for tag, _wt, val in fields(header_block):
         if tag == 4:
             feature = val.decode("utf-8")
             if feature not in _SUPPORTED_FEATURES:
@@ -160,7 +126,7 @@ def index_blobs(path: str) -> list[tuple[str, int, int]]:
             (hdr_len,) = struct.unpack(">I", hdr_len_raw)
             header = f.read(hdr_len)
             btype, datasize = "", 0
-            for tag, _wt, val in _fields(header):
+            for tag, _wt, val in fields(header):
                 if tag == 1:
                     btype = val.decode()
                 elif tag == 3:
@@ -176,53 +142,14 @@ def index_blobs(path: str) -> list[tuple[str, int, int]]:
 
 
 def _make_blob_decoder(path: str):
-    """Self-contained PrimitiveBlock decoder closure (cloudpickled by
-    value; executors only need stdlib + pandas)."""
+    """mapInPandas closure: blob byte ranges -> entity rows. It calls
+    `decompress_blob` and the protowire functions, which ship by value
+    with it; executors need only stdlib + pandas."""
+    ship_by_value(__name__)
+    cols = [f.name for f in ENTITY_SCHEMA.fields]
 
     def decode(batches):
-        import zlib
-
         import pandas as pd
-
-        def read_varint(buf, i):
-            result = 0
-            shift = 0
-            while True:
-                b = buf[i]
-                i += 1
-                result |= (b & 0x7F) << shift
-                if not b & 0x80:
-                    return result, i
-                shift += 7
-
-        def fields(buf):
-            i, n = 0, len(buf)
-            while i < n:
-                key, i = read_varint(buf, i)
-                tag, wt = key >> 3, key & 7
-                if wt == 0:
-                    val, i = read_varint(buf, i)
-                elif wt == 2:
-                    ln, i = read_varint(buf, i)
-                    val = buf[i:i + ln]
-                    i += ln
-                elif wt == 5:
-                    val = buf[i:i + 4]
-                    i += 4
-                else:
-                    val = buf[i:i + 8]
-                    i += 8
-                yield tag, wt, val
-
-        def zz(v):  # zigzag decode
-            return (v >> 1) ^ -(v & 1)
-
-        def packed(buf, signed=False):
-            out, i = [], 0
-            while i < len(buf):
-                v, i = read_varint(buf, i)
-                out.append(zz(v) if signed else v)
-            return out
 
         def trunc100(v):  # nanodeg -> fixed-1e-7, C-style trunc division
             return v // 100 if v >= 0 else -((-v) // 100)
@@ -238,15 +165,12 @@ def _make_blob_decoder(path: str):
                 elif tag == 3:
                     info["changeset"] = val
                 elif tag == 4:
-                    info["uid"] = zz_if_needed(val)
+                    info["uid"] = val  # int32, not sint
                 elif tag == 5:
                     info["user"] = strings[val]
                 elif tag == 6:
                     info["visible"] = bool(val)
             return info
-
-        def zz_if_needed(v):  # Info.uid is int32 (not sint) per the spec
-            return v
 
         def blank_row():
             return {
@@ -302,17 +226,17 @@ def _make_blob_decoder(path: str):
                         info = None
                         for t2, _w, v in fields(val):
                             if t2 == 1:
-                                row["id"] = zz(v)
+                                row["id"] = unzigzag(v)
                             elif t2 == 2:
-                                keys = packed(v)
+                                keys = unpack(v)
                             elif t2 == 3:
-                                vals = packed(v)
+                                vals = unpack(v)
                             elif t2 == 4:
                                 info = parse_info(v, strings)
                             elif t2 == 8:
-                                row["lat"] = coord(lat_off, zz(v))
+                                row["lat"] = coord(lat_off, unzigzag(v))
                             elif t2 == 9:
-                                row["lon"] = coord(lon_off, zz(v))
+                                row["lon"] = coord(lon_off, unzigzag(v))
                         row["tags"] = [
                             {"key": strings[k], "value": strings[x]}
                             for k, x in zip(keys, vals)
@@ -324,18 +248,18 @@ def _make_blob_decoder(path: str):
                         dense_info = {}
                         for t2, _w, v in fields(val):
                             if t2 == 1:
-                                ids = packed(v, signed=True)
+                                ids = unpack(v, signed=True)
                             elif t2 == 5:
                                 for t3, _w3, v3 in fields(v):
-                                    dense_info[t3] = packed(
+                                    dense_info[t3] = unpack(
                                         v3, signed=t3 in (2, 3, 4, 5)
                                     )
                             elif t2 == 8:
-                                lats = packed(v, signed=True)
+                                lats = unpack(v, signed=True)
                             elif t2 == 9:
-                                lons = packed(v, signed=True)
+                                lons = unpack(v, signed=True)
                             elif t2 == 10:
-                                kv = packed(v)
+                                kv = unpack(v)
                         # delta decode
                         def cumsum(xs):
                             acc, out = 0, []
@@ -391,19 +315,19 @@ def _make_blob_decoder(path: str):
                                 # 64-bit two's complement
                                 row["id"] = v - (1 << 64) if v >= 1 << 63 else v
                             elif t2 == 2:
-                                keys = packed(v)
+                                keys = unpack(v)
                             elif t2 == 3:
-                                vals = packed(v)
+                                vals = unpack(v)
                             elif t2 == 4:
                                 info = parse_info(v, strings)
                             elif t2 == 8 and tag == 3:
-                                refs = packed(v, signed=True)
+                                refs = unpack(v, signed=True)
                             elif t2 == 8 and tag == 4:
-                                roles = packed(v)
+                                roles = unpack(v)
                             elif t2 == 9:
-                                memids = packed(v, signed=True)
+                                memids = unpack(v, signed=True)
                             elif t2 == 10:
-                                mtypes = packed(v)
+                                mtypes = unpack(v)
                         row["tags"] = [
                             {"key": strings[k], "value": strings[x]}
                             for k, x in zip(keys, vals)
@@ -427,38 +351,12 @@ def _make_blob_decoder(path: str):
                         rows.append(row)
             return rows
 
-        cols = ["type", "id", "version", "visible", "changeset", "ts",
-                "uid", "user", "tags", "lon", "lat", "refs", "members"]
         for pdf in batches:
             all_rows = []
             with open(path, "rb") as f:
-                import bz2 as _bz2
-                import lzma as _lzma
-
-                codecs = {6: "lz4", 7: "zstd"}
                 for off, size in zip(pdf["offset"], pdf["size"]):
                     f.seek(int(off))
-                    blob = f.read(int(size))
-                    raw = None
-                    seen = []
-                    for tag, _wt, val in fields(blob):
-                        if tag == 1:
-                            raw = val
-                        elif tag == 3:
-                            raw = zlib.decompress(val)
-                        elif tag == 4:
-                            raw = _lzma.decompress(val)
-                        elif tag == 5:
-                            raw = _bz2.decompress(val)
-                        elif tag in codecs:
-                            seen.append(codecs[tag])
-                    if raw is None:
-                        raise ValueError(
-                            "unsupported PBF blob compression "
-                            f"{seen or ['<no data field>']}; raw/zlib/lzma/"
-                            "bzip2 are supported"
-                        )
-                    all_rows.extend(parse_block(raw))
+                    all_rows.extend(parse_block(decompress_blob(f.read(int(size)))))
             yield pd.DataFrame(all_rows, columns=cols)
 
     return decode
@@ -476,34 +374,15 @@ def read_osm_pbf(spark: SparkSession, path: str) -> DataFrame:
     if not data:
         return spark.createDataFrame([], ENTITY_SCHEMA)
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
+
+    from .osmxml import _tag_entries_schema
 
     # tags travel as an entries ARRAY through Arrow (a python-dict map does
     # not preserve insertion order) and become a map via map_from_entries —
-    # PBF tag order is the reference's output order (sources/osmxml.py has
-    # the same shape)
-    fields = []
-    for fld in ENTITY_SCHEMA.fields:
-        if fld.name == "tags":
-            fields.append(
-                T.StructField(
-                    "tags",
-                    T.ArrayType(
-                        T.StructType(
-                            [
-                                T.StructField("key", T.StringType(), False),
-                                T.StructField("value", T.StringType(), True),
-                            ]
-                        )
-                    ),
-                    True,
-                )
-            )
-        else:
-            fields.append(fld)
+    # PBF tag order is the reference's output order
     n_parts = min(len(data), spark.sparkContext.defaultParallelism)
     ranges = spark.createDataFrame(data, "offset long, size long").repartition(n_parts)
-    decoded = ranges.mapInPandas(_make_blob_decoder(path), schema=T.StructType(fields))
+    decoded = ranges.mapInPandas(_make_blob_decoder(path), schema=_tag_entries_schema())
     return decoded.withColumn("tags", F.map_from_entries("tags")).select(
         *[f.name for f in ENTITY_SCHEMA.fields]
     )

@@ -4,9 +4,11 @@ cwd away from the repo) puts the repo on its own sys.path only; the
 workers it spawns do not see it. A control `map` that calls a package
 function by reference must fail there with ModuleNotFoundError, which
 proves the harness; the large-polygon `assign_extracts`, a two-polygon
-`spatial_join` and `decode_codec_meta` over a PNG must then succeed,
-because their kernels carry `functions/geometry.py` and the codec
-modules by value."""
+`spatial_join`, `decode_codec_meta` over a PNG, a PBF write->read of
+nodes, ways and relations, the distributed XML read, `write_mvt_tiles`
+and `read_opl` must then succeed, because their kernels carry
+`functions/geometry.py`, the image codecs, `functions/protowire.py`
+and the PBF/XML source modules by value."""
 
 import os
 import subprocess
@@ -80,6 +82,52 @@ meta = decode_codec_meta(
     spark.createDataFrame([("a", png.encode_gray(img))], "image_id string, bytes binary")
 ).collect()[0]
 print("DECODE", (meta.w, meta.h, meta.fmt) == (8, 6, "png"))
+
+from osmium_tool_spark.sinks.mvt import write_mvt_tiles
+from osmium_tool_spark.sinks.pbf import write_osm_pbf
+from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+from osmium_tool_spark.sources.opl import _make_parser, read_opl
+from osmium_tool_spark.sources.osmxml import read_osm_xml
+from osmium_tool_spark.sources.pbf import read_osm_pbf
+
+
+def canon(df):
+    return sorted(map(str, df.collect()))
+
+
+ts = 1_420_074_000_000_000
+ents = _df(spark, [
+    _node(-1, 1.5, -2.25, {{"a": "1"}}, ts=ts), _node(2, 3.0, 4.0, ts=ts),
+    _way(5, [-1, 2], {{"highway": "x"}}, ts=ts),
+    _rel(-6, [(1, 5, "outer"), (0, -1, "")], {{"type": "multipolygon"}}, ts=ts),
+])
+write_osm_pbf(ents, "e.osm.pbf")
+print("PBF", canon(read_osm_pbf(spark, "e.osm.pbf")) == canon(ents))
+
+with open("e.osm", "w") as f:
+    f.write('<osm version="0.6">\\n')
+    for i in range(1, 41):
+        f.write(f'  <node id="{{i}}" version="1" lat="{{i}}.5" lon="1.25">'
+                f'<tag k="a" v="1"/><tag k="a" v="{{i}}"/></node>\\n')
+    f.write('  <way id="1" version="1"><nd ref="1"/><nd ref="2"/></way>\\n')
+    f.write('  <relation id="1"><member type="way" ref="1" role="r"/></relation>\\n')
+    f.write("</osm>\\n")
+dist = read_osm_xml(spark, "e.osm", distributed_min_bytes=1)
+print("XML", canon(dist) == canon(read_osm_xml(spark, "e.osm")) and dist.count() == 42)
+
+pts = spark.createDataFrame([(i, i * 7_000_000, i * 3_000_000) for i in range(50)],
+                            "id long, lon long, lat long")
+tiles = write_mvt_tiles(pts, res=3).collect()
+print("MVT", sum(t.n_features for t in tiles) == 50
+      and all(len(t.mvt) == t.mvt_bytes for t in tiles))
+
+opl = ["n1 v1 dV c1 t2015-01-01T00:00:00Z i1 uu Ta=b x1.5 y2.5",
+       "w2 v1 dV c1 t2015-01-01T00:00:00Z i1 uu Tk=v Nn1,n3",
+       "r3 v1 dV c1 t2015-01-01T00:00:00Z i1 uu T Mw2@outer,n1@"]
+with open("e.opl", "w") as f:
+    f.write("\\n".join(opl) + "\\n")
+want = _df(spark, [_make_parser()(ln) for ln in opl])
+print("OPL", canon(read_opl(spark, "e.opl")) == canon(want))
 spark.stop()
 """
 
@@ -98,5 +146,6 @@ def test_kernels_run_without_repo_on_worker_path(tmp_path):
     assert r.returncode == 0, r.stderr[-3000:]
     out = r.stdout
     assert "CONTROL_MODULE_NOT_FOUND" in out, out[-2000:]
-    for marker in ("EXTRACT True", "SPATIAL_JOIN True", "DECODE True"):
+    for marker in ("EXTRACT True", "SPATIAL_JOIN True", "DECODE True",
+                   "PBF True", "XML True", "MVT True", "OPL True"):
         assert marker in out, out[-2000:]

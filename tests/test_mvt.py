@@ -141,3 +141,25 @@ def test_res_validation(spark):
     )
     with pytest.raises(ValueError):
         write_mvt_tiles(df, res=19)
+
+
+def test_negative_feature_id_raises(spark):
+    """MVT Feature.id is uint64: a negative id must fail the encode task
+    with a ValueError naming it. A timer cancels the job group after
+    60 s so an encoder that loops on the id fails here instead of
+    hanging the suite."""
+    import threading
+
+    import pytest
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(-7, 10, 10), (3, 10, 10)], "id long, lon long, lat long")
+    sc.setJobGroup("mvt-negative-id", "negative MVT feature id", interruptOnCancel=True)
+    timer = threading.Timer(60, sc.cancelJobGroup, ("mvt-negative-id",))
+    timer.start()
+    try:
+        with pytest.raises(Exception, match="negative id -7"):
+            write_mvt_tiles(df, res=2).collect()
+    finally:
+        timer.cancel()
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -26,6 +26,17 @@ def meta_rows(df):
     )
 
 
+def hist_rows(df):
+    return sorted(
+        (r.type, r.id, r.version, r.visible, r.ts, r.uid or 0,
+         r.user or "", r.changeset,
+         tuple(sorted((r.tags or {}).items())), r.lon, r.lat,
+         tuple(r.refs or ()),
+         tuple((m.mtype, m.ref, m.role) for m in (r.members or ())))
+        for r in df.collect()
+    )
+
+
 def nometa_rows(df):
     return sorted(
         (r.type, r.id, tuple(sorted((r.tags or {}).items())), r.lon, r.lat,
@@ -148,17 +159,6 @@ class TestPbfWriter:
         # nodes must survive (undefined_coordinate sentinel -> NULL)
         src = read_osm_xml(spark, f"{REF}/apply-changes/input-patch-old-version.osh")
         _, back = self._roundtrip(spark, src, tmp_path, with_history=True)
-
-        def hist_rows(df):
-            return sorted(
-                (r.type, r.id, r.version, r.visible, r.ts, r.uid or 0,
-                 r.user or "", r.changeset,
-                 tuple(sorted((r.tags or {}).items())), r.lon, r.lat,
-                 tuple(r.refs or ()),
-                 tuple((m.mtype, m.ref, m.role) for m in (r.members or ())))
-                for r in df.collect()
-            )
-
         assert hist_rows(back) == hist_rows(src)
 
     def test_write_is_byte_stable(self, spark, tmp_path):
@@ -228,6 +228,63 @@ class TestPbfWriter:
         assert back.count() == n
         assert back.agg(F.sum("id")).collect()[0][0] == n * (n + 1) // 2
 
+    def test_roundtrip_fixture_entities(self, spark, tmp_path):
+        # reference-free codec coverage built from the fixture helpers:
+        # negative ids, relation members, a history write with a deleted
+        # locationless node, a header bbox, byte stability, and a frame
+        # without metadata. PBF keeps whole seconds, so ts is a whole
+        # second in micros.
+        from pyspark.sql import functions as F
+
+        from osmium_tool_spark.functions.protowire import fields, unzigzag
+        from osmium_tool_spark.sinks.pbf import write_osm_pbf
+        from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+        from osmium_tool_spark.sources.pbf import decompress_blob, index_blobs
+
+        ts = 1_420_074_000_000_000
+        deleted = {**_node(4, 0.0, 0.0, ts=ts, version=2, visible=False),
+                   "lon": None, "lat": None}
+        src = _df(spark, [
+            _node(-5, -12.5, -45.25, {"name": "neg", "a": "1"}, ts=ts),
+            _node(1, 0.0, 0.0, ts=ts),
+            _node(2, 179.9999999, 89.9999999, {"k": "v"}, ts=ts, uid=7, user="ü"),
+            deleted,
+            _way(-10, [-5, 1, 2, -5], {"highway": "x"}, ts=ts),
+            _way(11, [1, 2], ts=ts, changeset=1 << 40),
+            _rel(-20, [(1, -10, "outer"), (0, -5, ""), (2, 21, "sub")],
+                 {"type": "multipolygon"}, ts=ts),
+            _rel(21, [], ts=ts),
+        ])
+        bbox = (-1800000000, -900000000, 1799999999, 899999999)
+        a, b = str(tmp_path / "a.osm.pbf"), str(tmp_path / "b.osm.pbf")
+        write_osm_pbf(src, a, with_history=True, bbox=bbox)
+        back = read_osm_pbf(spark, a)
+        assert hist_rows(back) == hist_rows(src)
+        write_osm_pbf(back, b, with_history=True, bbox=bbox)
+        assert open(a, "rb").read() == open(b, "rb").read()
+
+        btype, off, size = index_blobs(a)[0]
+        with open(a, "rb") as f:
+            f.seek(off)
+            header = decompress_blob(f.read(size))
+        box = {t: unzigzag(v)
+               for tag, _w, msg in fields(header) if tag == 1
+               for t, _w2, v in fields(msg)}
+        left, bottom, right, top = bbox
+        assert btype == "OSMHeader"
+        assert box == {1: left * 100, 2: right * 100, 3: top * 100, 4: bottom * 100}
+
+        bare = src.filter("visible").select(
+            "type", "id", *[F.lit(None).cast(t).alias(c) for c, t in [
+                ("version", "int"), ("visible", "boolean"), ("changeset", "long"),
+                ("ts", "long"), ("uid", "int"), ("user", "string")]],
+            "tags", "lon", "lat", "refs", "members")
+        c = str(tmp_path / "c.osm.pbf")
+        write_osm_pbf(bare, c)
+        back = read_osm_pbf(spark, c)
+        assert nometa_rows(back) == nometa_rows(bare)
+        assert all(r.version is None and r.ts is None for r in back.collect())
+
 
 class TestBlobCodecs:
     """Blob codec matrix (fileformat.proto tags): lzma (4) and bzip2 (5)
@@ -243,7 +300,8 @@ class TestBlobCodecs:
         import struct
         import zlib as _z
 
-        from osmium_tool_spark.sources.pbf import _fields, decompress_blob
+        from osmium_tool_spark.functions.protowire import fields
+        from osmium_tool_spark.sources.pbf import decompress_blob
 
         with open(src_path, "rb") as f, open(dst_path, "wb") as out:
             while True:
@@ -253,7 +311,7 @@ class TestBlobCodecs:
                 (hdr_len,) = struct.unpack(">I", hdr_len_raw)
                 hdr = f.read(hdr_len)
                 datasize = None
-                for t, wt, val in _fields(hdr):
+                for t, wt, val in fields(hdr):
                     if t == 3:
                         datasize = val
                 blob = f.read(datasize)
@@ -271,7 +329,7 @@ class TestBlobCodecs:
                             + bytes([(tag << 3) | 2]) + varint(len(comp)) + comp)
                 # BlobHeader datasize (tag 3) must be rewritten
                 new_hdr = b""
-                for t, wt, val in _fields(hdr):
+                for t, wt, val in fields(hdr):
                     if t == 3:
                         new_hdr += bytes([3 << 3]) + varint(len(new_blob))
                     elif wt == 2:

@@ -439,6 +439,8 @@ class TestDistributedXmlRead:
                 f'user="u" changeset="9" lat="{(i % 80)}.5" lon="{(i % 170)}.25">'
             )
             lines.append(f'    <tag k="n" v="v{i}"/>')
+            if i == 7:  # a repeated key: both reads keep the last value
+                lines.append('    <tag k="n" v="last"/>')
             lines.append("  </node>")
         for i in range(1, n // 10 + 1):
             lines.append(f'  <way id="{i}" version="1">')
@@ -467,6 +469,8 @@ class TestDistributedXmlRead:
         assert canon_rows(dist) == driver_rows
         assert canon_rows(dist_small) == driver_rows
         assert len(driver_rows) == 3000 + 300 + 30
+        node7 = dist.filter("type = 0 AND id = 7").collect()[0]
+        assert node7.tags == {"n": "last"}
 
     def test_large_osc_guard(self, spark, tmp_path):
         p = tmp_path / "big.osc"
