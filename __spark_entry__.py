@@ -349,7 +349,7 @@ def q_renumber(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         _L("type").alias("type"),
         _L("id").alias("id"),
-        F.element_at("refs", 1).cast("long").alias("ref0"),
+        F.get("refs", 0).cast("long").alias("ref0"),
     )
 
 

@@ -13,13 +13,25 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+# a negative id -i sorts as i - NEG_ID_BASE, below every positive id
+NEG_ID_BASE = 1 << 62
+
+
 def id_sort_key(id_col: Column) -> Column:
     """Monotone key: negative ids (by |id|) sort before positive ids.
 
     neg id -i  ->  |i| - 2^62   (ascending |id|)
     pos id  i  ->  i            (>= 0)
     """
-    return F.when(id_col < 0, -id_col - F.lit(1 << 62)).otherwise(id_col)
+    return F.when(id_col < 0, -id_col - F.lit(NEG_ID_BASE)).otherwise(id_col)
+
+
+def id_sort_keys(ids):
+    """id_sort_key over a numpy int64 array, for orderings built on the
+    driver."""
+    import numpy as np
+
+    return np.where(ids < 0, -ids - NEG_ID_BASE, ids)
 
 
 def canonical_sort(df: DataFrame, extra_first: list[str] | None = None) -> DataFrame:

@@ -6,18 +6,27 @@ command_getparents.cpp (inverse reference semi-join), command_renumber.cpp
 (order-preserving dense re-id), command_check_refs.cpp (referential
 integrity anti-join).
 
-The reference's IdSetDense bitmaps become id DataFrames; every operation is
-an equi-(semi/anti)-join that AQE turns into a broadcast join when the id
-set is small — the distributed analog of the in-RAM bitmap probe.
+The reference keeps its id sets (IdSetDense) and renumber's id_map in RAM.
+getid -r and renumber have two paths, chosen per call by Spark's own
+broadcast rule: when the plan's size estimate for the input's (type, id,
+refs, members) projection is within spark.sql.autoBroadcastJoinThreshold,
+the id sets and the id map live on the driver (one collect per closure
+level, one Arrow collect for the map) and reach the executors as IN
+filters or local relations. Larger inputs, or a threshold of -1, keep
+them as DataFrames joined against the input. An input without a size
+estimate never takes the driver path: read_osm_pbf, read_o5m and
+read_osm_xml build their frames from Python lists, whose estimate is
+unbounded. getid without -r, removeid, getparents and check-refs always
+use (semi/anti) joins, which AQE broadcasts when the id set is small.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.fixpoint import CLOSURE_ROUNDS, fixpoint
-from ..functions.sortkeys import canonical_sort, id_sort_key
+from ..functions.sortkeys import canonical_sort, id_sort_key, id_sort_keys
 from ..schema import NODE, RELATION, WAY
 
 
@@ -116,6 +125,77 @@ def merge_id_sets(*id_sets: dict[int, list[int]]) -> dict[int, list[int]]:
     return {t: sorted(set(lst)) for t, lst in out.items()}
 
 
+def _broadcastable(df: DataFrame) -> bool:
+    """Whether Spark would broadcast `df`: its plan's size estimate is
+    within spark.sql.autoBroadcastJoinThreshold (negative disables
+    broadcasts). This picks the ID engine's in-RAM path."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return 0 <= size <= conf.autoBroadcastJoinThreshold()
+
+
+def _id_in(sel: dict[int, set[int]]) -> Column:
+    """(type, id) in a driver-side id set, as one filter that the scan can
+    take as a pushed-down IN. Built from SQL text: Column.isin makes one
+    JVM call per value, about 0.5 ms each."""
+    conds = [
+        f"(`type` = {t} AND `id` IN ({','.join(map(str, sorted(ids)))}))"
+        for t, ids in sorted(sel.items())
+        if ids
+    ]
+    return F.expr(" OR ".join(conds) or "false")
+
+
+def _ids_frame(spark, sel: dict[int, set[int]]) -> DataFrame:
+    """A driver-side id set as a (type, id) frame: an Arrow-backed local
+    relation, so a join reads the ids as a table rather than as SQL
+    literals."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "type": pa.array([t for t, ids in sel.items() for _ in ids], pa.int32()),
+                "id": pa.array([i for ids in sel.values() for i in ids], pa.int64()),
+            }
+        )
+    )
+
+
+def _closure_in_ram(entities: DataFrame, sel: dict[int, set[int]]) -> dict[int, set[int]]:
+    """getid -r's reference closure with its id sets on the driver, the
+    way the reference keeps IdSetDense in RAM: one collect per level
+    fetches the refs and members of the ways and relations the previous
+    level reached first (nodes reference nothing and are never fetched).
+    Levels that fetch relations are the closure rounds of the distributed
+    path, with the same round cap."""
+    have = {t: set(sel.get(t, ())) for t in (NODE, WAY, RELATION)}
+    todo = {t: set(have[t]) for t in (WAY, RELATION)}
+    sizes: list[int] = []
+    while todo[WAY] or todo[RELATION]:
+        rows = (
+            entities.filter(_id_in(todo))
+            .select("type", "refs", F.col("members.mtype").alias("mt"), F.col("members.ref").alias("mr"))
+            .collect()
+        )
+        found: dict[int, set[int]] = {NODE: set(), WAY: set(), RELATION: set()}
+        for r in rows:
+            if r["type"] == WAY:
+                found[NODE].update(r["refs"] or ())
+            elif r["type"] == RELATION:
+                for t, ref in zip(r["mt"] or (), r["mr"] or ()):
+                    if t in found:
+                        found[t].add(ref)
+        if todo[RELATION]:
+            sizes.append(len(found[RELATION] - have[RELATION]))
+            if len(sizes) == CLOSURE_ROUNDS and sizes[-1]:
+                raise ValueError(f"getid: relations nested over {CLOSURE_ROUNDS} deep, frontier sizes {sizes}")
+        todo = {t: found[t] - have[t] for t in (WAY, RELATION)}
+        for t in have:
+            have[t] |= found[t]
+    return have
+
+
 def getid(
     entities: DataFrame,
     ids: dict[int, list[int]],
@@ -124,8 +204,24 @@ def getid(
 ) -> DataFrame:
     """Semi-join by explicit (type,id) list; `recursive` follows references
     downward until closed (command_getid.cpp:235-333): relation members
-    (incl. nested relations), way nodes. Set persist_input=False when the
-    input is an already-materialized table (re-caching a scan is waste)."""
+    (incl. nested relations), way nodes.
+
+    The recursive closure keeps its id sets on the driver when Spark would
+    broadcast the input's (type, id, refs, members) projection
+    (_closure_in_ram), then semi-joins the input with the closure shipped
+    as a local relation; larger inputs close them with joins. Set
+    persist_input=False when a larger input is an already-materialized
+    table (re-caching a scan is waste)."""
+    if recursive and _broadcastable(entities.select("type", "id", "refs", "members")):
+        if isinstance(ids, DataFrame):
+            present = _ids_df(entities, ids).join(entities.select("type", "id"), ["type", "id"], "left_semi")
+            sel: dict[int, set[int]] = {}
+            for r in present.collect():
+                sel.setdefault(r["type"], set()).add(r["id"])
+        else:
+            sel = {t: set(lst) for t, lst in ids.items()}
+        closure = _closure_in_ram(entities, sel)
+        return canonical_sort(entities.join(_ids_frame(entities.sparkSession, closure), ["type", "id"], "left_semi"))
     sel = _ids_df(entities, ids)
     if recursive:
         if persist_input:
@@ -241,17 +337,22 @@ def renumber(
     `object_types` limits renumbering to the listed types (--object-type);
     `index_dir` persists/reloads the mapping (--index-dir,
     command_renumber.cpp:367-441): a later batch reuses existing
-    assignments and appends new ids after each type's current maximum.
+    assignments and moves new ids past each type's persisted extreme
+    (the maximum, or the minimum for a type that counts down).
 
-    Scale note: new ids come from functions/zipindex.dense_index — a range
-    partition + per-partition prefix-sum offsets (distributed zipWithIndex)
-    instead of a per-type global window that would serialize 10^12 rows
-    through <=3 tasks; ref-rewrite is an equi-join of exploded refs against
-    the mapping (same as the reference's in-RAM id_map, distributed).
+    Scale note: the mapping (type, id, new_id) is built one of two ways.
+    When Spark would broadcast the input's (type, id, refs, members)
+    projection, and the persisted index if there is one, the driver
+    builds it from one Arrow collect, as the reference builds its in-RAM
+    id_map, and ships it back as a local relation (_mapping_in_ram).
+    Larger inputs number their ids with functions/zipindex.dense_index, a
+    range partition plus per-partition prefix-sum offsets, instead of a
+    per-type global window that would serialize 10^12 rows through <=3
+    tasks (_mapping_distributed). Either mapping then rewrites node ids
+    in one join, and way and relation ids, refs and members in one
+    exploded join and one regroup (_remap).
     """
     import os
-
-    from ..functions.zipindex import dense_index
 
     start_ids = start_ids or {}
     types = set(object_types) if object_types is not None else {NODE, WAY, RELATION}
@@ -260,32 +361,111 @@ def renumber(
     prior = None
     if index_dir and os.path.exists(os.path.join(index_dir, "_SUCCESS")):
         prior = spark.read.parquet(index_dir)
+    in_ram = _broadcastable(entities.select("type", "id", "refs", "members")) and (
+        prior is None or _broadcastable(prior)
+    )
+    build = _mapping_in_ram if in_ram else _mapping_distributed
+    mapping = build(entities, types, start_ids, prior)
+
+    if index_dir:
+        import shutil
+
+        # the distributed mapping reads the old index lazily: write aside,
+        # then swap the directories
+        mapping.write.mode("overwrite").parquet(index_dir + ".tmp")
+        shutil.rmtree(index_dir, ignore_errors=True)
+        os.rename(index_dir + ".tmp", index_dir)
+        if not in_ram:
+            mapping = spark.read.parquet(index_dir)
+
+    return canonical_sort(_remap(entities, mapping))
+
+
+def _mapping_in_ram(
+    entities: DataFrame, types: set[int], start_ids: dict[int, int], prior: DataFrame | None
+) -> DataFrame:
+    """renumber's (type, id, new_id) map built on the driver from one Arrow
+    collect of all ids, way refs and relation members: per type, the
+    input's ids in canonical order, then the absent refs in the order
+    they are first seen (ways before relations, each in canonical
+    (id, version) order, then by position). Shipped back as a local
+    relation."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = entities.select(
+        "type", "id", "version", "refs", F.col("members.mtype").alias("mt"), F.col("members.ref").alias("mr")
+    ).toArrow()
+    typ, ids = t["type"].to_numpy(), t["id"].to_numpy()
+
+    def flat(src_type, col):
+        """The list column of src_type rows, concatenated in canonical
+        (id, version) order; a null version sorts first, as in Spark."""
+        sub = t.filter(pc.equal(t["type"], src_type))
+        version = pc.fill_null(sub["version"], -(1 << 31)).to_numpy()
+        order = np.lexsort((version, id_sort_keys(sub["id"].to_numpy())))
+        return pc.list_flatten(sub[col].take(order)).to_numpy().astype(np.int64)
+
+    wrefs = flat(WAY, "refs")
+    ref_t = np.concatenate([np.full(len(wrefs), NODE), flat(RELATION, "mt")])
+    ref_id = np.concatenate([wrefs, flat(RELATION, "mr")])
+
+    cols = ("type", "id", "new_id")
+    empty = pa.table({c: pa.array([], pa.int64()) for c in cols})
+    p = empty if prior is None else prior.select(*cols).toArrow()
+    pt, pid, pnew = (p[c].to_numpy().astype(np.int64) for c in cols)
+    parts = [(pt, pid, pnew)]
+    for ty in sorted(types):
+        s = start_ids.get(ty, 1)
+        step = -1 if s < 0 else 1
+        old_id, old_new = pid[pt == ty], pnew[pt == ty]
+        known = np.setdiff1d(ids[typ == ty], old_id)
+        known = known[np.argsort(id_sort_keys(known))]
+        off = (old_new.min() if step < 0 else old_new.max()) if len(old_new) else 0
+        new = off + s + step * np.arange(len(known), dtype=np.int64)
+        # refs to ids the input lacks, in first-seen order, after the last id
+        uniq, first = np.unique(ref_id[ref_t == ty], return_index=True)
+        keep = ~np.isin(uniq, np.concatenate([known, old_id]))
+        absent = uniq[keep][np.argsort(first[keep])]
+        assigned = np.concatenate([old_new, new])
+        base = (assigned.min() if step < 0 else assigned.max()) if len(assigned) else s - step
+        ext = base + step * np.arange(1, len(absent) + 1, dtype=np.int64)
+        ids_ty = np.concatenate([known, absent])
+        parts.append((np.full(len(ids_ty), ty), ids_ty, np.concatenate([new, ext])))
+    out_t, out_id, out_new = (np.concatenate(c) for c in zip(*parts))
+    table = pa.table({"type": pa.array(out_t, pa.int32()), "id": out_id, "new_id": out_new})
+    return entities.sparkSession.createDataFrame(table)
+
+
+def _mapping_distributed(
+    entities: DataFrame, types: set[int], start_ids: dict[int, int], prior: DataFrame | None
+) -> DataFrame:
+    """renumber's (type, id, new_id) map for inputs too large for the
+    driver: dense_index numbers each type's fresh ids, then absent refs
+    are found with an anti-join and numbered after them."""
+    from ..functions.zipindex import dense_index
 
     fresh = entities.select("type", "id").distinct().filter(F.col("type").isin(list(types)))
     if prior is not None:
         fresh = fresh.join(prior.select("type", "id"), on=["type", "id"], how="left_anti")
     mapping = dense_index(fresh, [id_sort_key(F.col("id"))], part_col="type")
+    neg_types = [t for t, s in start_ids.items() if s < 0]
     for t, s in start_ids.items():
-        if s < 0:
-            # first assigned id equals the start id, counting DOWN
-            # (command_renumber.cpp:61-66; e.g. --start-id=-1 -> -1,-2,...)
-            mapping = mapping.withColumn(
-                "new_id",
-                F.when(F.col("type") == t, F.lit(s) - (F.col("new_id") - 1)).otherwise(F.col("new_id")),
-            )
-        else:
-            mapping = mapping.withColumn(
-                "new_id",
-                F.when(F.col("type") == t, F.col("new_id") + s - 1).otherwise(F.col("new_id")),
-            )
+        # a negative start is the first assigned id, counting DOWN
+        # (command_renumber.cpp:61-66; e.g. --start-id=-1 -> -1,-2,...)
+        shifted = F.lit(s) - (F.col("new_id") - 1) if s < 0 else F.col("new_id") + s - 1
+        mapping = mapping.withColumn("new_id", F.when(F.col("type") == t, shifted).otherwise(F.col("new_id")))
     mapping = mapping.withColumn("new_id", F.col("new_id").cast("long"))
     if prior is not None:
-        # shift fresh assignments past each type's persisted maximum
-        maxes = prior.groupBy("type").agg(F.max("new_id").alias("__mx"))
+        # shift fresh assignments past each type's persisted extreme: the
+        # maximum, or the minimum for types that count down
+        extremes = prior.groupBy("type").agg(F.max("new_id").alias("__mx"), F.min("new_id").alias("__mn"))
+        shift = F.when(F.col("type").isin(neg_types), F.col("__mn")).otherwise(F.col("__mx"))
         mapping = (
-            mapping.join(maxes, on="type", how="left")
-            .withColumn("new_id", F.col("new_id") + F.coalesce("__mx", F.lit(0)))
-            .drop("__mx")
+            mapping.join(extremes, on="type", how="left")
+            .withColumn("new_id", F.col("new_id") + F.coalesce(shift, F.lit(0)))
+            .drop("__mx", "__mn")
             .unionByName(prior.select("type", "id", "new_id"))
         )
     mapping = mapping.persist()
@@ -302,12 +482,13 @@ def renumber(
     rels_src = entities.filter(F.col("type") == RELATION)
 
     def all_refs(with_order: bool) -> DataFrame:
-        order_w = [F.lit(0).alias("o0"), id_sort_key(F.col("id")).alias("o1")] if with_order else []
-        order_m = [F.lit(1).alias("o0"), id_sort_key(F.col("id")).alias("o1")] if with_order else []
+        key = [id_sort_key(F.col("id")).alias("o1"), F.col("version").alias("ov")]
+        order_w = [F.lit(0).alias("o0"), *key] if with_order else []
+        order_m = [F.lit(1).alias("o0"), *key] if with_order else []
         if with_order:
             wexp = F.posexplode("refs").alias("o2", "ref")
             mexp = F.posexplode("members").alias("o2", "m")
-            mcols = ["o0", "o1", "o2"]
+            mcols = ["o0", "o1", "ov", "o2"]
         else:
             wexp = F.explode("refs").alias("ref")
             mexp = F.explode("members").alias("m")
@@ -327,11 +508,11 @@ def renumber(
         missing = all_refs(with_order=True).join(
             mapping.select("type", F.col("id").alias("ref")), on=["type", "ref"], how="left_anti"
         )
-        first = missing.groupBy("type", "ref").agg(F.min(F.struct("o0", "o1", "o2")).alias("__o"))
+        first = missing.groupBy("type", "ref").agg(F.min(F.struct("o0", "o1", "ov", "o2")).alias("__o"))
         bounds = mapping.groupBy("type").agg(
             F.max("new_id").alias("__mx"), F.min("new_id").alias("__mn")
         )
-        neg = F.col("type").isin([t for t, s in start_ids.items() if s < 0])
+        neg = F.col("type").isin(neg_types)
         start_map = F.create_map(
             *[x for t in types for x in (F.lit(t), F.lit(start_ids.get(t, 1)))]
         )
@@ -350,65 +531,65 @@ def renumber(
             )
         )
         mapping = mapping.unionByName(ext)
-    mapping = mapping.persist()
+    return mapping.persist()
 
-    if index_dir:
-        mapping.write.mode("overwrite").parquet(index_dir + ".tmp")
-        tmp_df = spark.read.parquet(index_dir + ".tmp")
-        tmp_df.write.mode("overwrite").parquet(index_dir)
-        import shutil
 
-        shutil.rmtree(index_dir + ".tmp", ignore_errors=True)
-        mapping = spark.read.parquet(index_dir)
+def _remap(entities: DataFrame, mapping: DataFrame) -> DataFrame:
+    """Rewrite ids, way refs and relation member refs through `mapping`
+    (type, id, new_id); ids the mapping lacks keep their value.
 
-    node_map = mapping.filter(F.col("type") == NODE).select(F.col("id"), F.col("new_id"))
-    way_map = mapping.filter(F.col("type") == WAY).select(F.col("id"), F.col("new_id"))
-    rel_map = mapping.filter(F.col("type") == RELATION).select(F.col("id"), F.col("new_id"))
-
-    out = (
-        entities.join(mapping, on=["type", "id"], how="left")
+    Nodes reference nothing: one join on (type, id) rewrites them, and
+    they skip the regroup's shuffle (they are most rows of an OSM file).
+    Each way and relation explodes into slots (pos, t, ref): its own id at
+    pos -1, then its way refs (t = node) or its members in order. The
+    slots take one join and one regroup; only the pos -1 slot carries the
+    row itself."""
+    idmap = mapping.select("type", "id", "new_id")
+    nodes = (
+        entities.filter(F.col("type") == NODE)
+        .join(idmap, ["type", "id"], "left")
         .withColumn("id", F.coalesce("new_id", "id"))
-        .drop("new_id")
+        .select(*entities.columns)
     )
 
-    # remap way refs (posexplode keeps order, collect back sorted by pos)
-    ways = out.filter(F.col("type") == WAY)
-    others = out.filter(F.col("type") != WAY)
-    exploded = ways.select(
-        "type", "id", "version", F.posexplode_outer("refs").alias("pos", "ref")
-    ).join(node_map.withColumnRenamed("id", "ref"), on="ref", how="left")
-    remapped = exploded.groupBy("type", "id", "version").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("pos"), F.coalesce("new_id", "ref").alias("r")))
-        ).alias("prs")
-    ).select("type", "id", "version", F.transform("prs", lambda s: s.r).alias("new_refs"))
-    ways = ways.join(remapped, on=["type", "id", "version"], how="left").withColumn(
-        "refs", F.coalesce("new_refs", "refs")
-    ).drop("new_refs")
+    def slot(pos, t, ref):
+        return F.struct(pos.alias("pos"), t.alias("t"), ref.alias("ref"))
 
-    # remap relation members per member type
-    rels = others.filter(F.col("type") == RELATION)
-    non_rels = others.filter(F.col("type") != RELATION)
-    mex = rels.select(
-        "type", "id", "version", F.posexplode_outer("members").alias("pos", "m")
-    ).select("type", "id", "version", "pos", F.col("m.mtype").alias("mtype"), F.col("m.ref").alias("ref"), F.col("m.role").alias("role"))
-    for t, mdf in ((NODE, node_map), (WAY, way_map), (RELATION, rel_map)):
-        mex = mex.join(
-            mdf.withColumnRenamed("id", "ref").withColumnRenamed("new_id", f"nid_{t}"),
-            on="ref",
-            how="left",
-        ).withColumn(
-            "ref",
-            F.when((F.col("mtype") == t) & F.col(f"nid_{t}").isNotNull(), F.col(f"nid_{t}")).otherwise(F.col("ref")),
-        ).drop(f"nid_{t}")
-    rebuilt = mex.groupBy("type", "id", "version").agg(
-        F.array_sort(F.collect_list(F.struct("pos", F.struct("mtype", "ref", "role").alias("m")))).alias("pms")
-    ).select("type", "id", "version", F.transform("pms", lambda s: s.m).alias("new_members"))
-    rels = rels.join(rebuilt, on=["type", "id", "version"], how="left").withColumn(
-        "members", F.coalesce("new_members", "members")
-    ).drop("new_members")
-
-    return canonical_sort(non_rels.unionByName(ways).unionByName(rels))
+    tail = F.when(F.col("type") == WAY, F.transform("refs", lambda r, i: slot(i, F.lit(NODE), r))).when(
+        F.col("type") == RELATION, F.transform("members", lambda m, i: slot(i, m.mtype, m.ref))
+    )
+    slots = F.concat(F.array(slot(F.lit(-1), F.col("type"), F.col("id"))), F.coalesce(tail, F.array()))
+    # __row is stamped in its own projection, below the explode, so that
+    # all slots of a row share it
+    exploded = (
+        entities.filter(F.col("type") != NODE)
+        .select(
+            F.monotonically_increasing_id().alias("__row"),
+            F.struct(*entities.columns).alias("__e"),
+            slots.alias("s"),
+        )
+        .select("__row", "__e", F.explode("s").alias("s"))
+        .select("__row", "s.*", F.when(F.col("s.pos") < 0, F.col("__e")).alias("__e"))
+    )
+    regrouped = (
+        exploded.join(idmap, (exploded.t == idmap.type) & (exploded.ref == idmap.id), "left")
+        .groupBy("__row")
+        .agg(
+            F.first("__e", ignorenulls=True).alias("e"),
+            F.array_sort(F.collect_list(F.struct("pos", F.coalesce("new_id", "ref").alias("r")))).alias("s"),
+        )
+    )
+    e = F.col("e")
+    new_refs = F.transform(F.slice("s", 2, F.size("s")), lambda x: x.r)
+    cols = {
+        "id": F.col("s")[0].r,
+        "refs": F.when((e.type == WAY) & e.refs.isNotNull(), new_refs).otherwise(e.refs),
+        "members": F.when(
+            (e.type == RELATION) & e.members.isNotNull(),
+            F.zip_with(e.members, new_refs, lambda m, r: m.withField("ref", r)),
+        ).otherwise(e.members),
+    }
+    return nodes.unionByName(regrouped.select(*[cols.get(c, e[c]).alias(c) for c in entities.columns]))
 
 
 def check_refs(entities: DataFrame, check_relations: bool = False) -> DataFrame:

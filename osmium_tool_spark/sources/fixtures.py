@@ -45,7 +45,14 @@ def _rel(id, members, tags=None, **kw):
 
 
 def _df(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    return spark.createDataFrame(rows, schema=ENTITY_SCHEMA)
+    """Rows as an Arrow-backed local relation: its plan knows its size,
+    so Spark broadcasts it like any other small input (a frame made from
+    a Python list is an RDD of unknown size)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(ENTITY_SCHEMA))
+    return spark.createDataFrame(table, schema=ENTITY_SCHEMA)
 
 
 def extract_input1(spark: SparkSession) -> DataFrame:

@@ -16,3 +16,15 @@ def spark():
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def distributed_ids(spark):
+    """Send getid -r and renumber down their distributed path: with
+    broadcasts disabled no input is small enough to keep its id sets on
+    the driver."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, saved)

@@ -6,7 +6,7 @@ dangling member refs included)."""
 from collections import deque
 
 import pytest
-from hypothesis import example, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -93,10 +93,7 @@ def members_of(rels, rel_ids, mtype):
     return {m for r in rel_ids for t, m in rels.get(r, []) if t == mtype}
 
 
-@PROPS
-@given(g=graphs(), picks=st.sets(st.integers(1, 7), max_size=3))
-@example(g=NESTED, picks={1})
-def test_getid_recursive_matches_reference(spark, g, picks):
+def check_getid_recursive(spark, g, picks):
     nodes, ways, rels, _ = g
     rel_ids = closure(picks, lambda r: rel_children(rels, r))
     way_ids = members_of(rels, rel_ids, WAY)
@@ -106,6 +103,21 @@ def test_getid_recursive_matches_reference(spark, g, picks):
 
     got = idops.getid(entities(spark, g), {RELATION: sorted(picks)}, recursive=True)
     assert result_set(got) == want
+
+
+@PROPS
+@given(g=graphs(), picks=st.sets(st.integers(1, 7), max_size=3))
+@example(g=NESTED, picks={1})
+def test_getid_recursive_matches_reference(spark, g, picks):
+    check_getid_recursive(spark, g, picks)
+
+
+# the fixture only sets a session conf, which every example shares
+@settings(PROPS, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(g=graphs(), picks=st.sets(st.integers(1, 7), max_size=3))
+@example(g=NESTED, picks={1})
+def test_getid_recursive_matches_reference_distributed(spark, distributed_ids, g, picks):
+    check_getid_recursive(spark, g, picks)
 
 
 @PROPS

@@ -1,5 +1,7 @@
 """Tests for id ops, sort/merge, aggregates, and history/CDC operators."""
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,10 +28,21 @@ def hist(spark):
     return df
 
 
-class TestGetId:
-    def test_plain(self, inp):
-        got = rset(idops.getid(inp, {NODE: [11], WAY: [21]}))
-        assert got == {(NODE, 11), (WAY, 21)}
+# w20's node 12 and r36's member r35 are missing from this input
+DANGLING = f"NOT ((type = {NODE} AND id = 12) OR (type = {RELATION} AND id = 35))"
+
+
+def id_path_is(inp, in_ram):
+    return idops._broadcastable(inp.select("type", "id", "refs", "members")) is in_ram
+
+
+class GetIdRecursive:
+    """getid -r behaviour, run once per path."""
+
+    in_ram = True  # the fixture is small enough to keep its id sets on the driver
+
+    def test_path(self, inp):
+        assert id_path_is(inp, self.in_ram)
 
     def test_recursive_way(self, inp):
         got = rset(idops.getid(inp, {WAY: [20]}, recursive=True))
@@ -39,6 +52,22 @@ class TestGetId:
         # r36 -> r35 -> r31 -> n10
         got = rset(idops.getid(inp, {RELATION: [36]}, recursive=True))
         assert got == {(RELATION, 36), (RELATION, 35), (RELATION, 31), (NODE, 10)}
+
+    def test_recursive_dangling_refs(self, inp):
+        got = rset(idops.getid(inp.filter(DANGLING), {WAY: [20], RELATION: [36]}, recursive=True))
+        assert got == {(WAY, 20), (NODE, 11), (NODE, 13), (RELATION, 36)}
+
+    def test_recursive_nesting_over_round_cap_raises(self, inp, monkeypatch):
+        # r36 -> r35 -> r31 needs a third round to find nothing new
+        monkeypatch.setattr(idops, "CLOSURE_ROUNDS", 2)
+        with pytest.raises(ValueError, match=r"relations nested over 2 deep, frontier sizes \[1, 1\]"):
+            idops.getid(inp, {RELATION: [36]}, recursive=True).collect()
+
+
+class TestGetId(GetIdRecursive):
+    def test_plain(self, inp):
+        got = rset(idops.getid(inp, {NODE: [11], WAY: [21]}))
+        assert got == {(NODE, 11), (WAY, 21)}
 
     def test_removeid(self, inp):
         got = rset(idops.removeid(inp, {NODE: [10, 11, 12, 13, 14, 15, 16], RELATION: [31, 32, 33, 34, 35, 36]}))
@@ -57,6 +86,11 @@ class TestGetParents:
 
 
 class TestRenumber:
+    in_ram = True
+
+    def test_path(self, inp):
+        assert id_path_is(inp, self.in_ram)
+
     def test_dense_and_refs_remapped(self, inp):
         out = idops.renumber(inp).collect()
         by = {(r["type"], r["id"]): r for r in out}
@@ -79,6 +113,138 @@ class TestRenumber:
         out = idops.renumber(inp, start_ids={NODE: -1}).collect()
         node_ids = sorted((r["id"] for r in out if r["type"] == NODE), reverse=True)
         assert node_ids == [-1, -2, -3, -4, -5, -6, -7]
+
+    def test_dangling_refs_get_fresh_ids(self, inp):
+        by = {(r["type"], r["id"]): r for r in idops.renumber(inp.filter(DANGLING)).collect()}
+        # nodes 10, 11, 13..16 -> 1..6 and the missing n12 -> 7;
+        # relations 31..34, 36 -> 1..5 and the missing r35 -> 6
+        assert by[(WAY, 1)]["refs"] == [2, 7, 3]
+        assert [m["ref"] for m in by[(RELATION, 5)]["members"]] == [6]
+
+    def test_empty_refs_and_members_stay_empty(self, spark):
+        from osmium_tool_spark.sources.fixtures import _df, _rel, _way
+
+        out = idops.renumber(_df(spark, [_way(5, []), _rel(7, [])])).collect()
+        assert [(r["refs"], r["members"]) for r in out] == [([], None), (None, [])]
+
+
+@pytest.mark.usefixtures("distributed_ids")
+class TestGetIdDistributed(GetIdRecursive):
+    in_ram = False
+
+
+@pytest.mark.usefixtures("distributed_ids")
+class TestRenumberDistributed(TestRenumber):
+    in_ram = False
+
+
+_groups = itertools.count()
+
+
+def job_count(spark, run) -> int:
+    """Spark jobs launched by run() with AQE off. AQE runs each shuffle
+    stage as its own job; without it a job is an action, an eager step
+    or a broadcast."""
+    sc = spark.sparkContext
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    group = f"idops-jobs-{next(_groups)}"
+    try:
+        sc.setJobGroup(group, "id engine job count")
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_in_ram_job_counts(spark, inp):
+    """getid -r on r36 (r36 -> r35 -> r31) collects once per closure level,
+    then semi-joins the closure and sorts. renumber makes one Arrow
+    collect; its final action broadcasts the mapping twice (the node join
+    reads only the node part of it) and sorts. An eager probe would add a
+    job to either."""
+    from osmium_tool_spark.functions.sortkeys import canonical_sort
+
+    assert id_path_is(inp, True)
+    closure = {RELATION: {31, 35, 36}, NODE: {10}}
+    final = job_count(
+        spark,
+        lambda: canonical_sort(inp.join(idops._ids_frame(spark, closure), ["type", "id"], "left_semi")).collect(),
+    )
+    assert job_count(spark, lambda: idops.getid(inp, {RELATION: [36]}, recursive=True).collect()) == 3 + final
+    assert job_count(spark, lambda: idops.renumber(inp).collect()) == 1 + 1 + final
+
+
+def test_distributed_job_counts(spark, inp, distributed_ids):
+    """The distributed path's counts, pinned: getid -r on r36 and renumber
+    launch 16 and 8 jobs."""
+    assert id_path_is(inp, False)
+    assert job_count(spark, lambda: idops.getid(inp, {RELATION: [36]}, recursive=True).collect()) == 16
+    assert job_count(spark, lambda: idops.renumber(inp).collect()) == 8
+
+
+def test_renumber_paths_agree(spark):
+    """Both paths give the same ids for an input with several versions of
+    a way and a relation, listed out of order, and several absent refs
+    of every type: absent refs are numbered in first-seen order, ways
+    before relations, each in canonical (id, version) order."""
+    from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+
+    rows = [
+        _node(1, 0, 0),
+        _node(2, 0, 0),
+        _node(-3, 0, 0),
+        _way(10, [101, 102, 1], version=2),
+        _way(10, [1, 100, 2, 101], version=1),
+        _way(-5, [103, -3]),
+        _way(11, [100, 104]),
+        _rel(20, [(WAY, 51, ""), (WAY, 50, ""), (RELATION, 61, "")], version=2),
+        _rel(20, [(NODE, 105, ""), (WAY, 50, ""), (RELATION, 60, ""), (WAY, 10, "")], version=1),
+        _rel(21, [(RELATION, 60, ""), (NODE, 1, ""), (WAY, 52, ""), (RELATION, 20, "")]),
+    ]
+
+    def run(start_ids):
+        out = idops.renumber(_df(spark, rows), start_ids=start_ids).collect()
+        return sorted(
+            (r["type"], r["id"], r["version"], tuple(r["refs"] or ()), tuple(m["ref"] for m in r["members"] or ()))
+            for r in out
+        )
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    for start_ids in ({}, {NODE: -1, WAY: 5}):
+        in_ram = run(start_ids)
+        spark.conf.set(key, "-1")
+        try:
+            assert run(start_ids) == in_ram
+        finally:
+            spark.conf.set(key, saved)
+    # nodes -3, 1, 2 -> 1, 2, 3, then the absent ones: 103 (w-5), 100 and
+    # 101 (w10 v1), 102 (w10 v2), 104 (w11), 105 (r20 v1) -> 4..9
+    assert {(r[1], r[2]): r[3] for r in run({}) if r[0] == WAY} == {
+        (1, 1): (4, 1),
+        (2, 1): (2, 5, 3, 6),
+        (2, 2): (6, 7, 2),
+        (3, 1): (5, 8),
+    }
+
+
+def test_in_ram_path_persists_nothing(spark, inp):
+    """No RDD persisted by three calls each stays registered. RDD ids only
+    grow, so the check looks at ids above the last one persisted before
+    the calls: GC may drop older entries of earlier tests meanwhile, which
+    makes a plain count flaky."""
+
+    def persisted():
+        return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+    last = max(persisted(), default=-1)
+    for _ in range(3):
+        idops.renumber(inp).collect()
+        idops.getid(inp, {RELATION: [36]}, recursive=True).collect()
+    assert id_path_is(inp, True)
+    assert {i for i in persisted() if i > last} == set()
 
 
 class TestCheckRefs:
@@ -266,6 +432,27 @@ def test_renumber_index_dir_persistence(spark, tmp_path):
     assert all_ids == {2, 3, 4}
     got = {r.id for r in renumber(_df(spark, [_node(10, 0, 1)]), index_dir=idx).collect()}
     assert got == {2}
+
+
+@pytest.mark.parametrize("path", ["in_ram", "distributed"])
+def test_renumber_index_dir_negative_start(spark, tmp_path, request, path):
+    """A type that counts down moves a later batch's new ids past the
+    persisted minimum, not the maximum."""
+    from osmium_tool_spark.operators.idops import renumber
+    from osmium_tool_spark.schema import fp
+    from osmium_tool_spark.sources.fixtures import _df, _node
+
+    if path == "distributed":
+        request.getfixturevalue("distributed_ids")
+    idx = str(tmp_path / "renumber_idx")
+    start = {NODE: -1}
+
+    def batch(*nodes):
+        out = renumber(_df(spark, [_node(i, 0, i) for i in nodes]), start_ids=start, index_dir=idx)
+        return {r.lat // fp(1): r.id for r in out.collect()}
+
+    assert batch(5, 10) == {5: -1, 10: -2}
+    assert batch(10, 20) == {10: -2, 20: -3}
 
 
 def test_apply_changes_locations_on_ways(spark):

@@ -159,6 +159,13 @@ def test_renumber_golden_nodes_only(spark):
     assert out[(WAY, 20)].refs == [1, 2, 3]
 
 
+def test_renumber_goldens_distributed(spark, distributed_ids):
+    """Both renumber goldens on the distributed path (the fixtures above
+    are small enough to take the in-RAM one)."""
+    test_renumber_golden_sorted(spark)
+    test_renumber_golden_nodes_only(spark)
+
+
 @pytest.fixture(scope="module")
 def dc_old(spark):
     """test/derive-changes/input1.osm"""
