@@ -81,20 +81,6 @@ def cell_id(lon: Column, lat: Column, res: int) -> Column:
     return F.shiftleft(F.lit(res).cast("long"), 56).bitwiseOR(morton)
 
 
-def cell_res(cell: Column) -> Column:
-    return F.shiftright(cell, 56).bitwiseAND(F.lit(0xFF)).cast("int")
-
-
-def cell_xy(cell: Column, res: int) -> tuple[Column, Column]:
-    """De-interleave a cell id back to (x, y) ordinates at resolution res."""
-    x = F.lit(0).cast("long")
-    y = F.lit(0).cast("long")
-    for b in range(res):
-        x = x.bitwiseOR(F.shiftleft(F.shiftright(cell, 2 * b).bitwiseAND(F.lit(1)), b))
-        y = y.bitwiseOR(F.shiftleft(F.shiftright(cell, 2 * b + 1).bitwiseAND(F.lit(1)), b))
-    return x, y
-
-
 def cell_parent(cell: Column, res: int, parent_res: int) -> Column:
     """Parent cell id at a coarser resolution (drop low Morton bits)."""
     if parent_res > res:
@@ -109,36 +95,6 @@ def cell_from_xy(x: Column, y: Column, res: int) -> Column:
     xv = F.when(x < 0, x + n).when(x >= n, x - n).otherwise(x)  # lon wraps ±180
     yv = F.greatest(F.lit(0).cast("long"), F.least(y, F.lit(n - 1).cast("long")))
     return F.shiftleft(F.lit(res).cast("long"), 56).bitwiseOR(_interleave(xv, yv, res))
-
-
-def neighbor_cells(cell: Column, res: int, ring: int) -> Column:
-    """Array of cell ids within Chebyshev distance ``ring`` (the (2k+1)^2
-    block including the center) — kNN cell-ring expansion primitive.
-
-    Longitude wraps across the antimeridian; latitude clamps at the poles
-    (out-of-range y duplicates the clamped cell; callers dedupe via
-    array_distinct).
-    """
-    x, y = cell_xy(cell.bitwiseAND(F.lit((1 << 56) - 1)), res)
-    cells = []
-    for dx in range(-ring, ring + 1):
-        for dy in range(-ring, ring + 1):
-            cells.append(cell_from_xy(x + dx, y + dy, res))
-    return F.array_distinct(F.array(*cells))
-
-
-def ring_cells(cell: Column, res: int, ring: int) -> Column:
-    """Only the cells at exactly Chebyshev distance ``ring`` (the expansion
-    frontier for iterative kNN search)."""
-    if ring == 0:
-        return F.array(cell)
-    x, y = cell_xy(cell.bitwiseAND(F.lit((1 << 56) - 1)), res)
-    cells = []
-    for dx in range(-ring, ring + 1):
-        for dy in range(-ring, ring + 1):
-            if max(abs(dx), abs(dy)) == ring:
-                cells.append(cell_from_xy(x + dx, y + dy, res))
-    return F.array_distinct(F.array(*cells))
 
 
 # ---------------------------------------------------------------------------

@@ -294,74 +294,6 @@ def tags_count(
     return dense_index(out, orders[sort_order], index_name="rank").orderBy("rank")
 
 
-def fileinfo_crc_ordered(entities: DataFrame) -> DataFrame:
-    """ORDER-DEPENDENT stream CRC32 of the canonical entity stream — the
-    opt-in strict mode closing `fileinfo_crc`'s documented deviation: the
-    reference CRCs its ordered object stream (command_fileinfo.cpp:102,
-    125-126), and this computes the same shape without a serial pass.
-
-    CRC32 is GF(2)-linear, so crc(A||B) combines from (crc(A), crc(B),
-    len(B)) — functions/crc.crc32_combine. The stream is the canonical
-    '\n'-terminated row encodings in canonical (type, id, version) order:
-    a range partition + per-partition sort lays the stream out so
-    partition ids ARE the stream order; each partition CRCs its byte
-    range via Arrow batches (one zlib.crc32 C call per batch — no per-row
-    Python), and the driver folds the n_partitions (crc, nbytes) pairs in
-    pid order. One balanced shuffle, O(partitions) driver work.
-
-    Returns a 1-row DataFrame (stream_crc32, rows, bytes).
-    """
-    import zlib
-
-    from ..functions.crc import crc32_combine
-    from ..functions.sortkeys import id_sort_key
-
-    spark = entities.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    keys = [F.col("type"), id_sort_key(F.col("id")), F.col("version")]
-    laid = (
-        entities.select(*keys[:1], F.col("id"), F.col("version"),
-                        canonical_row_string().alias("__row"),
-                        id_sort_key(F.col("id")).alias("__k"))
-        .repartitionByRange(n, F.col("type"), F.col("__k"), F.col("version"))
-        .sortWithinPartitions(F.col("type"), F.col("__k"), F.col("version"))
-        .select(F.spark_partition_id().alias("__pid"), "__row")
-    )
-
-    def part_crc(batches):
-        import pandas as pd
-
-        crc = 0
-        nbytes = 0
-        nrows = 0
-        pid = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            blob = ("\n".join(pdf["__row"]) + "\n").encode("utf-8")
-            crc = zlib.crc32(blob, crc)
-            nbytes += len(blob)
-            nrows += len(pdf)
-        if pid is not None:
-            yield pd.DataFrame({"pid": [pid], "crc": [crc],
-                                "nbytes": [nbytes], "nrows": [nrows]})
-
-    parts = laid.mapInPandas(
-        part_crc, "pid int, crc long, nbytes long, nrows long"
-    ).collect()
-
-    total_crc, total_bytes, total_rows = 0, 0, 0
-    for r in sorted(parts, key=lambda r: r["pid"]):
-        total_crc = crc32_combine(total_crc, r["crc"], r["nbytes"])
-        total_bytes += r["nbytes"]
-        total_rows += r["nrows"]
-    return spark.createDataFrame(
-        [(total_crc, total_rows, total_bytes)],
-        "stream_crc32 long, rows long, bytes long",
-    )
-
-
 def fileinfo_crc_libosmium(entities: DataFrame, seq_col: str | None = None) -> DataFrame:
     """Ordered stream CRC32 in the REFERENCE's per-object byte layout —
     byte-parity mode for `fileinfo -j`'s "crc32" field (src/
@@ -383,12 +315,12 @@ def fileinfo_crc_libosmium(entities: DataFrame, seq_col: str | None = None) -> D
     self-consistent documented choices (fi1 has no tags/refs/members to
     pin them).
 
-    Same distributed shape as `fileinfo_crc_ordered`: range-partition the
-    stream order, CRC each partition's bytes, fold (crc, nbytes) pairs in
-    partition order via GF(2) crc32_combine — no serial pass. The per-row
-    byte packing is Python inside Arrow batches: this is the opt-in
-    byte-parity mode (like the XML writer), not the 100 TB fingerprint
-    (that is `fileinfo_crc`).
+    Distributed shape: range-partition the stream order, CRC each
+    partition's bytes, fold (crc, nbytes) pairs in partition order via
+    GF(2) crc32_combine — no serial pass. The per-row byte packing is
+    Python inside Arrow batches: this is the opt-in byte-parity mode
+    (like the XML writer), not the 100 TB fingerprint (that is
+    `fileinfo_crc`).
 
     Stream order: ``seq_col`` (file order) when given, else canonical
     (type, |id|-aware id, version). Returns a 1-row DataFrame

@@ -307,9 +307,9 @@ def geo_buffered_split(
     cell.
 
     Pure Column math end to end: cell encode, the (2r+1)^2-1 neighbor
-    ids (functions/cells.neighbor_cells), and the any-differs test
-    (F.exists over the array) all ride whole-stage codegen — ZERO
-    shuffle, one projection over the corpus.
+    ids (functions/cells.cell_from_xy over the ring offsets), and the
+    any-differs test (F.exists over the array) all ride whole-stage
+    codegen — ZERO shuffle, one projection over the corpus.
 
     Returns (id_col, cell, split) with split in
     {'train','val','test','buffer'}.

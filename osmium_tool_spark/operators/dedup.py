@@ -194,8 +194,8 @@ def minhash_signature(shingle_hashes: Column, num_perm: int) -> Column:
 
 
 def _sig_bands(hashed: DataFrame, num_perm: int, band_size: int) -> DataFrame:
-    """(id, band_idx, band) rows of a signature table — the LSH key
-    set shared by the batch pair-join and the standing band index."""
+    """(id, band_idx, band) rows of a signature table — the LSH keys
+    the pair join matches on."""
     nbands = num_perm // band_size
     return hashed.select(
         "id",
@@ -211,51 +211,6 @@ def _sig_bands(hashed: DataFrame, num_perm: int, band_size: int) -> DataFrame:
             )
         ).alias("bk"),
     ).select("id", "bk.band_idx", "bk.band")
-
-
-def minhash_bands(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_perm: int = 16,
-    band_size: int = 4,
-) -> DataFrame:
-    """The MinHash LSH band keys of a corpus slice: (id, band_idx,
-    band) — the standing-index row format for incremental near-dup
-    (streaming/sketch_stream.py minhash_index_maintainer): two
-    documents are near-dup CANDIDATES iff they share a full band, so
-    a batch-vs-corpus probe is one equi-join on (band_idx, band)
-    against this table, never a re-shingle of the corpus."""
-    assert num_perm % band_size == 0
-    sh = df.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), n).alias("sh")
-    ).filter(F.size("sh") > 0)
-    hashed = sh.select("id", F.transform("sh", poly_hash).alias("hs")).withColumn(
-        "sig", minhash_signature(F.col("hs"), num_perm)
-    )
-    return _sig_bands(hashed, num_perm, band_size)
-
-
-def minhash_probe_index(
-    index: DataFrame,
-    batch_bands: DataFrame,
-) -> DataFrame:
-    """Near-dup CANDIDATE pairs between a batch and the standing band
-    index: (a=batch id, b=standing id), distinct, self-matches
-    dropped. One equi-join on (band_idx, band) — the batch side is
-    small (broadcast-eligible), the index side is pre-computed; exact
-    Jaccard verification is the caller's join back to the corpus text
-    (the candidates are a guaranteed SUPERSET of the banded pairs the
-    batch operator would emit across the two sides)."""
-    l = batch_bands.select(F.col("id").alias("a"), "band_idx", "band")
-    r = index.select(F.col("id").alias("b"), "band_idx", "band")
-    return (
-        l.join(r, on=["band_idx", "band"])
-        .filter(F.col("a") != F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
 
 
 def minhash_lsh_pairs(
@@ -476,7 +431,8 @@ def dup_clusters(
 
     `ids` (optional, one column matching `a`'s type): the full id universe;
     ids in no pair become singleton clusters (cluster_id = id). Returns
-    (id, cluster_id); ids never appear twice.
+    (id, cluster_id); ids never appear twice. Raises ValueError when the
+    edge set has not converged after `max_iter` rounds.
     """
     edges = _canon_edges(pairs, a, b).localCheckpoint(eager=True)
     prev_sig = None
@@ -500,6 +456,8 @@ def dup_clusters(
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        raise ValueError(f"dup_clusters: edges not converged after {max_iter} rounds")
     # converged: every component is a star (child -> min-id root)
     labels = edges.select(F.col("hi").alias("id"), F.col("lo").alias("cluster_id"))
     roots = edges.select(F.col("lo").alias("id")).distinct().withColumn(
@@ -576,84 +534,6 @@ def line_dedup(
             F.sum(F.when(removed, 1).otherwise(0)).cast("long").alias("n_removed"),
         )
     )
-
-
-def multimodal_near_dup(
-    images: DataFrame,
-    id_col: str = "image_id",
-    phash_col: str = "phash",
-    caption_col: str = "caption",
-    max_hamming: int = 6,
-    jaccard_threshold: float = 0.5,
-    ngram: int = 3,
-    num_perm: int = 16,
-    band_size: int = 4,
-    phash_block_col: str | None = "fmt",
-) -> DataFrame:
-    """Joint image+caption near-dup clusters over the standing table: a
-    pair is near-duplicate when EITHER modality matches — the visual copy
-    with a rewritten caption AND the re-encoded image with the copied
-    caption both collapse. Edges = phash-hamming pairs (prefix-bit LSH)
-    UNION caption MinHash-LSH pairs (exact-Jaccard verified), labeled
-    into connected components by `dup_clusters` (large-star/small-star).
-
-    Returns (id, cluster_id, n_members) for every image that belongs to a
-    multi-member cluster; one representative per cluster = min id. Both
-    pair generators are the bucketed 100 TB shapes — no cross joins — and
-    the union only grows the edge list, which large/small-star shrinks.
-    """
-    img_pairs = phash_near_dup_pairs(
-        images.select(F.col(id_col), F.col(phash_col), *(
-            [F.col(phash_block_col)] if phash_block_col else []
-        )),
-        max_hamming=max_hamming,
-        id_col=id_col,
-        block_col=phash_block_col,
-    ).select(F.col("a"), F.col("b"))
-    cap_pairs = minhash_lsh_pairs(
-        images.select(F.col(id_col), F.col(caption_col)),
-        id_col=id_col,
-        text_col=caption_col,
-        n=ngram,
-        num_perm=num_perm,
-        band_size=band_size,
-        threshold=jaccard_threshold,
-    ).select(F.col("a"), F.col("b"))
-    edges = img_pairs.unionByName(cap_pairs).distinct()
-    if dict(images.dtypes)[id_col] in ("bigint", "int", "smallint", "tinyint"):
-        clusters = dup_clusters(edges, a="a", b="b")
-    else:
-        # dup_clusters' convergence math needs numeric ids; map string ids
-        # through a distributed dense index (edge-endpoint-sized, not
-        # corpus-sized) and translate the labels back
-        from ..functions.zipindex import dense_index
-
-        verts = (
-            edges.select(F.col("a").alias("sid"))
-            .unionByName(edges.select(F.col("b").alias("sid")))
-            .distinct()
-        )
-        vmap = dense_index(verts, [F.asc("sid")], index_name="nid")
-        num_edges = (
-            edges.join(vmap.withColumnRenamed("sid", "a"), "a")
-            .withColumnRenamed("nid", "na")
-            .join(vmap.withColumnRenamed("sid", "b"), "b")
-            .withColumnRenamed("nid", "nb")
-            .select(F.col("na").alias("a"), F.col("nb").alias("b"))
-        )
-        num_clusters = dup_clusters(num_edges, a="a", b="b")
-        # back to string ids; cluster representative = min member id
-        labeled = num_clusters.join(
-            vmap.withColumnRenamed("nid", "id"), "id"
-        ).select(F.col("sid").alias("id"), F.col("cluster_id"))
-        reps = (
-            labeled.groupBy("cluster_id").agg(F.min("id").alias("rep"))
-        )
-        clusters = labeled.join(reps, "cluster_id").select(
-            "id", F.col("rep").alias("cluster_id")
-        )
-    sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
-    return clusters.join(sizes, "cluster_id").select("id", "cluster_id", "n_members")
 
 
 def duplicate_spans(

@@ -26,8 +26,7 @@ Scale design: mark-sets are (extract_id, id) DataFrames; every join is an
 equi-join on id that AQE can convert to broadcast when a region is small.
 Node->region assignment uses a cheap cell/bbox Column pre-filter so the
 vectorized PIP kernel (Arrow batches, numpy int64 ray-cast) only sees
-envelope candidates; dense regions are handled by AQE skew-join + an
-optional salted repartition of candidates (`salt_partitions`).
+envelope candidates; dense regions are handled by AQE skew-join.
 """
 
 from __future__ import annotations
@@ -96,7 +95,6 @@ def _union(dfs: list[DataFrame]) -> DataFrame:
 def assign_extracts(
     nodes: DataFrame,
     extracts: list[Extract],
-    salt_partitions: int | None = None,
     payload_cols: list[str] | None = None,
 ) -> DataFrame:
     """(extract_id:int, id:long[, payload...]) rows of nodes contained in
@@ -160,8 +158,6 @@ def assign_extracts(
             ],
         )
         cand = valid.filter(env).select("id", "lon", "lat", *payload_cols)
-        if salt_partitions:
-            cand = cand.repartition(salt_partitions)  # defuse dense-region skew
 
         # the cell cover (S2/H3-style interior covering, CellCover
         # docstring) classifies grid cells driver-side ONCE so executors
@@ -293,7 +289,6 @@ def extract(
     smart_types: list[str] | None = None,
     smart_tags: list[str] | None = None,
     complete_partial_relations_pct: int | None = None,
-    salt_partitions: int | None = None,
     persist_input: bool = True,
 ) -> DataFrame:
     """Run the extract pipeline; returns entity rows + `extract_id`.
@@ -319,7 +314,7 @@ def extract(
     ways = entities.filter(F.col("type") == WAY)
     rels = entities.filter(F.col("type") == RELATION)
 
-    marked_nodes = assign_extracts(nodes, extracts, salt_partitions).persist()
+    marked_nodes = assign_extracts(nodes, extracts).persist()
     ways_refs = _explode_refs(ways).persist()
     marked_ways = _mark_ways(ways_refs, marked_nodes).persist()
 

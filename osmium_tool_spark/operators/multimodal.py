@@ -687,21 +687,6 @@ def alignment_scores(
     )
 
 
-def alignment_filter(
-    pairs: DataFrame,
-    img_vec_col: str,
-    txt_vec_col: str,
-    min_score: float,
-    score_col: str = "alignment",
-) -> DataFrame:
-    """Keep pairs whose alignment score reaches `min_score` (the
-    laion-style cosine cut that drops mismatched caption/image pairs
-    before training)."""
-    return alignment_scores(pairs, img_vec_col, txt_vec_col, score_col).filter(
-        F.col(score_col) >= min_score
-    )
-
-
 def png_pixel_checksums(images: DataFrame, bytes_col: str = "bytes") -> DataFrame:
     """Exact integer pixel checksums of PNG payloads: passthrough of all
     non-binary columns plus (px_sum, px_wsum) — the plain sum of pixel

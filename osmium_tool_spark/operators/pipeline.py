@@ -28,6 +28,21 @@ from ..functions.tagexpr import CompiledFilter
 from .extract import assign_extracts
 
 
+def _filter_georef(images: DataFrame, filt: CompiledFilter, cell_res: int) -> DataFrame:
+    """(id, lon, lat, cell) of the images passing the tag filter: lon/lat
+    are fixed-point slices of the phash, cell their tile at cell_res."""
+    colmap = {"fmt": F.col("fmt"), "caption": F.col("caption")}
+    return (
+        images.filter(filt.matches_node_columns(colmap))
+        .select(
+            F.col("image_id").alias("id"),
+            (F.col("phash") % F.lit(3_600_000_000) - F.lit(1_800_000_000)).alias("lon"),
+            (F.shiftright(F.col("phash"), 16) % F.lit(1_800_000_000) - F.lit(900_000_000)).alias("lat"),
+        )
+        .withColumn("cell", cell_id(F.col("lon"), F.col("lat"), cell_res))
+    )
+
+
 def image_extract_tile(
     images: DataFrame,
     tag_expressions: list[str],
@@ -36,16 +51,7 @@ def image_extract_tile(
 ) -> DataFrame:
     """Returns (extract_id, cell, n_images) tile rollup of the images
     passing the tag filter, assigned to every containing extract region."""
-    filt = CompiledFilter(tag_expressions)
-    colmap = {"fmt": F.col("fmt"), "caption": F.col("caption")}
-    filtered = images.filter(filt.matches_node_columns(colmap))
-
-    nodes = filtered.select(
-        F.col("image_id").alias("id"),
-        (F.col("phash") % F.lit(3_600_000_000) - F.lit(1_800_000_000)).alias("lon"),
-        (F.shiftright(F.col("phash"), 16) % F.lit(1_800_000_000) - F.lit(900_000_000)).alias("lat"),
-    ).withColumn("cell", cell_id(F.col("lon"), F.col("lat"), cell_res))
-
+    nodes = _filter_georef(images, CompiledFilter(tag_expressions), cell_res)
     assigned = assign_extracts(nodes, extracts, payload_cols=["cell"])
     return assigned.groupBy("extract_id", "cell").agg(F.count("*").alias("n_images"))
 
@@ -86,17 +92,7 @@ def image_extract_tile_checkpointed(
 
     @p.stage("filter_georef")
     def filter_georef(spark, _prev):
-        images = spark.read.parquet(images_path)
-        colmap = {"fmt": F.col("fmt"), "caption": F.col("caption")}
-        return (
-            images.filter(filt.matches_node_columns(colmap))
-            .select(
-                F.col("image_id").alias("id"),
-                (F.col("phash") % F.lit(3_600_000_000) - F.lit(1_800_000_000)).alias("lon"),
-                (F.shiftright(F.col("phash"), 16) % F.lit(1_800_000_000) - F.lit(900_000_000)).alias("lat"),
-            )
-            .withColumn("cell", cell_id(F.col("lon"), F.col("lat"), cell_res))
-        )
+        return _filter_georef(spark.read.parquet(images_path), filt, cell_res)
 
     @p.stage("assign")
     def assign(spark, prev):

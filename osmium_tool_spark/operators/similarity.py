@@ -20,7 +20,7 @@ import pandas as pd  # module-level: pandas_udf type hints resolve in module glo
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.cells import cell_id, neighbor_cells
+from ..functions.cells import cell_id
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1271,46 +1271,4 @@ def topk_recall(
             F.coalesce(F.col("n_hit"), F.lit(0).cast("long")).cast("double")
             / F.col("n_truth").cast("double")
         ).alias("recall"),
-    )
-
-
-def ivf_probe_index(
-    index: DataFrame,
-    queries: DataFrame,
-    centroids,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 2,
-) -> DataFrame:
-    """Serve ANN queries FROM a standing IVF index — the production
-    shape `ann_topk_ivf` trains toward: the index table holds
-    pre-assigned (id, embedding, cid) rows (built once, appended
-    incrementally as the corpus grows — streaming/sketch_stream.py
-    ann_index_maintainer), and a query batch costs ONE equi-join on cid
-    + the per-query top-k window. The corpus is never re-assigned, the
-    codebook is frozen (pass the same `centroids` the index was built
-    with); recall grows with nprobe exactly as in `ann_topk_ivf`."""
-    c = index.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        "cid",
-    )
-    q = ivf_assign(queries, centroids, vec_col, "cids", nprobe=nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode("cids").alias("cid"),
-    )
-    scored = (
-        q.join(c, on="cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
     )

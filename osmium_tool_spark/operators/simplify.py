@@ -126,29 +126,3 @@ def simplify_polylines(
             yield pd.DataFrame(out)
 
     return cols.mapInPandas(kernel, schema=SIMPLIFY_SCHEMA)
-
-
-def simplify_ways(
-    ways: DataFrame,
-    nodes: DataFrame,
-    epsilon: int,
-    max_span: int = 50_000_000,
-) -> DataFrame:
-    """Douglas-Peucker over assembled way geometry: locations_join
-    (the one corpus-sized exchange pair) -> per-way kernel. Ways with
-    any unresolved ref are DROPPED (callers wanting --show-errors
-    semantics diff the id sets); < 2 resolved coords likewise."""
-    from .export import locations_join
-
-    joined = locations_join(ways, nodes)
-    lines = (
-        joined.filter(F.col("coords").isNotNull())
-        .filter(~F.exists("coords", lambda c: c["__lon"].isNull()))
-        .filter(F.size("coords") >= 2)
-        .select(
-            "id",
-            F.transform("coords", lambda c: c["__lon"]).alias("xs"),
-            F.transform("coords", lambda c: c["__lat"]).alias("ys"),
-        )
-    )
-    return simplify_polylines(lines, epsilon, max_span=max_span)

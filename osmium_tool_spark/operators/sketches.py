@@ -142,7 +142,7 @@ def hll_registers(
     """The mergeable sketch state: (group..., j, M) with one row per
     non-zero register — M = max over the group's values of rho(bits).
     Union register tables from different corpora / partitions / days and
-    re-run `hll_merge` to combine; feed to `hll_estimate` to read."""
+    re-max per (group..., j) to combine; feed to `hll_estimate` to read."""
     m = _check_p(p)
     v = F.col(value_col)
     if hash == "portable":
@@ -165,18 +165,6 @@ def hll_registers(
         .groupBy(*group_cols, "j")
         .agg(F.max("rho").alias("M"))
     )
-
-
-def hll_merge(*register_tables: DataFrame) -> DataFrame:
-    """Merge standing sketches: union + register-wise max. Lossless —
-    merging sketches of A and B equals the sketch of A ∪ B."""
-    from functools import reduce
-
-    if not register_tables:
-        raise ValueError("need at least one register table")
-    u = reduce(DataFrame.unionByName, register_tables)
-    keys = [c for c in u.columns if c not in ("M",)]
-    return u.groupBy(*keys).agg(F.max("M").alias("M"))
 
 
 def hll_estimate(
@@ -441,8 +429,8 @@ def cm_build(
     one-sided error: est >= true always, est <= true + 2N/w with
     probability 1 - 2^-d per query.
 
-    The state is a DataFrame, so it is a STANDING sketch: `cm_merge`
-    unions + re-sums tables built over different corpora / days —
+    The state is a DataFrame, so it is a STANDING sketch: union tables
+    built over different corpora / days and re-sum per (j, bucket) —
     counts are additive, the merge is lossless. `weight_col` (BIGINT)
     counts each row with a weight (e.g. token counts) instead of 1.
 
@@ -464,17 +452,6 @@ def cm_build(
         .groupBy("j", "bucket")
         .agg(F.sum("wt").alias("cnt"))
     )
-
-
-def cm_merge(*count_tables: DataFrame) -> DataFrame:
-    """Merge standing count-min sketches built with the SAME (d, w,
-    hash): union + per-cell sum. Lossless — counts are additive."""
-    from functools import reduce
-
-    if not count_tables:
-        raise ValueError("need at least one count table")
-    u = reduce(DataFrame.unionByName, count_tables)
-    return u.groupBy("j", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def cm_lookup(
@@ -580,7 +557,7 @@ def hist_bins(
     percentile answer without a global sort. Both the bin math (two
     correctly-rounded double ops) and everything downstream are
     bit-identical between Spark and the SQL twin. The state is additive:
-    `hist_merge` unions + re-sums standing histograms losslessly.
+    union standing histograms and re-sum per bin to merge them losslessly.
     """
     _check_bins(lo, hi, bins)
     x = F.col(value_col).cast("double")
@@ -592,18 +569,6 @@ def hist_bins(
         .groupBy(*group_cols, "bin")
         .agg(F.count("*").alias("cnt"))
     )
-
-
-def hist_merge(*bin_tables: DataFrame) -> DataFrame:
-    """Merge standing histograms built with the SAME (lo, hi, bins):
-    union + per-bin sum. Lossless — counts are additive."""
-    from functools import reduce
-
-    if not bin_tables:
-        raise ValueError("need at least one bin table")
-    u = reduce(DataFrame.unionByName, bin_tables)
-    keys = [c for c in u.columns if c != "cnt"]
-    return u.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
 
 
 def hist_quantiles(
@@ -812,8 +777,8 @@ def bloom_build(
     a present value always probes 1 (no false negatives); an absent
     value probes 1 with probability ~(1 - e^(-k*n/m))^k (`bloom_fpr`).
 
-    The state is a DataFrame -> a STANDING sketch: `bloom_merge` ORs
-    tables built over different corpora / days, lossless (the merged
+    The state is a DataFrame -> a STANDING sketch: a per-word BIT_OR of
+    tables built over different corpora / days is lossless (the merged
     array equals the array built over the union). Hash families as in
     `cm_build`: ``xxhash64`` rows are xxhash64("bloom", value, j);
     ``portable`` is the 32-bit avalanche over the folded BIGINT key XOR
@@ -835,18 +800,6 @@ def bloom_build(
         .groupBy("word")
         .agg(F.bit_or("mask").alias("bits"))
     )
-
-
-def bloom_merge(*states: DataFrame) -> DataFrame:
-    """Merge standing Bloom states built with the SAME (k, m_bits,
-    hash): union + per-word BIT_OR. Lossless — the merged array is
-    exactly the array of the unioned corpora."""
-    from functools import reduce
-
-    if not states:
-        raise ValueError("need at least one state table")
-    u = reduce(DataFrame.unionByName, states)
-    return u.groupBy("word").agg(F.bit_or("bits").alias("bits"))
 
 
 def bloom_probe(

@@ -67,13 +67,3 @@ def write_sorted(
 def read_header(path: str) -> dict:
     with open(os.path.join(path, "_header.json")) as f:
         return json.load(f)
-
-
-def set_bounds_header(entities: DataFrame) -> dict:
-    """Compute the bounds box header entry from node locations
-    (--set-bounds analog, command_extract.cpp:643-655)."""
-    row = entities.agg(
-        F.min("lon").alias("min_lon"), F.min("lat").alias("min_lat"),
-        F.max("lon").alias("max_lon"), F.max("lat").alias("max_lat"),
-    ).collect()[0]
-    return {"bounds": [row.min_lon, row.min_lat, row.max_lon, row.max_lat]}

@@ -30,8 +30,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import NODE
-
 PHASH_MOD = 281474976710656  # 2^48
 MIX = 2654435761
 MIX2 = 2246822519
@@ -83,36 +81,6 @@ def synth_images(spark: SparkSession, n: int, partitions: int = 32) -> DataFrame
         F.element_at(F.array(*[F.lit(f) for f in FMTS]), (k % 3 + 1).cast("int")).alias("fmt"),
         F.concat(F.lit("caption for image "), F.col("id").cast("string")).alias("caption"),
         _phash(k).alias("phash"),
-    )
-
-
-def images_as_nodes(images: DataFrame) -> DataFrame:
-    """Geo-reference the image table as entity nodes: lon/lat from phash,
-    caption/fmt as tag analogs, id = dense image ordinal (from image_id's
-    numeric suffix). This is the graft point — every spatial operator of the
-    engine runs on the result."""
-    iid = F.substring("image_id", 4, 20).cast("long")
-    return images.select(
-        F.lit(NODE).alias("type"),
-        iid.alias("id"),
-        F.lit(1).alias("version"),
-        F.lit(True).alias("visible"),
-        F.lit(0).cast("long").alias("changeset"),
-        iid.alias("ts"),
-        F.lit(0).alias("uid"),
-        F.lit("").alias("user"),
-        F.create_map(
-            F.lit("fmt"), F.col("fmt"),
-            F.lit("caption"), F.col("caption"),
-        ).alias("tags"),
-        # phash is already a Knuth mix of the id — slice it directly (a
-        # further lon_expr multiply would overflow int64 at phash ~ 2^48)
-        (F.col("phash") % F.lit(3_600_000_000) - F.lit(1_800_000_000)).alias("lon"),
-        (F.shiftright(F.col("phash"), 16) % F.lit(1_800_000_000) - F.lit(900_000_000)).alias("lat"),
-        F.lit(None).cast("array<long>").alias("refs"),
-        F.lit(None).cast("array<struct<mtype:int,ref:long,role:string>>").alias("members"),
-        F.col("image_id"),
-        F.col("phash"),
     )
 
 

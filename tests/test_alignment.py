@@ -1,11 +1,10 @@
 """Caption-image alignment (operators/multimodal.py): bit-vector
-unpack parity vs python, sequential-fold cosine exactness, filter
-semantics."""
+unpack parity vs python, sequential-fold cosine exactness, projection
+plan."""
 
 from pyspark.sql import functions as F
 
 from osmium_tool_spark.operators.multimodal import (
-    alignment_filter,
     alignment_scores,
     dhash_bit_vector,
 )
@@ -47,19 +46,6 @@ def test_alignment_score_exact_fold(spark):
     df = spark.createDataFrame([(1, a, b)], "id long, va array<double>, vb array<double>")
     [r] = alignment_scores(df, "va", "vb").collect()
     assert r.alignment == py_fold_cosine(a, b)  # bit-exact IEEE sequence
-
-
-def test_alignment_filter_threshold(spark):
-    rows = [
-        (1, [1.0, 0.0], [1.0, 0.0]),  # cos = 1
-        (2, [1.0, 0.0], [0.0, 1.0]),  # cos = 0
-        (3, [1.0, 0.0], [-1.0, 0.0]),  # cos = -1
-    ]
-    df = spark.createDataFrame(rows, "id long, va array<double>, vb array<double>")
-    kept = alignment_filter(df, "va", "vb", min_score=0.5)
-    assert [r.id for r in kept.collect()] == [1]
-    # scores version keeps every pair and annotates
-    assert alignment_scores(df, "va", "vb").count() == 3
 
 
 def test_alignment_is_projection(spark):

@@ -469,38 +469,31 @@ def test_apply_changes_locations_on_ways(spark):
     assert [(loc.lon, loc.lat) for loc in w.locations] == [(50000000, 50000000), (20000000, 20000000)]
 
 
-def test_fileinfo_crc_ordered_stream(spark):
-    """Distributed ordered CRC == sequential zlib.crc32 of the canonical
-    stream; invariant to input partitioning/order."""
-    import zlib
+def test_fileinfo_crc_libosmium_fold(spark, monkeypatch):
+    """The stream CRC folded from per-partition CRCs with crc32_combine
+    equals the CRC of the same stream held in one partition, whatever the
+    input layout, and so do the byte and row counts."""
+    from pyspark import SparkContext
 
-    from osmium_tool_spark.operators.aggregates import (
-        canonical_row_string,
-        fileinfo_crc_ordered,
-    )
-    from osmium_tool_spark.functions.sortkeys import id_sort_key
-    from osmium_tool_spark.sources.fixtures import _df, _node, _way
+    from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
 
-    rows = []
-    for i in range(1, 300):
-        rows.append(_node((-i if i % 7 == 0 else i), 1.0, 2.0,
-                          {"k": f"v{i}"}, version=i % 3 + 1))
-    for i in range(1, 80):
-        rows.append(_way(i, [i, i + 1]))
+    rows = [
+        _node(-i if i % 7 == 0 else i, i / 100, -i / 50, {"k": f"v{i}"} if i % 3 else {},
+              version=i % 3 + 1, user=f"u{i % 5}", visible=i % 11 != 0)
+        for i in range(1, 300)
+    ]
+    rows += [_way(i, [i, i + 1, -7], {"highway": "road"}) for i in range(1, 80)]
+    rows += [_rel(i, [(0, i, "stop"), (1, i + 1, ""), (2, i - 1, "sub")], {"type": "route"})
+             for i in range(1, 30)]
     ents = _df(spark, rows)
 
-    got = fileinfo_crc_ordered(ents).collect()[0]
+    def crc(df):
+        r = aggregates.fileinfo_crc_libosmium(df).first()
+        return r["stream_crc32"], r["bytes"], r["rows"]
 
-    ordered = (
-        ents.orderBy("type", id_sort_key(F.col("id")), "version")
-        .select(canonical_row_string().alias("s"))
-        .collect()
-    )
-    blob = ("\n".join(r["s"] for r in ordered) + "\n").encode()
-    assert got["stream_crc32"] == zlib.crc32(blob)
-    assert got["rows"] == len(rows)
-    assert got["bytes"] == len(blob)
-
-    # invariant under a different physical layout of the same rows
-    got2 = fileinfo_crc_ordered(ents.repartition(7).sortWithinPartitions("version")).collect()[0]
-    assert got2["stream_crc32"] == got["stream_crc32"]
+    # defaultParallelism range partitions of ~400 rows: every fold combines
+    folded = [crc(df) for df in (ents.coalesce(1), ents.repartition(7), ents.orderBy(F.rand(7)))]
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda self: 1))
+    whole = crc(ents)
+    assert whole[2] == len(rows)
+    assert folded == [whole] * 3

@@ -1,0 +1,106 @@
+"""Every public top-level def of the package must be named as code outside
+tests/: by the package itself, `__spark_entry__.py`, `bench.py`, `scripts/`
+or `perfbench/`. A def that only tests reach must earn a caller (a registry
+row, a bench leg or an operator) or be deleted with its tests.
+
+"Named as code" means a global, attribute or imported name in compiled
+bytecode. Strings, docstrings, postponed annotations and local variables do
+not count: a registry key or a parameter that happens to share a
+function's name is not a call. ALLOWED holds the defs kept on purpose. It
+may only shrink: an entry whose def gains a caller or is deleted fails
+`test_allowlist_is_current`."""
+
+import functools
+import inspect
+import warnings
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "osmium_tool_spark"
+CALLERS = [PACKAGE, ROOT / "__spark_entry__.py", ROOT / "bench.py", ROOT / "scripts", ROOT / "perfbench"]
+
+ALLOWED = {
+    # pure-Python references the tests compare the distributed code against
+    "cell_id_py": "twin of cells.cell_id for the cell tests",
+    "hilbert_xy_py": "twin of the Hilbert curve Column math",
+    "hilbert_cell_py": "twin of cells.hilbert_cell",
+    "tar_size_py": "twin of the webdataset shard size arithmetic",
+    "bloom_fpr": "the false-positive rate the Bloom tests bound against",
+    "pixel_invariant_violations": "the BASELINE PSNR check of the pixel kernels",
+    "make_row_serializer": "Python XML rendering the codegen .osc writer is checked against",
+    "serialize_changeset_row": "Python changeset rendering the codegen writer is checked against",
+    # test support: reference inputs transcribed as entity frames
+    "extract_input1": "fixture builder, to move under tests/",
+    "tags_filter_input": "fixture builder, to move under tests/",
+    "tags_filter_site": "fixture builder, to move under tests/",
+    "sort_input_neg": "fixture builder, to move under tests/",
+    "history_input": "fixture builder, to move under tests/",
+    # held for failure-injection tests of resume and replay
+    "IcebergTable": "snapshot table for the resume failure-injection tests",
+    "SnapshotStore": "change stream for the replay failure-injection tests",
+    "read_change_stream": "change stream for the replay failure-injection tests",
+    "apply_changes_stream": "change stream for the replay failure-injection tests",
+    "stream_tile_counts": "change stream for the replay failure-injection tests",
+    "ingest_stream": "image ingest for the replay failure-injection tests",
+    # skew helpers: a Zipf hot-cell measurement decides keep or delete
+    "detect_skew": "waits on the Zipf skew measurement",
+    "salted_count_by": "waits on the Zipf skew measurement",
+    "salted_agg": "waits on the Zipf skew measurement",
+    "broadcast_salted_join": "waits on the Zipf skew measurement",
+    # still to prove or delete
+    "train_bpe": "BPE trainer with no registry row or bench leg",
+    "bpe_encode": "BPE encoder with no registry row or bench leg",
+    "theta_merge": "theta sketch merge with no caller",
+    "theta_estimate": "theta estimate with no caller",
+    "fingerprint": "text fingerprint with no caller",
+    "extract_bbox_df": "bbox shorthand for extract, only tests use it",
+    "read_webdataset_shards": "shard reader with no caller",
+    "read_geojson_collection": "FeatureCollection reader no command or query reads with",
+    "polygons_from_features": "GeoJSON to spatial_join adapter with no caller",
+    "sessionize": "streaming twin of sessions.sessionize_batch",
+}
+
+
+def py_files(path: Path) -> list[Path]:
+    return [path] if path.is_file() else sorted(path.rglob("*.py"))
+
+
+@functools.cache
+def compiled(path: Path):
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # invalid escapes in SQL regex strings
+        return compile(path.read_text(), str(path), "exec", dont_inherit=True)
+
+
+def names_used(code) -> set[str]:
+    """The global, attribute and imported names a code object and the code
+    nested in it use. A module or class body also lists the names its own
+    defs bind, so those are left out."""
+    nested = [c for c in code.co_consts if inspect.iscode(c)]
+    names = set(code.co_names)
+    if not code.co_flags & inspect.CO_OPTIMIZED:
+        names -= {c.co_name for c in nested}
+    return names.union(*map(names_used, nested))
+
+
+@functools.cache
+def uncalled() -> dict[str, str]:
+    """{name: "module.py:line"} of the public top-level defs in the package
+    that no caller names."""
+    defs = {}
+    for path in py_files(PACKAGE):
+        for c in compiled(path).co_consts:
+            if inspect.iscode(c) and c.co_name.isidentifier() and not c.co_name.startswith("_"):
+                defs[c.co_name] = f"{path.relative_to(ROOT)}:{c.co_firstlineno}"
+    used = set().union(*(names_used(compiled(f)) for p in CALLERS for f in py_files(p)))
+    return {name: where for name, where in defs.items() if name not in used}
+
+
+def test_every_public_def_has_a_caller():
+    missing = sorted(f"{where} {name}" for name, where in uncalled().items() if name not in ALLOWED)
+    assert not missing, "public defs that no code outside tests/ names:\n" + "\n".join(missing)
+
+
+def test_allowlist_is_current():
+    stale = sorted(set(ALLOWED) - set(uncalled()))
+    assert not stale, f"allowlisted defs that now have a caller or are gone: {stale}"

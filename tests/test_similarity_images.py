@@ -14,7 +14,6 @@ from osmium_tool_spark.operators.similarity import (
 )
 from osmium_tool_spark.sources.images import (
     decode_stub_meta,
-    images_as_nodes,
     synth_images,
 )
 
@@ -72,15 +71,6 @@ def test_synth_images_schema_and_determinism(spark):
     assert {r.phash for r in a} == {r.phash for r in b}
     cols = set(synth_images(spark, 1).columns)
     assert cols == {"image_id", "bytes", "w", "h", "fmt", "caption", "phash"}
-
-
-def test_images_as_nodes_coord_ranges(spark):
-    nodes = images_as_nodes(synth_images(spark, 500, partitions=4))
-    bad = nodes.filter(
-        (F.col("lon") < -1_800_000_000) | (F.col("lon") >= 1_800_000_000)
-        | (F.col("lat") < -900_000_000) | (F.col("lat") >= 900_000_000)
-    )
-    assert bad.count() == 0
 
 
 def test_decode_stub_meta_plumbing(spark):

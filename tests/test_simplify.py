@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from osmium_tool_spark.operators.simplify import simplify_polylines, simplify_ways
+from osmium_tool_spark.operators.simplify import simplify_polylines
 
 
 def ref_dp(xs, ys, eps):
@@ -100,20 +100,3 @@ def test_span_cap_fails_loud(spark):
     wide = [(0, 0), (60_000_000, 0), (120_000_000, 0)]
     with pytest.raises(Exception, match="spans more than"):
         run(spark, [wide], 100)
-
-
-def test_simplify_ways_assembly(spark):
-    nodes = spark.createDataFrame(
-        [(1, 0, 0), (2, 100, 100), (3, 200, 200), (4, 300, 290), (9, 0, 0)],
-        "id long, lon long, lat long",
-    )
-    ways = spark.createDataFrame(
-        [(10, 1, [1, 2, 3, 4]), (11, 1, [1, 99]), (12, 1, [2])],
-        "id long, version int, refs array<long>",
-    )
-    rows = simplify_ways(ways, nodes, epsilon=0).collect()
-    ids = {r.id for r in rows}
-    assert ids == {10}  # 11 has an unresolved ref, 12 is too short
-    kept = sorted((r.pos, r.x, r.y) for r in rows)
-    # vertex 3 bends (300,290 off the diagonal) -> 1,2 collinear dropped
-    assert kept == [(0, 0, 0), (2, 200, 200), (3, 300, 290)]

@@ -9,7 +9,7 @@ from osmium_tool_spark.operators.locations import (
     query_locations_index,
 )
 from osmium_tool_spark.schema import NODE, WAY
-from osmium_tool_spark.sinks.writer import read_header, set_bounds_header, write_sorted
+from osmium_tool_spark.sinks.writer import read_header, write_sorted
 from osmium_tool_spark.sources.fixtures import _df, _node, _way
 
 
@@ -37,11 +37,6 @@ def test_write_sorted_order_contract(spark, ents, tmp_path):
     nodes = [r.id for r in back.filter(F.col("type") == NODE).collect()]
     assert set(nodes) == {-5, -2, 1, 3}
     assert set(ids) == {-5, -2, 1, 3, 10}
-
-
-def test_set_bounds_header(ents):
-    h = set_bounds_header(ents.filter(F.col("type") == NODE))
-    assert h["bounds"][0] == 0 and h["bounds"][3] == 30000000
 
 
 def test_locations_index_roundtrip(spark, ents, tmp_path):

@@ -13,13 +13,9 @@ from osmium_tool_spark.operators.sketches import (
     _alpha,
     cm_build,
     cm_lookup,
-    cm_merge,
     hist_bins,
-    hist_merge,
     hist_quantiles,
     hll_distinct,
-    hll_estimate,
-    hll_merge,
     hll_registers,
     rho_cap_portable,
     theta_estimate,
@@ -102,15 +98,6 @@ def test_grouped_and_null_filtering(spark):
         assert (out[g].v_zero, out[g].k_max, out[g].t_scaled) == py_hll(vals, 8)[:3]
 
 
-def test_merge_lossless(spark):
-    df = spark.createDataFrame([(i % 5, (i * 13) % 4000) for i in range(30_000)], "g long, v long")
-    whole = hll_distinct(df, ["g"], "v", p=9, hash="portable")
-    ra = hll_registers(df.filter("v % 2 = 0"), ["g"], "v", p=9, hash="portable")
-    rb = hll_registers(df.filter("v % 2 = 1"), ["g"], "v", p=9, hash="portable")
-    merged = hll_estimate(hll_merge(ra, rb), ["g"], p=9)
-    assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, whole.collect()))
-
-
 def test_xxhash64_family(spark):
     """Production hash family: estimate lands in the error band and the
     distinct shape matches; works on strings too."""
@@ -152,11 +139,6 @@ def test_bad_hash_family(spark):
     df = spark.range(10).select(F.col("id").alias("v"))
     with pytest.raises(ValueError, match="hash must be"):
         hll_registers(df, [], "v", p=8, hash="md5")
-
-
-def test_merge_requires_input():
-    with pytest.raises(ValueError, match="at least one"):
-        hll_merge()
 
 
 # ---------------------------------------------------------------------------
@@ -326,17 +308,6 @@ def test_cm_unseen_value_zero(spark):
     assert e == 0  # deterministic: no row collides in all 3 hash rows
 
 
-def test_cm_merge_lossless(spark):
-    vals = _zipfish(25_000)
-    df = spark.createDataFrame([(v,) for v in vals], "v long")
-    whole = cm_build(df, "v", d=3, w=128, hash="portable")
-    a = cm_build(df.filter("v % 2 = 0"), "v", d=3, w=128, hash="portable")
-    b = cm_build(df.filter("v % 2 = 1"), "v", d=3, w=128, hash="portable")
-    merged = cm_merge(a, b)
-    as_map = lambda t: {(r.j, r.bucket): r.cnt for r in t.collect()}  # noqa: E731
-    assert as_map(merged) == as_map(whole)
-
-
 def test_cm_weighted(spark):
     rows = [(v, v + 1) for v in range(200)]
     df = spark.createDataFrame(rows, "v long, wt long")
@@ -394,8 +365,6 @@ def test_cm_validation(spark):
         cm_build(df, "v", d=3, w=1)
     with pytest.raises(ValueError, match="hash must be"):
         cm_build(df, "v", d=3, w=64, hash="crc")
-    with pytest.raises(ValueError, match="at least one"):
-        cm_merge()
 
 
 # ---------------------------------------------------------------------------
@@ -446,17 +415,6 @@ def test_hist_clamps_out_of_range(spark):
     assert got == {0: 2, 9: 2}  # -50 clamps to bin 0, 1e9 to bin 9
 
 
-def test_hist_merge_lossless(spark):
-    vals = [(i % 977) * 1.5 for i in range(20_000)]
-    df = spark.createDataFrame([(v,) for v in vals], "x double")
-    whole = hist_bins(df, [], "x", 0.0, 1500.0, 128)
-    a = hist_bins(df.filter("x < 700"), [], "x", 0.0, 1500.0, 128)
-    b = hist_bins(df.filter("x >= 700"), [], "x", 0.0, 1500.0, 128)
-    merged = hist_merge(a, b)
-    as_map = lambda t: {r.bin: r.cnt for r in t.collect()}  # noqa: E731
-    assert as_map(merged) == as_map(whole)
-
-
 def test_hist_grouped_and_sql_twin(spark):
     import duckdb
 
@@ -490,8 +448,6 @@ def test_hist_validation(spark):
         hist_bins(df, [], "x", 5.0, 5.0, 10)
     with pytest.raises(ValueError, match="bins must be"):
         hist_bins(df, [], "x", 0.0, 1.0, 1)
-    with pytest.raises(ValueError, match="at least one"):
-        hist_merge()
 
 
 # ---------------------------------------------------------------------------
@@ -502,7 +458,6 @@ from osmium_tool_spark.operators.sketches import (  # noqa: E402
     _bf_salt,
     bloom_build,
     bloom_fpr,
-    bloom_merge,
     bloom_probe,
     bloom_probe_sql,
 )
@@ -561,24 +516,6 @@ def test_bloom_absent_values_and_fpr_band(spark):
     assert fp / n <= max(5 * expected, 0.02)
 
 
-def test_bloom_merge_lossless(spark):
-    k, m = 4, 4096
-    a = spark.createDataFrame([(v,) for v in range(0, 400)], "v long")
-    b = spark.createDataFrame([(v,) for v in range(300, 700)], "v long")
-    both = a.unionByName(b)
-    merged = {
-        r.word: r.bits
-        for r in bloom_merge(
-            bloom_build(a, "v", k, m, "portable"),
-            bloom_build(b, "v", k, m, "portable"),
-        ).collect()
-    }
-    direct = {
-        r.word: r.bits for r in bloom_build(both, "v", k, m, "portable").collect()
-    }
-    assert merged == direct
-
-
 def test_bloom_sql_twin_bit_identical(spark):
     import duckdb
 
@@ -624,8 +561,6 @@ def test_bloom_validation(spark):
         bloom_build(df, "v", k=17)
     with pytest.raises(ValueError):
         bloom_build(df, "v", k=4, m_bits=32)
-    with pytest.raises(ValueError):
-        bloom_merge()
     with pytest.raises(ValueError):
         bloom_fpr(4, 1 << 40, 10)
 
