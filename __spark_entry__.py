@@ -4773,8 +4773,8 @@ LEFT JOIN nodes n2 ON fr.r0 = n2.id
     # dot ('2') — twin of export.coord_str / coord_str_compact
     fmt_lon = r"regexp_replace(printf('%.7f', CAST(lon AS DOUBLE)/10000000), '(\.\d+?)0+$', '\1')"
     fmt_lat = r"regexp_replace(printf('%.7f', CAST(lat AS DOUBLE)/10000000), '(\.\d+?)0+$', '\1')"
-    fmt_lon_wkt = "regexp_replace(printf('%.7f', CAST(lon AS DOUBLE)/10000000), '\.?0+$', '')"
-    fmt_lat_wkt = "regexp_replace(printf('%.7f', CAST(lat AS DOUBLE)/10000000), '\.?0+$', '')"
+    fmt_lon_wkt = r"regexp_replace(printf('%.7f', CAST(lon AS DOUBLE)/10000000), '\.?0+$', '')"
+    fmt_lat_wkt = r"regexp_replace(printf('%.7f', CAST(lat AS DOUBLE)/10000000), '\.?0+$', '')"
     o["export_points"] = f"""
 WITH {NODES_CTE}
 SELECT CAST(id AS BIGINT) AS id,

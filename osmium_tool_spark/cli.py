@@ -896,6 +896,8 @@ def _run_dispatch(args, spark: SparkSession) -> int:
                 ([] if opts["types"] in ("any", "true", "") else opts["types"].split(","))
                 if "types" in opts else None
             ),
+            # tags=KEY[=VALUE],... (strategy_smart.cpp:88-100)
+            smart_tags=opts["tags"].split(",") if "tags" in opts else None,
             complete_partial_relations_pct=(
                 int(opts["complete-partial-relations"])
                 if "complete-partial-relations" in opts

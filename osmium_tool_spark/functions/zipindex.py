@@ -70,7 +70,6 @@ def dense_index(
     order_cols: list[Column],
     part_col: str | None = None,
     index_name: str = "new_id",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Add a 1-based dense index column in `order_cols` order (per
     `part_col` group if given) without a global single-task window.
@@ -80,7 +79,7 @@ def dense_index(
     nondeterministic — same contract as row_number).
     """
     spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
     range_cols = ([F.col(part_col)] if part_col else []) + list(order_cols)
     d = (
         df.repartitionByRange(n, *range_cols)

@@ -142,7 +142,7 @@ def fileinfo_report(
 HASH_MODULUS = 1 << 61
 
 
-def canonical_row_string(tags_sorted: bool = True) -> F.Column:
+def canonical_row_string() -> F.Column:
     """ASCII canonical encoding of an entity row, field-separated by '|':
 
         type|id|version|visible(1/0)|ts|lon|lat|k=v;k=v|ref,ref|m:ref:role;...
@@ -155,11 +155,9 @@ def canonical_row_string(tags_sorted: bool = True) -> F.Column:
     def s(c: F.Column) -> F.Column:
         return F.coalesce(c.cast("string"), F.lit(""))
 
-    entries = F.map_entries(
+    entries = F.array_sort(F.map_entries(
         F.coalesce(F.col("tags"), F.create_map().cast("map<string,string>"))
-    )
-    if tags_sorted:
-        entries = F.array_sort(entries)
+    ))
     tags = F.concat_ws(
         ";", F.transform(entries, lambda e: F.concat(e.key, F.lit("="), e.value))
     )

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import dup_clusters, exact_dedup, minhash_lsh_pairs
-from .text import lang_id, quality_score
+from .text import quality_score
 
 
 def curate_documents(
@@ -34,8 +34,6 @@ def curate_documents(
     jaccard_threshold: float = 0.5,
     min_tokens: int = 10,
     max_stopword_ratio: float = 0.5,
-    languages: tuple[str, ...] | None = None,
-    cluster_dedup: bool = False,
 ) -> DataFrame:
     """Returns (doc_id, n_tokens) for the curated (kept) documents."""
     # 1. exact dedup: keep the group keeper only
@@ -44,19 +42,11 @@ def curate_documents(
     )
     uniq = docs.join(keepers, on=id_col, how="left_semi")
 
-    # 2. near-dup removal
+    # 2. near-dup removal, greedy pair policy: drop the larger id of each
+    # qualifying pair
     pairs = minhash_lsh_pairs(uniq, id_col, text_col, threshold=jaccard_threshold)
-    if cluster_dedup:
-        # connected-component policy: one representative (min id) per cluster
-        labels = dup_clusters(pairs, ids=uniq.select(id_col))
-        keep = labels.filter(F.col("id") == F.col("cluster_id")).select(
-            F.col("id").alias(id_col)
-        )
-        deduped = uniq.join(keep, on=id_col, how="left_semi")
-    else:
-        # greedy pair policy: drop the larger id of each qualifying pair
-        drop = pairs.select(F.col("b").alias(id_col)).distinct()
-        deduped = uniq.join(drop, on=id_col, how="left_anti")
+    drop = pairs.select(F.col("b").alias(id_col)).distinct()
+    deduped = uniq.join(drop, on=id_col, how="left_anti")
 
     # 3. quality gate
     q = quality_score(deduped, text_col=text_col, id_col=id_col)
@@ -64,16 +54,7 @@ def curate_documents(
         (F.col("n_tokens") >= min_tokens)
         & (F.col("stopword_ratio") <= max_stopword_ratio)
     ).select(F.col("id").alias(id_col), "n_tokens")
-
-    # 4. language gate (predicted language must be in the allow-list)
-    out = deduped.join(good_q, on=id_col)
-    if languages:
-        lang = lang_id(deduped, text_col=text_col, id_col=id_col)
-        ok_lang = lang.filter(F.col("pred_lang").isin(list(languages))).select(
-            F.col("id").alias(id_col)
-        )
-        out = out.join(ok_lang, on=id_col, how="left_semi")
-    return out.select(F.col(id_col), F.col("n_tokens"))
+    return deduped.join(good_q, on=id_col).select(F.col(id_col), F.col("n_tokens"))
 
 
 def leakage_safe_split(
@@ -121,7 +102,6 @@ def pack_sequences(
     tokens_col: str | None = None,
     text_col: str = "text",
     n_packers: int = 64,
-    seed: int = 0,
 ) -> DataFrame:
     """Concat-and-chunk sequence packing: documents -> fixed-capacity
     training sequences.
@@ -159,7 +139,7 @@ def pack_sequences(
         if tokens_col
         else F.size(F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != ""))
     )
-    h = sample_hash(F.col(id_col), seed)
+    h = sample_hash(F.col(id_col))
     base = df.select(
         F.col(id_col).alias("doc_id"),
         tok.cast("long").alias("n_tokens"),
@@ -285,7 +265,6 @@ def geo_buffered_split(
     res: int,
     weights: tuple[int, int, int] = (80, 10, 10),
     buffer_ring: int = 1,
-    seed: int = 0,
     id_col: str = "image_id",
     lon_col: str = "lon",
     lat_col: str = "lat",
@@ -331,7 +310,7 @@ def geo_buffered_split(
     # runtime is one projection either way)
     def split_of(x: Column, y: Column) -> Column:
         lin = x * n + y
-        h = (((lin % P + P) % P + seed) * MIX) % P
+        h = (((lin % P + P) % P) * MIX) % P
         t_train = weights[0] * P
         t_val = (weights[0] + weights[1]) * P
         return (
@@ -385,7 +364,6 @@ def epoch_shuffle(
     id_col: str,
     epoch: int,
     num_shards: int,
-    hash: str = "portable",
 ) -> DataFrame:
     """Deterministic per-epoch global shuffle + shard assignment — the
     training-order op: every epoch the corpus is re-permuted into
@@ -405,12 +383,11 @@ def epoch_shuffle(
     -> 10^7 rows each); skew is hash-bounded (no hot keys by
     construction).
 
-    Hash families as in operators/sketches.py: ``portable`` is the
-    32-bit avalanche over the folded id XOR the epoch salt — exact
-    integer math, ANSI-SQL twin (`epoch_shuffle_sql`), bit-identical
-    order in both engines; ``xxhash64`` uses the full-width JVM hash
-    for arbitrary id types. Ties (hash collisions) break on id: the
-    order is total and deterministic either way.
+    The hash is the portable 32-bit avalanche of operators/sketches.py
+    over the folded id XOR the epoch salt — exact integer math, ANSI-SQL
+    twin (`epoch_shuffle_sql`), bit-identical order in both engines.
+    Ties (hash collisions) break on id: the order is total and
+    deterministic.
 
     Returns the input columns + (shard:int, pos:long).
     """
@@ -421,17 +398,11 @@ def epoch_shuffle(
     from .sketches import A_MIX, M32, P31
 
     v = F.col(id_col)
-    if hash == "portable":
-        x = ((v.cast("long") % P31) + P31) % P31
-        y = x.bitwiseXOR(F.lit(_epoch_salt(epoch)))
-        y = F.shiftright(y, 16).bitwiseXOR(y) * A_MIX % (M32 + 1)
-        y = F.shiftright(y, 16).bitwiseXOR(y) * A_MIX % (M32 + 1)
-        h = F.shiftright(y, 16).bitwiseXOR(y)
-    elif hash == "xxhash64":
-        h64 = F.xxhash64(F.lit("epoch"), v, F.lit(epoch))
-        h = F.shiftrightunsigned(h64, 1)  # non-negative
-    else:
-        raise ValueError(f"hash must be 'portable' or 'xxhash64', got {hash!r}")
+    x = ((v.cast("long") % P31) + P31) % P31
+    y = x.bitwiseXOR(F.lit(_epoch_salt(epoch)))
+    y = F.shiftright(y, 16).bitwiseXOR(y) * A_MIX % (M32 + 1)
+    y = F.shiftright(y, 16).bitwiseXOR(y) * A_MIX % (M32 + 1)
+    h = F.shiftright(y, 16).bitwiseXOR(y)
 
     staged = df.filter(v.isNotNull()).withColumn("_h", h)
     shard = (F.col("_h") % num_shards).cast("int")
@@ -450,7 +421,7 @@ def epoch_shuffle_sql(
     num_shards: int,
     cols: list[str],
 ) -> str:
-    """DuckDB twin of epoch_shuffle(hash='portable'): same salt, same
+    """DuckDB twin of epoch_shuffle: same salt, same
     avalanche, same (h, id) total order — the emitted (shard, pos) are
     bit-identical to the Spark plan's."""
     from .sketches import fold31_sql, h32_final_sql, h32_round_sql
@@ -479,15 +450,13 @@ def training_batches(
     epoch: int,
     num_shards: int,
     batch_size: int,
-    drop_ragged: bool = True,
-    hash: str = "portable",
 ) -> DataFrame:
     """The last mile of `epoch_shuffle`: cut each shard's permuted
     order into fixed-size training batches. batch = pos DIV batch_size
     (pure Column math over the shuffle output — no extra shuffle or
     window beyond epoch_shuffle's own), pos_in_batch = pos MOD
-    batch_size. With ``drop_ragged`` (the training default) each
-    shard's trailing partial batch is dropped, so every emitted batch
+    batch_size. Each shard's trailing partial batch is dropped, so
+    every emitted batch
     has exactly `batch_size` rows — the fixed-shape contract
     collective-communication training steps need. Batch ids are
     (shard, batch) pairs — globally unique and stable across reruns,
@@ -495,20 +464,14 @@ def training_batches(
     """
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
-    out = epoch_shuffle(df, id_col, epoch, num_shards, hash=hash)
+    out = epoch_shuffle(df, id_col, epoch, num_shards)
     out = out.withColumn(
         "batch", F.expr(f"pos DIV {batch_size}").cast("long")
     ).withColumn("pos_in_batch", (F.col("pos") % batch_size).cast("long"))
-    if drop_ragged:
-        counts = out.groupBy("shard", "batch").agg(F.count("*").alias("_n"))
-        out = (
-            out.join(
-                F.broadcast(counts.filter(F.col("_n") == batch_size)),
-                ["shard", "batch"],
-            )
-            .drop("_n")
-        )
-    return out
+    counts = out.groupBy("shard", "batch").agg(F.count("*").alias("_n"))
+    return out.join(
+        F.broadcast(counts.filter(F.col("_n") == batch_size)), ["shard", "batch"]
+    ).drop("_n")
 
 
 def training_batches_sql(
@@ -518,20 +481,16 @@ def training_batches_sql(
     num_shards: int,
     batch_size: int,
     cols: list[str],
-    drop_ragged: bool = True,
 ) -> str:
-    """DuckDB twin of training_batches(hash='portable')."""
+    """DuckDB twin of training_batches."""
     inner = epoch_shuffle_sql(source_sql, id_expr, epoch, num_shards, cols)
     collist = ", ".join(cols)
-    body = f"""\
+    return f"""\
 WITH tb0 AS ({inner}),
 tb1 AS (SELECT {collist}, shard, pos,
                CAST(pos // {batch_size} AS BIGINT) AS batch,
                CAST(pos % {batch_size} AS BIGINT) AS pos_in_batch
-        FROM tb0)"""
-    if not drop_ragged:
-        return body + f"\nSELECT {collist}, shard, pos, batch, pos_in_batch FROM tb1\n"
-    return body + f""",
+        FROM tb0),
 tbn AS (SELECT shard, batch FROM tb1 GROUP BY 1, 2
         HAVING COUNT(*) = {batch_size})
 SELECT {collist}, t.shard, t.pos, t.batch, t.pos_in_batch
@@ -583,7 +542,6 @@ def domain_cap(
     url_col: str,
     cap: int,
     id_col: str = "doc_id",
-    seed: int = 0,
 ) -> DataFrame:
     """Per-domain document cap — the anti-SEO-spam / source-balance
     gate every crawl corpus passes through: at most `cap` documents
@@ -602,7 +560,7 @@ def domain_cap(
     staged = df.withColumn("host", url_host(F.col(url_col))).withColumn(
         "domain", registrable_domain(F.col("host"))
     )
-    return balanced_sample(staged, ["domain"], cap, id_col=id_col, seed=seed)
+    return balanced_sample(staged, ["domain"], cap, id_col=id_col)
 
 
 def mixup_pairs(
@@ -610,7 +568,6 @@ def mixup_pairs(
     id_col: str,
     epoch: int,
     num_shards: int,
-    lam_scale: int = 1000,
 ) -> DataFrame:
     """Deterministic per-epoch mixup partner assignment: every example
     gets a partner and an integer mixing weight —
@@ -627,7 +584,7 @@ def mixup_pairs(
     the degenerate 1-example shard, which self-pairs; at training
     scale shards hold ~1e6+ examples and the epoch salt re-deals
     membership every epoch). lam_permille draws from an independent
-    portable-hash stream in [0, lam_scale].
+    portable-hash stream in [0, 1000].
 
     Scale shape: epoch_shuffle's one exchange + per-shard window, plus
     a lead()/first_value() on the SAME window — Spark computes both in
@@ -635,8 +592,6 @@ def mixup_pairs(
     are fetched by the training reader via the (id, partner_id) pairs,
     never moved here.
     """
-    if lam_scale < 1:
-        raise ValueError(f"lam_scale must be >= 1, got {lam_scale}")
     from .sketches import A_MIX, M32, P31
 
     staged = epoch_shuffle(df, id_col, epoch, num_shards)
@@ -647,7 +602,7 @@ def mixup_pairs(
     y = x.bitwiseXOR(F.lit(salt))
     y = F.shiftright(y, 16).bitwiseXOR(y) * A_MIX % (M32 + 1)
     y = F.shiftright(y, 16).bitwiseXOR(y) * A_MIX % (M32 + 1)
-    lam = F.shiftright(y, 16).bitwiseXOR(y) % (lam_scale + 1)
+    lam = F.shiftright(y, 16).bitwiseXOR(y) % 1001
 
     w = Window.partitionBy("shard").orderBy(F.col("pos").asc())
     partner = F.coalesce(

@@ -14,16 +14,16 @@ driver's DuckDB oracle), unlike engine-specific xxhash64/murmur.
 Scale design:
   - exact_dedup: one hash-agg shuffle on the key; map-side partial agg.
   - ngram/minhash/simhash: explode(shingles) -> equi-join on shingle/band
-    keys. Frequent-shingle skew is bounded with an optional document-
-    frequency cap (`max_df`); at 100 TB you ALWAYS set it (a stopword
-    shingle would otherwise fan out quadratically).
+    keys. Frequent-shingle skew is bounded with a document-frequency
+    cap (`MAX_DF`): a stopword shingle would otherwise fan out
+    quadratically.
   - verification joins (exact Jaccard / hamming) only run on candidate
     pairs, which are a vanishing fraction of n^2.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 HASH_MOD = 1_000_000_007
@@ -100,22 +100,19 @@ def exact_dedup(df: DataFrame, key: Column, id_col: Column) -> DataFrame:
     )
 
 
-def _pair_candidates(
-    exploded: DataFrame, id_col: str, token_col: str, max_df: int | None
-) -> DataFrame:
+def _pair_candidates(exploded: DataFrame, id_col: str, token_col: str) -> DataFrame:
     """(a, b) candidate pairs sharing >=1 token, with common-token counts.
 
     `exploded` has one row per (id, token). The join is an equi-join on the
-    token — no cross product; `max_df` drops tokens whose document frequency
-    exceeds the cap (frequent-shingle skew guard)."""
-    if max_df is not None:
-        keep = (
-            exploded.groupBy(token_col)
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") <= max_df)
-            .select(token_col)
-        )
-        exploded = exploded.join(keep, on=token_col, how="left_semi")
+    token — no cross product; tokens whose document frequency exceeds
+    `MAX_DF` are dropped (frequent-shingle skew guard)."""
+    keep = (
+        exploded.groupBy(token_col)
+        .agg(F.count("*").alias("__df"))
+        .filter(F.col("__df") <= MAX_DF)
+        .select(token_col)
+    )
+    exploded = exploded.join(keep, on=token_col, how="left_semi")
     l = exploded.select(F.col(id_col).alias("a"), F.col(token_col).alias("t"))
     r = exploded.select(F.col(id_col).alias("b"), F.col(token_col).alias("t"))
     return (
@@ -126,7 +123,7 @@ def _pair_candidates(
     )
 
 
-DEFAULT_MAX_DF = 1000
+MAX_DF = 1000
 
 
 def ngram_jaccard_pairs(
@@ -135,7 +132,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.1,
-    max_df: int | None = DEFAULT_MAX_DF,
 ) -> DataFrame:
     """Near-duplicate pairs by exact word-n-gram Jaccard >= threshold.
 
@@ -144,20 +140,17 @@ def ngram_jaccard_pairs(
     Pairs sharing no shingle have jaccard 0 and are (correctly) never
     generated. Returns (a, b, jaccard).
 
-    `max_df` caps shingle document frequency (default 1000): one stopword
+    `MAX_DF` caps shingle document frequency at 1000: one stopword
     shingle shared by m docs fans out m^2/2 candidate pairs, so an
-    *uncapped* default is quadratic at corpus scale. Docs sharing ONLY
-    capped shingles lose their pair — at the default cap that means both
-    docs had every common shingle in >1000 others, i.e. boilerplate. Pass
-    `max_df=0` to explicitly disable the cap (exact small-data mode)."""
-    if max_df == 0:
-        max_df = None
+    uncapped join is quadratic at corpus scale. Docs sharing ONLY capped
+    shingles lose their pair — both docs had every common shingle in
+    >1000 others, i.e. boilerplate."""
     sh = df.select(
         F.col(id_col).alias("id"), word_shingles(F.col(text_col), n).alias("sh")
     ).persist()
     sizes = sh.select("id", F.size("sh").alias("sz"))
     exploded = sh.select("id", F.explode("sh").alias("t"))
-    pairs = _pair_candidates(exploded, "id", "t", max_df)
+    pairs = _pair_candidates(exploded, "id", "t")
     out = (
         pairs.join(sizes.withColumnRenamed("id", "a").withColumnRenamed("sz", "sza"), on="a")
         .join(sizes.withColumnRenamed("id", "b").withColumnRenamed("sz", "szb"), on="b")
@@ -404,12 +397,31 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+CC_ROUNDS = 30  # dup_clusters' round cap; ~20 rounds close a 10^6-long chain
+
+
+def _checkpoint_fingerprint(edges: DataFrame) -> tuple[DataFrame, tuple]:
+    """Checkpoint `edges` eagerly and fingerprint it in the same job.
+
+    The per-edge terms are BOUNDED (< 2^31), so the sums cannot hit ANSI
+    long overflow however large the node ids are; two independent hash
+    sums keep the false-equality odds at ~2^-62 per round."""
+    seen = Observation()
+    edges = edges.observe(
+        seen,
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(F.pmod(F.xxhash64("hi", "lo"), F.lit(1 << 31))), F.lit(0)).alias("s1"),
+        F.coalesce(F.sum(F.pmod(F.xxhash64("lo", "hi"), F.lit(1 << 31))), F.lit(0)).alias("s2"),
+    ).localCheckpoint(eager=True)
+    sig = seen.get
+    return edges, (sig["n"], sig["s1"], sig["s2"])
+
+
 def dup_clusters(
     pairs: DataFrame,
     a: str = "a",
     b: str = "b",
     ids: DataFrame | None = None,
-    max_iter: int = 30,
 ) -> DataFrame:
     """Connected components over near-duplicate pairs -> (id, cluster_id).
 
@@ -427,37 +439,25 @@ def dup_clusters(
     (O(diameter) rounds; a 10^6-long near-dup chain would need 10^6
     shuffles, large/small-star needs ~20). Each round is two groupBy/join
     stages on the edge set, which SHRINKS monotonically toward one star
-    per component; `localCheckpoint` truncates lineage per round.
+    per component; `localCheckpoint` truncates lineage per round and
+    fingerprints the edge set in the same job. The loop ends at the first
+    round that leaves the fingerprint unchanged, counting from the input's
+    own, so an input that is already a set of min-rooted stars costs one
+    round.
 
     `ids` (optional, one column matching `a`'s type): the full id universe;
     ids in no pair become singleton clusters (cluster_id = id). Returns
     (id, cluster_id); ids never appear twice. Raises ValueError when the
-    edge set has not converged after `max_iter` rounds.
+    edge set has not converged after `CC_ROUNDS` rounds.
     """
-    edges = _canon_edges(pairs, a, b).localCheckpoint(eager=True)
-    prev_sig = None
-    for _ in range(max_iter):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        # convergence fingerprint: per-edge terms are BOUNDED (< 2^31) so
-        # the sums cannot hit ANSI long overflow no matter how large the
-        # node ids are (hi * MIX overflowed for grid keys / 2^34-range OSM
-        # ids); two independent hash sums keep the false-equality odds at
-        # ~2^-62 per round
-        sig = edges.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.pmod(F.xxhash64("hi", "lo"), F.lit(1 << 31))), F.lit(0)
-            ).alias("s1"),
-            F.coalesce(
-                F.sum(F.pmod(F.xxhash64("lo", "hi"), F.lit(1 << 31))), F.lit(0)
-            ).alias("s2"),
-        ).collect()[0]
-        sig = (sig["n"], sig["s1"], sig["s2"])
+    edges, prev_sig = _checkpoint_fingerprint(_canon_edges(pairs, a, b))
+    for _ in range(CC_ROUNDS):
+        edges, sig = _checkpoint_fingerprint(_small_star(_large_star(edges)))
         if sig == prev_sig:
             break
         prev_sig = sig
     else:
-        raise ValueError(f"dup_clusters: edges not converged after {max_iter} rounds")
+        raise ValueError(f"dup_clusters: edges not converged after {CC_ROUNDS} rounds")
     # converged: every component is a star (child -> min-id root)
     labels = edges.select(F.col("hi").alias("id"), F.col("lo").alias("cluster_id"))
     roots = edges.select(F.col("lo").alias("id")).distinct().withColumn(
@@ -480,13 +480,12 @@ def line_dedup(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_docs: int = 2,
     min_line_chars: int = 5,
     out_col: str = "text_clean",
 ) -> DataFrame:
     """Corpus-level line deduplication (the C4 boilerplate rule, Raffel et
     al. 2020 §2.2): drop every line whose normalized form (lower+trim)
-    occurs in >= ``min_docs`` DISTINCT documents, then reassemble each
+    occurs in two or more DISTINCT documents, then reassemble each
     document from its surviving lines in original order. Lines shorter
     than ``min_line_chars`` after normalization (headings, blanks,
     separators) are exempt — never counted, never removed.
@@ -510,7 +509,7 @@ def line_dedup(
         lines.filter(eligible)
         .groupBy("norm")
         .agg(F.count_distinct("id").alias("ndocs"))
-        .filter(F.col("ndocs") >= min_docs)
+        .filter(F.col("ndocs") >= 2)
         .select("norm")
         .withColumn("__banned", F.lit(True))
     )

@@ -795,11 +795,11 @@ def to_text(feats: DataFrame, keep_untagged: bool = False) -> DataFrame:
     return out.select(F.concat(F.col("geometry"), F.lit(" "), tags_txt).alias("row"))
 
 
-def to_geojson_features(feats: DataFrame, with_id: bool = True) -> DataFrame:
+def to_geojson_features(feats: DataFrame) -> DataFrame:
     """The per-feature rows of a plain-GeoJSON FeatureCollection (same
     Feature objects as geojsonseq — the two formats differ only in
     framing, export_format_json.cpp)."""
-    return to_geojsonseq(feats, with_id=with_id)
+    return to_geojsonseq(feats)
 
 
 def write_geojson(
@@ -879,11 +879,10 @@ def _ewkb_impl():
     return encode
 
 
-def to_pg(feats: DataFrame, geometry: str = "ewkb") -> DataFrame:
+def to_pg(feats: DataFrame) -> DataFrame:
     """PG COPY text rows (export_format_pg.cpp): EWKB hex geometry
     (SRID 4326) + tab + tags as JSON — byte parity with the reference's
-    pg format (test/export/output.pg). `geometry="geojson"` keeps the
-    GeoJSON geometry string instead (columns: id, tags, geometry).
+    pg format (test/export/output.pg).
 
     Escaping per export_format_pg.cpp:48-75 (backslash, tab, newline, CR).
     The EWKB encode is an Arrow-batched stage — an export SINK edge, not a
@@ -895,16 +894,6 @@ def to_pg(feats: DataFrame, geometry: str = "ewkb") -> DataFrame:
         c = F.regexp_replace(c, "\t", r"\\t")
         c = F.regexp_replace(c, "\n", r"\\n")
         return F.regexp_replace(c, "\r", r"\\r")
-
-    if geometry == "geojson":
-        return feats.select(
-            F.concat_ws(
-                "\t",
-                F.col("id").cast("string"),
-                esc(F.to_json(F.col("tags"))),
-                F.col("geometry"),
-            ).alias("row")
-        )
 
     staged = feats.select(
         F.col("geometry"), esc(F.to_json(F.col("tags"))).alias("props")

@@ -61,16 +61,9 @@ def hexbin_counts(
     h: int,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    measure: Column | None = None,
 ) -> DataFrame:
-    """(cx, cy, n[, m]) — point count (and optional measure sum) per hex
-    cell. One projection + one hash aggregate."""
+    """(cx, cy, n) — point count per hex cell. One projection + one hash
+    aggregate."""
     cx, cy = hex_center_cols(F.col(lon_col), F.col(lat_col), w, h)
-    staged = points.select(
-        cx.alias("cx"), cy.alias("cy"),
-        *([measure.alias("_m")] if measure is not None else []),
-    )
-    aggs = [F.count("*").alias("n")]
-    if measure is not None:
-        aggs.append(F.sum("_m").alias("m"))
-    return staged.groupBy("cx", "cy").agg(*aggs)
+    staged = points.select(cx.alias("cx"), cy.alias("cy"))
+    return staged.groupBy("cx", "cy").agg(F.count("*").alias("n"))

@@ -25,11 +25,12 @@ def mse(a: Column, b: Column) -> Column:
     return total / F.size(a)
 
 
-def psnr(a: Column, b: Column, peak: float = 255.0) -> Column:
-    """Peak signal-to-noise ratio in dB; infinity (NULL here) when MSE=0."""
+def psnr(a: Column, b: Column) -> Column:
+    """Peak signal-to-noise ratio in dB of 8-bit samples (peak 255);
+    infinity (NULL here) when MSE=0."""
     m = mse(a, b)
     return F.when(m == 0, F.lit(None).cast("double")).otherwise(
-        10.0 * F.log10(F.lit(peak * peak) / m)
+        10.0 * F.log10(F.lit(255.0 * 255.0) / m)
     )
 
 

@@ -131,7 +131,6 @@ def _augment_draw_cols(
 def crop_images(
     images: DataFrame,
     epoch: int,
-    min_scale_pct: int = 60,
     id_col: str = "image_id",
 ) -> DataFrame:
     """APPLY the per-epoch augmentation draws to real pixels: decode the
@@ -141,8 +140,8 @@ def crop_images(
     flip, bytes) where (w, h) are the crop dims and `bytes` is a valid
     PNG of the augmented image.
 
-    The rect comes from the SAME draw columns augment_crops reports
-    (`_augment_draw_cols`), staged onto the row before the kernel, so
+    The rect comes from the SAME draw columns augment_crops reports at
+    its default 60% minimum scale (`_augment_draw_cols`), staged onto the row before the kernel, so
     the pixel stage adds NO exchange — the Arrow-batched mapInPandas
     rides the scan exactly like resize_images, but with real pixels
     end-to-end (the crop is an array slice; flip is np.fliplr — both
@@ -154,9 +153,7 @@ def crop_images(
         F.col("bytes").alias("__png"),
         *[
             v.alias(f"__{k}")
-            for k, v in _augment_draw_cols(
-                epoch, min_scale_pct, id_col, "w", "h"
-            ).items()
+            for k, v in _augment_draw_cols(epoch, 60, id_col, "w", "h").items()
         ],
     )
     from ..functions import png as _png
@@ -315,11 +312,11 @@ def resize_images_real(
     )
 
 
-def sample_frames(videos: DataFrame, every_n: int, max_frames: int = 240) -> DataFrame:
+def sample_frames(videos: DataFrame, every_n: int) -> DataFrame:
     """Frame-sampling stage — PURE Column math, zero Python.
 
     Treats the binary payload as a frame container: frame count derives
-    deterministically from the payload hash (1 + phash % max_frames — a
+    deterministically from the payload hash (1 + phash % 240 — a
     real container would read it from the header), every `every_n`-th
     frame index is emitted via sequence + posexplode (whole-stage
     codegen), each with its byte offset into the payload. The per-frame
@@ -328,7 +325,7 @@ def sample_frames(videos: DataFrame, every_n: int, max_frames: int = 240) -> Dat
     Returns (image_id, frame_idx, n_frames, byte_off)."""
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
-    n_frames = (F.lit(1) + F.pmod(F.col("phash"), F.lit(max_frames))).cast("int")
+    n_frames = (F.lit(1) + F.pmod(F.col("phash"), F.lit(240))).cast("int")
     staged = videos.select(
         "image_id",
         n_frames.alias("n_frames"),
@@ -612,7 +609,6 @@ def aspect_bucket_batches(
     id_col: str = "image_id",
     w_col: str = "w",
     h_col: str = "h",
-    drop_incomplete: bool = True,
 ) -> DataFrame:
     """Deterministic fixed-size training batches within aspect buckets:
     every image gets (bucket_idx, batch_id, slot) with slot in
@@ -623,9 +619,8 @@ def aspect_bucket_batches(
     dense_index — ONE balanced range shuffle + a broadcast of
     per-(partition, bucket) offsets — NOT a row_number window
     partitioned by bucket, which would serialize each bucket (a ~20-row
-    ladder over 10^12 images = 10^11-row single-task sorts). With
-    `drop_incomplete` (the trainer default) the ragged tail of each
-    bucket is dropped via a broadcast of per-bucket counts.
+    ladder over 10^12 images = 10^11-row single-task sorts). The ragged
+    tail of each bucket is dropped via a broadcast of per-bucket counts.
     """
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
@@ -643,15 +638,13 @@ def aspect_bucket_batches(
     out = idx.withColumn("batch_id", batch_id).withColumn(
         "slot", (rn % batch_size).cast("long")
     )
-    if drop_incomplete:
-        counts = a.groupBy("bucket_idx").agg(F.count("*").alias("__bc"))
-        keep_below = (F.col("__bc") - F.col("__bc") % batch_size).cast("long")
-        out = (
-            out.join(F.broadcast(counts), "bucket_idx")
-            .filter(F.col("__ord") <= keep_below)
-            .drop("__bc")
-        )
-    return out.drop("__ord")
+    counts = a.groupBy("bucket_idx").agg(F.count("*").alias("__bc"))
+    keep_below = (F.col("__bc") - F.col("__bc") % batch_size).cast("long")
+    return (
+        out.join(F.broadcast(counts), "bucket_idx")
+        .filter(F.col("__ord") <= keep_below)
+        .drop("__bc", "__ord")
+    )
 
 
 def dhash_bit_vector(hi: Column, lo: Column) -> Column:

@@ -182,9 +182,6 @@ def shortest_distance(
 def way_pagerank(
     ways: DataFrame,
     iters: int = 3,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    scale: int = 10**12,
     id_col: str = "id",
     refs_col: str = "refs",
 ) -> DataFrame:
@@ -195,25 +192,23 @@ def way_pagerank(
     weighted-PROPAGATION archetype (Page et al. 1999; the Pregel
     textbook example, here as plain DataFrame joins).
 
-    Every quantity is an exact INTEGER: ranks start at `scale`, a node
-    passes rank div degree to each neighbor, and the damped update is
-    base + (damping_num * sum) div damping_den with
-    base = (scale * (den-num)) div den. Integer division sheds
+    Every quantity is an exact INTEGER: ranks start at scale = 10^12, a
+    node passes rank div degree to each neighbor, and the damped update
+    is base + (85 * sum) div 100 with base = (scale * 15) div 100.
+    Integer division sheds
     remainder mass (a deterministic variant of float PageRank, within
     ~degree/scale relative of it), and buys what float PageRank cannot
     give on a cluster: the per-node SUM of long contributions is
     order-free, so results are bit-identical across partitionings,
     reruns and engines — and the DuckDB oracle replays the iterations
     exactly. Overflow bound (r5 ADVICE fix): the damped accumulation
-    sum(c) and the damping_num * sum multiply both ride decimal(38,0)
-    — exact to ~1e38/damping_num total mass, i.e. effectively
-    unbounded (the DuckDB twin sums in HUGEINT, same headroom). The
-    remaining true bound is only that a single node's final rank fit
-    int64: rank < n_nodes * scale in the worst case (a node absorbing
-    all mass), so pick scale <= 2^63 / n_nodes for an absolute
-    guarantee — the default 1e12 is safe to ~9.2M nodes; at planet
-    scale pass scale=10**6. The earlier long-typed sum overflowed
-    ~100x below that bound; the decimal path removes it.
+    sum(c) and the 85 * sum multiply both ride decimal(38,0) — exact to
+    ~1e36 total mass, i.e. effectively unbounded (the DuckDB twin sums
+    in HUGEINT, same headroom). The remaining true bound is only that a
+    single node's final rank fit int64: rank < n_nodes * scale in the
+    worst case (a node absorbing all mass), so the 1e12 scale is safe
+    to ~9.2M nodes. The earlier long-typed sum overflowed ~100x below
+    that bound; the decimal path removes it.
 
     Scale shape: the symmetric deduplicated adjacency (u, v, deg) is
     built ONCE (one explode + one distinct + one hash agg) and joined
@@ -227,15 +222,14 @@ def way_pagerank(
     """
     if iters < 1:
         raise ValueError(f"way_pagerank: iters must be >= 1, got {iters}")
-    if not 0 < damping_num < damping_den:
-        raise ValueError("way_pagerank: need 0 < damping_num < damping_den")
+    scale = 10**12
     edges = way_edges(ways, id_col=id_col, refs_col=refs_col)
     sym = edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).distinct()
     deg = sym.groupBy("u").agg(F.count("*").alias("deg"))
     adj = sym.join(deg, "u")
-    base = (scale * (damping_den - damping_num)) // damping_den
+    base = (scale * 15) // 100
     ranks = deg.select(F.col("u").alias("node_id"), F.lit(scale).alias("rank"))
     for _ in range(iters):
         contrib = adj.join(
@@ -248,8 +242,7 @@ def way_pagerank(
             (
                 F.lit(base)
                 + F.expr(
-                    f"CAST(({damping_num} * sum(CAST(c AS DECIMAL(38,0))))"
-                    f" div {damping_den} AS BIGINT)"
+                    "CAST((85 * sum(CAST(c AS DECIMAL(38,0)))) div 100 AS BIGINT)"
                 )
             ).alias("rank")
         )

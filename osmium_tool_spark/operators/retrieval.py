@@ -10,10 +10,9 @@ reference" family).
 
 Shape, and why it survives 100 TB:
 
-  1. ``build_postings`` tokenizes once and produces the standing
-     inverted index ``(term, doc_id, tf)`` plus per-doc lengths — ONE
-     explode + hash aggregate over the corpus (the only corpus-sized
-     shuffle), written once and reused across every query batch.
+  1. ``build_postings`` tokenizes once and produces the inverted index
+     ``(term, doc_id, tf)`` plus per-doc lengths — ONE explode + hash
+     aggregate over the corpus (the only corpus-sized shuffle).
   2. ``bm25_topk`` joins the postings against the DISTINCT query terms.
      A query batch is tiny next to the corpus, so the term list is
      broadcast — the corpus-side join is a broadcast semi-join that
@@ -24,16 +23,14 @@ Shape, and why it survives 100 TB:
      emits at most queries x k rows into the final exchange.
 
 Nothing is all-pairs: the candidate set is exactly the docs sharing at
-least one term with the query (the inverted-index contract). Degenerate
-stop-terms that match everything are the caller's concern (`max_df`
-drops them, mirroring dedup.ngram_jaccard_pairs' hot-token cap).
+least one term with the query (the inverted-index contract).
 
 Scoring is Lucene-style BM25 (Robertson & Zaragoza 2009, "The
 Probabilistic Relevance Framework"): idf = ln(1 + (N-df+0.5)/(df+0.5)),
-tf-norm = tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl)). Scores are quantized
-(round, default 6 dp) BEFORE ranking so that float summation order —
-which Spark does not fix across partitions — cannot flip near-tie ranks
-between runs or against the SQL oracle.
+tf-norm = tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl)) with k1 = 1.2 and
+b = 0.75. Scores are quantized (round to 6 dp) BEFORE ranking so that
+float summation order — which Spark does not fix across partitions —
+cannot flip near-tie ranks between runs or against the SQL oracle.
 """
 
 from __future__ import annotations
@@ -75,7 +72,6 @@ def rrf_fuse(
     query_id: str = "query_id",
     doc_id: str = "doc_id",
     rank_col: str = "rank",
-    quantize: int = 9,
 ) -> DataFrame:
     """Reciprocal-rank fusion of per-query rankings: hybrid retrieval.
 
@@ -94,7 +90,7 @@ def rrf_fuse(
     (standard RRF; no outer-join imputation).
 
     Determinism: the fused score is a sum of at most len(rankings) exact
-    dyadic-adjacent terms 1/(c+rank); quantized (default 9 dp) before
+    dyadic-adjacent terms 1/(c+rank); quantized (9 dp) before
     ranking, ties break by doc id — same contract as bm25_topk.
 
     Returns (query_id, doc_id, rrf, rank).
@@ -115,7 +111,7 @@ def rrf_fuse(
     for t in tagged[1:]:
         allr = allr.unionByName(t)
     fused = allr.groupBy("query_id", "doc_id").agg(
-        F.round(F.sum("contrib"), quantize).alias("rrf")
+        F.round(F.sum("contrib"), 9).alias("rrf")
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("rrf").desc(), F.col("doc_id").asc()
@@ -133,9 +129,6 @@ def tfidf_topk(
     doc_id: str = "doc_id",
     text: str = "text",
     max_df: int | None = None,
-    min_df: int = 1,
-    quantize: int = 6,
-    postings: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document top-k TF-IDF keywords:
     (doc_id, term, tf, df, score, rank).
@@ -148,15 +141,13 @@ def tfidf_topk(
 
     Scoring is classic tf·idf with the smooth idf both sklearn and
     Lucene document publicly: idf = ln((1+N)/(1+df)) + 1 — strictly
-    positive, defined even for df = N. Scores are quantized (default
-    6 dp) BEFORE ranking so float summation order cannot flip near-tie
+    positive, defined even for df = N. Scores are quantized (6 dp)
+    BEFORE ranking so float summation order cannot flip near-tie
     ranks between runs or against the SQL oracle; ties break by term
     asc (deterministic total order).
 
     Scale shape, and why it survives 100 TB: the postings build is the
-    one corpus-sized explode + hash aggregate (reusable via the
-    ``postings`` parameter — at scale the standing index from
-    build_postings is read back from parquet, not rebuilt). df-by-term
+    one corpus-sized explode + hash aggregate. df-by-term
     aggregates the postings to vocab size; the postings⋈df join is
     term-keyed (vocab-sized build side — Spark's AQE broadcasts it
     when it fits, else a plain shuffle join on a high-cardinality key
@@ -166,11 +157,9 @@ def tfidf_topk(
     each map task emits at most docs×k rows into the last exchange.
 
     ``max_df`` drops terms in more than that many docs (stop-term cap,
-    same escape hatch as bm25_topk / ngram_jaccard_pairs); ``min_df``
-    drops hapax noise below the threshold.
+    like ngram_jaccard_pairs' MAX_DF).
     """
-    if postings is None:
-        postings, _ = build_postings(docs, doc_id=doc_id, text=text)
+    postings, _ = build_postings(docs, doc_id=doc_id, text=text)
 
     n_docs = docs.select(F.col(doc_id)).distinct().agg(
         F.count("*").cast("double").alias("n_docs")
@@ -179,8 +168,6 @@ def tfidf_topk(
     df_by_term = postings.groupBy("term").agg(F.count("*").alias("df"))
     if max_df is not None:
         df_by_term = df_by_term.filter(F.col("df") <= F.lit(max_df))
-    if min_df > 1:
-        df_by_term = df_by_term.filter(F.col("df") >= F.lit(min_df))
 
     scored = (
         postings.join(df_by_term, "term")
@@ -193,7 +180,7 @@ def tfidf_topk(
                     F.log((F.lit(1.0) + F.col("n_docs")) / (F.lit(1.0) + F.col("df")))
                     + F.lit(1.0)
                 ),
-                quantize,
+                6,
             ),
         )
     )
@@ -211,32 +198,18 @@ def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     doc_id: str = "doc_id",
     text: str = "text",
     query_id: str = "query_id",
     query_text: str = "qtext",
-    max_df: int | None = None,
-    quantize: int = 6,
-    postings: DataFrame | None = None,
-    doclens: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k BM25 matches per query: (query_id, doc_id, score, rank).
 
-    ``max_df`` drops terms occurring in more than that many documents
-    from scoring (stop-term cap — the inverted-index escape hatch that
-    keeps a term like "the" from turning the join corpus-sized).
-    ``quantize`` rounds scores before ranking; see module docstring.
-
-    ``postings``/``doclens`` inject a prebuilt index from
-    ``build_postings`` (typically read back from parquet): at 100 TB the
-    index is built ONCE and every query batch starts here — without
-    them this call tokenizes the corpus inline, which is correct but
-    pays the index-build scan per invocation.
+    Tokenizes the corpus inline (`build_postings`); scoring and rounding
+    are described in the module docstring.
     """
-    if postings is None or doclens is None:
-        postings, doclens = build_postings(docs, doc_id=doc_id, text=text)
+    k1, b = 1.2, 0.75
+    postings, doclens = build_postings(docs, doc_id=doc_id, text=text)
 
     # corpus statistics: two scalars, broadcast via crossJoin of 1-row frames
     stats = doclens.agg(
@@ -245,8 +218,6 @@ def bm25_topk(
     )
 
     df_by_term = postings.groupBy("term").agg(F.count("*").alias("df"))
-    if max_df is not None:
-        df_by_term = df_by_term.filter(F.col("df") <= F.lit(max_df))
 
     qterms = queries.select(
         F.col(query_id).alias("query_id"),
@@ -279,7 +250,7 @@ def bm25_topk(
             ),
         )
         .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("w"), quantize).alias("score"))
+        .agg(F.round(F.sum("w"), 6).alias("score"))
     )
 
     w = Window.partitionBy("query_id").orderBy(

@@ -45,18 +45,16 @@ def balanced_sample(
     key_cols: list[str],
     k: int,
     id_col: str = "id",
-    seed: int = 0,
     rank_col: str = "sample_rank",
 ) -> DataFrame:
     """Up to ``k`` rows per distinct key, deterministically pseudo-random.
 
-    Order within a key is (sample_hash(id, seed), id) — changing ``seed``
-    draws a different (still deterministic) sample. Output keeps all input
+    Order within a key is (sample_hash(id), id). Output keeps all input
     columns plus ``rank_col`` in [1, k].
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    h = sample_hash(F.col(id_col), seed)
+    h = sample_hash(F.col(id_col))
     w = Window.partitionBy(*key_cols).orderBy(h.asc(), F.col(id_col).asc())
     return (
         df.withColumn(rank_col, F.row_number().over(w))
@@ -70,7 +68,6 @@ def stratified_quota_sample(
     quotas: dict[str, int],
     id_col: str = "id",
     default_k: int = 0,
-    seed: int = 0,
     rank_col: str = "sample_rank",
 ) -> DataFrame:
     """Per-key sample with an explicit quota per key value (e.g. language
@@ -88,7 +85,7 @@ def stratified_quota_sample(
         [(str(key), int(v)) for key, v in sorted(quotas.items())],
         schema=f"{key_col} string, __quota int",
     )
-    h = sample_hash(F.col(id_col), seed)
+    h = sample_hash(F.col(id_col))
     w = Window.partitionBy(key_col).orderBy(h.asc(), F.col(id_col).asc())
     max_k = max([*quotas.values(), default_k])
     if max_k == 0:
@@ -106,11 +103,10 @@ def bernoulli_sample(
     df: DataFrame,
     rate: float,
     id_col: str = "id",
-    seed: int = 0,
     weight: Column | None = None,
 ) -> DataFrame:
     """Deterministic Bernoulli sampling: keep a row iff
-    sample_hash(id, seed) < rate * P, optionally scaled by a per-row
+    sample_hash(id) < rate * P, optionally scaled by a per-row
     ``weight`` in [0, 1/rate] (quality-weighted downsampling: high-score
     documents survive at up to weight× the base rate).
 
@@ -121,7 +117,7 @@ def bernoulli_sample(
     """
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"rate must be in [0, 1], got {rate}")
-    h = sample_hash(F.col(id_col), seed)
+    h = sample_hash(F.col(id_col))
     thresh = F.lit(rate) * F.lit(HASH_MOD)
     if weight is not None:
         thresh = thresh * weight

@@ -201,9 +201,6 @@ def ann_topk_lsh(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    nbits: int = 64,
-    band_size: int = 4,
 ) -> DataFrame:
     """Label-free approximate top-k via signed-random-projection banding.
 
@@ -213,10 +210,9 @@ def ann_topk_lsh(
     bucket column — corpus and queries get SRP sign signatures
     (srp_projection), candidates share >=1 signature band (equi-join on
     (band_idx, band_value); uniform keys, no skew), exact cosine ranks
-    candidates. Semantics: exact top-k WITHIN the band-candidate set —
-    recall grows with more bands, cost with fewer bits per band.
-    Returns (query_id, neighbor_id, cos, rank)."""
-    assert nbits % band_size == 0
+    candidates. Semantics: exact top-k WITHIN the band-candidate set of
+    16 bands of 4 bits each. Returns (query_id, neighbor_id, cos, rank)."""
+    nbits, band_size = 64, 4
     nbands = nbits // band_size
 
     def with_bands(df: DataFrame, role: str) -> DataFrame:
@@ -224,7 +220,7 @@ def ann_topk_lsh(
             F.col(id_col).alias(f"{role}_id"),
             F.col(vec_col).alias(f"{role}_v"),
             *[
-                (srp_projection(F.col(vec_col), b, dim) > 0).cast("int").alias(f"__b{b}")
+                (srp_projection(F.col(vec_col), b) > 0).cast("int").alias(f"__b{b}")
                 for b in range(nbits)
             ],
         )
@@ -346,8 +342,6 @@ def knn_exact(
     res: int,
     k: int,
     id_col: str = "id",
-    max_ring: int = 8,
-    n_points: int | None = None,
 ) -> DataFrame:
     """EXACT k nearest neighbors via iterative cell-ring expansion.
 
@@ -356,7 +350,7 @@ def knn_exact(
     distance below which no point outside the explored block can lie
     ((ring-1) * cell_width, conservative for any query position in its
     cell). Unsettled queries double their search radius; when the needed
-    ring exceeds `max_ring` the search COARSENS the resolution instead of
+    ring exceeds 8 the search COARSENS the resolution instead of
     growing the literal neighbor array (a ring-9 search at res r is a
     ring-5 search at res r-1), so the per-round Column plan stays bounded.
     The final escalation covers the whole world => trivially exact, so the
@@ -366,6 +360,8 @@ def knn_exact(
     import math
 
     from ..functions.cells import _LAT_SPAN, _LON_SPAN
+
+    max_ring = 8
 
     def cw_at(r: int) -> int:
         n_r = 1 << r
@@ -380,11 +376,8 @@ def knn_exact(
         return r, min(ring, max_ring if r > 1 else ring)
 
     # seed from the expected k-th neighbor distance under uniform density
-    # (d_k ~ sqrt(k*A/(pi*n))), 1.5x margin: most queries settle in round 1.
-    # `n_points` is a seeding HINT only (ring growth self-corrects), so
-    # callers pass a table stat instead of paying a full count job per call
-    # — at 10^12 rows that count is a whole scan.
-    n_points = max(n_points if n_points is not None else points.count(), 1)
+    # (d_k ~ sqrt(k*A/(pi*n))), 1.5x margin: most queries settle in round 1
+    n_points = max(points.count(), 1)
     d_k = math.sqrt(k * float(_LON_SPAN) * float(_LAT_SPAN) / (math.pi * n_points))
     ring_needed = max(1, int(math.ceil(1.5 * d_k / cw_at(res))) + 1)
 
@@ -425,6 +418,7 @@ def knn_exact(
 
 SRP_MOD = 1_000_000_007
 SRP_MIX = 2654435761
+SRP_DIM = 64  # hyperplane width: the embeddings' dimension
 
 
 def srp_coeff(b: int, i: int) -> int:
@@ -434,7 +428,7 @@ def srp_coeff(b: int, i: int) -> int:
     return ((b * 131 + i + 1) * SRP_MIX) % SRP_MOD - SRP_MOD // 2
 
 
-def srp_projection(vec: Column, b: int, dim: int) -> Column:
+def srp_projection(vec: Column, b: int) -> Column:
     """Signed-random-projection value: left-fold dot of the vector with
     hyperplane b (same IEEE sequence as the SQL twin).
 
@@ -445,7 +439,7 @@ def srp_projection(vec: Column, b: int, dim: int) -> Column:
     summation changes float rounding, so near-zero projections could flip
     sign vs this fold; we keep the fold for bit-reproducible semantics
     (the DuckDB oracle evaluates the identical sequence)."""
-    coeffs = F.array(*[F.lit(float(srp_coeff(b, i))) for i in range(dim)])
+    coeffs = F.array(*[F.lit(float(srp_coeff(b, i))) for i in range(SRP_DIM)])
     return F.aggregate(
         F.zip_with(vec, coeffs, lambda x, y: x.cast("double") * y),
         F.lit(0.0),
@@ -458,28 +452,24 @@ def embedding_lsh_near_dup(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    nbits: int = 32,
-    band_size: int = 4,
 ) -> DataFrame:
     """Label-free embedding near-dup via signed-random-projection LSH.
 
-    The scale path when no semantic blocking column exists (the case
-    `embedding_near_dup(block_col=None)` refuses): each vector gets an
-    `nbits`-bit sign signature from fixed pseudo-random hyperplanes
-    (P[same bit] = 1 - angle/pi, the SRP-LSH guarantee); signatures are
-    cut into bands of `band_size` bits, candidates share >=1 full band
+    The scale path when no semantic blocking column exists for
+    `embedding_near_dup`: each vector gets a 32-bit sign signature from
+    fixed pseudo-random hyperplanes (P[same bit] = 1 - angle/pi, the
+    SRP-LSH guarantee); signatures are cut into 8 bands of 4 bits,
+    candidates share >=1 full band
     (equi-join on (band_idx, band_value) — band keys spread uniformly, so
     no skew by construction), and exact cosine verifies candidates only.
-    Returns (a, b, cos) with cos >= threshold. Recall rises with more
-    bands / smaller band_size, cost with fewer bits per band."""
-    assert nbits % band_size == 0
+    Returns (a, b, cos) with cos >= threshold."""
+    nbits, band_size = 32, 4
     nbands = nbits // band_size
     sig = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         *[
-            (srp_projection(F.col(vec_col), b, dim) > 0).cast("int").alias(f"__b{b}")
+            (srp_projection(F.col(vec_col), b) > 0).cast("int").alias(f"__b{b}")
             for b in range(nbits)
         ],
     )
@@ -520,32 +510,18 @@ def embedding_near_dup(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    block_col: str | None = "label",
-    allow_cross_join: bool = False,
+    block_col: str = "label",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs >= threshold.
 
     Blocked on `block_col` (IVF-coarse analog) so the pair join is an
-    equi-join; within-block pair scoring is JVM-side. Returns (a, b, cos).
-
-    `block_col=None` means an all-pairs cross join — O(n^2) rows, never
-    viable at corpus scale — so it must be opted into explicitly with
-    `allow_cross_join=True` (mirrors extract's hard >500-region reject)."""
-    if block_col is None and not allow_cross_join:
-        raise ValueError(
-            "embedding_near_dup without block_col is an all-pairs cross join; "
-            "pass a blocking column or allow_cross_join=True for small data"
-        )
-    cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("v")]
-    if block_col:
-        cols.append(F.col(block_col).alias("blk"))
-    p = emb.select(*cols)
-    on = ["blk"] if block_col else []
-    l = p.select(F.col("id").alias("a"), F.col("v").alias("va"), *on)
-    r = p.select(F.col("id").alias("b"), F.col("v").alias("vb"), *on)
-    j = l.join(r, on=on) if on else l.crossJoin(r)
+    equi-join, never an all-pairs cross join; within-block pair scoring
+    is JVM-side. Returns (a, b, cos)."""
+    p = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), F.col(block_col).alias("blk"))
+    l = p.select(F.col("id").alias("a"), F.col("v").alias("va"), "blk")
+    r = p.select(F.col("id").alias("b"), F.col("v").alias("vb"), "blk")
     return (
-        j.filter(F.col("a") < F.col("b"))
+        l.join(r, on="blk").filter(F.col("a") < F.col("b"))
         .withColumn("cos", cosine(F.col("va"), F.col("vb")))
         .filter(F.col("cos") >= threshold)
         .select("a", "b", "cos")
@@ -556,20 +532,31 @@ def embedding_near_dup(
 # IVF with TRAINED centroids (pyspark.ml k-means)
 # ---------------------------------------------------------------------------
 
+MAX_TRAIN_ROWS = 100_000  # codebooks train on a sample of at most this many rows
+TRAIN_SEED = 7
+
+
+def _training_sample(corpus: DataFrame, vec_col: str) -> DataFrame:
+    """(v) rows to train a codebook on: the corpus, or a deterministic
+    sample of about MAX_TRAIN_ROWS rows of it."""
+    n_rows = corpus.count()
+    sample = corpus.select(F.col(vec_col).alias("v"))
+    if n_rows > MAX_TRAIN_ROWS:
+        sample = sample.sample(fraction=MAX_TRAIN_ROWS / n_rows, seed=TRAIN_SEED)
+    return sample
+
 
 def train_ivf_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
     vec_col: str = "embedding",
-    max_train_rows: int = 100_000,
-    seed: int = 7,
-    max_iter: int = 20,
 ):
     """Spherical-ish k-means codebook for IVF: L2-normalize, cluster with
     pyspark.ml KMeans (Euclidean argmin == cosine argmax on the unit
-    sphere), return a unit-normalized (n_centroids, dim) numpy array.
+    sphere; 20 iterations, seed 7), return a unit-normalized
+    (n_centroids, dim) numpy array.
 
-    Training runs on a bounded deterministic sample (`max_train_rows`):
+    Training runs on a bounded deterministic sample (`MAX_TRAIN_ROWS`):
     codebooks converge on samples — a 10^12-row corpus trains on ~1e5 rows
     like any production IVF index — so the iterative part never scans the
     full table; only the one-pass assignment does.
@@ -578,10 +565,7 @@ def train_ivf_centroids(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    n_rows = corpus.count()
-    sample = corpus.select(F.col(vec_col).alias("v"))
-    if n_rows > max_train_rows:
-        sample = sample.sample(fraction=min(1.0, max_train_rows / n_rows), seed=seed)
+    sample = _training_sample(corpus, vec_col)
     nz = F.when(F.col("_n") == 0.0, F.lit(1.0)).otherwise(F.col("_n"))
     unit = (
         sample.withColumn("_n", norm(F.col("v")))
@@ -591,7 +575,7 @@ def train_ivf_centroids(
             ).alias("features")
         )
     )
-    model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(unit)
+    model = KMeans(k=n_centroids, seed=TRAIN_SEED, maxIter=20).fit(unit)
     cents = np.asarray(model.clusterCenters(), dtype=np.float64)
     norms = np.linalg.norm(cents, axis=1, keepdims=True)
     norms[norms == 0.0] = 1.0
@@ -639,7 +623,6 @@ def cluster_assign(
     vec_col: str = "embedding",
     centroid_id: str = "cluster_id",
     centroid_vec: str = "embedding",
-    quantize: int = 6,
 ) -> DataFrame:
     """Nearest-centroid assignment by cosine — zero-shuffle, fully JVM.
 
@@ -658,7 +641,7 @@ def cluster_assign(
     expression tree grows with k x dim; for k beyond a few hundred use
     `ivf_assign` (numpy matmul) instead.
 
-    Returns (vec_id, cluster_id, cos) with cos quantized.
+    Returns (vec_id, cluster_id, cos) with cos rounded to 6 places.
     """
     cents = [
         (row[0], list(row[1]))
@@ -680,7 +663,7 @@ def cluster_assign(
     return vectors.select(
         F.col(id_col).alias("vec_id"),
         (-best["negid"]).cast("long").alias("cluster_id"),
-        F.round(best["cos"], quantize).alias("cos"),
+        F.round(best["cos"], 6).alias("cos"),
     )
 
 
@@ -692,8 +675,6 @@ def ann_topk_ivf(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     nprobe: int = 2,
-    centroids=None,
-    seed: int = 7,
 ) -> DataFrame:
     """Approximate top-k cosine with a TRAINED coarse quantizer (classic
     IVF-Flat): k-means codebook -> corpus rows live in their nearest
@@ -708,14 +689,8 @@ def ann_topk_ivf(
     so a skewed (hot) centroid is visible in the partition histogram and
     salt-able like any hot cell. Returns (query_id, neighbor_id, cos, rank);
     recall grows with nprobe (= exact search at nprobe == n_centroids).
-
-    Pass `centroids` (array-like (C, dim)) to reuse a persisted codebook —
-    production indexes train once and serve many query batches.
     """
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, n_centroids=n_centroids, vec_col=vec_col, seed=seed
-        )
+    centroids = train_ivf_centroids(corpus, n_centroids=n_centroids, vec_col=vec_col)
     c = ivf_assign(corpus, centroids, vec_col, "cids", nprobe=1).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
@@ -752,15 +727,12 @@ def train_pq_codebooks(
     m: int = 8,
     ksub: int = 16,
     vec_col: str = "embedding",
-    max_train_rows: int = 100_000,
-    seed: int = 7,
-    iters: int = 20,
 ):
     """Per-subspace k-means codebooks for PQ: split the (L2-normalized)
     vector into ``m`` contiguous subspaces, cluster each into ``ksub``
     centroids. Returns a (m, ksub, dim/m) float64 numpy array.
 
-    Training is numpy Lloyd iterations over a bounded deterministic
+    Training is 20 numpy Lloyd iterations over a bounded deterministic
     sample collected to the driver — the iterative part never scans the
     full table (same contract as `train_ivf_centroids`); only the
     one-pass `pq_encode` does. Deterministic: seeded init, stable argmin,
@@ -768,11 +740,7 @@ def train_pq_codebooks(
     """
     import numpy as np
 
-    n_rows = corpus.count()
-    sample = corpus.select(F.col(vec_col).alias("v"))
-    if n_rows > max_train_rows:
-        sample = sample.sample(fraction=min(1.0, max_train_rows / n_rows), seed=seed)
-    X = np.stack([np.asarray(r["v"], dtype=np.float64) for r in sample.collect()])
+    X = np.stack([np.asarray(r["v"], dtype=np.float64) for r in _training_sample(corpus, vec_col).collect()])
     dim = X.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
@@ -782,12 +750,12 @@ def train_pq_codebooks(
     nrm[nrm == 0.0] = 1.0
     X = X / nrm
     dsub = dim // m
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(TRAIN_SEED)
     books = np.empty((m, ksub, dsub), dtype=np.float64)
     for s in range(m):
         Xs = X[:, s * dsub : (s + 1) * dsub]
         cents = Xs[rng.choice(len(Xs), ksub, replace=False)].copy()
-        for _ in range(iters):
+        for _ in range(20):
             # argmin ||x - c||^2 via the dot trick: x^2 constant per row
             d = (cents * cents).sum(axis=1)[None, :] - 2.0 * (Xs @ cents.T)
             assign = np.argmin(d, axis=1)
@@ -843,9 +811,7 @@ def ann_topk_pq(
     vec_col: str = "embedding",
     m: int = 8,
     ksub: int = 16,
-    codebooks=None,
     refine: int = 0,
-    seed: int = 7,
 ) -> DataFrame:
     """Approximate top-k cosine by asymmetric distance computation (ADC)
     over PQ codes: each query precomputes an (m, ksub) lookup table of
@@ -863,12 +829,14 @@ def ann_topk_pq(
     sized, not corpus-sized). Returns (query_id, neighbor_id, score,
     rank) where score is ADC (or exact cosine when refined).
     """
+    books = train_pq_codebooks(corpus, m=m, ksub=ksub, vec_col=vec_col)
+    return _pq_topk(corpus, queries, k, books, id_col, vec_col, refine)
+
+
+def _pq_topk(corpus, queries, k, codebooks, id_col, vec_col, refine) -> DataFrame:
+    """`ann_topk_pq` with the (m, ksub, dsub) codebooks given."""
     import numpy as np
 
-    if codebooks is None:
-        codebooks = train_pq_codebooks(
-            corpus, m=m, ksub=ksub, vec_col=vec_col, seed=seed
-        )
     books = np.ascontiguousarray(codebooks, dtype=np.float64)
     m, ksub, dsub = books.shape
 
@@ -955,10 +923,7 @@ def ann_topk_ivfpq(
     nprobe: int = 2,
     m: int = 8,
     ksub: int = 16,
-    centroids=None,
-    codebooks=None,
     refine: int = 0,
-    seed: int = 7,
 ) -> DataFrame:
     """IVF-PQ (the FAISS-standard composition): the coarse quantizer
     prunes WHICH rows are scored (queries probe their ``nprobe`` nearest
@@ -968,10 +933,9 @@ def ann_topk_ivfpq(
     nprobe/n_centroids of the corpus and 8 bytes per touched row instead
     of the full float vector — the two orthogonal reductions multiplied.
 
-    The standing index is (id, cid, pq_code) — build it once with the
-    returned/persisted `centroids` + `codebooks` and reuse across query
-    batches. Scoring is a vectorized pandas UDF over the probed join
-    (LUT gather-sum, no per-row Python); the per-query top-k rides
+    The index is (id, cid, pq_code), built per call from freshly trained
+    centroids and codebooks. Scoring is a vectorized pandas UDF over the
+    probed join (LUT gather-sum, no per-row Python); the per-query top-k rides
     row_number (WindowGroupLimit pushes the partial top-k map-side).
     ``refine`` re-ranks the ADC top-R by exact cosine via a
     candidate-sized id join. Returns (query_id, neighbor_id, score, rank).
@@ -979,18 +943,11 @@ def ann_topk_ivfpq(
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, n_centroids=n_centroids, vec_col=vec_col, seed=seed
-        )
-    if codebooks is None:
-        codebooks = train_pq_codebooks(
-            corpus, m=m, ksub=ksub, vec_col=vec_col, seed=seed
-        )
-    books = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, ksub, dsub = books.shape
+    centroids = train_ivf_centroids(corpus, n_centroids=n_centroids, vec_col=vec_col)
+    books = train_pq_codebooks(corpus, m=m, ksub=ksub, vec_col=vec_col)
+    dsub = books.shape[2]
 
-    # standing index: (nid, cid, pq_code)
+    # index: (nid, cid, pq_code)
     index = pq_encode(
         ivf_assign(corpus, centroids, vec_col, "cids", nprobe=1),
         books, vec_col=vec_col,
@@ -1013,8 +970,7 @@ def ann_topk_ivfpq(
     )
     qpos = {int(q): i for i, q in enumerate(qids)}
 
-    cents = np.ascontiguousarray(centroids, dtype=np.float64)
-    sims = Q @ cents.T
+    sims = Q @ centroids.T
     probes = np.argsort(-sims, kind="stable", axis=1)[:, : int(nprobe)]
     spark = corpus.sparkSession
     qprobe = spark.createDataFrame(
@@ -1067,6 +1023,8 @@ def ann_topk_ivfpq(
 # SemDeDup — semantic deduplication via k-means cluster blocking
 # ---------------------------------------------------------------------------
 
+MAX_CLUSTER_ROWS = 200_000  # a larger cluster's gram matrix would OOM an executor
+
 
 def semantic_dedup(
     df: DataFrame,
@@ -1075,8 +1033,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids=None,
-    seed: int = 7,
-    max_cluster_rows: int = 200_000,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): drop rows whose
     embedding is within cosine `threshold` of a LOWER-id row in the same
@@ -1092,7 +1048,7 @@ def semantic_dedup(
     Per-cluster work runs as groupBy(cid).applyInPandas: one shuffle on
     cid, then each cluster is a single (c, dim) @ (dim, c) numpy gram
     matrix — no per-row Python, no all-pairs join. A cluster larger than
-    `max_cluster_rows` fails LOUD (it means n_clusters is undersized for
+    `MAX_CLUSTER_ROWS` fails LOUD (it means n_clusters is undersized for
     the corpus; silently materializing an O(c^2) gram would OOM the
     executor). Ids are processed in sorted order so "lower-id neighbor
     exists" is evaluated against the full cluster deterministically.
@@ -1115,9 +1071,7 @@ def semantic_dedup(
         )
     else:
         if centroids is None:
-            centroids = train_ivf_centroids(
-                df, n_centroids=n_clusters, vec_col=vec_col, seed=seed
-            )
+            centroids = train_ivf_centroids(df, n_centroids=n_clusters, vec_col=vec_col)
         assigned = ivf_assign(df, centroids, vec_col=vec_col, out_col="_cids", nprobe=1)
         assigned = assigned.select(
             F.col(id_col).alias("id"),
@@ -1126,13 +1080,13 @@ def semantic_dedup(
         )
 
     thr = float(threshold)
-    cap = int(max_cluster_rows)
+    cap = MAX_CLUSTER_ROWS
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) > cap:
             raise ValueError(
                 f"semantic_dedup: cluster {int(pdf['cid'].iloc[0])} has "
-                f"{len(pdf)} rows > max_cluster_rows={cap}; raise n_clusters "
+                f"{len(pdf)} rows > MAX_CLUSTER_ROWS={cap}; raise n_clusters "
                 f"(the paper uses n_clusters ~ N / target_cluster_size)"
             )
         pdf = pdf.sort_values("id", kind="mergesort").reset_index(drop=True)
@@ -1186,7 +1140,6 @@ def knn_geodesic(
     queries: DataFrame,
     k: int,
     id_col: str = "id",
-    quantize: int = 3,
 ) -> DataFrame:
     """EXACT great-circle k nearest neighbors for a (small) query batch:
     (query_id, neighbor_id, dist_m, rank).
@@ -1201,7 +1154,7 @@ def knn_geodesic(
     radius is a planar bound and does not transfer to meters near the
     poles, so the geodesic variant stays brute-force-exact by design.
 
-    Distances are quantized (round, default 3 dp = millimeters) BEFORE
+    Distances are quantized (round to 3 dp = millimeters) BEFORE
     ranking so libm ulp differences between engines cannot flip
     near-tie ranks; ties break on neighbor id.
     """
@@ -1217,8 +1170,7 @@ def knn_geodesic(
         "query_id",
         "neighbor_id",
         F.round(
-            haversine_m(F.col("lon"), F.col("lat"), F.col("qlon"), F.col("qlat")),
-            quantize,
+            haversine_m(F.col("lon"), F.col("lat"), F.col("qlon"), F.col("qlat")), 3
         ).alias("dist_m"),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1231,16 +1183,11 @@ def knn_geodesic(
     )
 
 
-def topk_recall(
-    approx: DataFrame,
-    truth: DataFrame,
-    k: int | None = None,
-) -> DataFrame:
+def topk_recall(approx: DataFrame, truth: DataFrame) -> DataFrame:
     """Recall@k of an ANN result against exact ground truth — the
     quality gauge every approximate index (bucketed/LSH/IVF/PQ) is
     tuned by. Inputs are two top-k tables in the engine's standard
-    shape (query_id, neighbor_id, rank, ...); `k` optionally re-cuts
-    both sides. Returns per-query (query_id, n_truth, n_hit, recall)
+    shape (query_id, neighbor_id, rank, ...). Returns per-query (query_id, n_truth, n_hit, recall)
     with recall = n_hit / n_truth (ONE division of small exact
     integers — bit-stable across engines).
 
@@ -1250,15 +1197,9 @@ def topk_recall(
     costs the same whether the index covers 10^6 or 10^12 vectors
     (the truth side is the expensive part and is typically sampled —
     pass a query SAMPLE's exact top-k)."""
-    a = approx.select("query_id", "neighbor_id", "rank")
-    t = truth.select("query_id", "neighbor_id", "rank")
-    if k is not None:
-        if k < 1:
-            raise ValueError(f"k must be >= 1, got {k}")
-        a = a.filter(F.col("rank") <= k)
-        t = t.filter(F.col("rank") <= k)
+    t = truth.select("query_id", "neighbor_id")
     hits = (
-        a.join(t.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
+        approx.select("query_id", "neighbor_id").join(t, ["query_id", "neighbor_id"])
         .groupBy("query_id")
         .agg(F.count("*").alias("n_hit"))
     )

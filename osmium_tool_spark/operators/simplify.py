@@ -21,9 +21,9 @@ nodes, so a row is bounded regardless of corpus size) — one
 mapInPandas over the assembled coordinate arrays, no shuffle beyond
 the locations_join assembly the caller already owns. The numpy kernel
 vectorizes the per-chord scan; only the split bookkeeping is scalar.
-Ways wider than ``max_span`` fixed-point units fail LOUD: the int64
+Ways wider than ``MAX_SPAN`` fixed-point units fail LOUD: the int64
 cross products are exactness-guaranteed only under the span cap
-(5 degrees default — continental chords need a projected variant).
+(5 degrees — continental chords need a projected variant).
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SIMPLIFY_SCHEMA = "id long, pos int, x long, y long"
+MAX_SPAN = 50_000_000  # 5 degrees: the int64 exactness bound
 
 
 def simplify_polylines(
@@ -44,7 +45,6 @@ def simplify_polylines(
     id_col: str = "id",
     xs_col: str = "xs",
     ys_col: str = "ys",
-    max_span: int = 50_000_000,
 ) -> DataFrame:
     """(id, xs, ys) arrays -> kept vertices (id, pos, x, y).
 
@@ -53,7 +53,7 @@ def simplify_polylines(
     chord distance EXCEEDS epsilon.
     """
     eps = int(epsilon)
-    span = int(max_span)
+    span = MAX_SPAN
     if eps < 0:
         raise ValueError("simplify_polylines: epsilon must be >= 0")
     cols = lines.select(
@@ -114,8 +114,7 @@ def simplify_polylines(
                     raise ValueError(
                         f"simplify_polylines: way {wid} spans more than "
                         f"{span} fixed-point units — int64 cross products "
-                        "would overflow; raise max_span only with a "
-                        "projected/smaller coordinate frame"
+                        "would overflow; use a projected/smaller coordinate frame"
                     )
                 for p, kept in enumerate(dp_keep(xs, ys)):
                     if kept:

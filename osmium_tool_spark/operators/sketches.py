@@ -172,7 +172,6 @@ def hll_estimate(
     group_cols: list[str],
     p: int,
     rho_cap: int | None = None,
-    corrected: bool = False,
 ) -> DataFrame:
     """Read a register table: per group —
 
@@ -181,8 +180,6 @@ def hll_estimate(
     - ``t_scaled`` T = V·2^CAP + Σ 2^(CAP-M_j)  (exact BIGINT)
     - ``est_raw``  alpha_m·m²·2^CAP / T          (bit-stable double for
                    the portable family; see module docstring)
-    - ``est``      (corrected=True only) linear-counting small-range
-                   correction applied — uses ln(), Python-side only.
 
     ``rho_cap`` is the fixed scale CAP — the max rho the hash family
     can emit (default: the portable family's 32-p+1, where every sum
@@ -200,8 +197,7 @@ def hll_estimate(
     term = F.expr(f"shiftleft(CAST(1 AS BIGINT), {cap} - least(M, {cap}))")
     # coalesce: a GLOBAL aggregate over an empty register table still
     # emits one row (count=0) — that's the empty sketch (v_zero = m,
-    # est_raw = alpha*m, the raw formula's honest all-zero value; use
-    # corrected=True for the linear-counting 0)
+    # est_raw = alpha*m, the raw formula's honest all-zero value)
     byg = registers.groupBy(*group_cols).agg(
         (F.lit(m) - F.count("*")).cast("long").alias("v_zero"),
         F.coalesce(F.max("M"), F.lit(0)).cast("int").alias("k_max"),
@@ -209,22 +205,13 @@ def hll_estimate(
     )
     t = (F.shiftleft(F.col("v_zero"), cap) + F.col("s_cap")).cast("long")
     est_raw = F.lit(am2) * F.lit(float(1 << cap)) / t.cast("double")
-    out = byg.select(
+    return byg.select(
         *group_cols,
         "v_zero",
         "k_max",
         t.alias("t_scaled"),
         est_raw.alias("est_raw"),
     )
-    if corrected:
-        lc = F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("v_zero"))
-        out = out.withColumn(
-            "est",
-            F.when(
-                (F.col("est_raw") <= 2.5 * m) & (F.col("v_zero") > 0), lc
-            ).otherwise(F.col("est_raw")),
-        )
-    return out
 
 
 def hll_distinct(
@@ -233,12 +220,11 @@ def hll_distinct(
     value_col: str,
     p: int = 12,
     hash: str = "xxhash64",
-    corrected: bool = False,
 ) -> DataFrame:
     """Fused add + estimate: approx distinct `value_col` per group."""
     regs = hll_registers(df, group_cols, value_col, p=p, hash=hash)
     cap = rho_cap_portable(p) if hash == "portable" else 64 - p + 1
-    return hll_estimate(regs, group_cols, p=p, rho_cap=cap, corrected=corrected)
+    return hll_estimate(regs, group_cols, p=p, rho_cap=cap)
 
 
 def _check_r(r: int) -> int:
@@ -498,7 +484,6 @@ def cm_lookup_sql(
     query_expr: str,
     d: int,
     w: int,
-    weight_expr: str | None = None,
     ctes_only: bool = False,
 ) -> str:
     """DuckDB twin of cm_build(hash='portable') + cm_lookup: builds the
@@ -506,7 +491,6 @@ def cm_lookup_sql(
     estimates. With ``ctes_only`` return just the CTE chain ending at
     ``cml`` (columns: value, est) for further composition."""
     _check_dw(d, w)
-    wt = weight_expr if weight_expr is not None else "CAST(1 AS BIGINT)"
     rows = "\n  UNION ALL ".join(
         f"SELECT {j} AS j, {_cm_bucket_sql('x', j, w)} AS bucket, wt FROM cmsrc"
         for j in range(d)
@@ -516,7 +500,7 @@ def cm_lookup_sql(
         for j in range(d)
     )
     body = f"""\
-cmsrc AS (SELECT {fold31_sql(value_expr)} AS x, CAST({wt} AS BIGINT) AS wt
+cmsrc AS (SELECT {fold31_sql(value_expr)} AS x, CAST(1 AS BIGINT) AS wt
           FROM ({source_sql}) WHERE ({value_expr}) IS NOT NULL),
 cmrows AS ({rows}),
 cmcounts AS (SELECT j, bucket, SUM(wt) AS cnt FROM cmrows GROUP BY 1, 2),
@@ -627,19 +611,16 @@ def hist_quantiles_sql(
     hi: float,
     bins: int,
     qs: list[float],
-    ctes_only: bool = False,
 ) -> str:
-    """DuckDB twin of hist_bins + hist_quantiles over `source_sql`.
-    With ``ctes_only`` return the CTE chain ending at ``hq`` (columns:
-    group..., q, n, bin, cum, est)."""
+    """DuckDB twin of hist_bins + hist_quantiles over `source_sql`."""
     width = _check_bins(lo, hi, bins)
     g = ", ".join(group_cols)
     gp = f"PARTITION BY {g}" if group_cols else ""
     gsel = f"{g}, " if group_cols else ""
     # explicit cast: DuckDB infers DECIMAL for bare numeric VALUES
     qvals = ", ".join(f"(CAST({float(q)!r} AS DOUBLE))" for q in qs)
-    body = f"""\
-hb0 AS (SELECT {gsel}GREATEST(0, LEAST({bins - 1},
+    return f"""\
+WITH hb0 AS (SELECT {gsel}GREATEST(0, LEAST({bins - 1},
             CAST(floor((CAST({value_expr} AS DOUBLE) - {float(lo)!r})
                        * {float(bins)!r} / {float(hi - lo)!r}) AS BIGINT)))
             AS bin
@@ -657,10 +638,9 @@ hq AS (SELECT {gsel}q, CAST(n AS BIGINT) AS n, bin, CAST(cum AS BIGINT) AS cum,
               {float(lo)!r} + (CAST(bin AS DOUBLE)
                   + CAST(target - (cum - cnt) AS DOUBLE)
                     / CAST(cnt AS DOUBLE)) * {float(width)!r} AS est
-       FROM hqx WHERE cum >= target AND cum - cnt < target)"""
-    if ctes_only:
-        return body
-    return "WITH " + body + f"\nSELECT {gsel}q, n, bin, cum, est FROM hq\n"
+       FROM hqx WHERE cum >= target AND cum - cnt < target)
+SELECT {gsel}q, n, bin, cum, est FROM hq
+"""
 
 
 def hll_estimate_sql(
@@ -900,18 +880,17 @@ def bloom_semijoin(
     corpus: DataFrame,
     keys: DataFrame,
     corpus_key: str,
-    keys_key: str | None = None,
     k: int = 4,
     m_bits: int = 1 << 20,
-    hash: str = "xxhash64",
 ) -> DataFrame:
     """EXACT left-semi join accelerated by a Bloom pre-filter — the
     10^12-row join shape the sketch exists for. The keys side builds an
     m_bits filter (state <= m/32 rows, broadcast); the corpus is
     pre-filtered by k broadcast word-lookups (pure map-side work, the
     corpus never shuffles for the probe), and only maybe-members reach
-    the exact semi-join. False positives are REMOVED by that final
-    semi-join, so the result equals `corpus.join(keys, key, "left_semi")`
+    the exact semi-join. Both sides carry the key as `corpus_key`, hashed
+    with xxhash64. False positives are REMOVED by that final semi-join,
+    so the result equals `corpus.join(keys, key, "left_semi")`
     row-for-row; the win is the shuffle: at fpr f and selectivity s the
     exact join's input shrinks from |corpus| to ~(s + f)|corpus|.
 
@@ -919,14 +898,13 @@ def bloom_semijoin(
     keys side is small enough to broadcast outright, Spark's own
     broadcast semi-join already wins — this shape pays off when BOTH
     sides are shuffle-scale."""
-    keys_key = corpus_key if keys_key is None else keys_key
     _check_km(k, m_bits)
-    state = bloom_build(keys, keys_key, k=k, m_bits=m_bits, hash=hash)
+    state = bloom_build(keys, corpus_key, k=k, m_bits=m_bits)
     out = corpus
     v = F.col(corpus_key)
     conds = []
     for j in range(k):
-        pos = _bf_pos(v, j, m_bits, hash)
+        pos = _bf_pos(v, j, m_bits, "xxhash64")
         st = state.select(
             F.col("word").alias(f"_bfw{j}"), F.col("bits").alias(f"_bfb{j}")
         )
@@ -948,8 +926,4 @@ def bloom_semijoin(
         *[f"_bfw{j}" for j in range(k)],
         *[f"_bfb{j}" for j in range(k)],
     )
-    return out.join(
-        keys.select(F.col(keys_key).alias(corpus_key)).distinct(),
-        corpus_key,
-        "left_semi",
-    )
+    return out.join(keys.select(corpus_key).distinct(), corpus_key, "left_semi")

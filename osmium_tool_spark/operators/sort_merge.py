@@ -53,7 +53,7 @@ def _order_violations(df: DataFrame) -> DataFrame:
     )
 
 
-def validate_order(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def validate_order(df: DataFrame) -> DataFrame:
     """Order-violation assertion job (merge's CheckOrder analog,
     command_merge.cpp:140-165): returns violations of the canonical
     (type, id, version) order *within the physical order given by a
@@ -65,7 +65,7 @@ def validate_order(df: DataFrame, num_partitions: int | None = None) -> DataFram
     global `Window.orderBy(seq)` would funnel every row through one task.
     """
     spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
     key = F.struct(F.col("type").alias("t"), id_sort_key(F.col("id")).alias("k"))
     slim = df.select("seq", "type", "id", "version").withColumn("__k", key)
     d = (

@@ -26,10 +26,10 @@ equi-join through a distributed cell index:
      endpoint==point -> inside), batched per polygon in numpy.
 
 Scale notes: the index is polygon-perimeter-sized (interiors collapse to
-cell rows), built once and reusable as a standing table. The verify
+cell rows). The verify
 stage groups by polygon — a polygon with a huge boundary-candidate set
 serializes within its group (raise `res` to shrink boundary cells). A
-polygon whose bbox covers more than `max_cells_per_polygon` cells at
+polygon whose bbox covers more than `MAX_CELLS_PER_POLYGON` cells at
 `res` fails LOUD with the resolution to use instead — silent coarsening
 would make the interior shortcut quietly disappear.
 
@@ -55,22 +55,28 @@ from ..functions.geometry import BandIndex, rings_from_structs, ship_by_value
 
 RINGS_TYPE = "array<array<struct<x:long,y:long>>>"
 
+# loud safety caps: exceeding one means the resolution (or snap) is wrong
+# for the input, so the operator fails instead of exploding its rows
+MAX_CELLS_PER_POLYGON = 65536  # spatial_join's bbox cells per polygon
+MAX_CELLS_PER_SEG = 256  # cells per segment in the crossing joins
+MAX_SNAP_CELLS_PER_SEG = 1024  # padded cells per segment in snap_points
+MAX_WAYS_PER_VERTEX = 10_000  # way_junctions' pairs grow with its square
+
 
 def build_polygon_cell_index(
     polygons: DataFrame,
     res: int,
     poly_id: str = "poly_id",
     rings_col: str = "rings",
-    max_cells_per_polygon: int = 65536,
 ) -> DataFrame:
     """(cell:long, poly_id, interior:boolean) covering-cell index.
 
     Distributed over the polygon table (mapInPandas) — the driver never
-    sees a geometry; write the result once and reuse it per query batch.
+    sees a geometry.
     """
     r = int(res)
     n = 1 << r
-    cap = int(max_cells_per_polygon)
+    cap = MAX_CELLS_PER_POLYGON
     lon_min, lon_span = _LON_MIN, _LON_SPAN
     lat_min, lat_span = _LAT_MIN, _LAT_SPAN
     pid_name, rings_name = poly_id, rings_col
@@ -110,8 +116,7 @@ def build_polygon_cell_index(
                     fit = max(1, r - math.ceil(math.log2(ncells / cap) / 2))
                     raise ValueError(
                         f"spatial_join: polygon {pid} covers {ncells} cells at "
-                        f"res {r} > max_cells_per_polygon={cap}; use res<={fit} "
-                        f"or raise the cap"
+                        f"res {r} > MAX_CELLS_PER_POLYGON={cap}; use res<={fit}"
                     )
                 w = ix1 - ix0 + 1
                 h = iy1 - iy0 + 1
@@ -190,36 +195,20 @@ def spatial_join(
     id_col: str = "id",
     poly_id: str = "poly_id",
     rings_col: str = "rings",
-    payload_cols: list[str] | None = None,
-    index: DataFrame | None = None,
-    max_cells_per_polygon: int = 65536,
 ) -> DataFrame:
-    """(poly_id, id[, payload...]) pairs: point contained in polygon.
-
-    `index` injects a prebuilt `build_polygon_cell_index` result (read
-    back from parquet) — the standing-index contract shared with
-    bm25_topk: build once, join many times.
-    """
-    payload_cols = payload_cols or []
-    if index is None:
-        index = build_polygon_cell_index(
-            polygons, res, poly_id=poly_id, rings_col=rings_col,
-            max_cells_per_polygon=max_cells_per_polygon,
-        )
+    """(poly_id, id) pairs: point contained in polygon."""
+    index = build_polygon_cell_index(polygons, res, poly_id=poly_id, rings_col=rings_col)
 
     pts = points.select(
         F.col(id_col).alias("id"),
         F.col("lon"),
         F.col("lat"),
         cell_id(F.col("lon"), F.col("lat"), int(res)).alias("cell"),
-        *payload_cols,
     )
     cand = pts.join(index, on="cell")
 
-    accepted = cand.filter(F.col("interior")).select("poly_id", "id", *payload_cols)
-    border = cand.filter(~F.col("interior")).select(
-        "poly_id", "id", "lon", "lat", *payload_cols
-    )
+    accepted = cand.filter(F.col("interior")).select("poly_id", "id")
+    border = cand.filter(~F.col("interior")).select("poly_id", "id", "lon", "lat")
 
     geoms = polygons.select(
         F.col(poly_id).alias("poly_id"), F.col(rings_col).alias("__rings")
@@ -229,15 +218,10 @@ def spatial_join(
     def verify(pdf: pd.DataFrame) -> pd.DataFrame:
         index = BandIndex.build(rings_from_structs(pdf["__rings"].iloc[0]))
         ok = index.contains(pdf["lon"].to_numpy("int64"), pdf["lat"].to_numpy("int64"))
-        cols = {"poly_id": pdf["poly_id"][ok], "id": pdf["id"][ok]}
-        for c in payload_cols:
-            cols[c] = pdf[c][ok]
-        return pd.DataFrame(cols)
+        return pd.DataFrame({"poly_id": pdf["poly_id"][ok], "id": pdf["id"][ok]})
 
     dtypes = dict(border.dtypes)
     schema = f"poly_id {dtypes['poly_id']}, id {dtypes['id']}"
-    for c in payload_cols:
-        schema += f", {c} {dtypes[c]}"
     verified = border.join(geoms, on="poly_id").groupBy("poly_id").applyInPandas(
         verify, schema=schema
     )
@@ -251,7 +235,6 @@ def grid_cluster(
     lon_col: str = "lon",
     lat_col: str = "lat",
     id_col: str = "id",
-    max_iter: int = 30,
 ) -> DataFrame:
     """Grid-density spatial clustering (the ST_ClusterDBSCAN analog).
 
@@ -334,9 +317,7 @@ def grid_cluster(
         "gkey", "nkey"
     )
 
-    labels = dup_clusters(
-        edges, a="gkey", b="nkey", ids=dense.select("gkey"), max_iter=max_iter
-    )
+    labels = dup_clusters(edges, a="gkey", b="nkey", ids=dense.select("gkey"))
     # cluster_size (points per cluster) aggregates the DENSE-CELL counts,
     # not the corpus: sum(n_pts) per component over the checkpointed cell
     # frame — the labeled point frame is consumed exactly once, by the
@@ -379,7 +360,7 @@ def _segment_cells(
             F.raise_error(
                 F.lit(
                     f"segment covers more than {cap} cells at res {res}: "
-                    "raise max_cells_per_seg or coarsen res"
+                    "coarsen res"
                 )
             ).isNull(),
         ).otherwise(F.lit(True))
@@ -422,11 +403,7 @@ def _proper_cross() -> Column:
     )
 
 
-def segment_crossings(
-    segs: DataFrame,
-    res: int = 7,
-    max_cells_per_seg: int = 256,
-) -> DataFrame:
+def segment_crossings(segs: DataFrame, res: int = 7) -> DataFrame:
     """Way-crossing detection: distinct pairs of ways whose segments
     PROPERLY intersect (the OSM-QA "highways cross without a junction
     node" check; the reference assembles the same segment geometry for
@@ -447,7 +424,7 @@ def segment_crossings(
       1. each segment emits its bbox's covering cells at `res` (same
          equirectangular ordinates as functions/cells._ix) — a map-side
          double explode, cells-per-segment capped LOUDLY at
-         `max_cells_per_seg` (a planet-chord input is a modelling bug,
+         `MAX_CELLS_PER_SEG` (a planet-chord input is a modelling bug,
          not something to coarsen silently).
       2. candidates = cell equi-join (a.cell = b.cell, way_a < way_b) —
          no cross product anywhere; AQE splits dense-cell skew.
@@ -461,7 +438,7 @@ def segment_crossings(
     exact in Spark (and the DuckDB oracle twin uses HUGEINT); the
     predicate remains whole-stage-codegen'd Column math, no UDF.
     """
-    cells = _segment_cells(segs, res, int(max_cells_per_seg))
+    cells = _segment_cells(segs, res, MAX_CELLS_PER_SEG)
     a = cells.select(
         F.col("way_id").alias("wa"), F.col("seq").alias("sa"),
         F.col("x1").alias("ax1"), F.col("y1").alias("ay1"),
@@ -487,11 +464,7 @@ def segment_crossings(
     )
 
 
-def way_self_intersections(
-    segs: DataFrame,
-    res: int = 7,
-    max_cells_per_seg: int = 256,
-) -> DataFrame:
+def way_self_intersections(segs: DataFrame, res: int = 7) -> DataFrame:
     """Self-intersection detection: per way, the count of its own
     segment pairs that PROPERLY cross (the OSM-QA "self-intersecting
     way" check; the reference's area assembler REJECTS such rings —
@@ -514,7 +487,7 @@ def way_self_intersections(
     multi-cell dedup runs per way. One corpus exchange on the join
     key; AQE splits long-way skew.
     """
-    cells = _segment_cells(segs, res, int(max_cells_per_seg))
+    cells = _segment_cells(segs, res, MAX_CELLS_PER_SEG)
     a = cells.select(
         "way_id", F.col("seq").alias("sa"),
         F.col("x1").alias("ax1"), F.col("y1").alias("ay1"),
@@ -540,11 +513,7 @@ def way_self_intersections(
     )
 
 
-def way_junctions(
-    segs: DataFrame,
-    snap: int = 1,
-    max_ways_per_vertex: int = 10_000,
-) -> DataFrame:
+def way_junctions(segs: DataFrame, snap: int = 1) -> DataFrame:
     """Junction detection: pairs of ways sharing >= 1 vertex — the
     complement of segment_crossings (ways that CONNECT rather than
     cross; together they are the OSM-QA crossing/junction matrix, and
@@ -561,13 +530,13 @@ def way_junctions(
     way_b. A vertex of degree d emits d*(d-1)/2 pairs — real road
     junctions have single-digit degree, but a too-coarse `snap` can
     manufacture mega-vertices, so per-vertex degree is capped LOUDLY
-    at `max_ways_per_vertex` (the degree aggregate shares the join's
+    at `MAX_WAYS_PER_VERTEX` (the degree aggregate shares the join's
     (vx, vy) exchange). Snapping uses pure integer math —
     x - pmod(x, snap) is exactly divisible by snap — with identical
     expressions in the DuckDB oracle twin.
     """
     s = int(snap)
-    cap = int(max_ways_per_vertex)
+    cap = MAX_WAYS_PER_VERTEX
 
     def snapc(c: str) -> Column:
         x = F.col(c)
@@ -594,8 +563,7 @@ def way_junctions(
             F.col("deg") > cap,
             F.raise_error(
                 F.lit(
-                    f"vertex shared by more than {cap} ways at snap {s}: "
-                    "raise max_ways_per_vertex or refine snap"
+                    f"vertex shared by more than {cap} ways at snap {s}: refine snap"
                 )
             ).isNull(),
         ).otherwise(F.lit(True))
@@ -616,7 +584,6 @@ def snap_points(
     segs: DataFrame,
     res: int = 10,
     max_dist: int = 1_000_000,
-    max_cells_per_seg: int = 1024,
 ) -> DataFrame:
     """Map-matching: snap each point to its nearest way segment within
     `max_dist` fixed-point units (planar, same equirectangular frame as
@@ -665,7 +632,7 @@ def snap_points(
             f"snap_points: max_dist {max_dist} spans {max(pad_x, pad_y)} cells "
             f"at res {res} — coarsen res (pad is capped at 8 cells/axis)"
         )
-    cells = _segment_cells(segs, res, int(max_cells_per_seg), pad_x, pad_y)
+    cells = _segment_cells(segs, res, MAX_SNAP_CELLS_PER_SEG, pad_x, pad_y)
     pts = points.select(
         F.col("point_id"),
         F.col("lon").alias("px"), F.col("lat").alias("py"),
@@ -714,7 +681,6 @@ def snap_points(
 def dist_join(
     points: DataFrame,
     radius: int,
-    others: DataFrame | None = None,
     id_col: str = "id",
     lon_col: str = "lon",
     lat_col: str = "lat",
@@ -751,9 +717,8 @@ def dist_join(
     dx*dx + dy*dy <= radius*radius in long arithmetic. `dist2` is the
     exact squared planar distance; callers take sqrt only for display.
 
-    Self-join mode (others=None) returns each unordered pair once
-    (id_a < id_b, self-pairs excluded); two-frame mode returns every
-    (points.id, others.id) pair within r.
+    Each unordered pair is returned once (id_a < id_b, self-pairs
+    excluded).
     """
     if radius <= 0:
         raise ValueError(f"dist_join: radius must be positive, got {radius}")
@@ -805,10 +770,8 @@ def dist_join(
         )
 
     left = _cells(points, "a", ring=False)
-    right = _cells(points if others is None else others, "b", ring=True)
-    cand = left.join(right, ["jx", "jy"])
-    if others is None:
-        cand = cand.filter(F.col("id_a") < F.col("id_b"))
+    right = _cells(points, "b", ring=True)
+    cand = left.join(right, ["jx", "jy"]).filter(F.col("id_a") < F.col("id_b"))
     r = int(radius)
     return (
         cand.select(

@@ -40,43 +40,10 @@ def marker_score(tokens: Column, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(tokens, lambda t: t.isin(mset)))
 
 
-def lang_id(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    markers: dict[str, tuple[str, ...]] | None = None,
-) -> DataFrame:
-    """Predict language per document by marker-token votes.
-
-    Returns (id, pred_lang, score). Argmax with deterministic tie-break:
-    higher score wins, ties go to the lexicographically smaller code."""
-    from ..functions.exprs import bind
-
-    markers = markers or DEFAULT_MARKERS
-    scores = bind(
-        word_tokens(F.col(text_col)),  # tokenize once, score k languages
-        lambda toks: F.struct(
-            *[marker_score(toks, m).alias(f"s_{code}") for code, m in markers.items()]
-        ),
-    )
-    scored = df.select(F.col(id_col).alias("id"), scores.alias("sc")).select(
-        "id", *[F.col(f"sc.s_{code}").alias(f"s_{code}") for code in markers]
-    )
-    codes = sorted(markers)  # lexicographic order = tie-break order
-    best = F.col(f"s_{codes[0]}")
-    pred = F.lit(codes[0])
-    for code in codes[1:]:
-        s = F.col(f"s_{code}")
-        pred = F.when(s > best, F.lit(code)).otherwise(pred)
-        best = F.when(s > best, s).otherwise(best)
-    return scored.select("id", pred.alias("pred_lang"), best.cast("long").alias("score"))
-
-
 def quality_score(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    stopwords: tuple[str, ...] = DEFAULT_STOPWORDS,
 ) -> DataFrame:
     """Per-document quality features: token count, mean token length,
     stopword ratio, and a composite keep-score.
@@ -89,7 +56,7 @@ def quality_score(
         total_len = F.aggregate(
             F.transform(toks, F.length), F.lit(0).cast("long"), lambda a, x: a + x
         )
-        stop_n = F.size(F.filter(toks, lambda t: t.isin(list(stopwords))))
+        stop_n = F.size(F.filter(toks, lambda t: t.isin(list(DEFAULT_STOPWORDS))))
         return F.struct(
             n.cast("long").alias("n_tokens"),
             F.round(total_len / n, 6).alias("mean_token_len"),
@@ -154,8 +121,6 @@ def text_metrics(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    markers: dict[str, tuple[str, ...]] | None = None,
-    stopwords: tuple[str, ...] = DEFAULT_STOPWORDS,
 ) -> DataFrame:
     """All per-document text signals in ONE projection over ONE scan:
     language id (marker votes), quality features, both token counts,
@@ -167,16 +132,15 @@ def text_metrics(
     stopword_ratio, n_bpe_tokens, fp)."""
     from ..functions.exprs import bind
 
-    markers = markers or DEFAULT_MARKERS
-    codes = sorted(markers)  # lexicographic order = tie-break order
+    codes = sorted(DEFAULT_MARKERS)  # lexicographic order = tie-break order
 
     def feats(toks):
         n = F.size(toks)
         total_len = F.aggregate(
             F.transform(toks, F.length), F.lit(0).cast("long"), lambda a, x: a + x
         )
-        stop_n = F.size(F.filter(toks, lambda t: t.isin(list(stopwords))))
-        scores = {code: marker_score(toks, markers[code]) for code in codes}
+        stop_n = F.size(F.filter(toks, lambda t: t.isin(list(DEFAULT_STOPWORDS))))
+        scores = {code: marker_score(toks, DEFAULT_MARKERS[code]) for code in codes}
         best = scores[codes[0]]
         pred = F.lit(codes[0])
         for code in codes[1:]:
@@ -214,7 +178,6 @@ PII_PATTERNS: dict[str, tuple[str, str]] = {
 def scrub_pii(
     df: DataFrame,
     text_col: str = "body",
-    kinds: tuple[str, ...] = ("email", "ipv4", "phone"),
     out_col: str | None = None,
 ) -> DataFrame:
     """Mask PII spans (emails / IPv4 / phone-like digit runs) with typed
@@ -224,28 +187,20 @@ def scrub_pii(
     Pure JVM Column work: `regexp_replace` for the masking and
     `regexp_count` for the per-kind counts, all inside whole-stage codegen
     — no Python on the hot path, no shuffle at all (a projection). Kinds
-    apply in the declared order (email before phone, so digits inside an
-    already-masked span are not double-counted... emails are masked before
-    the phone rule can eat their digit runs).
+    apply in PII_PATTERNS order: emails are masked before the phone rule
+    can eat their digit runs.
 
     Output: input columns + `<out_col>` (scrubbed text, default
     `<text_col>_clean`) + `n_<kind>` counts + `pii_total`.
     """
-    unknown = set(kinds) - set(PII_PATTERNS)
-    if unknown:
-        raise ValueError(f"unknown PII kinds: {sorted(unknown)}")
     out_col = out_col or f"{text_col}_clean"
     cleaned = F.col(text_col)
     counts = []
-    for k in kinds:
-        pat, repl = PII_PATTERNS[k]
+    for k, (pat, repl) in PII_PATTERNS.items():
         counts.append(F.regexp_count(cleaned, F.lit(pat)).cast("long").alias(f"n_{k}"))
         cleaned = F.regexp_replace(cleaned, pat, repl)
     out = df.select("*", cleaned.alias(out_col), *counts)
-    total = None
-    for k in kinds:
-        c = F.col(f"n_{k}")
-        total = c if total is None else total + c
+    total = sum(F.col(f"n_{k}") for k in PII_PATTERNS)
     return out.withColumn("pii_total", total.cast("long"))
 
 
@@ -253,11 +208,10 @@ def repetition_stats(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    gram_n: int = 2,
 ) -> DataFrame:
     """Gopher-style repetition signals per document: duplicate-line
     fraction, duplicate-line character fraction, and the character
-    fraction covered by the most frequent word n-gram (Rae et al. 2021,
+    fraction covered by the most frequent word bigram (Rae et al. 2021,
     "Scaling Language Models", table A1 — the repetition filters).
 
     Distributed shape (NOT per-row O(L^2) higher-order-function loops):
@@ -296,7 +250,7 @@ def repetition_stats(
     )
 
     grams = base.select(
-        "id", "n_chars", F.explode(word_grams(F.col("t"), gram_n)).alias("gram")
+        "id", "n_chars", F.explode(word_grams(F.col("t"), 2)).alias("gram")
     )
     per_gram = grams.groupBy("id", "n_chars", "gram").agg(F.count("*").alias("cnt"))
     key = F.concat(F.lpad(F.col("cnt").cast("string"), 10, "0"), F.lit("\t"), F.col("gram"))
@@ -335,7 +289,6 @@ def contamination_flags(
     id_col: str = "doc_id",
     text_col: str = "text",
     bench_text_col: str = "text",
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents that share any
     word n-gram with a held-out evaluation set (the GPT-3 / C4 hygiene
@@ -343,9 +296,8 @@ def contamination_flags(
     — public papers).
 
     Scale shape: the benchmark side reduces to its DISTINCT n-gram set
-    (eval suites are tiny next to the corpus, so it broadcasts by
-    default — set broadcast_bench=False to equi-join on the gram key
-    when the banned set is itself huge); the corpus side explodes to
+    (eval suites are tiny next to the corpus, so it broadcasts); the
+    corpus side explodes to
     (doc, gram) pairs and semi-aggregates AFTER the join, so the only
     wide ops are one keyed join and one hash-agg on the doc id. No
     cross join, no driver-side set.
@@ -355,12 +307,10 @@ def contamination_flags(
     """
     from .dedup import word_shingles
 
-    bgrams = (
+    bgrams = F.broadcast(
         bench.select(F.explode(word_shingles(F.col(bench_text_col), n)).alias("gram"))
         .distinct()
     )
-    if broadcast_bench:
-        bgrams = F.broadcast(bgrams)
     dgrams = docs.select(
         F.col(id_col), F.explode(word_shingles(F.col(text_col), n)).alias("gram")
     )
@@ -447,10 +397,8 @@ def char_bigrams(text: Column) -> Column:
 
 def lm_quality_score(
     df: DataFrame,
-    train: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    quantize: int = 6,
 ) -> DataFrame:
     """Character-bigram language-model quality score (perplexity proxy).
 
@@ -460,56 +408,41 @@ def lm_quality_score(
     the low-perplexity band. This is the distributed two-pass shape with
     the smallest real LM: an add-one-smoothed character-bigram model —
       p(c2|c1) = (count(c1c2) + 1) / (count(c1·) + V),  V = |charset|
-    trained on ``train`` (default: ``df`` itself — self-scoring flags
-    out-of-distribution documents: mojibake, scrambles, wrong-language).
+    trained on ``df`` itself — self-scoring flags out-of-distribution
+    documents: mojibake, scrambles, wrong-language.
 
-    Scale shape: pass 1 is ONE explode + hash aggregate over the training
-    corpus producing a charset²-bounded count table (KBs even at 100 TB —
+    Scale shape: pass 1 is ONE explode + hash aggregate over the corpus
+    producing a charset²-bounded count table (KBs even at 100 TB —
     broadcast). Pass 2 explodes the scored corpus once, broadcast-joins
     the tiny model, and re-aggregates per document with map-side combine.
     No corpus-sized shuffle except the per-doc aggregate; zero Python.
 
     Returns (doc_id, n_bigrams, lm_logp) where lm_logp is the mean
-    ln-probability per bigram (higher = more in-distribution), quantized
-    before output. Documents with < 2 characters have no bigrams and are
+    ln-probability per bigram (higher = more in-distribution), rounded to
+    6 places. Documents with < 2 characters have no bigrams and are
     absent from the result (score undefined), in both engines.
     """
-    def grams_of(frame: DataFrame) -> DataFrame:
-        return frame.select(
-            F.col(id_col).alias("id"),
-            F.explode(char_bigrams(F.col(text_col))).alias("bg"),
-        )
-
-    grams = grams_of(df)
-    tgrams = grams if train is None else grams_of(train)
-
-    cnt = tgrams.groupBy("bg").agg(F.count("*").alias("c"))
+    grams = df.select(
+        F.col(id_col).alias("id"),
+        F.explode(char_bigrams(F.col(text_col))).alias("bg"),
+    )
+    cnt = grams.groupBy("bg").agg(F.count("*").alias("c"))
     ctx = cnt.groupBy(F.substring("bg", 1, 1).alias("ch")).agg(
         F.sum("c").alias("cc")
     )
     voc = cnt.agg(F.countDistinct(F.substring("bg", 2, 1)).alias("v"))
 
-    # LEFT joins + coalesce-to-0: a scored bigram or context character
-    # unseen in the training corpus still gets its add-one-smoothed
-    # probability (1+0)/(0+V) instead of being dropped — the whole point
-    # of smoothing when train != df
+    # the model is trained on the scored corpus, so every scored bigram
+    # and context character has a count
     return (
-        grams.join(F.broadcast(cnt), "bg", "left")
+        grams.join(F.broadcast(cnt), "bg")
         .withColumn("ch", F.substring("bg", 1, 1))
-        .join(F.broadcast(ctx), "ch", "left")
+        .join(F.broadcast(ctx), "ch")
         .crossJoin(F.broadcast(voc))
         .groupBy("id")
         .agg(
             F.count("*").alias("n_bigrams"),
-            F.round(
-                F.avg(
-                    F.log(
-                        (F.coalesce(F.col("c"), F.lit(0)) + 1)
-                        / (F.coalesce(F.col("cc"), F.lit(0)) + F.col("v"))
-                    )
-                ),
-                quantize,
-            ).alias("lm_logp"),
+            F.round(F.avg(F.log((F.col("c") + 1) / (F.col("cc") + F.col("v")))), 6).alias("lm_logp"),
         )
         .select(F.col("id").alias(id_col), "n_bigrams", "lm_logp")
     )
@@ -523,18 +456,14 @@ def normalize_text(
     df: DataFrame,
     text_col: str = "text",
     out_col: str | None = None,
-    form: str = "NFC",
-    fold_accents: bool = False,
 ) -> DataFrame:
     """Unicode text normalization — the first stage of every training-data
     text pipeline (C4/Gopher both NFC-normalize before filtering so that
     composed and decomposed forms of the same character dedup together).
 
     Steps, in order: strip control characters (C0 minus tab/newline/CR,
-    plus DEL), Unicode-normalize to `form` (NFC default), optionally fold
-    combining accents away (NFD + drop U+0300-036F — the portable subset
-    of DuckDB's strip_accents), collapse whitespace runs to one space and
-    trim.
+    plus DEL), Unicode-normalize to NFC, collapse whitespace runs to one
+    space and trim.
 
     Scale shape: a pure projection — zero shuffle. Control-strip and
     whitespace-collapse run as JVM `regexp_replace` in whole-stage
@@ -550,22 +479,13 @@ def normalize_text(
     from pyspark.sql.functions import pandas_udf
 
     out_col = out_col or f"{text_col}_norm"
-    nf = str(form)
-    fold = bool(fold_accents)
 
     @pandas_udf("string")
     def unicode_norm(s: pd.Series) -> pd.Series:
         # fast path: pure-ASCII batches are already in every normal form
-        if not fold:
-            ascii_only = s.dropna().map(lambda v: v.isascii()).all()
-            if ascii_only:
-                return s
-        out = s.str.normalize(nf)
-        if fold:
-            out = out.str.normalize("NFD").str.replace(
-                "[\\u0300-\\u036f]", "", regex=True
-            ).str.normalize(nf)
-        return out
+        if s.dropna().map(lambda v: v.isascii()).all():
+            return s
+        return s.str.normalize("NFC")
 
     src = F.col(text_col)
     stripped = F.regexp_replace(src, CONTROL_CHARS, "")

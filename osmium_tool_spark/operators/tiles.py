@@ -123,6 +123,10 @@ def zonal_stats(
     return assigned.groupBy("extract_id").agg(*aggs)
 
 
+# loud safety caps: a larger cover means the resolution is wrong for the input
+MAX_RASTER_CELLS = 1 << 24  # polygon_rasterize's bbox cells per polygon
+MAX_TILES_PER_SEG = 4096  # segment_tile_assign's bbox tiles per segment
+
 # 3x3 binomial (Gaussian-approximating) kernel; integer weights sum to 16
 BINOMIAL_3X3: dict[tuple[int, int], int] = {
     (0, 0): 4,
@@ -136,13 +140,11 @@ def density_surface(
     res: int = 6,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    kernel: dict[tuple[int, int], int] | None = None,
-    block_shift: int | None = 5,
 ) -> DataFrame:
     """Smoothed point-density raster (heatmap): rasterize + 3x3 convolve.
 
     The raster half of the raster<->vector story: cell counts convolved
-    with an integer kernel (default binomial 1-2-1, the separable
+    with the integer binomial 1-2-1 kernel (BINOMIAL_3X3, the separable
     Gaussian approximation) give the density surface a tile renderer or
     a sampling-weight map reads. Integer weights keep the math exact —
     no float accumulation to diverge between engines or reruns.
@@ -158,16 +160,15 @@ def density_surface(
     targets outside the grid are dropped (clamping would double-count
     the pole rows).
 
-    ``block_shift`` (None disables): before the scatter, the cell frame
-    re-clusters by 2^block_shift-sized spatial block, so a task holds a
-    contiguous tile of cells and the 9x explosion collapses back to ~1x
-    in the map-side PARTIAL aggregate (a scatter target is almost
-    always inside the same block; only block-edge halos cross tasks).
-    Trades one cell-frame-sized exchange for a kernel-factor reduction
-    of the big one — at planet cell counts that is the difference
-    between shuffling 9x cells and ~1.1x cells. Results are identical
-    either way (aggregation is commutative; the clustering only moves
-    WHERE the combine happens).
+    Before the scatter, the cell frame re-clusters by 32x32-cell spatial
+    block, so a task holds a contiguous tile of cells and the 9x
+    explosion collapses back to ~1x in the map-side PARTIAL aggregate (a
+    scatter target is almost always inside the same block; only
+    block-edge halos cross tasks). Trades one cell-frame-sized exchange
+    for a kernel-factor reduction of the big one — at planet cell counts
+    that is the difference between shuffling 9x cells and ~1.1x cells.
+    Results do not depend on it (aggregation is commutative; the
+    clustering only moves WHERE the combine happens).
 
     Returns (ix, iy, n_points, density): every cell that RECEIVES any
     contribution appears; n_points is its own raw count (0 if the cell
@@ -175,25 +176,15 @@ def density_surface(
     """
     from ..functions.cells import _ix, _iy
 
-    kernel = BINOMIAL_3X3 if kernel is None else kernel
-    if not kernel:
-        raise ValueError("density_surface: empty kernel")
     n = 1 << res
     counts = points.select(
         _ix(F.col(lon_col), res).alias("ix"), _iy(F.col(lat_col), res).alias("iy")
     ).groupBy("ix", "iy").agg(F.count("*").alias("n_points"))
 
     # Each occupied cell scatters one struct per kernel offset; the (0,0)
-    # struct additionally carries the cell's raw count (self_n). A cell
-    # absent from the kernel's support still emits a (0,0) marker struct
-    # with contrib NULL so its raw count survives — sum(contrib) stays
-    # NULL for cells that received no real contribution, which the final
-    # filter drops (preserving the "appears iff it receives" contract
-    # without any join).
-    entries = dict(kernel)
-    emit_self_marker = (0, 0) not in entries
+    # struct additionally carries the cell's raw count (self_n).
     structs = []
-    for (dx, dy), w in sorted(entries.items()):
+    for (dx, dy), w in sorted(BINOMIAL_3X3.items()):
         structs.append(
             F.when(
                 (F.col("iy") + dy >= 0) & (F.col("iy") + dy < n),
@@ -207,20 +198,8 @@ def density_surface(
                 ),
             )
         )
-    if emit_self_marker:
-        structs.append(
-            F.struct(
-                F.col("ix").alias("tx"),
-                F.col("iy").alias("ty"),
-                F.lit(None).cast("long").alias("contrib"),
-                F.col("n_points").alias("self_n"),
-            )
-        )
     scatter = F.filter(F.array(*structs), lambda x: x.isNotNull())
-    if block_shift is not None:
-        counts = counts.repartition(
-            F.shiftright("ix", block_shift), F.shiftright("iy", block_shift)
-        )
+    counts = counts.repartition(F.shiftright("ix", 5), F.shiftright("iy", 5))
     return (
         counts.select(F.explode(scatter).alias("s"))
         .groupBy(F.col("s.tx").alias("ix"), F.col("s.ty").alias("iy"))
@@ -228,7 +207,6 @@ def density_surface(
             F.sum("s.self_n").cast("long").alias("n_points"),
             F.sum("s.contrib").cast("long").alias("density"),
         )
-        .filter(F.col("density").isNotNull())
         .select("ix", "iy", "n_points", "density")
     )
 
@@ -333,7 +311,6 @@ def polygon_rasterize(
     res: int = 9,
     poly_id: str = "poly_id",
     rings_col: str = "rings",
-    max_cells_per_polygon: int = 1 << 24,
 ) -> DataFrame:
     """Vector->raster conversion: the res-`res` cells whose CENTER lies
     inside the polygon (pooled even-odd over all rings — the engine's
@@ -354,7 +331,7 @@ def polygon_rasterize(
       2. polygon bbox -> candidate cells, exploded band-first with a
          repartition on (poly_id, cy) BETWEEN the two explodes, so one
          giant polygon's cell stream is produced by many tasks, not one.
-         Bbox cells are capped LOUDLY at `max_cells_per_polygon`.
+         Bbox cells are capped LOUDLY at `MAX_RASTER_CELLS`.
       3. candidates join edges on (poly_id, cy): an edge that straddles
          a center's y always shares its band (the ordinate is monotone),
          so the crossing count per cell is exact; cells in edge-free
@@ -374,7 +351,7 @@ def polygon_rasterize(
     """
     r = int(res)
     n = 1 << r
-    cap = int(max_cells_per_polygon)
+    cap = MAX_RASTER_CELLS
     pid = F.col(poly_id).alias("pid")
 
     # -- edges, banded by the y-range each covers ------------------------
@@ -418,8 +395,7 @@ def polygon_rasterize(
             > cap,
             F.raise_error(
                 F.lit(
-                    f"polygon bbox covers more than {cap} cells at res {r}: "
-                    "coarsen res or raise max_cells_per_polygon"
+                    f"polygon bbox covers more than {cap} cells at res {r}: coarsen res"
                 )
             ).isNull(),
         ).otherwise(F.lit(True))
@@ -770,11 +746,7 @@ def quadtree_leaves(
     ).select("res", "cell", "n")
 
 
-def segment_tile_assign(
-    segs: DataFrame,
-    res: int,
-    max_cells_per_seg: int = 4096,
-) -> DataFrame:
+def segment_tile_assign(segs: DataFrame, res: int) -> DataFrame:
     """Exact segment→tile cut: one row per (segment, tile) where the CLOSED
     segment truly intersects the CLOSED tile rectangle — the line-feature
     analogue of `tile_buffer_assign` and the vector-tile cut the reference
@@ -799,7 +771,7 @@ def segment_tile_assign(
     downstream per-tile rendering needs edge features on each side).
 
     Scale shape: projection → bounded double explode (loudly capped at
-    `max_cells_per_seg`) → codegen'd predicate. Map-only: no shuffle, no
+    `MAX_TILES_PER_SEG`) → codegen'd predicate. Map-only: no shuffle, no
     join, no Python. Output inflation is the O(L/cell) pass-through
     count every tiler pays.
 
@@ -850,11 +822,11 @@ def segment_tile_assign(
         F.when(
             (F.col("cxmax") - F.col("cxmin") + 1)
             * (F.col("cymax") - F.col("cymin") + 1)
-            > max_cells_per_seg,
+            > MAX_TILES_PER_SEG,
             F.raise_error(
                 F.lit(
-                    f"segment covers more than {max_cells_per_seg} tiles at "
-                    f"res {res}: raise max_cells_per_seg or coarsen res"
+                    f"segment covers more than {MAX_TILES_PER_SEG} tiles at "
+                    f"res {res}: coarsen res"
                 )
             ).isNull(),
         ).otherwise(F.lit(True))
@@ -943,12 +915,9 @@ def polygon_overlap(
 def idw_surface(
     samples: DataFrame,
     radius: int,
-    res: int | None = None,
     val_col: str = "val",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    w_scale: int = 10**15,
-    max_ring_cells: int = 1024,
 ) -> DataFrame:
     """Inverse-distance-weighted interpolation surface: estimate a value
     at every grid-cell center from the samples within `radius`
@@ -958,10 +927,10 @@ def idw_surface(
     pipeline), complementing density_surface (which counts) with a
     VALUE surface.
 
-    The grid (`res`) and the search radius are independent, as in any
-    GIS gridding tool — by default `res` is derived so a cell's lat
-    span is <= radius/2, which guarantees every sample reaches at
-    least one center (its own cell's center is within ~0.56 r). Each
+    The grid resolution `res` is derived from the search radius so a
+    cell's lat span is in (radius/4, radius/2], which guarantees every
+    sample reaches at least one center (its own cell's center is within
+    ~0.56 r). Each
     sample scatters to its deduplicated clamped (2kx+1)x(2ky+1)
     neighbor ring, with kx/ky = floor(r/span + 1/2) per axis computed
     in exact rational arithmetic — tight completeness: every center
@@ -969,18 +938,16 @@ def idw_surface(
     iff (k - 1/2)*span <= r), and each (cell, sample) pair is
     generated exactly once. One explode + ONE hash aggregate keyed by
     cell, never a join at all (the "query side" is the cell centers
-    themselves, which exist implicitly as column math). A
-    caller-forced fine grid with a huge radius makes the ring
-    combinatorial — guarded by `max_ring_cells` (fail loud, pick a
-    coarser res or smaller radius).
+    themselves, which exist implicitly as column math). The derived
+    grid keeps the ring at most 5 x 9 cells.
 
     Determinism, the part float IDW gets wrong: weights are EXACT
     integers — d2 (exact squared planar distance from sample to cell
     center) is first rescaled by integer division with
     s = max(1, (2 r^2) div 1e6), so the rescaled distance spans
-    [0, ~1e6] REGARDLESS of radius, then w = w_scale div (q + 1):
+    [0, ~1e6] REGARDLESS of radius, then w = 10^15 div (q + 1):
     weights span ~6 decades, never vanish (a vanishing rim weight
-    would zero a cell's denominator), and the +1 caps w at w_scale
+    would zero a cell's denominator), and the +1 caps w at 10^15
     for a sample dead on a center. The aggregate sums ride
     decimal(38,0), so they are exact and ORDER-FREE — a float 1/d^p
     weight sum would differ between partitionings and engines, this
@@ -989,8 +956,7 @@ def idw_surface(
     engines — the way_area precedent), so est is bit-stable across
     engines and reruns.
 
-    Scale shape: ring-factor sample explode (15-45x at the default
-    res — O((r/span)^2), the caller's knob) -> hash aggregate with
+    Scale shape: ring-factor sample explode (15-45x) -> hash aggregate with
     map-side combine (cells are spatially clustered within a task, so
     partial aggregation collapses most of the explosion before the
     exchange, the density_surface block argument). No corpus join, no
@@ -1006,21 +972,12 @@ def idw_surface(
 
     if radius > _LAT_SPAN:
         raise ValueError(f"idw_surface: radius {radius} exceeds the domain")
-    if res is None:
-        # lat cell span <= radius/2: every sample reaches >=1 center
-        res = min(30, max(0, int(_math.ceil(_math.log2(2 * _LAT_SPAN / radius)))))
-    if not 0 <= res <= 30:
-        raise ValueError(f"idw_surface: res {res} out of range")
+    # lat cell span <= radius/2: every sample reaches >=1 center
+    res = min(30, max(0, int(_math.ceil(_math.log2(2 * _LAT_SPAN / radius)))))
     n = 1 << res
     # exact rational kx/ky = floor(r/span + 1/2); span = SPAN/n
     kx = (2 * radius * n + _LON_SPAN) // (2 * _LON_SPAN)
     ky = (2 * radius * n + _LAT_SPAN) // (2 * _LAT_SPAN)
-    ring_cells = (2 * kx + 1) * (2 * ky + 1)
-    if ring_cells > max_ring_cells:
-        raise ValueError(
-            f"idw_surface: ring of {ring_cells} cells at res={res} exceeds "
-            f"max_ring_cells={max_ring_cells} — coarsen res or shrink radius"
-        )
     d38 = "decimal(38,0)"
 
     base = samples.select(
@@ -1076,7 +1033,7 @@ def idw_surface(
         .withColumn(
             "w",
             F.expr(
-                f"CAST({int(w_scale)} AS BIGINT) div "
+                f"CAST({10**15} AS BIGINT) div "
                 f"((d2 div {max(1, (2 * r * r) // 10**6)}) + 1)"
             ),
         )

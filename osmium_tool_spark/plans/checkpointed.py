@@ -14,7 +14,9 @@ Spark-first surface:
     stage, rows in/out, partitions, duration;
   - re-running skips stages whose data + metrics already exist (resume
     from the last completed checkpoint); `force_from` invalidates a
-    suffix of the plan.
+    suffix of the plan. `metrics.json` is the stage's last write, after
+    its lineage and metrics-table records, so a crash anywhere before it
+    reruns the stage instead of leaving it complete without a record.
 
 The per-partition histograms are what you read before choosing a salting
 factor for skewed cells (SURVEY.md §4 skew row).
@@ -147,7 +149,6 @@ class CheckpointedPipeline:
             tmp = self._metrics(st.name) + ".tmp"
             with open(tmp, "w") as f:
                 json.dump(metrics, f)
-            os.replace(tmp, self._metrics(st.name))
             with open(os.path.join(self.root, "lineage.jsonl"), "a") as f:
                 f.write(json.dumps(metrics) + "\n")
             if self.metrics_table is not None:
@@ -168,6 +169,7 @@ class CheckpointedPipeline:
                     spark.createDataFrame([row], METRICS_SCHEMA).coalesce(1),
                     stage=st.name,
                 )
+            os.replace(tmp, self._metrics(st.name))  # marks the stage complete
             prev, prev_name, prev_rows = result, st.name, rows_out
         if prev is None:
             raise ValueError("pipeline has no stages")

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.protowire import key, ld, ship_by_value, svarint, varint
 
 EXTENT = 4096
+LAYER_NAME = "points"  # the one layer of every tile
 
 
 def varint_len_sql(v: str) -> str:
@@ -67,14 +68,14 @@ def tile_pixel_cols(
 def write_mvt_tiles(
     points: DataFrame,
     res: int,
-    layer_name: str = "points",
     id_col: str = "id",
     lon_col: str = "lon",
     lat_col: str = "lat",
     attr_col: str | None = None,
     attr_key: str = "rank",
 ) -> DataFrame:
-    """One MVT protobuf blob per occupied tile.
+    """One MVT protobuf blob per occupied tile, with one layer named
+    LAYER_NAME.
 
     ``attr_col`` (optional, non-negative int64 column): attaches one
     attribute per feature through the spec's keys/values indirection —
@@ -105,7 +106,7 @@ def write_mvt_tiles(
         *([F.col(attr_col).cast("long").alias("attr")] if attr_col else []),
     )
 
-    lname = layer_name
+    lname = LAYER_NAME
     with_attr = attr_col is not None
     key_b = attr_key.encode("utf-8")
 
@@ -170,10 +171,10 @@ def write_mvt_tiles(
     )
 
 
-def mvt_bytes_sql(layer_name: str = "points", attr: bool = False,
-                  attr_key: str = "rank") -> str:
+def mvt_bytes_sql(attr: bool = False) -> str:
     """Closed-form SQL for a tile's total byte length, given per-feature
-    columns px, py, fid (and, with ``attr``, per-feature value index
+    columns px, py, fid (and, with ``attr``, the attribute key "rank",
+    per-feature value index
     ``vix`` = dense rank of the attribute among the tile's distinct
     values, 0-based, plus ``n_vals``/``vals_bytes`` aggregates) — the
     oracle's twin of `_encode`'s framing. MVT zigzag here is
@@ -186,14 +187,14 @@ def mvt_bytes_sql(layer_name: str = "points", attr: bool = False,
     body = f"(1 + {varint_len_sql('fid')} + {tags} + 2 + 1 + 1 + {geom})"
     # feature framing: tag byte + varint(body len); body < 128 -> 1 byte
     feat = f"(1 + 1 + {body})"
-    name_len = len(layer_name.encode("utf-8"))
+    name_len = len(LAYER_NAME.encode("utf-8"))
     # layer: version (2) + name (1 + 1 + len) + features + extent (2 +
     # varint(4096) = 2 bytes) -> fixed part + sum(feat); with attr, add
-    # the keys entry (1 + 1 + len(attr_key)) and the values section
+    # the keys entry (1 + 1 + len("rank")) and the values section
     # (per distinct value: framing 1 + 1 + msg(1 + varint(v)))
     fixed = 2 + 1 + 1 + name_len + 1 + 2
     if attr:
-        fixed += 1 + 1 + len(attr_key.encode("utf-8"))
+        fixed += 1 + 1 + len(b"rank")
     layer = f"({fixed} + sum({feat})" + (" + max(vals_bytes)" if attr else "") + ")"
     # tile: tag byte + varint(layer len) + layer
     return f"(1 + {varint_len_sql(layer)} + {layer})"

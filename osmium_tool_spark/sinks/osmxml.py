@@ -310,8 +310,7 @@ def xml_element_col(entities: DataFrame, with_visible: bool = False,
 
 
 def _write_serialized_parts(entities: DataFrame, parts_dir: str,
-                            with_visible: bool = False, indent: int = 2,
-                            num_partitions: int | None = None,
+                            with_visible: bool = False,
                             codec: str | None = None) -> None:
     """Distributed XML rendering: render every element JVM-side
     (xml_element_col — whole-stage codegen, zero Python) and write one
@@ -328,7 +327,7 @@ def _write_serialized_parts(entities: DataFrame, parts_dir: str,
     spark = entities.sparkSession
     staged = entities
     if entities.rdd.getNumPartitions() <= 1:
-        n = num_partitions or spark.sparkContext.defaultParallelism
+        n = spark.sparkContext.defaultParallelism
         staged = (
             entities.withColumn("__seq", F.monotonically_increasing_id())
             .repartitionByRange(n, "__seq")
@@ -337,7 +336,7 @@ def _write_serialized_parts(entities: DataFrame, parts_dir: str,
     from .textfile import write_parts
 
     write_parts(
-        staged.select(xml_element_col(staged, with_visible, indent).alias("value")),
+        staged.select(xml_element_col(staged, with_visible).alias("value")),
         parts_dir, codec,
     )
 
@@ -556,7 +555,7 @@ def change_sections(
 
 def write_osm_change(
     entities: DataFrame, path: str, generator: str = "test",
-    compression: str | None = None, num_partitions: int | None = None,
+    compression: str | None = None,
 ) -> None:
     """Write the frame as one .osc osmChange file in its CURRENT order;
     consecutive objects with the same action share a <create>/<modify>/
@@ -587,8 +586,7 @@ def write_osm_change(
     from .textfile import concat_parts, write_parts
 
     spark = entities.sparkSession
-    nparts = num_partitions or spark.sparkContext.defaultParallelism
-    staged, n, last_act = change_sections(entities, nparts)
+    staged, n, last_act = change_sections(entities, spark.sparkContext.defaultParallelism)
     head = (b"<?xml version='1.0' encoding='UTF-8'?>\n"
             + f'<osmChange version="0.6" generator={_attr(generator)}>\n'.encode())
     if n == 0:

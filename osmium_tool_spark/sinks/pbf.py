@@ -359,7 +359,6 @@ def write_osm_pbf(
     generator: str = GENERATOR,
     with_history: bool = False,
     bbox: tuple | None = None,
-    num_partitions: int | None = None,
 ) -> None:
     """Write the canonical entity frame as a .osm.pbf file.
 
@@ -375,7 +374,7 @@ def write_osm_pbf(
     from ..functions.sortkeys import id_sort_key
 
     spark = entities.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
     skey = [F.col("type"), id_sort_key(F.col("id")).alias("__k"), F.col("version")]
     # tags travel as an entries array (map dicts lose insertion order
     # through Arrow — same shape as the reader). Null array columns are

@@ -47,7 +47,6 @@ def write_webdataset_shards(
     df: DataFrame,
     out_dir: str,
     shard_col: str = "shard_id",
-    order_cols: tuple = ("zcell", "image_id"),
     id_col: str = "image_id",
     bytes_col: str = "bytes",
     caption_col: str = "caption",
@@ -56,8 +55,9 @@ def write_webdataset_shards(
     """Write one tar per shard; return the manifest DataFrame
     (shard_id, n_samples, data_bytes, tar_bytes, sha256, path).
 
-    ``df`` carries payload + assignment: the shard/order columns come
-    from `shard_manifest` (join on the id). Member stems are the
+    ``df`` carries payload + assignment: the shard column and the
+    (zcell, image_id) member order come from `shard_manifest` (join on
+    the id). Member stems are the
     zero-padded decimal id (12 digits covers int64 ids seen in corpora;
     string ids pass through verbatim) — stems sort in id order, and
     every name stays under the 100-char USTAR limit.
@@ -65,7 +65,7 @@ def write_webdataset_shards(
     import os
 
     os.makedirs(out_dir, exist_ok=True)
-    order = [c for c in order_cols]
+    order = ["zcell", "image_id"]
 
     # kernel is self-contained (stdlib only) — executors don't need the
     # package on sys.path (see sinks/pbf.py for the same rule)

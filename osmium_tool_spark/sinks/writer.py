@@ -31,28 +31,15 @@ GENERATOR = "osmium_tool_spark/0.1.0"
 def write_sorted(
     entities: DataFrame,
     path: str,
-    partition_by: str | None = None,
-    num_files: int | None = None,
     header: dict | None = None,
 ) -> dict:
-    """Write entities in canonical (type, id-order, version) order.
+    """Write entities in canonical (type, id-order, version) order, as
+    up to 8 range-partitioned parquet files.
 
-    Returns the header dict that was persisted. When `partition_by` is
-    given (e.g. "extract_id"), each partition directory holds its own
-    ordered file set — the multi-extract writer."""
+    Returns the header dict that was persisted."""
     key = [F.col("type"), id_sort_key(F.col("id")).alias("__k"), F.col("version")]
-    df = entities
-    if partition_by:
-        df = df.repartition(F.col(partition_by))
-        writer = (
-            df.sortWithinPartitions(partition_by, *key)
-            .write.mode("overwrite")
-            .partitionBy(partition_by)
-        )
-    else:
-        df = df.repartitionByRange(num_files or 8, *key)
-        writer = df.sortWithinPartitions(*key).write.mode("overwrite")
-    writer.parquet(path)
+    df = entities.repartitionByRange(8, *key)
+    df.sortWithinPartitions(*key).write.mode("overwrite").parquet(path)
 
     hdr = {
         "generator": GENERATOR,

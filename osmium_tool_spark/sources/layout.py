@@ -126,7 +126,6 @@ def bbox_scan_clustered(
     res: int,
     lon: str = "lon",
     lat: str = "lat",
-    max_ranges: int = 8,
     curve: str = "morton",
 ) -> tuple[DataFrame, dict]:
     """Bbox extract over a clustered table: curve-range decomposition ->
@@ -135,9 +134,9 @@ def bbox_scan_clustered(
     bbox_fp = (lon_min, lat_min, lon_max, lat_max) in fixed-point.
     ``curve`` must match the layout's write_clustered curve: "morton"
     (Z-order) or "hilbert" (continuous curve — same bbox decomposes into
-    ~2x fewer ranges, so the same max_ranges cap loses less precision).
+    ~2x fewer ranges, so the same cap of 8 ranges loses less precision).
 
-    ``max_ranges`` trades pruning precision against predicate size: every
+    The range cap trades pruning precision against predicate size: every
     extra range is another OR clause through Catalyst planning + codegen
     (measured: 64 clauses cost ~1.3s of fixed overhead vs ~0.1s at 8 on
     a 4M-row table, while file selection was identical) — 8 is plenty
@@ -147,6 +146,7 @@ def bbox_scan_clustered(
     from ..schema import COORD_SCALE
 
     range_fn = {"morton": morton_ranges, "hilbert": hilbert_ranges}[curve]
+    max_ranges = 8
     lon_min, lat_min, lon_max, lat_max = bbox_fp
     if lon_min > lon_max:
         # antimeridian-crossing box (the reference models it as two

@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -16,6 +17,25 @@ def spark():
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+_groups = itertools.count()
+
+
+def job_count(spark, run) -> int:
+    """Spark jobs launched by run() with AQE off. AQE runs each shuffle
+    stage as its own job; without it a job is an action, an eager step
+    or a broadcast."""
+    sc = spark.sparkContext
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    group = f"job-count-{next(_groups)}"
+    try:
+        sc.setJobGroup(group, "job count")
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture

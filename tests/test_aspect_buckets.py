@@ -80,14 +80,6 @@ def test_batches_fill_in_id_order(spark):
     assert sizes and set(sizes.values()) == {16}
 
 
-def test_keep_incomplete_batches(spark):
-    out = aspect_bucket_batches(
-        _images(spark, 100), LADDER, batch_size=32, drop_incomplete=False
-    )
-    assert out.count() == 100  # nothing dropped
-    assert out.filter("slot >= 32 OR slot < 0").count() == 0
-
-
 def test_dense_path_equals_window(spark):
     """The zipindex-based ordinal is bit-identical to the plain
     row_number window on the same ordering."""

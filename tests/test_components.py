@@ -6,8 +6,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from osmium_tool_spark.operators import dedup
 from osmium_tool_spark.operators.dedup import dup_clusters
 from osmium_tool_spark.operators.network import network_components
+from tests.conftest import job_count
 
 # each example runs a few large/small-star rounds of Spark jobs
 PROPS = settings(max_examples=5, deadline=None)
@@ -87,11 +89,33 @@ def test_network_components_matches_union_find(spark, ways):
     assert all(r.component_size == sizes[r.component_id] for r in rows)
 
 
-def test_dup_clusters_raises_when_rounds_run_out(spark):
+def test_dup_clusters_raises_when_rounds_run_out(spark, monkeypatch):
     """A 64-node chain needs more than two rounds; labelling the edge set
     a round cap cut short would give ids two rows and split the chain."""
     chain = spark.createDataFrame([(i, i + 1) for i in range(64)], "a long, b long")
-    for max_iter in (1, 2):
-        with pytest.raises(ValueError, match=f"not converged after {max_iter} rounds"):
-            dup_clusters(chain, max_iter=max_iter)
+    for rounds in (1, 2):
+        monkeypatch.setattr(dedup, "CC_ROUNDS", rounds)
+        with pytest.raises(ValueError, match=f"not converged after {rounds} rounds"):
+            dup_clusters(chain)
+    monkeypatch.undo()
     assert set(labels(dup_clusters(chain)).values()) == {0}
+
+
+def star(spark, n):
+    return spark.createDataFrame([(0, i) for i in range(1, n)], "a long, b long")
+
+
+def test_dup_clusters_min_rooted_star_takes_one_round(spark, monkeypatch):
+    """The input's own fingerprint counts: a star already rooted at its
+    minimum id is converged after the first round leaves it unchanged."""
+    monkeypatch.setattr(dedup, "CC_ROUNDS", 1)
+    assert labels(dup_clusters(star(spark, 5))) == {i: 0 for i in range(5)}
+
+
+def test_dup_clusters_job_counts(spark):
+    """One eager checkpoint per round, each observing its fingerprint in
+    the same job, plus the input's checkpoint and the final collect: a
+    5-node star runs 1 round and a 16-node chain 5 (AQE off)."""
+    chain = spark.createDataFrame([(i, i + 1) for i in range(15)], "a long, b long")
+    assert job_count(spark, lambda: dup_clusters(star(spark, 5)).collect()) == 3
+    assert job_count(spark, lambda: dup_clusters(chain).collect()) == 7

@@ -13,8 +13,8 @@ from osmium_tool_spark.operators.dedup import (
 )
 from osmium_tool_spark.operators.text import (
     fingerprint,
-    lang_id,
     quality_score,
+    text_metrics,
     token_counts,
 )
 
@@ -75,12 +75,12 @@ def test_simhash_exact_dup_zero_distance(docs):
 def test_lang_id_deterministic_tie_break(spark):
     # no marker hits at all -> score 0, tie -> lexicographically first code
     df = spark.createDataFrame([(1, "zzz qqq")], "doc_id long, text string")
-    r = lang_id(df).collect()[0]
+    r = text_metrics(df).collect()[0]
     assert r.pred_lang == "de" and r.score == 0
 
 
 def test_lang_id_picks_max(docs):
-    out = {r.id: r.pred_lang for r in lang_id(docs).collect()}
+    out = {r.id: r.pred_lang for r in text_metrics(docs).collect()}
     assert out[1] == "en"
     assert out[5] == "de"
 
@@ -203,27 +203,6 @@ def test_dup_clusters_on_ngram_pairs(docs):
     assert out == {1: 1, 2: 1, 4: 1, 3: 3, 5: 5}
 
 
-def test_curate_documents_cluster_policy(spark):
-    """cluster_dedup=True keeps one representative per near-dup component
-    and matches the greedy policy on simple chains."""
-    from osmium_tool_spark.operators.curation import curate_documents
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog and runs very far away today", "en"),
-        (2, "the quick brown fox jumps over the lazy dog and runs very far away today", "en"),
-        (3, "the quick brown fox jumps over the lazy dog and runs very far away now", "en"),
-        (4, "tiny", "en"),
-        (5, "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu nu xi", "en"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    out = curate_documents(
-        docs, min_tokens=5, jaccard_threshold=0.5, max_stopword_ratio=0.5,
-        cluster_dedup=True,
-    )
-    kept = {r.doc_id for r in out.collect()}
-    assert kept == {1, 5}
-
-
 def test_scrub_pii_masks_and_counts(spark):
     from osmium_tool_spark.operators.text import scrub_pii
 
@@ -258,16 +237,6 @@ def test_scrub_pii_order_protects_masked_spans(spark):
     r = scrub_pii(df).collect()[0]
     assert r["n_ipv4"] == 1 and r["n_phone"] == 0
     assert r["body_clean"] == "ip <IP> only"
-
-
-def test_scrub_pii_bad_kind(spark):
-    import pytest as _pytest
-
-    from osmium_tool_spark.operators.text import scrub_pii
-
-    df = spark.createDataFrame([(1, "x")], "doc_id long, body string")
-    with _pytest.raises(ValueError):
-        scrub_pii(df, kinds=("email", "ssn"))
 
 
 class TestContamination:

@@ -121,9 +121,6 @@ def test_geojsonseq_and_pg(ents):
     rows = to_pg(f).collect()
     assert all(len(r.row.split("\t")) == 2 for r in rows)
     assert all(r.row.startswith("0101000020E6100000") for r in rows)  # SRID point
-    # geojson-geometry variant keeps the 3-column shape
-    rows3 = to_pg(f, geometry="geojson").collect()
-    assert all(len(r.row.split("\t")) == 3 for r in rows3)
 
 
 def test_filter_tags_include_exclude(ents):

@@ -185,3 +185,16 @@ class TestSmartTagsFilter:
         )
         got = {(r.type, r.id) for r in out.collect()}
         assert got == EXTRACT1_EXPECTED["smart"]
+
+    def test_cli_tags_option(self, spark, input1, tmp_path):
+        """`-S tags=` reaches the smart strategy: a non-matching filter
+        degrades smart to complete_ways, as in test_smart_tags_gate."""
+        from osmium_tool_spark.cli import main
+        from osmium_tool_spark.sources.fixtures import EXTRACT1_EXPECTED
+
+        src, out = str(tmp_path / "in.parquet"), str(tmp_path / "out.parquet")
+        input1.write.parquet(src)
+        argv = ["extract", src, "-b", "0,0,1.5,10", "-s", "smart", "-S", "types=any", "-o", out]
+        assert main(argv + ["-S", "tags=natural=water"], spark=spark) == 0
+        got = {(r.type, r.id) for r in spark.read.parquet(out).collect()}
+        assert got == EXTRACT1_EXPECTED["complete_ways"]

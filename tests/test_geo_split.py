@@ -92,16 +92,16 @@ def test_no_cross_split_adjacency(spark):
                     assert by_cell[nb] == s, ((x, y), nb)
 
 
-def test_ring2_and_seed_change(spark):
+def test_ring2_and_weights(spark):
     rows, df = _points(spark, k=300, seed=11)
     out2 = {
         r.image_id: (r.cell, r.split)
         for r in geo_buffered_split(
-            df, res=6, buffer_ring=2, seed=7, weights=(50, 25, 25)
+            df, res=6, buffer_ring=2, weights=(50, 25, 25)
         ).collect()
     }
     for i, lon, lat in rows:
-        assert out2[i] == py_expected(lon, lat, 6, (50, 25, 25), ring=2, seed=7)
+        assert out2[i] == py_expected(lon, lat, 6, (50, 25, 25), ring=2)
 
 
 def test_validation(spark):

@@ -77,19 +77,6 @@ def test_lm_self_trained_hand_computed(spark):
     assert out[2]["n_bigrams"] == 3 and out[2]["lm_logp"] == pytest.approx(exp2)
 
 
-def test_lm_unseen_bigrams_get_smoothed_probability(spark):
-    train = spark.createDataFrame([(1, "aaaa")], "doc_id long, text string")
-    score = spark.createDataFrame([(9, "zz")], "doc_id long, text string")
-    # model: aa=3, ctx a=3, V=1; unseen bigram zz with unseen ctx z:
-    # p = (0+1)/(0+1) = 1 -> ln 1 = 0
-    row = lm_quality_score(score, train=train).collect()[0]
-    assert row["n_bigrams"] == 1 and row["lm_logp"] == 0.0
-    # unseen bigram with a SEEN context: "az" -> (0+1)/(3+1)
-    score2 = spark.createDataFrame([(9, "az")], "doc_id long, text string")
-    row2 = lm_quality_score(score2, train=train).collect()[0]
-    assert row2["lm_logp"] == pytest.approx(round(math.log(1 / 4), 6))
-
-
 def test_lm_flags_out_of_distribution(spark):
     rows = [(i, "the quick brown fox jumps over the lazy dog") for i in range(20)]
     rows.append((99, "zqxj vkpw qzzx jjjj wwww"))

@@ -1,13 +1,12 @@
 """Tests for id ops, sort/merge, aggregates, and history/CDC operators."""
 
-import itertools
-
 import pytest
 from pyspark.sql import functions as F
 
 from osmium_tool_spark.operators import aggregates, changes, idops, sort_merge
 from osmium_tool_spark.schema import NODE, RELATION, WAY
 from osmium_tool_spark.sources import fixtures
+from tests.conftest import job_count
 
 
 def rset(df):
@@ -137,25 +136,6 @@ class TestGetIdDistributed(GetIdRecursive):
 class TestRenumberDistributed(TestRenumber):
     in_ram = False
 
-
-_groups = itertools.count()
-
-
-def job_count(spark, run) -> int:
-    """Spark jobs launched by run() with AQE off. AQE runs each shuffle
-    stage as its own job; without it a job is an action, an eager step
-    or a broadcast."""
-    sc = spark.sparkContext
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    group = f"idops-jobs-{next(_groups)}"
-    try:
-        sc.setJobGroup(group, "id engine job count")
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_in_ram_job_counts(spark, inp):

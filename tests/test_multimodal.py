@@ -147,16 +147,6 @@ class TestCropImages:
             assert img.shape == (r.h, r.w)
             assert np.array_equal(img, sub)
 
-    def test_full_scale_identity(self, spark):
-        from osmium_tool_spark.functions import png as P
-        from osmium_tool_spark.operators.multimodal import crop_images
-
-        imgs = self._imgs(spark, n=3)
-        src = {r.image_id: bytes(r.bytes) for r in imgs.collect()}
-        for r in crop_images(imgs, epoch=1, min_scale_pct=100).collect():
-            if not r.flip:
-                assert bytes(r.bytes) == src[r.image_id]  # byte identity
-
     def test_checksums_flip_sensitive(self, spark):
         """px_sum invariant under mirror; px_wsum not (for asymmetric
         content) — the pair pins orientation."""

@@ -204,24 +204,22 @@ class TestWayPagerank:
     def test_no_overflow_at_hub_with_huge_scale(self, spark):
         """r5 ADVICE pin: the damped multiply damping_num * sum(c) used
         to ride int64 and wrapped ~100x below the documented bound; it
-        now accumulates in decimal(38,0). Star hub at scale=2e17 with
-        4 leaves: 85 * sum(c) ~ 6.8e19 > 2^63 — the old path wrapped
-        negative, the decimal path matches the exact python replay."""
+        now accumulates in decimal(38,0). A hub with 120k leaves: the
+        old path wrapped negative, the decimal path matches the exact
+        python replay."""
         from osmium_tool_spark.operators.network import way_pagerank
 
-        ways = self._ways(spark, [[2, 1, 3], [4, 1, 5]])
-        s = 2 * 10**17
-        ranks = {r.node_id: r.rank
-                 for r in way_pagerank(ways, iters=2, scale=s).collect()}
-        # exact integer replay: hub deg 4, leaves deg 1
+        # hub 0 with n leaves at scale 1e12: 85 * sum(c) = 1.02e19 > 2^63
+        n = 120_000
+        ways = spark.range(1, n + 1).select(
+            "id", F.array(F.lit(0).cast("long"), F.col("id")).alias("refs")
+        )
+        ranks = dict(way_pagerank(ways, iters=1).filter("node_id <= 1").collect())
+        # exact integer replay: hub deg n, leaves deg 1
+        s = 10**12
         base = (s * 15) // 100
-        hub, leaf = s, s
-        for _ in range(2):
-            hub_new = base + (85 * (4 * leaf)) // 100
-            leaf_new = base + (85 * (hub // 4)) // 100
-            hub, leaf = hub_new, leaf_new
-        assert ranks[1] == hub and ranks[2] == leaf
-        assert all(v > 0 for v in ranks.values())
+        assert ranks[0] == base + (85 * (n * s)) // 100
+        assert ranks[1] == base + (85 * (s // n)) // 100
 
     def test_bad_args(self, spark):
         import pytest as _pytest
@@ -231,8 +229,6 @@ class TestWayPagerank:
         ways = self._ways(spark, [[1, 2]])
         with _pytest.raises(ValueError, match="iters"):
             way_pagerank(ways, iters=0)
-        with _pytest.raises(ValueError, match="damping"):
-            way_pagerank(ways, damping_num=100)
 
 
 class TestWayTriangles:

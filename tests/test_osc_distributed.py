@@ -60,10 +60,11 @@ def _expected_osc(rows_actions, elements):
 
 
 class TestOscSections:
-    def _check(self, spark, tmp_path, n, nparts, action_of):
+    def _check(self, spark, tmp_path, n, action_of):
+        # the section buckets follow the session's 4 default partitions
         ents = _entities(spark, n, action_of)
         out = str(tmp_path / "o.osc")
-        write_osm_change(ents, out, generator="test", num_partitions=nparts)
+        write_osm_change(ents, out, generator="test")
         # reference rendering via the (golden-pinned) Python serializer
         ser = make_row_serializer(indent=4)
         rows = [r.asDict(recursive=True)
@@ -77,19 +78,19 @@ class TestOscSections:
 
     def test_boundary_inside_run(self, spark, tmp_path):
         # 40 rows, 4 buckets of 10: runs of 7 cross bucket edges mid-run
-        self._check(spark, tmp_path, 40, 4,
+        self._check(spark, tmp_path, 40,
                     lambda i: ["create", "modify", "delete"][(i - 1) // 7 % 3])
 
     def test_boundary_at_action_change(self, spark, tmp_path):
         # action changes exactly at each bucket edge (i % 10)
-        self._check(spark, tmp_path, 40, 4,
+        self._check(spark, tmp_path, 40,
                     lambda i: "create" if ((i - 1) // 10) % 2 == 0 else "delete")
 
     def test_single_action(self, spark, tmp_path):
-        self._check(spark, tmp_path, 23, 4, lambda i: "modify")
+        self._check(spark, tmp_path, 23, lambda i: "modify")
 
     def test_every_row_new_section(self, spark, tmp_path):
-        self._check(spark, tmp_path, 12, 3,
+        self._check(spark, tmp_path, 12,
                     lambda i: ["create", "modify", "delete"][i % 3])
 
     def test_empty_frame(self, spark, tmp_path):

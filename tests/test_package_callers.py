@@ -8,8 +8,21 @@ bytecode. Strings, docstrings, postponed annotations and local variables do
 not count: a registry key or a parameter that happens to share a
 function's name is not a call. ALLOWED holds the defs kept on purpose. It
 may only shrink: an entry whose def gains a caller or is deleted fails
-`test_allowlist_is_current`."""
+`test_allowlist_is_current`.
 
+The same callers must also set every defaulted parameter ("knob") of the
+package's functions. A knob is a defaulted parameter of a function defined
+once in the package (methods and nested defs included) that some caller
+calls, when no such call passes it by keyword or by position. A knob that
+only tests turn doubles the configurations to cover and keeps a code path
+alive that production never takes: fold it into the body, or make a safety
+cap a module constant. Parameters that name an input column are exempt
+(COLUMN_NAMES); ALLOWED_KNOBS holds the knobs kept on purpose and may only
+shrink, like ALLOWED. Functions that no caller calls are the def guard's
+business, not this one's."""
+
+import ast
+import collections
 import functools
 import inspect
 import warnings
@@ -61,6 +74,21 @@ ALLOWED = {
 }
 
 
+COLUMN_NAMES = {"lon", "lat", "text", "doc_id", "query_id", "query_text", "poly_id", "centroid_id", "centroid_vec"}
+
+ALLOWED_KNOBS = {
+    ("main", "argv"): "the CLI entry point; tests pass an argv list",
+    ("main", "spark"): "the CLI entry point; tests pass their session",
+    ("entities", "materialize"): "perfbench/workloads.py sets it through an alias",
+    # set only by tests that read the reference fixtures, which fail without them
+    ("read_osm_xml", "distributed_min_bytes"): "reference-fixture tests force the split reader",
+    ("_read_osm_xml_distributed", "split_bytes"): "reference-fixture tests split tiny inputs",
+    ("write_osm_pbf", "bbox"): "reference-fixture tests write the header bbox",
+    ("geojsonl_line", "properties"): "reference-fixture tests render feature properties",
+    ("geojsonl_line", "poly_idx"): "reference-fixture tests render polygon indexes",
+}
+
+
 def py_files(path: Path) -> list[Path]:
     return [path] if path.is_file() else sorted(path.rglob("*.py"))
 
@@ -68,7 +96,7 @@ def py_files(path: Path) -> list[Path]:
 @functools.cache
 def compiled(path: Path):
     with warnings.catch_warnings():
-        warnings.simplefilter("ignore")  # invalid escapes in SQL regex strings
+        warnings.simplefilter("error")  # an invalid escape fails here, not in a later Python
         return compile(path.read_text(), str(path), "exec", dont_inherit=True)
 
 
@@ -104,3 +132,64 @@ def test_every_public_def_has_a_caller():
 def test_allowlist_is_current():
     stale = sorted(set(ALLOWED) - set(uncalled()))
     assert not stale, f"allowlisted defs that now have a caller or are gone: {stale}"
+
+
+def is_column(param: str) -> bool:
+    return param.endswith("_col") or param in COLUMN_NAMES
+
+
+@functools.cache
+def parsed(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), str(path))
+
+
+def called_name(call: ast.Call):
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+
+
+@functools.cache
+def unset_knobs() -> dict[tuple[str, str], str]:
+    """{(function, parameter): "module.py:line"} of the defaulted parameters
+    that no call in CALLERS passes, column names included."""
+    defs = collections.defaultdict(list)
+    for path in py_files(PACKAGE):
+        tree = parsed(path)
+        methods = {f for c in ast.walk(tree) if isinstance(c, ast.ClassDef) for f in c.body}
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs[node.name].append((path, node, node in methods))
+    keywords = collections.defaultdict(set)
+    positional = collections.defaultdict(int)  # most positional arguments any call passes
+    for path in (f for p in CALLERS for f in py_files(p)):
+        for call in ast.walk(parsed(path)):
+            if isinstance(call, ast.Call) and (name := called_name(call)):
+                keywords[name] |= {k.arg for k in call.keywords}
+                positional[name] = max(positional[name], len(call.args))
+    knobs = {}
+    for name, [(path, node, method)] in ((n, d) for n, d in defs.items() if len(d) == 1):
+        if name not in positional:
+            continue
+        args = node.args
+        params = args.posonlyargs + args.args
+        passed = positional[name] + (1 if method else 0)  # obj.f(x) binds self, then x
+        defaulted = [p.arg for i, p in enumerate(params) if i >= max(len(params) - len(args.defaults), passed)]
+        defaulted += [p.arg for p, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None]
+        for param in defaulted:
+            if param not in keywords[name]:
+                knobs[(name, param)] = f"{path.relative_to(ROOT)}:{node.lineno}"
+    return knobs
+
+
+def knobs() -> dict[tuple[str, str], str]:
+    return {k: where for k, where in unset_knobs().items() if not is_column(k[1])}
+
+
+def test_every_knob_is_set_outside_tests():
+    extra = sorted(f"{where} {fn}({param}=...)" for (fn, param), where in knobs().items() if (fn, param) not in ALLOWED_KNOBS)
+    assert not extra, "defaulted parameters that no code outside tests/ sets:\n" + "\n".join(extra)
+
+
+def test_knob_allowlist_is_current():
+    stale = sorted(set(ALLOWED_KNOBS) - set(knobs()))
+    assert not stale, f"allowlisted knobs that now have a caller or are gone: {stale}"

@@ -121,9 +121,10 @@ def test_tall_thin_many_bands(spark):
 
 
 def test_bbox_cap_fails_loud(spark):
-    df = _poly(spark, [_diamond(0, 0, 30 * D)])
+    # a world-spanning bbox at res 13 covers more than 2^24 cells
+    df = _poly(spark, [_diamond(0, 0, 90 * D)])
     with pytest.raises(Exception, match="covers more than"):
-        polygon_rasterize(df, res=9, max_cells_per_polygon=100).collect()
+        polygon_rasterize(df, res=13).collect()
 
 
 class TestPolygonOverlap:

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osmium_tool_spark.operators.similarity import (
+    _pq_topk,
     ann_topk,
     ann_topk_pq,
     pq_encode,
@@ -46,7 +47,7 @@ def test_pq_adc_exact_on_aligned_corpus(aligned):
     """Lossless codes -> ADC ranking == brute-force cosine ranking."""
     df, books, _ = aligned
     queries = df.filter(F.col("vec_id") % 17 == 0)
-    pq = ann_topk_pq(df, queries, k=5, codebooks=books)
+    pq = _pq_topk(df, queries, 5, books, "vec_id", "embedding", refine=0)
     brute = ann_topk(df, queries, k=5, id_col="vec_id")
     want = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in brute.collect()}
     got = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in pq.collect()}
@@ -60,11 +61,10 @@ def test_pq_recall_on_clustered_data(spark):
     rows = [(i, [float(x) for x in pts[i]]) for i in range(len(pts))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = df.filter(F.col("vec_id") % 75 == 0)
-    books = train_pq_codebooks(df, m=M, ksub=KSUB, seed=5)
     brute = {(r["query_id"], r["neighbor_id"]) for r in ann_topk(df, queries, 5, id_col="vec_id").collect()}
-    adc_rows = ann_topk_pq(df, queries, 5, codebooks=books).collect()
+    adc_rows = ann_topk_pq(df, queries, 5, m=M, ksub=KSUB).collect()
     refined = {(r["query_id"], r["neighbor_id"])
-               for r in ann_topk_pq(df, queries, 5, codebooks=books, refine=40).collect()}
+               for r in ann_topk_pq(df, queries, 5, m=M, ksub=KSUB, refine=40).collect()}
     # PQ codes collapse same-cluster members (that IS the compression), so
     # ADC alone can't rank WITHIN a cluster — it must still land in the
     # right cluster (coarse structure)...
@@ -84,8 +84,8 @@ def test_pq_training_deterministic(spark):
         [(i, [float(x) for x in pts[i]]) for i in range(200)],
         "vec_id long, embedding array<double>",
     )
-    b1 = train_pq_codebooks(df, m=M, ksub=KSUB, seed=9)
-    b2 = train_pq_codebooks(df, m=M, ksub=KSUB, seed=9)
+    b1 = train_pq_codebooks(df, m=M, ksub=KSUB)
+    b2 = train_pq_codebooks(df, m=M, ksub=KSUB)
     assert np.array_equal(b1, b2)
 
 
@@ -131,7 +131,7 @@ def test_ivfpq_full_probe_refine_equals_brute(clustered_corpus):
     queries = df.filter(SF.col("vec_id") % 50 == 0)
     got = ann_topk_ivfpq(
         df, queries, k=5, n_centroids=4, nprobe=4, m=M, ksub=KSUB,
-        refine=500, seed=3,
+        refine=500,
     )
     brute = ann_topk(df, queries, k=5, id_col="vec_id")
     want = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in brute.collect()}
@@ -147,7 +147,7 @@ def test_ivfpq_partial_probe_shape_and_recall(clustered_corpus):
     queries = df.filter(SF.col("vec_id") % 50 == 0)
     out = ann_topk_ivfpq(
         df, queries, k=5, n_centroids=8, nprobe=2, m=M, ksub=KSUB,
-        refine=30, seed=3,
+        refine=30,
     ).collect()
     per_q = {}
     for r in out:
@@ -160,21 +160,3 @@ def test_ivfpq_partial_probe_shape_and_recall(clustered_corpus):
     # neighbors live in the query's own list
     assert len(brute & got) / len(brute) >= 0.6
 
-
-def test_ivfpq_persisted_index_reuse(clustered_corpus):
-    from osmium_tool_spark.operators.similarity import (
-        ann_topk_ivfpq,
-        train_ivf_centroids,
-        train_pq_codebooks,
-    )
-
-    df = clustered_corpus
-    from pyspark.sql import functions as SF
-    queries = df.filter(SF.col("vec_id") % 50 == 0)
-    cents = train_ivf_centroids(df, n_centroids=4, seed=3)
-    books = train_pq_codebooks(df, m=M, ksub=KSUB, seed=3)
-    a = ann_topk_ivfpq(df, queries, k=5, centroids=cents, codebooks=books,
-                       nprobe=2).collect()
-    b = ann_topk_ivfpq(df, queries, k=5, centroids=cents, codebooks=books,
-                       nprobe=2).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from osmium_tool_spark.operators.changes import history_intervals, time_filter
 from osmium_tool_spark.operators.export import way_area_geodesic
 from osmium_tool_spark.operators.multimodal import augment_crops
-from osmium_tool_spark.operators.retrieval import build_postings, tfidf_topk
+from osmium_tool_spark.operators.retrieval import tfidf_topk
 from osmium_tool_spark.operators.spatial_join import dist_join
 
 FIXED = 10_000_000
@@ -58,14 +58,6 @@ def test_dist_join_matches_bruteforce(spark, radius):
     got = {(r.id_a, r.id_b)
            for r in dist_join(_points(spark, pts), radius).collect()}
     assert got == _brute(pts, radius)
-
-
-def test_dist_join_two_frames(spark):
-    a = _points(spark, [(1, 0, 0), (2, 5000, 0)])
-    b = _points(spark, [(10, 100, 0), (20, 9000, 0)])
-    got = {(r.id_a, r.id_b) for r in dist_join(a, 1500, others=b).collect()}
-    # (1,10) within 1500; (2,20) at 4000 > 1500; no a<b filter in 2-frame mode
-    assert got == {(1, 10)}
 
 
 def test_dist_join_bad_radius(spark):
@@ -158,19 +150,9 @@ def test_tfidf_hand_computed(spark):
 
 def test_tfidf_max_min_df(spark):
     docs = _docs(spark, ["a b", "a c", "a d"])
-    # max_df=2 drops 'a' (df=3); min_df=2 drops singletons
+    # max_df=2 drops 'a' (df=3)
     terms = {r.term for r in tfidf_topk(docs, k=5, max_df=2).collect()}
     assert "a" not in terms and {"b", "c", "d"} <= terms
-    terms2 = {r.term for r in tfidf_topk(docs, k=5, min_df=2).collect()}
-    assert terms2 == {"a"}
-
-
-def test_tfidf_prebuilt_postings(spark):
-    docs = _docs(spark, ["x y", "y z"])
-    postings, _ = build_postings(docs)
-    a = sorted(map(tuple, tfidf_topk(docs, k=2).collect()))
-    b = sorted(map(tuple, tfidf_topk(docs, k=2, postings=postings).collect()))
-    assert a == b
 
 
 # ------------------------------------------------------ history_intervals

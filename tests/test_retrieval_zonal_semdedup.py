@@ -75,34 +75,6 @@ def test_bm25_matches_reference_formula(spark):
     assert got == pytest.approx(exp)
 
 
-def test_bm25_prebuilt_index_identical(spark):
-    """Injecting the standing index gives byte-identical results to the
-    inline-build path (the 100 TB contract: build once, query many)."""
-    from osmium_tool_spark.operators.retrieval import bm25_topk, build_postings
-
-    docs = _mini_docs(spark)
-    qs = spark.createDataFrame(
-        [(9, "broadcast join"), (10, "spark agg")], "query_id long, qtext string"
-    )
-    inline = sorted(map(tuple, bm25_topk(docs, qs, k=3).collect()))
-    postings, doclens = build_postings(docs)
-    injected = sorted(
-        map(tuple, bm25_topk(docs, qs, k=3, postings=postings, doclens=doclens).collect())
-    )
-    assert inline == injected
-
-
-def test_bm25_max_df_drops_stop_terms(spark):
-    """max_df excludes corpus-wide terms from scoring entirely."""
-    from osmium_tool_spark.operators.retrieval import bm25_topk
-
-    docs = _mini_docs(spark)
-    qs = spark.createDataFrame([(1, "join")], "query_id long, qtext string")
-    # 'join' occurs in docs 0, 2, 4 -> df = 3; cap at 2 kills the only term
-    out = bm25_topk(docs, qs, k=5, max_df=2)
-    assert out.count() == 0
-
-
 # ---------------------------------------------------------------------------
 # zonal stats
 # ---------------------------------------------------------------------------
@@ -185,14 +157,13 @@ def test_semantic_dedup_one_cluster_equals_brute_force(spark):
     assert len(got) < len(rows)  # the threshold actually prunes something
 
 
-def test_semantic_dedup_cluster_cap_fails_loud(spark):
-    from osmium_tool_spark.operators.similarity import semantic_dedup
+def test_semantic_dedup_cluster_cap_fails_loud(spark, monkeypatch):
+    from osmium_tool_spark.operators import similarity
 
+    monkeypatch.setattr(similarity, "MAX_CLUSTER_ROWS", 3)
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    with pytest.raises(Exception, match="max_cluster_rows"):
-        semantic_dedup(
-            emb, threshold=0.9, n_clusters=1, id_col="vec_id", max_cluster_rows=3
-        ).collect()
+    with pytest.raises(Exception, match="MAX_CLUSTER_ROWS"):
+        similarity.semantic_dedup(emb, threshold=0.9, n_clusters=1, id_col="vec_id").collect()
 
 
 def test_semantic_dedup_survivors_unique_and_subset(spark):
@@ -226,14 +197,6 @@ def test_normalize_text_nfc_and_controls(spark):
     assert got[1].text_norm == "café composed" and got[1].changed
     assert got[2].text_norm == "ctrlheretoo" and got[2].n_ctrl == 2
     assert got[3].text_norm == "spaced out run" and got[3].n_ctrl == 0
-
-
-def test_normalize_text_fold_accents(spark):
-    from osmium_tool_spark.operators.text import normalize_text
-
-    df = spark.createDataFrame([(0, "école résumé")], "doc_id long, text string")
-    out = normalize_text(df, fold_accents=True).collect()[0]
-    assert out.text_norm == "ecole resume"
 
 
 def test_normalize_text_ascii_passthrough_matches(spark):

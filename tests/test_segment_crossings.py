@@ -118,4 +118,4 @@ def test_bruteforce_parity_and_res_invariance(spark):
 def test_planet_chord_fails_loud(spark):
     segs = [(1, 1, -170 * D, -80 * D, 170 * D, 80 * D)]
     with pytest.raises(Exception, match="covers more than"):
-        segment_crossings(_df(spark, segs), res=7, max_cells_per_seg=16).collect()
+        segment_crossings(_df(spark, segs), res=7).collect()

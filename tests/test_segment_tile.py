@@ -136,7 +136,7 @@ def test_cap_raises_loud(spark):
     # planet chord at fine res blows the cap
     segs = [(1, 1, -170 * D, -80 * D, 170 * D, 80 * D)]
     with pytest.raises(Exception, match="more than"):
-        segment_tile_assign(_df(spark, segs), res=10, max_cells_per_seg=8).count()
+        segment_tile_assign(_df(spark, segs), res=10).count()
 
 
 def test_res_guard(spark):

@@ -27,7 +27,7 @@ def ents(spark):
 
 def test_write_sorted_order_contract(spark, ents, tmp_path):
     path = str(tmp_path / "out")
-    hdr = write_sorted(ents, path, num_files=2, header={"bounds": [0, 0, 1, 1]})
+    hdr = write_sorted(ents, path, header={"bounds": [0, 0, 1, 1]})
     assert hdr["sorting"] == "Type_then_ID"
     assert read_header(path)["generator"].startswith("osmium_tool_spark")
     # canonical order: negatives first by |id|, then positives, then ways

@@ -74,11 +74,11 @@ def test_over_cap_fails_loud(spark):
     from osmium_tool_spark.operators.spatial_join import build_polygon_cell_index
 
     big = spark.createDataFrame([(1, [_diamond(0, 0, 1_500_000_000)])], RINGS)
-    with pytest.raises(Exception, match="max_cells_per_polygon"):
-        build_polygon_cell_index(big, res=12, max_cells_per_polygon=100).count()
+    with pytest.raises(Exception, match="MAX_CELLS_PER_POLYGON"):
+        build_polygon_cell_index(big, res=12).count()
 
 
-def test_payload_passthrough_and_over_500_polygons(spark):
+def test_over_500_polygons(spark):
     from osmium_tool_spark.operators.spatial_join import spatial_join
 
     polys = spark.range(520).select(
@@ -95,12 +95,8 @@ def test_payload_passthrough_and_over_500_polygons(spark):
             )
         ).alias("rings"),
     )
-    pts = _points(spark).withColumn("tag", (F.col("id") % 9).cast("long"))
-    out = spatial_join(pts, polys, res=6, payload_cols=["tag"])
-    rows = out.collect()
+    rows = spatial_join(_points(spark), polys, res=6).collect()
     assert len(rows) > 0
-    # payload must equal the source derivation for every emitted pair
-    assert all(r.tag == r.id % 9 for r in rows)
 
 
 # ------------------------------------------------------------- grid_cluster

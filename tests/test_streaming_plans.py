@@ -104,6 +104,61 @@ def test_checkpointed_pipeline_resume(spark, tmp_path):
     assert os.path.exists(os.path.join(root, "lineage.jsonl"))
 
 
+def _two_stage(root, calls):
+    p = CheckpointedPipeline(root)
+
+    @p.stage("a")
+    def a(s, prev):
+        calls["a"] += 1
+        return s.range(10).withColumnRenamed("id", "x")
+
+    @p.stage("b")
+    def b(s, prev):
+        calls["b"] += 1
+        return prev.filter(F.col("x") % 2 == 0)
+
+    return p
+
+
+def test_checkpointed_data_without_metrics_reruns(spark, tmp_path):
+    root = str(tmp_path / "pipe")
+    calls = {"a": 0, "b": 0}
+    _two_stage(root, calls).run(spark)
+    os.remove(os.path.join(root, "a", "metrics.json"))  # _SUCCESS data stays
+    assert _two_stage(root, calls).run(spark).count() == 5
+    assert calls == {"a": 2, "b": 1}
+
+
+def test_checkpointed_metrics_without_data_reruns(spark, tmp_path):
+    import shutil
+
+    root = str(tmp_path / "pipe")
+    calls = {"a": 0, "b": 0}
+    _two_stage(root, calls).run(spark)
+    shutil.rmtree(os.path.join(root, "a", "data"))  # metrics.json stays
+    assert _two_stage(root, calls).run(spark).count() == 5
+    assert calls == {"a": 2, "b": 1}
+
+
+def test_checkpointed_lineage_failure_then_resume(spark, tmp_path):
+    """A crash in the lineage append must not leave the stage complete:
+    the resume reruns it, so every completed stage has a record."""
+    import json
+
+    root = str(tmp_path / "pipe")
+    lineage = os.path.join(root, "lineage.jsonl")
+    os.makedirs(lineage)  # a directory there makes the append fail
+    calls = {"a": 0, "b": 0}
+    with pytest.raises(OSError):
+        _two_stage(root, calls).run(spark)
+    os.rmdir(lineage)
+    _two_stage(root, calls).run(spark)
+    with open(lineage) as f:
+        stages = [json.loads(line)["stage"] for line in f]
+    assert stages == ["a", "b"]
+    assert calls == {"a": 2, "b": 1}
+
+
 def test_partition_histogram(spark):
     df = spark.range(0, 100, 1, 4)
     hist = partition_histogram(df)

@@ -139,15 +139,6 @@ class TestDensitySurface:
         total = density_surface(pts, res=5).agg(F.sum("density")).collect()[0][0]
         assert total == 16 * 20
 
-    def test_empty_kernel_raises(self, spark):
-        import pytest as _pytest
-
-        from osmium_tool_spark.operators.tiles import density_surface
-
-        pts = self._pts(spark, [(1, 0, 0)])
-        with _pytest.raises(ValueError, match="empty kernel"):
-            density_surface(pts, kernel={})
-
 
 # ------------------------------------------------------- tile_buffer_assign
 

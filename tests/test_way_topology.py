@@ -146,12 +146,16 @@ def test_junctions_negative_coord_snap(spark):
     assert out == {(1, 2): 1}
 
 
-def test_junctions_degree_cap_fails_loud(spark):
+def test_junctions_degree_cap_fails_loud(spark, monkeypatch):
+    from osmium_tool_spark.operators import spatial_join
+
     rows = []
     for wid in range(1, 6):
         rows += _way(spark, wid, [(0, 0), (wid * D, D)])
     df = _segs(spark, rows)
     # 5 ways at one vertex -> C(5,2)=10 pairs when cap allows
-    assert sum(_junc(way_junctions(df, max_ways_per_vertex=5)).values()) == 10
+    monkeypatch.setattr(spatial_join, "MAX_WAYS_PER_VERTEX", 5)
+    assert sum(_junc(way_junctions(df)).values()) == 10
+    monkeypatch.setattr(spatial_join, "MAX_WAYS_PER_VERTEX", 4)
     with pytest.raises(Exception, match="shared by more than"):
-        way_junctions(df, max_ways_per_vertex=4).collect()
+        way_junctions(df).collect()
