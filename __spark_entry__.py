@@ -1849,10 +1849,11 @@ def q_ways_crossing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_polygon_rasterize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relational vector->raster conversion: res-9 cells whose center is
-    inside each of 48 diamond polygons — y-banded edge equi-join (the
-    reference's extract_polygon y-band index as a JOIN KEY), exact
-    2n-scaled integer raycast in decimal(29,0). The oracle is the
+    """Vector->raster conversion: res-9 cells whose center is inside
+    each of 48 diamond polygons — one mapInPandas emits each polygon's
+    scanline runs (the crossings of each row's center line, sorted and
+    paired in exact 2n-scaled integers), Spark spreads them on
+    (poly_id, cy) and explodes them into cells. The oracle is the
     ALGORITHM-INDEPENDENT closed form |dx|+|dy| < r on cell centers;
     both sides drop centers within 4 scaled units of the boundary (an
     exact tie is classified by ray direction, not distance)."""
@@ -3260,7 +3261,8 @@ def q_crop_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_compact_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cell-cover compaction (functions/cells.compact_cover — the H3
     compact / S2 normalization for the Morton quadtree): the res-9
-    diamond rasterizations from polygon_rasterize compact down to
+    diamond rasterizations from polygon_rasterize (scanline runs
+    exploded into cells) compact down to
     res 4, replacing every full sibling quad by its parent level by
     level (one shrinking hash aggregate per level, no joins). The
     oracle unrolls the five levels over the closed-form rasterization
@@ -5291,7 +5293,7 @@ GROUP BY 1, 2
 
     # polygon_rasterize: ALGORITHM-INDEPENDENT closed-form diamond
     # containment |dx|+|dy| < r on 2n-scaled integer cell centers (the
-    # engine runs y-banded crossing parity); both sides drop the
+    # engine pairs scanline crossings); both sides drop the
     # +-4-scaled-unit boundary band where an exact tie would be
     # classified by ray direction rather than distance.
     _rn = 2 * (1 << 9)

@@ -40,7 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.fixpoint import CLOSURE_ROUNDS, fixpoint
-from ..functions.geometry import CellCover, Extract, ship_by_value
+from ..functions.cells import MAX_RES
+from ..functions.geometry import CellCover, Extract, box_cells, ship_by_value
 from ..functions.sortkeys import canonical_sort
 from ..schema import NODE, RELATION, WAY
 
@@ -163,7 +164,10 @@ def assign_extracts(
         # docstring) classifies grid cells driver-side ONCE so executors
         # ray-cast only the points in boundary cells
         ship_by_value()
-        regions = [(e.extract_id, CellCover.build(e.index)) for e in polys]
+        regions = []
+        for e in polys:
+            res = max(r for r in range(MAX_RES + 1) if box_cells(e.index, r) <= CellCover.MAX_CELLS)
+            regions.append((e.extract_id, CellCover.build(e.index, res)))
 
         def pip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -398,16 +402,3 @@ def extract(
     )
     node_ids = _union([marked_nodes, extra_nodes_smart, extra_node_member_ids]).distinct()
     return _emit(entities, {NODE: node_ids, WAY: all_ways, RELATION: rel_ids})
-
-
-def extract_bbox_df(
-    entities: DataFrame,
-    left: float,
-    bottom: float,
-    right: float,
-    top: float,
-    strategy: str = "simple",
-    **kw,
-) -> DataFrame:
-    """Single-bbox convenience wrapper."""
-    return extract(entities, [Extract.bbox(0, left, bottom, right, top)], strategy=strategy, **kw)

@@ -9,13 +9,10 @@ more than fits in a plan literal or a driver loop.
 This operator makes the polygon set a DATAFRAME and the join a plain
 equi-join through a distributed cell index:
 
-  1. index build (distributed over polygons, mapInPandas): each polygon
-     emits its covering grid cells at resolution `res` (the same Morton
-     cells as functions/cells.cell_id), each classified INSIDE (cell
-     entirely within the polygon) or BOUNDARY (a segment may cross it).
-     Classification is conservative-correct: a cell counts as boundary
-     if any segment's envelope overlaps it; otherwise the cell-center
-     ray cast decides inside/outside uniformly for the whole cell.
+  1. index build (mapInPandas over polygons): each polygon emits its
+     `geometry.scanline_cover` cells at resolution `res` (the Morton
+     cells of functions/cells.cell_id): BOUNDARY cells, which a segment
+     may touch, and INSIDE cells, whose whole extent is in the polygon.
   2. points compute their cell id as pure Column math and EQUI-JOIN the
      index on the cell — no cross product anywhere; Catalyst picks
      broadcast vs shuffle by index size, AQE handles dense-cell skew.
@@ -35,10 +32,9 @@ would make the interior shortcut quietly disappear.
 
 Polygon geometry rides a DataFrame column: rings as
 array<array<struct<x:long,y:long>>> (outer + inner pooled, even-odd —
-the multipolygon model of functions/geometry.BandIndex). Both kernels
-turn a polygon's rings into a geometry.BandIndex and run its exact
-`contains`; geometry.ship_by_value() lets the nested closures carry that
-module to executors that do not have this package on sys.path.
+the multipolygon model of functions/geometry.BandIndex);
+geometry.ship_by_value() lets both kernels carry that module to
+executors that do not have this package on sys.path.
 """
 
 from __future__ import annotations
@@ -50,8 +46,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import _LAT_MIN, _LAT_SPAN, _LON_MIN, _LON_SPAN, cell_id, ord_x, ord_y
-from ..functions.geometry import BandIndex, rings_from_structs, ship_by_value
+from ..functions.cells import _LAT_SPAN, _LON_SPAN, cell_id, morton_py, ord_x, ord_y
+from ..functions.geometry import (
+    BandIndex, box_cells, rings_from_structs, run_cells, scanline_cover, ship_by_value,
+)
 
 RINGS_TYPE = "array<array<struct<x:long,y:long>>>"
 
@@ -69,16 +67,14 @@ def build_polygon_cell_index(
     poly_id: str = "poly_id",
     rings_col: str = "rings",
 ) -> DataFrame:
-    """(cell:long, poly_id, interior:boolean) covering-cell index.
-
-    Distributed over the polygon table (mapInPandas) — the driver never
-    sees a geometry.
-    """
+    """(cell:long, poly_id, interior:boolean) covering-cell index: the
+    boundary cells of each polygon's `geometry.scanline_cover` with
+    interior=false, its other run cells with interior=true. Distributed
+    over the polygon table (mapInPandas) — the driver never sees a
+    geometry."""
     r = int(res)
     n = 1 << r
     cap = MAX_CELLS_PER_POLYGON
-    lon_min, lon_span = _LON_MIN, _LON_SPAN
-    lat_min, lat_span = _LAT_MIN, _LAT_SPAN
     pid_name, rings_name = poly_id, rings_col
     ship_by_value()
 
@@ -87,92 +83,25 @@ def build_polygon_cell_index(
 
         import numpy as np
 
-        def ordinate(v, vmin, span):
-            # parity with cells._ix/_iy: exact long difference scaled by n,
-            # then the same double division Spark's Column math performs
-            raw = np.floor((v - vmin).astype(np.float64) * n / span)
-            return np.clip(raw.astype(np.int64), 0, n - 1)
-
-        def morton(ix, iy):
-            code = np.zeros(len(ix), dtype=np.int64)
-            for b in range(r):
-                code |= ((ix >> b) & 1) << (2 * b)
-                code |= ((iy >> b) & 1) << (2 * b + 1)
-            return code | (np.int64(r) << 56)
-
         for pdf in batches:
             cells_out, pid_out, int_out = [], [], []
             for pid, rings in zip(pdf[pid_name], pdf[rings_name]):
                 index = BandIndex.build(rings_from_structs(rings))
-                segs = index.segs
-                if len(segs) == 0:
-                    continue
-                ix0 = int(ordinate(np.array([index.minx]), lon_min, lon_span)[0])
-                ix1 = int(ordinate(np.array([index.maxx]), lon_min, lon_span)[0])
-                iy0 = int(ordinate(np.array([index.miny]), lat_min, lat_span)[0])
-                iy1 = int(ordinate(np.array([index.maxy]), lat_min, lat_span)[0])
-                ncells = (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
+                ncells = box_cells(index, r)
                 if ncells > cap:
                     fit = max(1, r - math.ceil(math.log2(ncells / cap) / 2))
                     raise ValueError(
                         f"spatial_join: polygon {pid} covers {ncells} cells at "
                         f"res {r} > MAX_CELLS_PER_POLYGON={cap}; use res<={fit}"
                     )
-                w = ix1 - ix0 + 1
-                h = iy1 - iy0 + 1
-                # conservative boundary mark: each segment is split into
-                # pieces no longer than ~one cell per axis and each piece's
-                # envelope (padded 1 unit against float rounding) is filled —
-                # perimeter-sized work; a whole-segment envelope fill would
-                # mark a diagonal's full bbox and erase the interior shortcut.
-                grid = np.zeros((h, w), dtype=bool)
-                cw = lon_span / n
-                ch = lat_span / n
-                for k in range(len(segs)):
-                    x1s, y1s, x2s, y2s = (float(v) for v in segs[k])
-                    steps = int(
-                        max(abs(x2s - x1s) / cw, abs(y2s - y1s) / ch, 1.0)
-                    ) + 1
-                    t = np.linspace(0.0, 1.0, steps + 1)
-                    xs_l = x1s + (x2s - x1s) * t
-                    ys_l = y1s + (y2s - y1s) * t
-                    px0 = ordinate(
-                        np.minimum(xs_l[:-1], xs_l[1:]).astype(np.int64) - 1,
-                        lon_min, lon_span,
-                    ) - ix0
-                    px1 = ordinate(
-                        np.maximum(xs_l[:-1], xs_l[1:]).astype(np.int64) + 1,
-                        lon_min, lon_span,
-                    ) - ix0
-                    py0 = ordinate(
-                        np.minimum(ys_l[:-1], ys_l[1:]).astype(np.int64) - 1,
-                        lat_min, lat_span,
-                    ) - iy0
-                    py1 = ordinate(
-                        np.maximum(ys_l[:-1], ys_l[1:]).astype(np.int64) + 1,
-                        lat_min, lat_span,
-                    ) - iy0
-                    for p in range(len(px0)):
-                        grid[
-                            max(int(py0[p]), 0) : int(py1[p]) + 1,
-                            max(int(px0[p]), 0) : int(px1[p]) + 1,
-                        ] = True
-                gy, gx = np.nonzero(grid)
-                cells_b = morton(gx + ix0, gy + iy0)
-                # non-boundary cells: the integer cell CENTER classifies all
-                gy_i, gx_i = np.nonzero(~grid)
-                mix, miy = gx_i + ix0, gy_i + iy0
-                cx = lon_min + ((mix * 2 + 1) * lon_span) // (2 * n)
-                cy = lat_min + ((miy * 2 + 1) * lat_span) // (2 * n)
-                inside = index.contains(cx, cy)
-                cells_i = morton(mix[inside], miy[inside])
-                cells_out.extend([cells_b, cells_i])
-                pid_out.extend(
-                    [np.full(len(cells_b), pid), np.full(len(cells_i), pid)]
-                )
-                int_out.extend(
-                    [np.zeros(len(cells_b), bool), np.ones(len(cells_i), bool)]
-                )
+                boundary, interior = scanline_cover(index, r)
+                ix, iy = run_cells(interior)
+                inner = ~np.isin(iy << r | ix, boundary)
+                cx = np.r_[boundary & (n - 1), ix[inner]]
+                cy = np.r_[boundary >> r, iy[inner]]
+                cells_out.append((r << 56) | morton_py(cx, cy, r))
+                pid_out.append(np.full(len(cx), pid))
+                int_out.append(np.arange(len(cx)) >= len(boundary))
             if cells_out:
                 yield pd.DataFrame(
                     {

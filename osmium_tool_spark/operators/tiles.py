@@ -29,8 +29,9 @@ from ..functions.cells import (
     _LON_SPAN,
     cell_id,
     cell_parent,
-    ord_x,
-    ord_y,
+)
+from ..functions.geometry import (
+    BandIndex, box_cells, rings_from_structs, scanline_cover, ship_by_value,
 )
 
 
@@ -318,121 +319,36 @@ def polygon_rasterize(
     segment index, extract_polygon.cpp:77-84, and the export tiling
     surface). Output: (poly_id, cx, cy), one row per interior cell.
 
-    This is the RELATIONAL rasterizer: spatial_join's
-    build_polygon_cell_index rasterizes each polygon inside one Pandas
-    batch — the polygon is the parallelism unit, fine for <=65k cells —
-    whereas here a single continent-scale polygon distributes across
-    the cluster, because the unit of work is the (band, edge) pair:
-
-      1. rings -> edges (arrays_zip of shifted slices, zero-length
-         dropped) -> each edge explodes to the y-bands its y-range
-         covers. This mirrors the reference's y-band index as a JOIN
-         KEY instead of a per-polygon in-RAM structure.
-      2. polygon bbox -> candidate cells, exploded band-first with a
-         repartition on (poly_id, cy) BETWEEN the two explodes, so one
-         giant polygon's cell stream is produced by many tasks, not one.
-         Bbox cells are capped LOUDLY at `MAX_RASTER_CELLS`.
-      3. candidates join edges on (poly_id, cy): an edge that straddles
-         a center's y always shares its band (the ordinate is monotone),
-         so the crossing count per cell is exact; cells in edge-free
-         bands are outside by definition and die in the inner join.
-      4. per (poly_id, cx, cy): even-odd parity of the strict raycast
-         count (+ the center-on-vertex => inside rule, matching
-         functions/geometry.BandIndex.contains exactly).
-
-    Exactness: centers are represented in 2n-scaled integer space
-    (PX = 2n*lon_min + (2cx+1)*lon_span — no floats anywhere); the
-    raycast comparison products reach ~5e25 at res 12, so they are
-    computed in decimal(14,0) x decimal(14,0) -> decimal(29,0), still
-    whole-stage codegen. At 100 TB: one exchange for the band
-    repartition, one for the (poly_id, cy) equi-join, one for the
-    parity aggregate — all keyed, no cross product; AQE splits
-    wide-polygon band skew.
+    One mapInPandas over the polygons emits the interior runs of
+    `geometry.scanline_cover` (exact centres, BandIndex's rule); Spark
+    repartitions them on (poly_id, cy) and only then explodes them, so
+    one continent-scale polygon's cells spread across tasks. A polygon
+    whose bbox holds more than `MAX_RASTER_CELLS` cells fails loud.
     """
+    import pandas as pd
+
     r = int(res)
-    n = 1 << r
     cap = MAX_RASTER_CELLS
-    pid = F.col(poly_id).alias("pid")
+    ship_by_value()
 
-    # -- edges, banded by the y-range each covers ------------------------
-    ring = polygons.select(pid, F.explode(rings_col).alias("ring"))
-    k = F.greatest(F.size("ring") - 1, F.lit(0))
-    segs = (
-        ring.select(
-            "pid",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("ring", F.lit(1), k).alias("p"),
-                    F.slice("ring", F.lit(2), k).alias("q"),
-                )
-            ).alias("s"),
-        )
-        .select(
-            "pid",
-            F.col("s.p.x").alias("x1"), F.col("s.p.y").alias("y1"),
-            F.col("s.q.x").alias("x2"), F.col("s.q.y").alias("y2"),
-        )
-        .filter((F.col("x1") != F.col("x2")) | (F.col("y1") != F.col("y2")))
-    )
-    edges = segs.select(
-        "pid", "x1", "y1", "x2", "y2",
-        F.explode(
-            F.sequence(ord_y(F.least("y1", "y2"), r), ord_y(F.greatest("y1", "y2"), r))
-        ).alias("cy"),
-    )
+    def runs(batches):
+        for pdf in batches:
+            out = []
+            for pid, rings in zip(pdf[poly_id], pdf[rings_col]):
+                index = BandIndex.build(rings_from_structs(rings if rings is not None else []))
+                if box_cells(index, r) > cap:
+                    raise ValueError(
+                        f"polygon bbox covers more than {cap} cells at res {r}: coarsen res"
+                    )
+                frame = pd.DataFrame(scanline_cover(index, r)[1], columns=["cy", "cx0", "cx1"])
+                out.append(frame.assign(**{poly_id: pid}))
+            if out:
+                yield pd.concat(out)
 
-    # -- candidate cells: bbox explode, band-first, redistributed --------
-    flat = F.flatten(F.col(rings_col))
-    xs = F.transform(flat, lambda p: p["x"])
-    ys = F.transform(flat, lambda p: p["y"])
-    boxed = polygons.select(
-        pid,
-        ord_x(F.array_min(xs), r).alias("ix0"), ord_x(F.array_max(xs), r).alias("ix1"),
-        ord_y(F.array_min(ys), r).alias("iy0"), ord_y(F.array_max(ys), r).alias("iy1"),
-    ).filter(
-        F.when(
-            (F.col("ix1") - F.col("ix0") + 1) * (F.col("iy1") - F.col("iy0") + 1)
-            > cap,
-            F.raise_error(
-                F.lit(
-                    f"polygon bbox covers more than {cap} cells at res {r}: coarsen res"
-                )
-            ).isNull(),
-        ).otherwise(F.lit(True))
-    )
-    bands = boxed.select(
-        "pid", "ix0", "ix1",
-        F.explode(F.sequence("iy0", "iy1")).alias("cy"),
-    ).repartition("pid", "cy")
-    cand = bands.select(
-        "pid", "cy", F.explode(F.sequence("ix0", "ix1")).alias("cx")
-    )
-
-    # -- exact raycast in 2n-scaled integer space ------------------------
-    DEC = "decimal(14,0)"
-    px = F.lit(2 * n * _LON_MIN) + (2 * F.col("cx") + 1) * F.lit(_LON_SPAN)
-    py = F.lit(2 * n * _LAT_MIN) + (2 * F.col("cy") + 1) * F.lit(_LAT_SPAN)
-    sx1, sy1 = F.col("x1") * (2 * n), F.col("y1") * (2 * n)
-    sx2, sy2 = F.col("x2") * (2 * n), F.col("y2") * (2 * n)
-    straddle = (sy1 > py) != (sy2 > py)
-    ax, ay = sx1 - sx2, sy1 - sy2
-    comp = (px - sx2).cast(DEC) * ay.cast(DEC) < ax.cast(DEC) * (py - sy2).cast(DEC)
-    toggle = straddle & ((ay > 0) == comp)
-    on_vertex = ((px == sx1) & (py == sy1)) | ((px == sx2) & (py == sy2))
-
-    joined = cand.join(edges, on=["pid", "cy"])
-    return (
-        joined.groupBy(
-            F.col("pid").alias(poly_id), F.col("cx").alias("cx"),
-            F.col("cy").alias("cy"),
-        )
-        .agg(
-            F.sum(toggle.cast("int")).alias("_n"),
-            F.max(on_vertex).alias("_v"),
-        )
-        .filter((F.col("_n") % 2 == 1) | F.col("_v"))
-        .drop("_n", "_v")
-    )
+    schema = f"{poly_id} {dict(polygons.dtypes)[poly_id]}, cy long, cx0 long, cx1 long"
+    spread = polygons.select(poly_id, rings_col).mapInPandas(runs, schema=schema)
+    spread = spread.repartition(poly_id, "cy")
+    return spread.select(poly_id, F.explode(F.sequence("cx0", "cx1")).alias("cx"), "cy")
 
 
 def density_pixels(
@@ -874,8 +790,8 @@ def polygon_overlap(
     counts are res-cell areas and iou = n_shared/(n_a + n_b - n_shared)
     (one division of exact BIGINTs).
 
-    Scale shape: each layer rasterizes independently (the y-banded edge
-    equi-join of `polygon_rasterize`), then ONE equi-join on the cell
+    Scale shape: each layer rasterizes independently (the scanline runs
+    of `polygon_rasterize`), then ONE equi-join on the cell
     key + one hash-agg — no polygon x polygon pairing ever forms; the
     cell IS the spatial index, so two layers of 10^6 polygons meet only
     where they actually overlap. Precision is the cell grid (raise

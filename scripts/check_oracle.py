@@ -11,8 +11,10 @@ from __future__ import annotations
 import sys
 import time
 import traceback
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package and registry, wherever it is run from
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def canon(rows, colnames):

@@ -321,11 +321,10 @@ def main() -> None:
                                         res=10, prefix_res=3)))
     )
 
-    # 23. polygon_rasterize: banded-edge equi-join — expect ONE
-    # repartition exchange on (pid, cy), ONE shuffled hash join on the
-    # same key, ONE partial/final aggregate pair for the parity count;
-    # the raycast decimal products stay inside codegen (no UDF, no
-    # cross join, no window).
+    # 23. polygon_rasterize: scanline runs — expect ONE MapInPandas over
+    # the polygons (runs per row, geometry.scanline_cover), ONE
+    # repartition exchange on (poly_id, cy) and the run explode after
+    # it; no join, no aggregate, no window.
     from osmium_tool_spark.operators.tiles import polygon_rasterize
 
     def _pt(x, y):
@@ -343,7 +342,7 @@ def main() -> None:
         )).alias("rings"),
     )
     sections.append(
-        ("polygon_rasterize (banded-edge join, decimal raycast parity agg)",
+        ("polygon_rasterize (scanline runs: MapInPandas, (poly_id, cy) exchange, explode)",
          capture_explain(polygon_rasterize(polys, res=9)))
     )
 

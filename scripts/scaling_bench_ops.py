@@ -294,12 +294,11 @@ def run_shard_manifest():
 
 
 def run_polygon_rasterize():
-    # 4,096 diamond polygons at res 12: each bbox is ~137x273 cells
-    # (~37k candidates), so the (pid, cy) band join carries ~150M
-    # candidate rows against ~2.2M banded edge rows — the same row
-    # volume as the density_surface scatter, but join-bound instead of
-    # aggregate-bound. Polygon geometry is hash-derived column math
-    # (no Window, no driver data), identical at both levels.
+    # 4,096 diamond polygons at res 12: each bbox is ~137x273 cells,
+    # half of them inside — ~75M output cells from ~1.1M scanline runs
+    # shuffled on (poly_id, cy) and exploded after the exchange.
+    # Polygon geometry is hash-derived column math (no Window, no
+    # driver data), identical at both levels.
     from osmium_tool_spark.operators.tiles import polygon_rasterize
 
     k = F.col("id")

@@ -98,14 +98,13 @@ class TestExtractHistory:
     strategy_complete_ways_with_history.cpp:30-188)."""
 
     def test_all_versions_of_marked_ids(self, spark):
-        from osmium_tool_spark.operators.extract import extract_bbox_df
         from osmium_tool_spark.schema import NODE, WAY
-        from osmium_tool_spark.sources import fixtures
 
         hist = fixtures.history_input(spark)
         # bbox catches node 1 v1/v2 locations but NOT node 2's
-        out = extract_bbox_df(
-            hist, 0.5, 0.5, 1.4, 3.0, strategy="complete_ways_with_history"
+        out = extract(
+            hist, [Extract.bbox(0, 0.5, 0.5, 1.4, 3.0)],
+            strategy="complete_ways_with_history",
         )
         got = {(r.type, r.id, r.version) for r in out.collect()}
         # node 1: all 3 versions (incl. the delete); node 2: pulled in as an

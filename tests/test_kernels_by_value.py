@@ -3,10 +3,12 @@ osmium_tool_spark. A driver script in a temp directory (no PYTHONPATH,
 cwd away from the repo) puts the repo on its own sys.path only; the
 workers it spawns do not see it. A control `map` that calls a package
 function by reference must fail there with ModuleNotFoundError, which
-proves the harness; the large-polygon `assign_extracts`, a two-polygon
-`spatial_join`, `decode_codec_meta` over a PNG, a PBF write->read of
-nodes, ways and relations, the distributed XML read, `write_mvt_tiles`
-and `read_opl` must then succeed, because their kernels carry
+proves the harness; `polygon_rasterize` (the first geometry kernel of the
+run, checked against the driver's own cover), the large-polygon
+`assign_extracts`, a two-polygon `spatial_join`, `decode_codec_meta` over
+a PNG, a PBF write->read of nodes, ways and relations, the distributed
+XML read, `write_mvt_tiles` and `read_opl` must then succeed, because
+their kernels carry
 `functions/geometry.py`, the image codecs, `functions/protowire.py`
 and the PBF/XML source modules by value."""
 
@@ -32,9 +34,12 @@ spark.sparkContext.setLogLevel("ERROR")
 
 from osmium_tool_spark import schema
 from osmium_tool_spark.functions import png
-from osmium_tool_spark.functions.geometry import Extract, normalize_ring
+from osmium_tool_spark.functions.geometry import (
+    BandIndex, Extract, normalize_ring, run_cells, scanline_cover,
+)
 from osmium_tool_spark.operators.extract import assign_extracts
 from osmium_tool_spark.operators.spatial_join import spatial_join
+from osmium_tool_spark.operators.tiles import polygon_rasterize
 from osmium_tool_spark.sources.images import decode_codec_meta
 
 try:
@@ -59,16 +64,25 @@ nodes = spark.createDataFrame(
     "id long, lon long, lat long",
 )
 
-ex = Extract.polygon(1, [ngon(200, 1_000_000), normalize_ring(ngon(200, 500_000), outer=False)])
-want = set(np.flatnonzero(ex.index.contains(xs, ys)).tolist())
-got = {{r.id for r in assign_extracts(nodes, [ex]).collect()}}
-print("EXTRACT", got == want and len(want) > 0)
-
 rings = {{7: [ngon(90, 600_000, -400_000, 0)], 8: [ngon(5, 500_000, 500_000, 200_000)]}}
 polys = spark.createDataFrame(
     [(k, [[{{"x": int(x), "y": int(y)}} for x, y in ring] for ring in rs]) for k, rs in rings.items()],
     "poly_id long, rings array<array<struct<x:long,y:long>>>",
 )
+
+# first geometry kernel of the run: nothing else has shipped geometry yet
+want = set()
+for k, rs in rings.items():
+    cx, cy = run_cells(scanline_cover(BandIndex.build(rs), 16)[1])
+    want |= {{(k, x, y) for x, y in zip(cx.tolist(), cy.tolist())}}
+got = {{tuple(r) for r in polygon_rasterize(polys, res=16).collect()}}
+print("RASTERIZE", got == want and {{k for k, _, _ in want}} == {{7, 8}})
+
+ex = Extract.polygon(1, [ngon(200, 1_000_000), normalize_ring(ngon(200, 500_000), outer=False)])
+want = set(np.flatnonzero(ex.index.contains(xs, ys)).tolist())
+got = {{r.id for r in assign_extracts(nodes, [ex]).collect()}}
+print("EXTRACT", got == want and len(want) > 0)
+
 want = {{
     (k, int(i))
     for k, rs in rings.items()
@@ -146,6 +160,6 @@ def test_kernels_run_without_repo_on_worker_path(tmp_path):
     assert r.returncode == 0, r.stderr[-3000:]
     out = r.stdout
     assert "CONTROL_MODULE_NOT_FOUND" in out, out[-2000:]
-    for marker in ("EXTRACT True", "SPATIAL_JOIN True", "DECODE True",
+    for marker in ("RASTERIZE True", "EXTRACT True", "SPATIAL_JOIN True", "DECODE True",
                    "PBF True", "XML True", "MVT True", "OPL True"):
         assert marker in out, out[-2000:]

@@ -70,10 +70,11 @@ def test_opl_roundtrip(spark, tmp_path):
 def test_opl_through_extract(spark, opl_path):
     """OPL input drives the extract operator end-to-end (the reference's
     antimeridian fixtures are .opl)."""
-    from osmium_tool_spark.operators.extract import extract_bbox_df
+    from osmium_tool_spark.functions.geometry import Extract
+    from osmium_tool_spark.operators.extract import extract
 
     ents = read_opl(spark, opl_path)
-    out = extract_bbox_df(ents, 10, -50, 20, -40, strategy="simple")
+    out = extract(ents, [Extract.bbox(0, 10, -50, 20, -40)], strategy="simple")
     got = {(r.type, r.id) for r in out.collect()}
     assert (NODE, 100) in got
     assert (WAY, 200) in got  # way touches marked node 100

@@ -66,7 +66,6 @@ ALLOWED = {
     "theta_merge": "theta sketch merge with no caller",
     "theta_estimate": "theta estimate with no caller",
     "fingerprint": "text fingerprint with no caller",
-    "extract_bbox_df": "bbox shorthand for extract, only tests use it",
     "read_webdataset_shards": "shard reader with no caller",
     "read_geojson_collection": "FeatureCollection reader no command or query reads with",
     "polygons_from_features": "GeoJSON to spatial_join adapter with no caller",

@@ -4,7 +4,10 @@ shortcut (`CellCover.contains`) agree with each other and with a direct
 transliteration of the reference crossing rule
 (src/extract/extract_polygon.cpp:103-156) on random polygons and points —
 including vertices and degenerate shapes — and `assign_extracts` runs the
-numpy kernel on executors for polygons above MAX_JVM_PIP_SEGMENTS."""
+numpy kernel on executors for polygons above MAX_JVM_PIP_SEGMENTS. The
+grid cover (`scanline_cover`) is checked cell by cell against the same
+rule: its runs hold exactly the cells whose centre is inside, and every
+cell outside its boundary has one verdict at its centre and corners."""
 
 import numpy as np
 import pytest
@@ -13,7 +16,14 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from osmium_tool_spark.functions.geometry import BandIndex, CellCover, Extract
+from osmium_tool_spark.functions.geometry import (
+    BandIndex,
+    CellCover,
+    Extract,
+    box_cells,
+    run_cells,
+    scanline_cover,
+)
 from osmium_tool_spark.operators.extract import (
     MAX_JVM_PIP_SEGMENTS,
     _pip_column,
@@ -113,7 +123,7 @@ def test_cell_cover_matches_raycast(ring, seed):
     with a coarse grid that forces real interior cells."""
     idx = BandIndex.build([ring])
     assume(len(idx.segs) > 0)
-    cover = CellCover.build(idx, max_cells=16)  # coarse: multi-point cells
+    cover = CellCover.build(idx, res=27)  # coarse: cells of 27 x 13 units
     rng = np.random.default_rng(seed)
     xs = rng.integers(-60, 60, size=300).astype(np.int64)
     ys = rng.integers(-60, 60, size=300).astype(np.int64)
@@ -123,20 +133,22 @@ def test_cell_cover_matches_raycast(ring, seed):
 
 
 def test_cell_cover_empty_polygon():
-    assert CellCover.build(BandIndex.build([])) is None
+    cover = CellCover.build(BandIndex.build([]), res=10)
+    assert len(cover.boundary) == 0 and len(cover.interior) == 0
+    assert not cover.contains(np.array([0, 5]), np.array([0, -5])).any()
 
 
 def test_cell_cover_has_interior_cells():
-    """A fat rectangle at fine resolution must classify interior cells as
-    inside=1 (the speedup exists) and its edges as boundary=2."""
+    """A fat rectangle at fine resolution must have interior cells that
+    are not boundary cells (the speedup exists) and boundary cells."""
     ring = np.array(
         [(0, 0), (1000, 0), (1000, 1000), (0, 1000), (0, 0)], dtype=np.int64
     )
-    cover = CellCover.build(BandIndex.build([ring]), max_cells=1024)
-    vals, counts = np.unique(cover.classes, return_counts=True)
-    by = dict(zip(vals.tolist(), counts.tolist()))
-    assert by.get(1, 0) > by.get(2, 0)  # interior dominates boundary
-    assert by.get(2, 0) > 0
+    cover = CellCover.build(BandIndex.build([ring]), res=25)
+    cx, cy = run_cells(cover.interior)
+    n_inner = int((~np.isin(cy << 25 | cx, cover.boundary)).sum())
+    assert n_inner > len(cover.boundary)  # interior dominates boundary
+    assert len(cover.boundary) > 0
 
 
 def ngon(n: int, r: int) -> np.ndarray:
@@ -153,14 +165,17 @@ def test_assign_extracts_large_polygon_with_hole(spark):
     outer, inner = ngon(200, 1_000_000), ngon(200, 500_000)[::-1]
     ex = Extract.polygon(3, [outer, inner])
     assert len(ex.index.segs) > MAX_JVM_PIP_SEGMENTS
-    cover = CellCover.build(ex.index)
+    # res 17 is the finest whose bbox holds at most MAX_CELLS cells, the
+    # res assign_extracts picks
+    assert box_cells(ex.index, 17) <= CellCover.MAX_CELLS < box_cells(ex.index, 18)
+    cover = CellCover.build(ex.index, res=17)
     rng = np.random.default_rng(11)
     xs = np.concatenate([rng.integers(-1_100_000, 1_100_001, 2000), outer[:, 0], inner[:, 0]])
     ys = np.concatenate([rng.integers(-1_100_000, 1_100_001, 2000), outer[:, 1], inner[:, 1]])
     env = (xs >= ex.minx) & (xs <= ex.maxx) & (ys >= ex.miny) & (ys <= ex.maxy)
-    cls = cover.classes[(ys[env] - ex.miny) // cover.gy, (xs[env] - ex.minx) // cover.gx]
+    edge, inside = cover.lookup(xs[env], ys[env])
     # both executor branches run: interior-cell lookup and boundary ray cast
-    assert (cls == 1).any() and (cls == 2).any()
+    assert (inside & ~edge).any() and edge.any()
 
     rows = [(i, int(x), int(y), i % 7) for i, (x, y) in enumerate(zip(xs, ys))]
     nodes = spark.createDataFrame(rows, "id long, lon long, lat long, tag long")
@@ -170,3 +185,118 @@ def test_assign_extracts_large_polygon_with_hole(spark):
     assert {r.id for r in got} == want and len(got) == len(want)
     assert all(r.extract_id == 3 and r.tag == r.id % 7 for r in got)
     assert 0 < len(want) < len(rows)
+
+
+LON_MIN, LAT_MIN = -1_800_000_000, -900_000_000
+LON_SPAN, LAT_SPAN = 3_600_000_000, 1_800_000_000
+
+
+def centre2n(cx: int, cy: int, n: int) -> tuple[int, int]:
+    """Exact centre of cell (cx, cy) in 2n-scaled integers."""
+    return 2 * n * LON_MIN + (2 * cx + 1) * LON_SPAN, 2 * n * LAT_MIN + (2 * cy + 1) * LAT_SPAN
+
+
+@st.composite
+def lattice_polygon(draw):
+    """(res, rings) with vertices on the half-cell lattice of `res`: even
+    steps lie on cell edges, odd steps on cell centres, and a vertex may
+    be nudged by one unit. Rings are random polygons or rectangles (their
+    horizontal edges may lie on a centre line), a rectangle may carry a
+    rectangular hole, and a second ring makes a multipolygon."""
+    res = draw(st.sampled_from([1, 2, 3, 4, 5, 6, 7, 8, 26, 27, 28, 29, 30]))
+    n = 1 << res
+    w = min(12, 2 * n)
+    bx = draw(st.integers(0, 2 * n - w))
+    by = draw(st.integers(0, 2 * n - w))
+    k = st.integers(0, w)
+    nudge = st.sampled_from([0, 0, 0, -1, 1])
+
+    def pt(kx, ky):
+        x = LON_MIN + (bx + kx) * LON_SPAN // (2 * n) + draw(nudge)
+        y = LAT_MIN + (by + ky) * LAT_SPAN // (2 * n) + draw(nudge)
+        return (min(max(x, LON_MIN), -LON_MIN), min(max(y, LAT_MIN), -LAT_MIN))
+
+    def rect(x0, y0, x1, y1):
+        return [pt(x0, y0), pt(x1, y0), pt(x1, y1), pt(x0, y1)]
+
+    rings = []
+    for _ in range(draw(st.integers(1, 2))):
+        if draw(st.booleans()):
+            pts = [pt(draw(k), draw(k)) for _ in range(draw(st.integers(3, 6)))]
+            rings.append(pts)
+        else:
+            x0, x1 = sorted(draw(st.lists(k, min_size=2, max_size=2, unique=True)))
+            y0, y1 = sorted(draw(st.lists(k, min_size=2, max_size=2, unique=True)))
+            rings.append(rect(x0, y0, x1, y1))
+            if x1 - x0 >= 3 and y1 - y0 >= 3 and draw(st.booleans()):
+                rings.append(rect(x0 + 1, y0 + 1, x1 - 1, y1 - 1)[::-1])
+    return res, [np.array(r + r[:1], dtype=np.int64) for r in rings]
+
+
+@settings(max_examples=60, deadline=None)
+@given(case=lattice_polygon())
+def test_scanline_cover_matches_reference_rule(case):
+    res, rings = case
+    n = 1 << res
+    idx = BandIndex.build(rings)
+    assume(len(idx.segs) > 0)
+    boundary, interior = scanline_cover(idx, res)
+    segs = [tuple(int(v) for v in s_) for s_ in idx.segs]
+    segs2n = [tuple(2 * n * v for v in s_) for s_ in segs]
+
+    def ordinate(v, vmin, span):
+        return min(max((v - vmin) * n // span, 0), n - 1)
+
+    cells = [
+        (cx, cy)
+        for cx in range(max(ordinate(idx.minx, LON_MIN, LON_SPAN) - 1, 0),
+                        min(ordinate(idx.maxx, LON_MIN, LON_SPAN) + 2, n))
+        for cy in range(max(ordinate(idx.miny, LAT_MIN, LAT_SPAN) - 1, 0),
+                        min(ordinate(idx.maxy, LAT_MIN, LAT_SPAN) + 2, n))
+    ]
+    want = {c for c in cells if ref_contains(*centre2n(*c, n), segs2n)}
+    gx, gy = run_cells(interior)
+    got = list(zip(gx.tolist(), gy.tolist()))
+    assert set(got) == want and len(got) == len(want)
+
+    # a cell no segment touches has one verdict: the integer point at its
+    # centre and its four integer corners agree with its centre's
+    on_edge = set(boundary.tolist())
+    for cx, cy in cells:
+        if cy * n + cx in on_edge:
+            continue
+        x0 = -(-(LON_MIN * n + cx * LON_SPAN) // n)
+        x1 = (LON_MIN * n + (cx + 1) * LON_SPAN) // n
+        y0 = -(-(LAT_MIN * n + cy * LAT_SPAN) // n)
+        y1 = (LAT_MIN * n + (cy + 1) * LAT_SPAN) // n
+        px, py = centre2n(cx, cy, n)
+        xc = min(max(px // (2 * n), x0), x1)
+        yc = min(max(py // (2 * n), y0), y1)
+        xs = np.array([xc, x0, x1, x0, x1], dtype=np.int64)
+        ys = np.array([yc, y0, y0, y1, y1], dtype=np.int64)
+        assert (idx.contains(xs, ys) == ((cx, cy) in want)).all(), (cx, cy)
+
+
+def test_scanline_cover_world_scale_res12():
+    """A world-spanning polygon with a hole at res 12: the reference's
+    cross products at cell centres pass 2^63, so only exact arithmetic
+    gets each row's runs right. Sampled rows are compared in full."""
+    res, n = 12, 1 << 12
+    outer = [(-1_799_999_999, -899_999_999), (1_799_999_999, -750_000_001),
+             (1_000_000_003, 899_999_999), (-3, 123_456_789),
+             (-1_700_000_001, 899_999_997)]
+    hole = [(-400_000_001, -300_000_007), (-350_000_000, 100_000_001),
+            (300_000_011, 50_000_000)]
+    rings = [np.array(r + r[:1], dtype=np.int64) for r in (outer, hole)]
+    idx = BandIndex.build(rings)
+    segs2n = [tuple(2 * n * int(v) for v in s_) for s_ in idx.segs]
+    x1, y1, x2, y2 = segs2n[0]
+    px, py = centre2n(n - 1, n // 2, n)
+    assert abs((px - x2) * (y1 - y2)) > 2**63
+    _, interior = scanline_cover(idx, res)
+    gx, gy = run_cells(interior)
+    rng = np.random.default_rng(3)
+    for cy in [0, 1, n // 2 - 1, n // 2, n - 2, n - 1, *rng.integers(0, n, 8).tolist()]:
+        want = {cx for cx in range(n) if ref_contains(*centre2n(cx, cy, n), segs2n)}
+        assert set(gx[gy == cy].tolist()) == want, cy
+    assert 0 < len(gx) < n * n

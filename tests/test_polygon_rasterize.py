@@ -1,12 +1,11 @@
-"""polygon_rasterize: relational y-banded vector->raster conversion.
+"""polygon_rasterize: scanline vector->raster conversion.
 
 Semantics under test (reference analog: extract_polygon.cpp's y-band
-segment index, here as a join key; center-inside even-odd over pooled
-rings):
+segment index; center-inside even-odd over pooled rings):
   - closed-form diamond parity over the full bbox grid
   - even-odd hole exclusion (two rings)
   - numpy raycast-kernel parity on a random star polygon (concave)
-  - a polygon spanning many bands / the band repartition path
+  - a polygon spanning many rows / the (poly_id, cy) repartition path
   - loud failure when the bbox exceeds the cell cap
 """
 
