@@ -19,9 +19,9 @@ Semantics-parity notes (vs the reference, /root/reference):
 Implementation is numpy-vectorized (Arrow batches via mapInPandas), never
 per-row Python: for each batch we group points by band and evaluate the
 (points_in_band × segments_in_band) crossing matrix with broadcasting.
-This module is the only numpy PIP code, and `scanline_cover` the only
-code that puts a polygon on the global cell grid (CellCover, spatial_join's
-cell index, polygon_rasterize). Executor kernels close over these objects
+This module is the only numpy PIP code, and `boundary_cells` with
+`scanline_runs` the only code that puts a polygon on the global cell grid
+(CellCover, spatial_join's cell index, polygon_rasterize). Executor kernels close over these objects
 after `ship_by_value()`, so they travel with the pickled closure to
 executors that lack the package on sys.path.
 """
@@ -86,6 +86,18 @@ def normalize_ring(ring: np.ndarray, outer: bool) -> np.ndarray:
     return ring
 
 
+def segments(rings: list[np.ndarray]) -> np.ndarray:
+    """(N,4) int64 [x1,y1,x2,y2]: the rings' segments, zero-length ones
+    skipped; an unclosed ring gets no closing segment."""
+    seg_list = []
+    for ring in rings:
+        r = np.asarray(ring, dtype=np.int64)
+        if len(r) >= 2:
+            keep = ~np.all(r[:-1] == r[1:], axis=1)
+            seg_list.append(np.hstack([r[:-1][keep], r[1:][keep]]))
+    return np.vstack(seg_list) if seg_list else np.empty((0, 4), np.int64)
+
+
 @dataclass
 class BandIndex:
     """Y-band segment index of one (multi)polygon."""
@@ -105,36 +117,19 @@ class BandIndex:
     def build(cls, rings: list[np.ndarray]) -> "BandIndex":
         """rings: list of closed (k,2) int arrays (outer and inner pooled,
         per extract_polygon.cpp:66-74)."""
-        seg_list = []
-        for ring in rings:
-            r = np.asarray(ring, dtype=np.int64)
-            if len(r) < 2:
-                continue
-            a, b = r[:-1], r[1:]
-            keep = ~np.all(a == b, axis=1)  # skip zero-length segments
-            seg_list.append(np.hstack([a[keep], b[keep]]))
-        segs = np.vstack(seg_list) if seg_list else np.empty((0, 4), np.int64)
+        segs = segments(rings)
         if len(segs) == 0:
             return cls(segs, 0, 0, 0, 0, 1, 1, [np.empty((0, 4), np.int64)] * 2)
-        minx = int(min(segs[:, 0].min(), segs[:, 2].min()))
-        maxx = int(max(segs[:, 0].max(), segs[:, 2].max()))
-        miny = int(min(segs[:, 1].min(), segs[:, 3].min()))
-        maxy = int(max(segs[:, 1].max(), segs[:, 3].max()))
+        xy = segs.reshape(-1, 2)
+        (minx, miny), (maxx, maxy) = xy.min(axis=0).tolist(), xy.max(axis=0).tolist()
         num_bands = max(1, min(MAX_BANDS, len(segs) // SEGMENTS_PER_BAND))
         dy = max(1, (maxy - miny + num_bands - 1) // num_bands)
-        bands: list[list] = [[] for _ in range(num_bands + 1)]
-        ymins = np.minimum(segs[:, 1], segs[:, 3])
-        ymaxs = np.maximum(segs[:, 1], segs[:, 3])
-        b_lo = (ymins - miny) // dy
-        b_hi = (ymaxs - miny) // dy
-        for i in range(len(segs)):
-            for b in range(int(b_lo[i]), int(b_hi[i]) + 1):
-                bands[b].append(segs[i])
-        band_arrays = [
-            np.array(b, dtype=np.int64) if b else np.empty((0, 4), np.int64)
-            for b in bands
-        ]
-        return cls(segs, minx, miny, maxx, maxy, num_bands, dy, band_arrays)
+        # each segment goes to every band its y-range reaches, in segment order
+        ylo, yhi = np.minimum(segs[:, 1], segs[:, 3]), np.maximum(segs[:, 1], segs[:, 3])
+        i, b = _spans((ylo - miny) // dy, (yhi - miny) // dy)
+        order = np.argsort(b, kind="stable")
+        bands = np.split(segs[i[order]], np.searchsorted(b[order], np.arange(1, num_bands + 1)))
+        return cls(segs, minx, miny, maxx, maxy, num_bands, dy, bands)
 
     def contains(self, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
         """Vectorized exact PIP for int fixed-point coordinate arrays."""
@@ -184,15 +179,17 @@ def _ordinate(v, vmin: int, span: int, res: int):
     return np.clip((np.asarray(v, dtype=np.int64) - vmin) * n // span, 0, n - 1)
 
 
-def _cell_box(index: BandIndex, res: int) -> list[int]:
-    """[ix0, ix1, iy0, iy1]: the cells of the polygon's bbox at `res`."""
-    return [*_ordinate([index.minx, index.maxx], _LON_MIN, _LON_SPAN, res).tolist(),
-            *_ordinate([index.miny, index.maxy], _LAT_MIN, _LAT_SPAN, res).tolist()]
+def _cell_box(segs: np.ndarray, res: int) -> list[int]:
+    """[ix0, ix1, iy0, iy1]: the cells of the segments' bbox at `res` (the
+    cell of (0, 0) when there are none, as BandIndex's empty bbox)."""
+    xy = segs.reshape(-1, 2) if len(segs) else np.zeros((1, 2), np.int64)
+    return [*_ordinate([xy[:, 0].min(), xy[:, 0].max()], _LON_MIN, _LON_SPAN, res).tolist(),
+            *_ordinate([xy[:, 1].min(), xy[:, 1].max()], _LAT_MIN, _LAT_SPAN, res).tolist()]
 
 
-def box_cells(index: BandIndex, res: int) -> int:
-    """How many cells the polygon's bbox holds at `res`."""
-    ix0, ix1, iy0, iy1 = _cell_box(index, res)
+def box_cells(segs: np.ndarray, res: int) -> int:
+    """How many cells the segments' bbox holds at `res`."""
+    ix0, ix1, iy0, iy1 = _cell_box(segs, res)
     return (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
 
 
@@ -211,43 +208,22 @@ def _touching(lo, hi, vmin: int, span: int, n: int) -> tuple[np.ndarray, np.ndar
     )
 
 
-def _in_runs(runs: np.ndarray, cx: np.ndarray, cy: np.ndarray, res: int) -> np.ndarray:
-    """Whether each cell (cx, cy) lies in one of the sorted disjoint runs."""
-    key = np.asarray(cy, dtype=np.int64) << res | np.asarray(cx, dtype=np.int64)
-    if len(runs) == 0:
-        return np.zeros(len(key), dtype=bool)
-    i = np.searchsorted(runs[:, 0] << res | runs[:, 1], key, side="right") - 1
-    return (i >= 0) & (key <= (runs[i, 0] << res | runs[i, 2]))
-
-
 def run_cells(runs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(cx, cy) of every cell of the runs."""
     i, cx = _spans(runs[:, 1], runs[:, 2])
     return cx, runs[i, 0]
 
 
-def scanline_cover(index: BandIndex, res: int) -> tuple[np.ndarray, np.ndarray]:
-    """(boundary, interior) of the polygon on the grid at `res`.
-
-    `boundary`: the sorted numbers of the cells whose closed extent a
-    segment may touch, marked row by row from the segment's x-extent in
-    each row, rounded outward (a segment's bbox would wipe out a long
-    diagonal's interior). One verdict holds across any other cell.
-
-    `interior`: sorted disjoint runs of the cells whose exact centre
-    passes `BandIndex.contains`'s rule (even-odd parity, its tie rule, a
-    centre on a vertex inside): each row's centre-line crossings, sorted
-    and paired (Raptor, VLDB 2019), so work grows with edges x rows, not
-    bbox area. Crossing products pass 2^63 (about 5e25 at res 12): each
-    crossing is converted once, with Python ints."""
+def boundary_cells(segs: np.ndarray, res: int) -> np.ndarray:
+    """The sorted numbers of the cells whose closed extent a segment may
+    touch, marked row by row from the segment's x-extent in each row,
+    rounded outward (a segment's bbox would wipe out a long diagonal's
+    interior). For closed rings one verdict holds across any other cell."""
     n = 1 << res
-    ix0, ix1, iy0, iy1 = _cell_box(index, res)
-    x1, y1, x2, y2 = index.segs.T
-    ylo, yhi = np.minimum(y1, y2), np.maximum(y1, y2)
-
-    # boundary: the segment's x-extent in each row it reaches, from floats
-    # exact to well under a unit, padded by one unit on each side
-    i, cy = _spans(*_touching(ylo, yhi, _LAT_MIN, _LAT_SPAN, n))
+    x1, y1, x2, y2 = segs.T
+    # the segment's x-extent in each row it reaches, from floats exact to
+    # well under a unit, padded by one unit on each side
+    i, cy = _spans(*_touching(np.minimum(y1, y2), np.maximum(y1, y2), _LAT_MIN, _LAT_SPAN, n))
     dy = (y2 - y1)[i]
     flat, step = dy == 0, np.where(dy == 0, 1, dy)
     ta = np.where(flat, 0, np.clip((_LAT_MIN + cy * (_LAT_SPAN / n) - y1[i]) / step, 0, 1))
@@ -256,9 +232,21 @@ def scanline_cover(index: BandIndex, res: int) -> tuple[np.ndarray, np.ndarray]:
     lo = np.floor(np.minimum(xa, xb)).astype(np.int64) - 1
     hi = np.ceil(np.maximum(xa, xb)).astype(np.int64) + 1
     j, cx = _spans(*_touching(lo, hi, _LON_MIN, _LON_SPAN, n))
-    boundary = np.unique(cy[j] * n + cx)
+    return np.unique(cy[j] * n + cx)
 
-    # interior: rows whose centre line PY a segment straddles, i.e.
+
+def scanline_runs(segs: np.ndarray, res: int) -> np.ndarray:
+    """Sorted disjoint runs (cy, cx_start, cx_end) of the bbox's cells whose
+    exact centre passes `BandIndex.contains`'s rule (even-odd parity, its
+    tie rule, a centre on a vertex inside): each row's centre-line
+    crossings, sorted and paired (Raptor, VLDB 2019), so work grows with
+    edges x rows, not bbox area. Crossing products pass 2^63 (about 5e25
+    at res 12): each crossing is converted once, with Python ints."""
+    n = 1 << res
+    ix0, ix1, iy0, iy1 = _cell_box(segs, res)
+    x1, y1, x2, y2 = segs.T
+    ylo, yhi = np.minimum(y1, y2), np.maximum(y1, y2)
+    # rows whose centre line PY a segment straddles, i.e.
     # 2n*ylo <= PY < 2n*yhi with PY = 2n*lat_min + (2cy+1)*lat_span
     lo_k = -((-2 * n * (ylo - _LAT_MIN)) // _LAT_SPAN)
     hi_k = -((-2 * n * (yhi - _LAT_MIN)) // _LAT_SPAN) - 1
@@ -283,43 +271,49 @@ def scanline_cover(index: BandIndex, res: int) -> tuple[np.ndarray, np.ndarray]:
     runs = runs[runs[:, 1] <= runs[:, 2]]
 
     # a centre on a vertex is inside: vertex ordinates that are odd
-    # multiples of the half-cell in 2n-scaled integers
+    # multiples of the half-cell in 2n-scaled integers, unless in a run
     qx, rx = np.divmod(2 * n * (np.r_[x1, x2] - _LON_MIN), _LON_SPAN)
     qy, ry = np.divmod(2 * n * (np.r_[y1, y2] - _LAT_MIN), _LAT_SPAN)
     on_centre = (rx == 0) & (ry == 0) & (qx % 2 == 1) & (qy % 2 == 1)
     on_centre &= (0 < qx) & (qx < 2 * n) & (0 < qy) & (qy < 2 * n)  # off-world vertices
     v = np.unique(((qy - 1) // 2 * n + (qx - 1) // 2)[on_centre])
-    v = v[~_in_runs(runs, v % n, v // n, res)]
-    interior = np.r_[runs, np.stack([v // n, v % n, v % n], axis=1)]
-    return boundary, interior[np.lexsort((interior[:, 1], interior[:, 0]))]
+    i = np.searchsorted(np.r_[-1, runs[:, 0] * n + runs[:, 1]], v, side="right") - 1
+    v = v[v > np.r_[-1, runs[:, 0] * n + runs[:, 2]][i]]
+    runs = np.r_[runs, np.stack([v // n, v % n, v % n], axis=1)]
+    return runs[np.lexsort((runs[:, 1], runs[:, 0]))]
 
 
 @dataclass
 class CellCover:
     """Interior cover of a (multi)polygon — the S2/H3-style covering trick
-    for PIP at scale: `scanline_cover` runs ONCE (driver-side); a point in
-    a boundary cell (the ~perimeter/area fraction) runs the exact ray
-    cast, any other is inside exactly when its cell is in a run. Verdicts
-    match BandIndex bit-for-bit, endpoint==point->inside included
-    (endpoints lie in boundary cells)."""
+    for PIP at scale: `boundary_cells` and `scanline_runs` classify the
+    cells of the polygon's bbox ONCE (driver-side) as outside(0) /
+    inside(1) / boundary(2); a point test is then an O(1) int8 lookup,
+    and only points in boundary cells (the ~perimeter/area fraction) run
+    the exact ray cast. Verdicts match BandIndex bit-for-bit for closed
+    rings, endpoint==point->inside included (endpoints lie in boundary
+    cells)."""
 
     index: BandIndex
     res: int
-    boundary: np.ndarray  # sorted cell numbers cy * 2^res + cx
-    interior: np.ndarray  # sorted (cy, cx_start, cx_end) runs
-
-    MAX_CELLS = 16384  # bbox cells at the res assign_extracts picks
+    box: list[int]  # [ix0, ix1, iy0, iy1], _cell_box
+    classes: np.ndarray  # int8, shape (iy1 - iy0 + 1, ix1 - ix0 + 1)
 
     @classmethod
     def build(cls, index: BandIndex, res: int) -> "CellCover":
-        return cls(index, res, *scanline_cover(index, res))
+        ix0, ix1, iy0, iy1 = box = _cell_box(index.segs, res)
+        classes = np.zeros((iy1 - iy0 + 1, ix1 - ix0 + 1), dtype=np.int8)
+        cx, cy = run_cells(scanline_runs(index.segs, res))
+        classes[cy - iy0, cx - ix0] = 1
+        cy, cx = np.divmod(boundary_cells(index.segs, res), 1 << res)
+        keep = (ix0 <= cx) & (cx <= ix1) & (iy0 <= cy) & (cy <= iy1)
+        classes[cy[keep] - iy0, cx[keep] - ix0] = 2
+        return cls(index, res, box, classes)
 
-    def lookup(self, xs: np.ndarray, ys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(in a boundary cell, in an interior run) per point."""
-        cx = _ordinate(xs, _LON_MIN, _LON_SPAN, self.res)
-        cy = _ordinate(ys, _LAT_MIN, _LAT_SPAN, self.res)
-        edge = np.isin(cy << self.res | cx, self.boundary)
-        return edge, _in_runs(self.interior, cx, cy, self.res)
+    def lookup(self, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
+        """The class of each point's cell; the points lie in the bbox."""
+        cx = _ordinate(xs, _LON_MIN, _LON_SPAN, self.res) - self.box[0]
+        return self.classes[_ordinate(ys, _LAT_MIN, _LAT_SPAN, self.res) - self.box[2], cx]
 
     def contains(self, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
         """Same verdicts as `index.contains`: envelope test, then the
@@ -330,9 +324,10 @@ class CellCover:
         out = np.zeros(len(xs), dtype=bool)
         env = (xs >= idx.minx) & (xs <= idx.maxx) & (ys >= idx.miny) & (ys <= idx.maxy)
         sel = np.flatnonzero(env)
-        edge, inside = self.lookup(xs[sel], ys[sel])
-        out[sel[inside]] = True
-        out[sel[edge]] = idx.contains(xs[sel[edge]], ys[sel[edge]])
+        cls = self.lookup(xs[sel], ys[sel])
+        out[sel[cls == 1]] = True
+        edge = sel[cls == 2]
+        out[edge] = idx.contains(xs[edge], ys[edge])
         return out
 
 

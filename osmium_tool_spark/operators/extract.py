@@ -54,6 +54,10 @@ MAX_EXTRACTS = 500  # reference command_extract.cpp:77
 # products <= 6.5e18 < 2^63.
 MAX_JVM_PIP_SEGMENTS = 64
 
+# larger polygons get a CellCover at the finest res whose bbox holds at most
+# this many cells: an int8 grid, <= 64 KiB shipped per polygon
+MAX_COVER_CELLS = 65536
+
 
 def _pip_column(lon, lat, segs_lit) -> "F.Column":
     """Exact int64 even-odd ray cast as a Column expression over a literal
@@ -166,7 +170,7 @@ def assign_extracts(
         ship_by_value()
         regions = []
         for e in polys:
-            res = max(r for r in range(MAX_RES + 1) if box_cells(e.index, r) <= CellCover.MAX_CELLS)
+            res = max(r for r in range(MAX_RES + 1) if box_cells(e.index.segs, r) <= MAX_COVER_CELLS)
             regions.append((e.extract_id, CellCover.build(e.index, res)))
 
         def pip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

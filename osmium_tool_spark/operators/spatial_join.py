@@ -10,9 +10,10 @@ This operator makes the polygon set a DATAFRAME and the join a plain
 equi-join through a distributed cell index:
 
   1. index build (mapInPandas over polygons): each polygon emits its
-     `geometry.scanline_cover` cells at resolution `res` (the Morton
-     cells of functions/cells.cell_id): BOUNDARY cells, which a segment
-     may touch, and INSIDE cells, whose whole extent is in the polygon.
+     cells at resolution `res` (the Morton cells of
+     functions/cells.cell_id): BOUNDARY cells (`geometry.boundary_cells`),
+     which a segment may touch, and INSIDE cells, the other cells of
+     `geometry.scanline_runs`, whose whole extent is in the polygon.
   2. points compute their cell id as pure Column math and EQUI-JOIN the
      index on the cell — no cross product anywhere; Catalyst picks
      broadcast vs shuffle by index size, AQE handles dense-cell skew.
@@ -48,7 +49,8 @@ from pyspark.sql import functions as F
 
 from ..functions.cells import _LAT_SPAN, _LON_SPAN, cell_id, morton_py, ord_x, ord_y
 from ..functions.geometry import (
-    BandIndex, box_cells, rings_from_structs, run_cells, scanline_cover, ship_by_value,
+    BandIndex, boundary_cells, box_cells, rings_from_structs, run_cells, scanline_runs,
+    segments, ship_by_value,
 )
 
 RINGS_TYPE = "array<array<struct<x:long,y:long>>>"
@@ -67,9 +69,9 @@ def build_polygon_cell_index(
     poly_id: str = "poly_id",
     rings_col: str = "rings",
 ) -> DataFrame:
-    """(cell:long, poly_id, interior:boolean) covering-cell index: the
-    boundary cells of each polygon's `geometry.scanline_cover` with
-    interior=false, its other run cells with interior=true. Distributed
+    """(cell:long, poly_id, interior:boolean) covering-cell index: each
+    polygon's `geometry.boundary_cells` with interior=false, the other
+    cells of its `geometry.scanline_runs` with interior=true. Distributed
     over the polygon table (mapInPandas) — the driver never sees a
     geometry."""
     r = int(res)
@@ -86,16 +88,16 @@ def build_polygon_cell_index(
         for pdf in batches:
             cells_out, pid_out, int_out = [], [], []
             for pid, rings in zip(pdf[pid_name], pdf[rings_name]):
-                index = BandIndex.build(rings_from_structs(rings))
-                ncells = box_cells(index, r)
+                segs = segments(rings_from_structs(rings))
+                ncells = box_cells(segs, r)
                 if ncells > cap:
                     fit = max(1, r - math.ceil(math.log2(ncells / cap) / 2))
                     raise ValueError(
                         f"spatial_join: polygon {pid} covers {ncells} cells at "
                         f"res {r} > MAX_CELLS_PER_POLYGON={cap}; use res<={fit}"
                     )
-                boundary, interior = scanline_cover(index, r)
-                ix, iy = run_cells(interior)
+                boundary = boundary_cells(segs, r)
+                ix, iy = run_cells(scanline_runs(segs, r))
                 inner = ~np.isin(iy << r | ix, boundary)
                 cx = np.r_[boundary & (n - 1), ix[inner]]
                 cy = np.r_[boundary >> r, iy[inner]]

@@ -31,7 +31,7 @@ from ..functions.cells import (
     cell_parent,
 )
 from ..functions.geometry import (
-    BandIndex, box_cells, rings_from_structs, scanline_cover, ship_by_value,
+    box_cells, rings_from_structs, scanline_runs, segments, ship_by_value,
 )
 
 
@@ -319,8 +319,8 @@ def polygon_rasterize(
     segment index, extract_polygon.cpp:77-84, and the export tiling
     surface). Output: (poly_id, cx, cy), one row per interior cell.
 
-    One mapInPandas over the polygons emits the interior runs of
-    `geometry.scanline_cover` (exact centres, BandIndex's rule); Spark
+    One mapInPandas over the polygons emits `geometry.scanline_runs`
+    (exact centres, BandIndex's rule; no band index is built); Spark
     repartitions them on (poly_id, cy) and only then explodes them, so
     one continent-scale polygon's cells spread across tasks. A polygon
     whose bbox holds more than `MAX_RASTER_CELLS` cells fails loud.
@@ -335,19 +335,18 @@ def polygon_rasterize(
         for pdf in batches:
             out = []
             for pid, rings in zip(pdf[poly_id], pdf[rings_col]):
-                index = BandIndex.build(rings_from_structs(rings if rings is not None else []))
-                if box_cells(index, r) > cap:
+                segs = segments(rings_from_structs(rings if rings is not None else []))
+                if box_cells(segs, r) > cap:
                     raise ValueError(
                         f"polygon bbox covers more than {cap} cells at res {r}: coarsen res"
                     )
-                frame = pd.DataFrame(scanline_cover(index, r)[1], columns=["cy", "cx0", "cx1"])
+                frame = pd.DataFrame(scanline_runs(segs, r), columns=["cy", "cx0", "cx1"])
                 out.append(frame.assign(**{poly_id: pid}))
             if out:
                 yield pd.concat(out)
 
     schema = f"{poly_id} {dict(polygons.dtypes)[poly_id]}, cy long, cx0 long, cx1 long"
-    spread = polygons.select(poly_id, rings_col).mapInPandas(runs, schema=schema)
-    spread = spread.repartition(poly_id, "cy")
+    spread = polygons.select(poly_id, rings_col).mapInPandas(runs, schema=schema).repartition(poly_id, "cy")
     return spread.select(poly_id, F.explode(F.sequence("cx0", "cx1")).alias("cx"), "cy")
 
 

@@ -322,7 +322,7 @@ def main() -> None:
     )
 
     # 23. polygon_rasterize: scanline runs — expect ONE MapInPandas over
-    # the polygons (runs per row, geometry.scanline_cover), ONE
+    # the polygons (runs per row, geometry.scanline_runs), ONE
     # repartition exchange on (poly_id, cy) and the run explode after
     # it; no join, no aggregate, no window.
     from osmium_tool_spark.operators.tiles import polygon_rasterize

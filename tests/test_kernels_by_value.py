@@ -3,9 +3,10 @@ osmium_tool_spark. A driver script in a temp directory (no PYTHONPATH,
 cwd away from the repo) puts the repo on its own sys.path only; the
 workers it spawns do not see it. A control `map` that calls a package
 function by reference must fail there with ModuleNotFoundError, which
-proves the harness; `polygon_rasterize` (the first geometry kernel of the
-run, checked against the driver's own cover), the large-polygon
-`assign_extracts`, a two-polygon `spatial_join`, `decode_codec_meta` over
+proves the harness; `polygon_rasterize` (checked against the driver's own
+runs), the large-polygon `assign_extracts` and a two-polygon
+`spatial_join` (each run with geometry's by-value registration cleared, as
+it is process-wide), `decode_codec_meta` over
 a PNG, a PBF write->read of nodes, ways and relations, the distributed
 XML read, `write_mvt_tiles` and `read_opl` must then succeed, because
 their kernels carry
@@ -23,6 +24,7 @@ import sys
 sys.path.insert(0, {repo!r})
 
 import numpy as np
+from pyspark import cloudpickle
 from pyspark.sql import SparkSession
 
 spark = (SparkSession.builder.master("local[2]")
@@ -35,7 +37,7 @@ spark.sparkContext.setLogLevel("ERROR")
 from osmium_tool_spark import schema
 from osmium_tool_spark.functions import png
 from osmium_tool_spark.functions.geometry import (
-    BandIndex, Extract, normalize_ring, run_cells, scanline_cover,
+    Extract, normalize_ring, run_cells, scanline_runs, segments,
 )
 from osmium_tool_spark.operators.extract import assign_extracts
 from osmium_tool_spark.operators.spatial_join import spatial_join
@@ -48,6 +50,14 @@ try:
 except Exception as e:
     if "ModuleNotFoundError" in str(e):
         print("CONTROL_MODULE_NOT_FOUND")
+
+
+def unship():
+    # by-value registration is process-wide: forget what earlier kernels
+    # registered, so the next kernel passes only on its own ship_by_value()
+    for name in ("osmium_tool_spark.functions.geometry", "osmium_tool_spark.functions.cells"):
+        if name in cloudpickle.list_registry_pickle_by_value():
+            cloudpickle.unregister_pickle_by_value(sys.modules[name])
 
 
 def ngon(n, r, cx=0, cy=0):
@@ -70,16 +80,17 @@ polys = spark.createDataFrame(
     "poly_id long, rings array<array<struct<x:long,y:long>>>",
 )
 
-# first geometry kernel of the run: nothing else has shipped geometry yet
 want = set()
 for k, rs in rings.items():
-    cx, cy = run_cells(scanline_cover(BandIndex.build(rs), 16)[1])
+    cx, cy = run_cells(scanline_runs(segments(rs), 16))
     want |= {{(k, x, y) for x, y in zip(cx.tolist(), cy.tolist())}}
+unship()
 got = {{tuple(r) for r in polygon_rasterize(polys, res=16).collect()}}
 print("RASTERIZE", got == want and {{k for k, _, _ in want}} == {{7, 8}})
 
 ex = Extract.polygon(1, [ngon(200, 1_000_000), normalize_ring(ngon(200, 500_000), outer=False)])
 want = set(np.flatnonzero(ex.index.contains(xs, ys)).tolist())
+unship()
 got = {{r.id for r in assign_extracts(nodes, [ex]).collect()}}
 print("EXTRACT", got == want and len(want) > 0)
 
@@ -88,6 +99,7 @@ want = {{
     for k, rs in rings.items()
     for i in np.flatnonzero(Extract.polygon(k, rs).index.contains(xs, ys))
 }}
+unship()
 got = {{tuple(r) for r in spatial_join(nodes, polys, res=16).select("poly_id", "id").collect()}}
 print("SPATIAL_JOIN", got == want and {{k for k, _ in want}} == {{7, 8}})
 

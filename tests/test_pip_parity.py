@@ -5,9 +5,10 @@ transliteration of the reference crossing rule
 (src/extract/extract_polygon.cpp:103-156) on random polygons and points —
 including vertices and degenerate shapes — and `assign_extracts` runs the
 numpy kernel on executors for polygons above MAX_JVM_PIP_SEGMENTS. The
-grid cover (`scanline_cover`) is checked cell by cell against the same
-rule: its runs hold exactly the cells whose centre is inside, and every
-cell outside its boundary has one verdict at its centre and corners."""
+grid cover (`scanline_runs`, `boundary_cells`) is checked cell by cell
+against the same rule: the runs hold exactly the cells whose centre is
+inside, also for unclosed rings, and for closed rings every cell outside
+the boundary cells has one verdict at its centre and corners."""
 
 import numpy as np
 import pytest
@@ -20,11 +21,13 @@ from osmium_tool_spark.functions.geometry import (
     BandIndex,
     CellCover,
     Extract,
+    boundary_cells,
     box_cells,
     run_cells,
-    scanline_cover,
+    scanline_runs,
 )
 from osmium_tool_spark.operators.extract import (
+    MAX_COVER_CELLS,
     MAX_JVM_PIP_SEGMENTS,
     _pip_column,
     _segs_literal,
@@ -133,8 +136,10 @@ def test_cell_cover_matches_raycast(ring, seed):
 
 
 def test_cell_cover_empty_polygon():
+    segs = BandIndex.build([]).segs
+    assert len(boundary_cells(segs, 10)) == 0 and len(scanline_runs(segs, 10)) == 0
     cover = CellCover.build(BandIndex.build([]), res=10)
-    assert len(cover.boundary) == 0 and len(cover.interior) == 0
+    assert not cover.classes.any()  # no boundary and no interior cell
     assert not cover.contains(np.array([0, 5]), np.array([0, -5])).any()
 
 
@@ -145,10 +150,9 @@ def test_cell_cover_has_interior_cells():
         [(0, 0), (1000, 0), (1000, 1000), (0, 1000), (0, 0)], dtype=np.int64
     )
     cover = CellCover.build(BandIndex.build([ring]), res=25)
-    cx, cy = run_cells(cover.interior)
-    n_inner = int((~np.isin(cy << 25 | cx, cover.boundary)).sum())
-    assert n_inner > len(cover.boundary)  # interior dominates boundary
-    assert len(cover.boundary) > 0
+    n_inner, n_edge = int((cover.classes == 1).sum()), int((cover.classes == 2).sum())
+    assert n_inner > n_edge  # interior dominates boundary
+    assert n_edge > 0
 
 
 def ngon(n: int, r: int) -> np.ndarray:
@@ -165,17 +169,17 @@ def test_assign_extracts_large_polygon_with_hole(spark):
     outer, inner = ngon(200, 1_000_000), ngon(200, 500_000)[::-1]
     ex = Extract.polygon(3, [outer, inner])
     assert len(ex.index.segs) > MAX_JVM_PIP_SEGMENTS
-    # res 17 is the finest whose bbox holds at most MAX_CELLS cells, the
-    # res assign_extracts picks
-    assert box_cells(ex.index, 17) <= CellCover.MAX_CELLS < box_cells(ex.index, 18)
-    cover = CellCover.build(ex.index, res=17)
+    # res 18 is the finest whose bbox holds at most MAX_COVER_CELLS cells,
+    # the res assign_extracts picks
+    assert box_cells(ex.index.segs, 18) <= MAX_COVER_CELLS < box_cells(ex.index.segs, 19)
+    cover = CellCover.build(ex.index, res=18)
     rng = np.random.default_rng(11)
     xs = np.concatenate([rng.integers(-1_100_000, 1_100_001, 2000), outer[:, 0], inner[:, 0]])
     ys = np.concatenate([rng.integers(-1_100_000, 1_100_001, 2000), outer[:, 1], inner[:, 1]])
     env = (xs >= ex.minx) & (xs <= ex.maxx) & (ys >= ex.miny) & (ys <= ex.maxy)
-    edge, inside = cover.lookup(xs[env], ys[env])
+    cls = cover.lookup(xs[env], ys[env])
     # both executor branches run: interior-cell lookup and boundary ray cast
-    assert (inside & ~edge).any() and edge.any()
+    assert (cls == 1).any() and (cls == 2).any()
 
     rows = [(i, int(x), int(y), i % 7) for i, (x, y) in enumerate(zip(xs, ys))]
     nodes = spark.createDataFrame(rows, "id long, lon long, lat long, tag long")
@@ -202,7 +206,8 @@ def lattice_polygon(draw):
     steps lie on cell edges, odd steps on cell centres, and a vertex may
     be nudged by one unit. Rings are random polygons or rectangles (their
     horizontal edges may lie on a centre line), a rectangle may carry a
-    rectangular hole, and a second ring makes a multipolygon."""
+    rectangular hole, and a second ring makes a multipolygon. A ring may
+    be left unclosed; `closed` says whether all rings are closed."""
     res = draw(st.sampled_from([1, 2, 3, 4, 5, 6, 7, 8, 26, 27, 28, 29, 30]))
     n = 1 << res
     w = min(12, 2 * n)
@@ -230,37 +235,49 @@ def lattice_polygon(draw):
             rings.append(rect(x0, y0, x1, y1))
             if x1 - x0 >= 3 and y1 - y0 >= 3 and draw(st.booleans()):
                 rings.append(rect(x0 + 1, y0 + 1, x1 - 1, y1 - 1)[::-1])
-    return res, [np.array(r + r[:1], dtype=np.int64) for r in rings]
+    shut = [draw(st.booleans()) for _ in rings]
+    return res, [np.array(r + r[:1] if c else r, dtype=np.int64) for r, c in zip(rings, shut)], all(shut)
 
 
 @settings(max_examples=60, deadline=None)
 @given(case=lattice_polygon())
 def test_scanline_cover_matches_reference_rule(case):
-    res, rings = case
+    res, rings, closed = case
     n = 1 << res
     idx = BandIndex.build(rings)
     assume(len(idx.segs) > 0)
-    boundary, interior = scanline_cover(idx, res)
+    boundary, interior = boundary_cells(idx.segs, res), scanline_runs(idx.segs, res)
     segs = [tuple(int(v) for v in s_) for s_ in idx.segs]
     segs2n = [tuple(2 * n * v for v in s_) for s_ in segs]
 
     def ordinate(v, vmin, span):
         return min(max((v - vmin) * n // span, 0), n - 1)
 
+    x0, x1 = ordinate(idx.minx, LON_MIN, LON_SPAN), ordinate(idx.maxx, LON_MIN, LON_SPAN)
+    y0, y1 = ordinate(idx.miny, LAT_MIN, LAT_SPAN), ordinate(idx.maxy, LAT_MIN, LAT_SPAN)
     cells = [
         (cx, cy)
-        for cx in range(max(ordinate(idx.minx, LON_MIN, LON_SPAN) - 1, 0),
-                        min(ordinate(idx.maxx, LON_MIN, LON_SPAN) + 2, n))
-        for cy in range(max(ordinate(idx.miny, LAT_MIN, LAT_SPAN) - 1, 0),
-                        min(ordinate(idx.maxy, LAT_MIN, LAT_SPAN) + 2, n))
+        for cx in range(max(x0 - 1, 0), min(x1 + 2, n))
+        for cy in range(max(y0 - 1, 0), min(y1 + 2, n))
     ]
-    want = {c for c in cells if ref_contains(*centre2n(*c, n), segs2n)}
+    # the runs hold the cells of the bbox whose centre is inside; a closed
+    # ring has no inside centre beyond them, an unclosed one stays odd
+    # left of a row's crossings
+    want = {
+        (cx, cy) for cx, cy in cells
+        if x0 <= cx <= x1 and y0 <= cy <= y1 and ref_contains(*centre2n(cx, cy, n), segs2n)
+    }
+    if closed:
+        assert want == {c for c in cells if ref_contains(*centre2n(*c, n), segs2n)}
     gx, gy = run_cells(interior)
     got = list(zip(gx.tolist(), gy.tolist()))
     assert set(got) == want and len(got) == len(want)
 
-    # a cell no segment touches has one verdict: the integer point at its
-    # centre and its four integer corners agree with its centre's
+    # with closed rings a cell no segment touches has one verdict: the
+    # integer point at its centre and its four integer corners agree with
+    # its centre's (an unclosed ring's parity can change off its segments)
+    if not closed:
+        return
     on_edge = set(boundary.tolist())
     for cx, cy in cells:
         if cy * n + cx in on_edge:
@@ -293,7 +310,7 @@ def test_scanline_cover_world_scale_res12():
     x1, y1, x2, y2 = segs2n[0]
     px, py = centre2n(n - 1, n // 2, n)
     assert abs((px - x2) * (y1 - y2)) > 2**63
-    _, interior = scanline_cover(idx, res)
+    interior = scanline_runs(idx.segs, res)
     gx, gy = run_cells(interior)
     rng = np.random.default_rng(3)
     for cy in [0, 1, n // 2 - 1, n // 2, n - 2, n - 1, *rng.integers(0, n, 8).tolist()]:
