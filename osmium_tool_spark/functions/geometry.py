@@ -58,8 +58,9 @@ def ship_by_value() -> None:
 
 def rings_from_structs(rings) -> list[np.ndarray]:
     """A `rings` cell of array<array<struct<x:long,y:long>>> as delivered
-    to a pandas kernel -> list of (k,2) int64 arrays for BandIndex.build."""
-    return [np.asarray([[p["x"], p["y"]] for p in ring], dtype=np.int64) for ring in rings]
+    to a pandas kernel -> list of closed (k,2) int64 arrays: an open ring
+    gets its closing vertex, as `normalize_ring` gives file sources."""
+    return [closed_ring([[p["x"], p["y"]] for p in ring]) for ring in rings]
 
 
 def signed_area2(ring: np.ndarray) -> int:
@@ -76,11 +77,17 @@ def is_ccw(ring: np.ndarray) -> bool:
     return signed_area2(ring) >= 0
 
 
-def normalize_ring(ring: np.ndarray, outer: bool) -> np.ndarray:
-    """Close the ring if open, orient outer CCW / inner CW."""
-    ring = np.asarray(ring, dtype=np.int64)
+def closed_ring(ring) -> np.ndarray:
+    """(k,2) int64 ring, its first vertex repeated at the end if open."""
+    ring = np.asarray(ring, dtype=np.int64).reshape(-1, 2)
     if len(ring) and not np.array_equal(ring[0], ring[-1]):
         ring = np.vstack([ring, ring[:1]])
+    return ring
+
+
+def normalize_ring(ring: np.ndarray, outer: bool) -> np.ndarray:
+    """Close the ring if open, orient outer CCW / inner CW."""
+    ring = closed_ring(ring)
     if len(ring) >= 4 and is_ccw(ring) != outer:
         ring = ring[::-1].copy()
     return ring

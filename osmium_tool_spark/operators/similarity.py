@@ -1032,7 +1032,6 @@ def semantic_dedup(
     n_clusters: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids=None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): drop rows whose
     embedding is within cosine `threshold` of a LOWER-id row in the same
@@ -1061,7 +1060,7 @@ def semantic_dedup(
     """
     import numpy as np
 
-    if n_clusters <= 1 and centroids is None:
+    if n_clusters <= 1:
         # degenerate blocking (the brute-force reference shape used by the
         # pytest equivalence property); pyspark.ml KMeans requires k > 1
         assigned = df.select(
@@ -1070,8 +1069,7 @@ def semantic_dedup(
             F.lit(0).alias("cid"),
         )
     else:
-        if centroids is None:
-            centroids = train_ivf_centroids(df, n_centroids=n_clusters, vec_col=vec_col)
+        centroids = train_ivf_centroids(df, n_centroids=n_clusters, vec_col=vec_col)
         assigned = ivf_assign(df, centroids, vec_col=vec_col, out_col="_cids", nprobe=1)
         assigned = assigned.select(
             F.col(id_col).alias("id"),

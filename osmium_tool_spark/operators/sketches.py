@@ -750,10 +750,9 @@ def bloom_build(
     positions (k is 3-7, a constant) -> ONE hash-agg whose state is AT
     MOST m_bits/32 rows per partition regardless of input size —
     map-side partial BIT_ORs absorb the volume, the shuffle moves at
-    most m_bits/32 rows per partition. The classic use at 10^12 rows:
-    membership pre-filtering before an expensive join (probe the sketch,
-    only rows that MIGHT match reach the shuffle; `bloom_probe` is a
-    broadcast join against a <= m_bits/32-row table). One-sided error:
+    most m_bits/32 rows per partition. `bloom_probe` answers membership
+    for a query set by a broadcast join against the <= m_bits/32-row
+    state, so the corpus never re-enters at probe time. One-sided error:
     a present value always probes 1 (no false negatives); an absent
     value probes 1 with probability ~(1 - e^(-k*n/m))^k (`bloom_fpr`).
 
@@ -874,56 +873,3 @@ bfprobe AS (SELECT value,
     if ctes_only:
         return body
     return "WITH " + body + "\nSELECT value, maybe_present FROM bfprobe\n"
-
-
-def bloom_semijoin(
-    corpus: DataFrame,
-    keys: DataFrame,
-    corpus_key: str,
-    k: int = 4,
-    m_bits: int = 1 << 20,
-) -> DataFrame:
-    """EXACT left-semi join accelerated by a Bloom pre-filter — the
-    10^12-row join shape the sketch exists for. The keys side builds an
-    m_bits filter (state <= m/32 rows, broadcast); the corpus is
-    pre-filtered by k broadcast word-lookups (pure map-side work, the
-    corpus never shuffles for the probe), and only maybe-members reach
-    the exact semi-join. Both sides carry the key as `corpus_key`, hashed
-    with xxhash64. False positives are REMOVED by that final semi-join,
-    so the result equals `corpus.join(keys, key, "left_semi")`
-    row-for-row; the win is the shuffle: at fpr f and selectivity s the
-    exact join's input shrinks from |corpus| to ~(s + f)|corpus|.
-
-    Size m_bits for the keys-side cardinality (`bloom_fpr`); when the
-    keys side is small enough to broadcast outright, Spark's own
-    broadcast semi-join already wins — this shape pays off when BOTH
-    sides are shuffle-scale."""
-    _check_km(k, m_bits)
-    state = bloom_build(keys, corpus_key, k=k, m_bits=m_bits)
-    out = corpus
-    v = F.col(corpus_key)
-    conds = []
-    for j in range(k):
-        pos = _bf_pos(v, j, m_bits, "xxhash64")
-        st = state.select(
-            F.col("word").alias(f"_bfw{j}"), F.col("bits").alias(f"_bfb{j}")
-        )
-        out = out.withColumn(f"_bfp{j}", pos).join(
-            F.broadcast(st),
-            F.shiftright(F.col(f"_bfp{j}"), 5).cast("int") == F.col(f"_bfw{j}"),
-            "left",
-        )
-        hit = F.expr(
-            f"CAST(shiftright(COALESCE(_bfb{j}, CAST(0 AS BIGINT)),"
-            f" CAST(_bfp{j} % 32 AS INT)) % 2 AS INT)"
-        )
-        conds.append(hit == 1)
-    pred = conds[0]
-    for c in conds[1:]:
-        pred = pred & c
-    out = out.filter(pred).drop(
-        *[f"_bfp{j}" for j in range(k)],
-        *[f"_bfw{j}" for j in range(k)],
-        *[f"_bfb{j}" for j in range(k)],
-    )
-    return out.join(keys.select(corpus_key).distinct(), corpus_key, "left_semi")

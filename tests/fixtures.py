@@ -2,7 +2,7 @@
 DataFrames (FIXTURES.md §B), so operator semantics can be checked
 row-for-row against osmium-tool's committed expected outputs.
 
-Sources: /root/reference/test/extract/input1.osm,
+Sources (osmium-tool test suite): test/extract/input1.osm,
 test/tags-filter/input.osm, test/tags-filter/input-site.osm,
 test/extract/antimeridian.opl, test/sort + test/merge inputs.
 """
@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schema import ENTITY_SCHEMA, NODE, RELATION, WAY, fp
+from osmium_tool_spark.schema import ENTITY_SCHEMA, NODE, RELATION, WAY, fp
 
 _TS = 1420074000  # 2015-01-01T01:00:00Z
 _META = dict(version=1, visible=True, changeset=1, ts=_TS, uid=1, user="test")

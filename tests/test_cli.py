@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from osmium_tool_spark.cli import main
 from osmium_tool_spark.schema import NODE, WAY
-from osmium_tool_spark.sources import fixtures
+from tests import fixtures
 
 
 @pytest.fixture(scope="module")
@@ -248,7 +248,7 @@ def test_cli_extract_config_multi(spark, input_dir, tmp_path):
 
 
 def test_cli_getid_with_history_keeps_versions_and_exit_0(spark, tmp_path):
-    from osmium_tool_spark.sources import fixtures
+    from tests import fixtures
 
     src = str(tmp_path / "hist")
     fixtures.history_input(spark).write.parquet(src)

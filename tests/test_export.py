@@ -17,7 +17,7 @@ from osmium_tool_spark.operators.export import (
     to_pg,
 )
 from osmium_tool_spark.schema import NODE, WAY, fp
-from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+from tests.fixtures import _df, _node, _rel, _way
 
 
 @pytest.fixture(scope="module")
@@ -153,7 +153,7 @@ def test_with_attributes(ents):
 def test_multipolygon_hole_classification(spark):
     """Outer + inner ring -> one polygon with a hole (outer CCW, inner CW,
     hole grouped under its containing outer)."""
-    from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+    from tests.fixtures import _df, _node, _rel, _way
     from osmium_tool_spark.schema import WAY
 
     rows = [
@@ -176,7 +176,7 @@ def test_multipolygon_hole_classification(spark):
 
 
 def test_multipolygon_two_outers(spark):
-    from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+    from tests.fixtures import _df, _node, _rel, _way
     from osmium_tool_spark.schema import WAY
 
     rows = [

@@ -6,7 +6,7 @@ import pytest
 
 from osmium_tool_spark.functions.geometry import Extract
 from osmium_tool_spark.operators.extract import extract
-from osmium_tool_spark.sources import fixtures
+from tests import fixtures
 
 
 def result_set(df):
@@ -126,7 +126,7 @@ class TestAntimeridian:
 
         from osmium_tool_spark.functions.geometry import Extract
         from osmium_tool_spark.operators.extract import assign_extracts
-        from osmium_tool_spark.sources.fixtures import _df, _node
+        from tests.fixtures import _df, _node
 
         rows = [
             _node(1, 179.5, 0.0),    # east side of the antimeridian
@@ -166,14 +166,14 @@ class TestSmartTagsFilter:
             smart_tags=["natural=water"],
         )
         got = {(r.type, r.id) for r in out.collect()}
-        from osmium_tool_spark.sources.fixtures import EXTRACT1_EXPECTED
+        from tests.fixtures import EXTRACT1_EXPECTED
 
         assert got == EXTRACT1_EXPECTED["complete_ways"]
 
     def test_smart_tags_match_completes(self, spark, input1):
         from osmium_tool_spark.operators.extract import extract
         from osmium_tool_spark.functions.geometry import Extract
-        from osmium_tool_spark.sources.fixtures import EXTRACT1_EXPECTED
+        from tests.fixtures import EXTRACT1_EXPECTED
 
         out = extract(
             input1,
@@ -189,7 +189,7 @@ class TestSmartTagsFilter:
         """`-S tags=` reaches the smart strategy: a non-matching filter
         degrades smart to complete_ways, as in test_smart_tags_gate."""
         from osmium_tool_spark.cli import main
-        from osmium_tool_spark.sources.fixtures import EXTRACT1_EXPECTED
+        from tests.fixtures import EXTRACT1_EXPECTED
 
         src, out = str(tmp_path / "in.parquet"), str(tmp_path / "out.parquet")
         input1.write.parquet(src)

@@ -17,7 +17,7 @@ from osmium_tool_spark.operators import idops
 from osmium_tool_spark.operators import tags_filter as tags_filter_mod
 from osmium_tool_spark.operators.network import hop_distance
 from osmium_tool_spark.schema import NODE, RELATION, WAY
-from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+from tests.fixtures import _df, _node, _rel, _way
 
 # each example of the entity-graph properties costs 30-45 Spark jobs
 PROPS = settings(max_examples=2, deadline=None)

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from osmium_tool_spark.operators import aggregates, changes, idops, sort_merge
 from osmium_tool_spark.schema import NODE, RELATION, WAY
-from osmium_tool_spark.sources import fixtures
+from tests import fixtures
 from tests.conftest import job_count
 
 
@@ -121,7 +121,7 @@ class TestRenumber:
         assert [m["ref"] for m in by[(RELATION, 5)]["members"]] == [6]
 
     def test_empty_refs_and_members_stay_empty(self, spark):
-        from osmium_tool_spark.sources.fixtures import _df, _rel, _way
+        from tests.fixtures import _df, _rel, _way
 
         out = idops.renumber(_df(spark, [_way(5, []), _rel(7, [])])).collect()
         assert [(r["refs"], r["members"]) for r in out] == [([], None), (None, [])]
@@ -169,7 +169,7 @@ def test_renumber_paths_agree(spark):
     a way and a relation, listed out of order, and several absent refs
     of every type: absent refs are numbered in first-seen order, ways
     before relations, each in canonical (id, version) order."""
-    from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+    from tests.fixtures import _df, _node, _rel, _way
 
     rows = [
         _node(1, 0, 0),
@@ -399,7 +399,7 @@ def test_renumber_index_dir_persistence(spark, tmp_path):
     """--index-dir analog: later batches reuse persisted assignments and
     append after each type's max (command_renumber.cpp:367-441)."""
     from osmium_tool_spark.operators.idops import renumber
-    from osmium_tool_spark.sources.fixtures import _df, _node
+    from tests.fixtures import _df, _node
 
     idx = str(tmp_path / "renumber_idx")
     b1 = _df(spark, [_node(5, 0, 0), _node(10, 0, 1)])
@@ -420,7 +420,7 @@ def test_renumber_index_dir_negative_start(spark, tmp_path, request, path):
     persisted minimum, not the maximum."""
     from osmium_tool_spark.operators.idops import renumber
     from osmium_tool_spark.schema import fp
-    from osmium_tool_spark.sources.fixtures import _df, _node
+    from tests.fixtures import _df, _node
 
     if path == "distributed":
         request.getfixturevalue("distributed_ids")
@@ -439,7 +439,7 @@ def test_apply_changes_locations_on_ways(spark):
     """--locations-on-ways: way locations refreshed from the post-merge
     node set (command_apply_changes.cpp:185-196)."""
     from osmium_tool_spark.operators import changes
-    from osmium_tool_spark.sources.fixtures import _df, _node, _way
+    from tests.fixtures import _df, _node, _way
 
     base = _df(spark, [_node(1, 1.0, 1.0), _node(2, 2.0, 2.0), _way(9, [1, 2], {"h": "x"})])
     # change moves node 1
@@ -455,7 +455,7 @@ def test_fileinfo_crc_libosmium_fold(spark, monkeypatch):
     input layout, and so do the byte and row counts."""
     from pyspark import SparkContext
 
-    from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+    from tests.fixtures import _df, _node, _rel, _way
 
     rows = [
         _node(-i if i % 7 == 0 else i, i / 100, -i / 50, {"k": f"v{i}"} if i % 3 else {},

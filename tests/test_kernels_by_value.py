@@ -111,7 +111,7 @@ print("DECODE", (meta.w, meta.h, meta.fmt) == (8, 6, "png"))
 
 from osmium_tool_spark.sinks.mvt import write_mvt_tiles
 from osmium_tool_spark.sinks.pbf import write_osm_pbf
-from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+from tests.fixtures import _df, _node, _rel, _way
 from osmium_tool_spark.sources.opl import _make_parser, read_opl
 from osmium_tool_spark.sources.osmxml import read_osm_xml
 from osmium_tool_spark.sources.pbf import read_osm_pbf

@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osmium_tool_spark.schema import NODE, RELATION, WAY
-from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+from tests.fixtures import _df, _node, _rel, _way
 from osmium_tool_spark.sources.opl import read_opl, write_opl
 
 SAMPLE = """\

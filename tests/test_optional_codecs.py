@@ -150,7 +150,7 @@ def test_zstd_data_blobs_on_executors(spark, tmp_path):
     they read back unchanged, without it the error names the package.
     Only the data blobs are recoded; the driver reads the header."""
     from osmium_tool_spark.sinks.pbf import write_osm_pbf
-    from osmium_tool_spark.sources.fixtures import _df, _node, _way
+    from tests.fixtures import _df, _node, _way
     from osmium_tool_spark.sources.pbf import read_osm_pbf
 
     ts = 1_420_074_000_000_000

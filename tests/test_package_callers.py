@@ -42,12 +42,6 @@ ALLOWED = {
     "pixel_invariant_violations": "the BASELINE PSNR check of the pixel kernels",
     "make_row_serializer": "Python XML rendering the codegen .osc writer is checked against",
     "serialize_changeset_row": "Python changeset rendering the codegen writer is checked against",
-    # test support: reference inputs transcribed as entity frames
-    "extract_input1": "fixture builder, to move under tests/",
-    "tags_filter_input": "fixture builder, to move under tests/",
-    "tags_filter_site": "fixture builder, to move under tests/",
-    "sort_input_neg": "fixture builder, to move under tests/",
-    "history_input": "fixture builder, to move under tests/",
     # held for failure-injection tests of resume and replay
     "IcebergTable": "snapshot table for the resume failure-injection tests",
     "SnapshotStore": "change stream for the replay failure-injection tests",

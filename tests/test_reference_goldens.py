@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from osmium_tool_spark.operators import changes
 from osmium_tool_spark.schema import NODE, RELATION, WAY
-from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+from tests.fixtures import _df, _node, _rel, _way
 
 T1 = 1420074000  # 2015-01-01T01:00:00Z
 T2 = 1420077600  # 2015-01-01T02:00:00Z

@@ -238,7 +238,7 @@ class TestPbfWriter:
 
         from osmium_tool_spark.functions.protowire import fields, unzigzag
         from osmium_tool_spark.sinks.pbf import write_osm_pbf
-        from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+        from tests.fixtures import _df, _node, _rel, _way
         from osmium_tool_spark.sources.pbf import decompress_blob, index_blobs
 
         ts = 1_420_074_000_000_000

@@ -10,7 +10,7 @@ from osmium_tool_spark.operators.locations import (
 )
 from osmium_tool_spark.schema import NODE, WAY
 from osmium_tool_spark.sinks.writer import read_header, write_sorted
-from osmium_tool_spark.sources.fixtures import _df, _node, _way
+from tests.fixtures import _df, _node, _way
 
 
 @pytest.fixture(scope="module")

@@ -555,22 +555,3 @@ def test_bloom_validation(spark):
         bloom_build(df, "v", k=4, m_bits=32)
     with pytest.raises(ValueError):
         bloom_fpr(4, 1 << 40, 10)
-
-
-def test_bloom_semijoin_exact_and_broadcast(spark):
-    from osmium_tool_spark.operators.sketches import bloom_semijoin
-
-    corpus = spark.createDataFrame(
-        [(i, f"row{i}") for i in range(2000)], "id long, payload string"
-    )
-    keys = spark.createDataFrame([(i * 7,) for i in range(150)], "id long")
-    got = sorted(
-        r.id for r in bloom_semijoin(corpus, keys, "id", k=4, m_bits=4096).collect()
-    )
-    want = sorted(r.id for r in corpus.join(keys, "id", "left_semi").collect())
-    assert got == want  # false positives removed; no member lost
-    plan = (
-        bloom_semijoin(corpus, keys, "id", k=4, m_bits=4096)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("BroadcastHashJoin") >= 4  # k word-lookup probes

@@ -70,6 +70,28 @@ def test_interior_shortcut_fires_and_is_exact(spark):
     assert hi == lo and len(hi) > 0
 
 
+def test_open_ring_matches_closed_twin(spark):
+    """A ring without its closing vertex is the same polygon: the cell
+    index, the verify path and the rasterizer all see it closed."""
+    from osmium_tool_spark.operators.spatial_join import spatial_join
+    from osmium_tool_spark.operators.tiles import polygon_rasterize
+
+    tri = [{"x": -600_000_000, "y": -300_000_000}, {"x": 700_000_000, "y": -200_000_000},
+           {"x": 100_000_000, "y": 600_000_000}]
+    closed = spark.createDataFrame([(1, [tri + tri[:1]])], RINGS)
+    open_ = spark.createDataFrame([(1, [tri])], RINGS)
+    pts = _points(spark)
+
+    def pairs(polys):
+        return set(map(tuple, spatial_join(pts, polys, res=6).select("poly_id", "id").collect()))
+
+    def cells(polys):
+        return set(map(tuple, polygon_rasterize(polys, res=7).select("cx", "cy").collect()))
+
+    assert pairs(open_) == pairs(closed) and len(pairs(closed)) > 0
+    assert cells(open_) == cells(closed) and len(cells(closed)) > 0
+
+
 def test_over_cap_fails_loud(spark):
     from osmium_tool_spark.operators.spatial_join import build_polygon_cell_index
 

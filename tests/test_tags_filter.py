@@ -4,7 +4,7 @@ import pytest
 
 from osmium_tool_spark.functions.tagexpr import CompiledFilter, FilterExpression, StringMatcher
 from osmium_tool_spark.operators.tags_filter import tags_filter
-from osmium_tool_spark.sources import fixtures
+from tests import fixtures
 
 
 def result_set(df):
@@ -96,7 +96,7 @@ class TestAreaPseudoType:
 
     @pytest.fixture(scope="class")
     def area_input(self, spark):
-        from osmium_tool_spark.sources.fixtures import _df, _node, _rel, _way
+        from tests.fixtures import _df, _node, _rel, _way
         from osmium_tool_spark.schema import WAY
 
         rows = [

@@ -7,7 +7,7 @@ import os
 import pytest
 
 from osmium_tool_spark.cli import main
-from osmium_tool_spark.sources import fixtures
+from tests import fixtures
 
 
 @pytest.fixture(scope="module")
