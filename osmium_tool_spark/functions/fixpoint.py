@@ -1,7 +1,9 @@
 """Semi-naive fixpoint: grow a set of rows until a round adds nothing —
-the one loop behind getid -r (command_getid.cpp:235-333), tags-filter's
-mark_rel_ids (command_tags_filter.cpp:247-254), complete-ways parent
-marking (strategy_complete_ways.cpp:36-43,178-186) and hop BFS."""
+the one loop behind the join paths of getid -r (command_getid.cpp:
+235-333), tags-filter's mark_rel_ids (command_tags_filter.cpp:247-254)
+and complete-ways parent marking (strategy_complete_ways.cpp:36-43,
+178-186), and behind hop BFS. Their in-RAM paths close the same sets on
+the driver with functions/idsets.close_relations."""
 
 from __future__ import annotations
 

@@ -22,11 +22,24 @@ cached scan + iterative semi-joins; multi-extract fan-out (<=500 regions,
 command_extract.cpp:77) becomes a single pass that assigns an `extract_id`
 column — the tile/cell assignment — after which the writer partitions by it.
 
-Scale design: mark-sets are (extract_id, id) DataFrames; every join is an
-equi-join on id that AQE can convert to broadcast when a region is small.
-Node->region assignment uses a cheap cell/bbox Column pre-filter so the
-vectorized PIP kernel (Arrow batches, numpy int64 ray-cast) only sees
-envelope candidates; dense regions are handled by AQE skew-join.
+Scale design: node->region assignment (assign_extracts) uses a cheap
+cell/bbox Column pre-filter so the vectorized PIP kernel (Arrow batches,
+numpy int64 ray-cast) only sees envelope candidates; dense regions are
+handled by AQE skew-join. The mark sets after it take one of two paths,
+chosen per call by Spark's own broadcast rule
+(functions/idsets.broadcastable), as getid -r and renumber choose theirs:
+  - in RAM, when the plan's size estimate for the input's (type, id, refs,
+    members) projection is within spark.sql.autoBroadcastJoinThreshold.
+    The reference keeps its mark sets in RAM too. One collect fetches the
+    marked nodes, one Arrow collect the ways' refs and the relations'
+    members; the driver marks ways, extra nodes and relations, closes the
+    parents and completes smart's relations, then one join against an
+    Arrow local relation (extract_id, type, id) emits (_marks_in_ram).
+    Nothing is persisted.
+  - distributed, for larger inputs or a threshold of -1: mark sets are
+    (extract_id, id) DataFrames, every join an equi-join on id that AQE
+    can convert to broadcast when a region is small, and the parent
+    closure a fixpoint of joins.
 """
 
 from __future__ import annotations
@@ -36,12 +49,13 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.fixpoint import CLOSURE_ROUNDS, fixpoint
 from ..functions.cells import MAX_RES
 from ..functions.geometry import CellCover, Extract, box_cells, ship_by_value
+from ..functions.idsets import broadcastable, close_relations, list_items
 from ..functions.sortkeys import canonical_sort
 from ..schema import NODE, RELATION, WAY
 
@@ -289,6 +303,21 @@ def _emit(entities: DataFrame, per_type_ids: dict[int, DataFrame]) -> DataFrame:
     return canonical_sort(out, extra_first=["extract_id"])
 
 
+def _qualifies(smart_types: list[str] | None, smart_tags: list[str] | None) -> Column:
+    """smart's relation check: type in `smart_types` (default
+    multipolygon; an empty list is "any", strategy_smart.cpp:72-80) and,
+    with `smart_tags`, any of those tag expressions."""
+    smart_types = ["multipolygon"] if smart_types is None else smart_types
+    cond = F.lit(True)
+    if smart_types:
+        cond = cond & F.col("tags").getItem("type").isin(smart_types)
+    if smart_tags:
+        from ..functions.tagexpr import TagMatcher
+
+        cond = cond & reduce(lambda a, b: a | b, [TagMatcher.parse(t).col(F.col("tags")) for t in smart_tags])
+    return cond
+
+
 def extract(
     entities: DataFrame,
     extracts: list[Extract],
@@ -301,11 +330,11 @@ def extract(
 ) -> DataFrame:
     """Run the extract pipeline; returns entity rows + `extract_id`.
 
-    `entities` is scanned by several stages (mirroring the reference's 1-3
-    passes over the input), so it is persisted here — the distributed analog
-    of the reference re-reading its input file per pass. When the source is
-    an already-materialized columnar table, Spark's scan is cheap and the
-    persist is still a win for derived inputs.
+    On the distributed path `entities` is scanned by several stages
+    (mirroring the reference's 1-3 passes over the input), so it is
+    persisted here — the distributed analog of the reference re-reading
+    its input file per pass. Set persist_input=False when the input is an
+    already-materialized columnar table (re-caching a scan is waste).
     """
     if strategy == "complete_ways_with_history":
         # the history variant (strategy_complete_ways_with_history.cpp:
@@ -314,6 +343,109 @@ def extract(
         # semi-joins below do when the input carries all versions: the
         # version dimension rides along for free (SURVEY.md §2.3)
         strategy = "complete_ways"
+    if strategy not in ("simple", "complete_ways", "smart"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    qual = _qualifies(smart_types, smart_tags) if strategy == "smart" else None
+    pct = complete_partial_relations_pct
+    if not broadcastable(entities.select("type", "id", "refs", "members")):
+        return _extract_distributed(entities, extracts, strategy, relations, qual, pct, persist_input)
+    marks = _marks_in_ram(entities, extracts, strategy, relations, qual, pct)
+    out = entities.join(marks, ["type", "id"]).select("extract_id", *entities.columns)
+    return canonical_sort(out, extra_first=["extract_id"])
+
+
+def _marks_in_ram(
+    entities: DataFrame, extracts: list[Extract], strategy: str, relations: bool, qual: Column | None, pct: int | None
+) -> DataFrame:
+    """(extract_id, type, id) of every object to emit, computed on the
+    driver from the collected node assignment and one Arrow collect of
+    the ways' refs and the relations' members (and, for smart, whether
+    each relation qualifies); shipped back as a local relation."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    marked_nodes = assign_extracts(entities.filter(F.col("type") == NODE), extracts).toArrow().to_pandas()
+    marked_nodes = marked_nodes[["extract_id", "id"]].drop_duplicates()
+    cols = ["type", "id", "refs", F.col("members.mtype").alias("mt"), F.col("members.ref").alias("mr")]
+    if qual is not None:
+        cols.append(qual.alias("qual"))
+    t = entities.filter(F.col("type").isin(WAY, RELATION)).select(*cols).toArrow()
+    ways = t.filter(pc.equal(t["type"], WAY))
+    rels = t.filter(pc.equal(t["type"], RELATION))
+    row, ref = list_items(ways["refs"])
+    way_refs = pd.DataFrame({"way": ways["id"].to_numpy()[row], "id": ref})
+    row, mtype = list_items(rels["mt"])
+    rel_id = rels["id"].to_numpy()
+    members = pd.DataFrame({"row": row, "rel": rel_id[row], "mtype": mtype, "ref": list_items(rels["mr"])[1]})
+
+    def nodes_of(way_marks: pd.DataFrame) -> pd.DataFrame:
+        return way_refs.merge(way_marks.rename(columns={"id": "way"}), on="way")[["extract_id", "id"]]
+
+    marked_ways = (
+        way_refs.merge(marked_nodes, on="id")[["extract_id", "way"]].rename(columns={"way": "id"}).drop_duplicates()
+    )
+    marks = pd.concat([marked_nodes.assign(mtype=NODE), marked_ways.assign(mtype=WAY)]).rename(columns={"id": "ref"})
+    # simple: only the first node-or-way member decides (strategy_simple.cpp:89-106)
+    tested = members[members["mtype"] != RELATION].drop_duplicates("row") if strategy == "simple" else members
+    hits = tested.merge(marks, on=["mtype", "ref"])
+    rel_marks = hits[["extract_id", "rel"]].drop_duplicates()
+
+    node_marks, way_marks = marked_nodes, marked_ways
+    if strategy == "complete_ways":
+        node_marks = pd.concat([marked_nodes, nodes_of(marked_ways)])
+    elif strategy == "smart":
+        # member completion of qualifying relations (strategy_smart.cpp:205-264)
+        qualified = rel_id[pc.fill_null(rels["qual"], False).to_numpy(zero_copy_only=False)]
+        completing = [rel_marks[rel_marks["rel"].isin(qualified)]]
+        if pct:
+            wanted = hits.groupby(["extract_id", "rel"]).size().rename("wanted").reset_index()
+            size = pc.list_value_length(rels["mt"]).to_numpy(zero_copy_only=False)
+            w = wanted.merge(pd.DataFrame({"rel": rel_id, "size": size}), on="rel")
+            completing.append(w[w["wanted"] * 100 >= w["size"] * pct][["extract_id", "rel"]])
+        completed = pd.concat(completing).drop_duplicates().merge(members, on="rel")
+        extra = completed[["extract_id", "ref"]].rename(columns={"ref": "id"})
+        way_marks = pd.concat([marked_ways, extra[completed["mtype"] == WAY]]).drop_duplicates()
+        # nodes of all (marked + extra) ways (strategy_smart.cpp:257-264)
+        node_marks = pd.concat([marked_nodes, nodes_of(way_marks), extra[completed["mtype"] == NODE]])
+
+    parts = [node_marks.assign(type=NODE), way_marks.assign(type=WAY)]
+    if relations:
+        if strategy != "simple":
+            # parents of marked relations, recursively (strategy_complete_ways.cpp:36-43,178-186)
+            parents: dict[int, set[int]] = {}
+            nested = members[members["mtype"] == RELATION]
+            for child, parent in zip(nested["ref"].tolist(), nested["rel"].tolist()):
+                parents.setdefault(child, set()).add(parent)
+            closed = close_relations(
+                set(zip(rel_marks["extract_id"].tolist(), rel_marks["rel"].tolist())),
+                lambda frontier: {(e, p) for e, r in frontier for p in parents.get(r, ())},
+                CLOSURE_ROUNDS,
+                "extract",
+            )
+            rel_marks = pd.DataFrame(sorted(closed), columns=["extract_id", "rel"], dtype="int64")
+        parts.append(rel_marks.rename(columns={"rel": "id"}).assign(type=RELATION))
+    out = pd.concat(parts).drop_duplicates()
+    table = pa.table(
+        {
+            "extract_id": pa.array(out["extract_id"].to_numpy("int64"), pa.int32()),
+            "type": pa.array(out["type"].to_numpy("int64"), pa.int32()),
+            "id": pa.array(out["id"].to_numpy("int64"), pa.int64()),
+        }
+    )
+    return entities.sparkSession.createDataFrame(table)
+
+
+def _extract_distributed(
+    entities: DataFrame,
+    extracts: list[Extract],
+    strategy: str,
+    relations: bool,
+    qual: Column | None,
+    pct: int | None,
+    persist_input: bool,
+) -> DataFrame:
+    """The mark sets as (extract_id, id) DataFrames, for inputs too large
+    for the driver."""
     if persist_input:
         # skip for inputs that are already materialized columnar tables —
         # re-caching a parquet scan costs a full pass for little gain
@@ -347,27 +479,14 @@ def extract(
         node_ids = marked_nodes.unionByName(extra_nodes).distinct()
         return _emit(entities, {NODE: node_ids, WAY: marked_ways, RELATION: rel_ids})
 
-    if strategy != "smart":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
     # --- smart: member completion of qualifying relations ------------------
-    smart_types = ["multipolygon"] if smart_types is None else smart_types
-    qual = rels
-    if smart_types:  # empty list == "any" (strategy_smart.cpp:72-80)
-        qual = qual.filter(F.col("tags").getItem("type").isin(smart_types))
-    if smart_tags:
-        from ..functions.tagexpr import TagMatcher
-
-        conds = [TagMatcher.parse(t).col(F.col("tags")) for t in smart_tags]
-        qual = qual.filter(reduce(lambda a, b: a | b, conds))
-    qual_ids = qual.select("id")
+    qual_ids = rels.filter(qual).select("id")
 
     # relations with >=1 marked member AND passing type/tags checks complete
     marked_any = _mark_relations_any(members, marked_nodes, marked_ways)
     completing = marked_any.join(qual_ids, on="id", how="left_semi")
 
-    if complete_partial_relations_pct:
-        pct = complete_partial_relations_pct
+    if pct:
         sizes = rels.select(F.col("id"), F.size("members").alias("sz"))
         wanted_n = members.filter(F.col("mtype") == NODE).join(
             marked_nodes.withColumnRenamed("id", "ref"), on="ref"

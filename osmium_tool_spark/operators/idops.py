@@ -8,11 +8,13 @@ integrity anti-join).
 
 The reference keeps its id sets (IdSetDense) and renumber's id_map in RAM.
 getid -r and renumber have two paths, chosen per call by Spark's own
-broadcast rule: when the plan's size estimate for the input's (type, id,
-refs, members) projection is within spark.sql.autoBroadcastJoinThreshold,
-the id sets and the id map live on the driver (one collect per closure
-level, one Arrow collect for the map) and reach the executors as IN
-filters or local relations. Larger inputs, or a threshold of -1, keep
+broadcast rule (functions/idsets.broadcastable, which extract and
+tags-filter share): when the plan's size estimate for the input's (type,
+id, refs, members) projection is within
+spark.sql.autoBroadcastJoinThreshold, the id sets and the id map live on
+the driver (one collect per closure round plus one for the ways' refs,
+one Arrow collect for the map) and reach the executors as IN filters or
+local relations. Larger inputs, or a threshold of -1, keep
 them as DataFrames joined against the input. An input without a size
 estimate never takes the driver path: read_osm_pbf, read_o5m and
 read_osm_xml build their frames from Python lists, whose estimate is
@@ -22,10 +24,11 @@ use (semi/anti) joins, which AQE broadcasts when the id set is small.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.fixpoint import CLOSURE_ROUNDS, fixpoint
+from ..functions.idsets import broadcastable, close_relations, id_in, ids_frame
 from ..functions.sortkeys import canonical_sort, id_sort_key, id_sort_keys
 from ..schema import NODE, RELATION, WAY
 
@@ -125,74 +128,33 @@ def merge_id_sets(*id_sets: dict[int, list[int]]) -> dict[int, list[int]]:
     return {t: sorted(set(lst)) for t, lst in out.items()}
 
 
-def _broadcastable(df: DataFrame) -> bool:
-    """Whether Spark would broadcast `df`: its plan's size estimate is
-    within spark.sql.autoBroadcastJoinThreshold (negative disables
-    broadcasts). This picks the ID engine's in-RAM path."""
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return 0 <= size <= conf.autoBroadcastJoinThreshold()
-
-
-def _id_in(sel: dict[int, set[int]]) -> Column:
-    """(type, id) in a driver-side id set, as one filter that the scan can
-    take as a pushed-down IN. Built from SQL text: Column.isin makes one
-    JVM call per value, about 0.5 ms each."""
-    conds = [
-        f"(`type` = {t} AND `id` IN ({','.join(map(str, sorted(ids)))}))"
-        for t, ids in sorted(sel.items())
-        if ids
-    ]
-    return F.expr(" OR ".join(conds) or "false")
-
-
-def _ids_frame(spark, sel: dict[int, set[int]]) -> DataFrame:
-    """A driver-side id set as a (type, id) frame: an Arrow-backed local
-    relation, so a join reads the ids as a table rather than as SQL
-    literals."""
-    import pyarrow as pa
-
-    return spark.createDataFrame(
-        pa.table(
-            {
-                "type": pa.array([t for t, ids in sel.items() for _ in ids], pa.int32()),
-                "id": pa.array([i for ids in sel.values() for i in ids], pa.int64()),
-            }
-        )
-    )
-
-
 def _closure_in_ram(entities: DataFrame, sel: dict[int, set[int]]) -> dict[int, set[int]]:
     """getid -r's reference closure with its id sets on the driver, the
-    way the reference keeps IdSetDense in RAM: one collect per level
-    fetches the refs and members of the ways and relations the previous
-    level reached first (nodes reference nothing and are never fetched).
-    Levels that fetch relations are the closure rounds of the distributed
-    path, with the same round cap."""
+    way the reference keeps IdSetDense in RAM: each closure round collects
+    the members of the relations the previous round reached, then one
+    collect fetches the refs of every way reached (nodes reference
+    nothing and are never fetched)."""
     have = {t: set(sel.get(t, ())) for t in (NODE, WAY, RELATION)}
-    todo = {t: set(have[t]) for t in (WAY, RELATION)}
-    sizes: list[int] = []
-    while todo[WAY] or todo[RELATION]:
+
+    def members(frontier: set[int]) -> set[int]:
         rows = (
-            entities.filter(_id_in(todo))
-            .select("type", "refs", F.col("members.mtype").alias("mt"), F.col("members.ref").alias("mr"))
+            entities.filter(id_in({RELATION: frontier}))
+            .select(F.col("members.mtype").alias("mt"), F.col("members.ref").alias("mr"))
             .collect()
         )
-        found: dict[int, set[int]] = {NODE: set(), WAY: set(), RELATION: set()}
+        found = set()
         for r in rows:
-            if r["type"] == WAY:
-                found[NODE].update(r["refs"] or ())
-            elif r["type"] == RELATION:
-                for t, ref in zip(r["mt"] or (), r["mr"] or ()):
-                    if t in found:
-                        found[t].add(ref)
-        if todo[RELATION]:
-            sizes.append(len(found[RELATION] - have[RELATION]))
-            if len(sizes) == CLOSURE_ROUNDS and sizes[-1]:
-                raise ValueError(f"getid: relations nested over {CLOSURE_ROUNDS} deep, frontier sizes {sizes}")
-        todo = {t: found[t] - have[t] for t in (WAY, RELATION)}
-        for t in have:
-            have[t] |= found[t]
+            for t, ref in zip(r["mt"] or (), r["mr"] or ()):
+                if t == RELATION:
+                    found.add(ref)
+                elif t in have:
+                    have[t].add(ref)
+        return found
+
+    have[RELATION] = close_relations(have[RELATION], members, CLOSURE_ROUNDS, "getid")
+    if have[WAY]:
+        for r in entities.filter(id_in({WAY: have[WAY]})).select("refs").collect():
+            have[NODE].update(r["refs"] or ())
     return have
 
 
@@ -212,7 +174,7 @@ def getid(
     as a local relation; larger inputs close them with joins. Set
     persist_input=False when a larger input is an already-materialized
     table (re-caching a scan is waste)."""
-    if recursive and _broadcastable(entities.select("type", "id", "refs", "members")):
+    if recursive and broadcastable(entities.select("type", "id", "refs", "members")):
         if isinstance(ids, DataFrame):
             present = _ids_df(entities, ids).join(entities.select("type", "id"), ["type", "id"], "left_semi")
             sel: dict[int, set[int]] = {}
@@ -221,7 +183,7 @@ def getid(
         else:
             sel = {t: set(lst) for t, lst in ids.items()}
         closure = _closure_in_ram(entities, sel)
-        return canonical_sort(entities.join(_ids_frame(entities.sparkSession, closure), ["type", "id"], "left_semi"))
+        return canonical_sort(entities.join(ids_frame(entities.sparkSession, closure), ["type", "id"], "left_semi"))
     sel = _ids_df(entities, ids)
     if recursive:
         if persist_input:
@@ -361,8 +323,8 @@ def renumber(
     prior = None
     if index_dir and os.path.exists(os.path.join(index_dir, "_SUCCESS")):
         prior = spark.read.parquet(index_dir)
-    in_ram = _broadcastable(entities.select("type", "id", "refs", "members")) and (
-        prior is None or _broadcastable(prior)
+    in_ram = broadcastable(entities.select("type", "id", "refs", "members")) and (
+        prior is None or broadcastable(prior)
     )
     build = _mapping_in_ram if in_ram else _mapping_distributed
     mapping = build(entities, types, start_ids, prior)

@@ -40,9 +40,9 @@ def job_count(spark, run) -> int:
 
 @pytest.fixture
 def distributed_ids(spark):
-    """Send getid -r and renumber down their distributed path: with
-    broadcasts disabled no input is small enough to keep its id sets on
-    the driver."""
+    """Send getid -r, renumber, extract and tags-filter down their
+    distributed path: with broadcasts disabled no input is small enough
+    to keep its id sets on the driver."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
     spark.conf.set(key, "-1")

@@ -5,12 +5,17 @@ per test/extract/CMakeLists.txt:10-50)."""
 import pytest
 
 from osmium_tool_spark.functions.geometry import Extract
+from osmium_tool_spark.functions.idsets import broadcastable
 from osmium_tool_spark.operators.extract import extract
 from tests import fixtures
 
 
 def result_set(df):
     return {(r["type"], r["id"]) for r in df.select("type", "id").collect()}
+
+
+def mark_path_is(df, in_ram):
+    return broadcastable(df.select("type", "id", "refs", "members")) is in_ram
 
 
 BBOX = [Extract.bbox(0, 0, 0, 1.5, 10)]
@@ -24,6 +29,14 @@ def input1(spark):
 
 
 class TestExtractInput1:
+    """Each strategy, run once per path: the distributed twin below
+    disables broadcasts, so the mark sets stay DataFrames."""
+
+    in_ram = True  # the fixture is small enough to keep its mark sets on the driver
+
+    def test_path(self, input1):
+        assert mark_path_is(input1, self.in_ram)
+
     def test_simple(self, input1):
         got = result_set(extract(input1, BBOX, strategy="simple"))
         assert got == fixtures.EXTRACT1_EXPECTED["simple"]
@@ -92,10 +105,20 @@ class TestExtractInput1:
         assert keys == sorted(keys)
 
 
+@pytest.mark.usefixtures("distributed_ids")
+class TestExtractInput1Distributed(TestExtractInput1):
+    in_ram = False
+
+
 class TestExtractHistory:
     """complete_ways_with_history: marks ids when ANY version matches, emits
     EVERY version of marked ids (reference
     strategy_complete_ways_with_history.cpp:30-188)."""
+
+    in_ram = True
+
+    def test_path(self, spark):
+        assert mark_path_is(fixtures.history_input(spark), self.in_ram)
 
     def test_all_versions_of_marked_ids(self, spark):
         from osmium_tool_spark.schema import NODE, WAY
@@ -114,6 +137,11 @@ class TestExtractHistory:
             (NODE, 2, 1), (NODE, 2, 2),
             (WAY, 10, 1), (WAY, 10, 2),
         }
+
+
+@pytest.mark.usefixtures("distributed_ids")
+class TestExtractHistoryDistributed(TestExtractHistory):
+    in_ram = False
 
 
 class TestAntimeridian:
@@ -150,6 +178,11 @@ class TestAntimeridian:
 class TestSmartTagsFilter:
     """-S tags= restricts which relations complete their members
     (strategy_smart.cpp:88-100,128-130)."""
+
+    in_ram = True
+
+    def test_path(self, input1):
+        assert mark_path_is(input1, self.in_ram)
 
     def test_smart_tags_gate(self, spark, input1):
         from osmium_tool_spark.operators.extract import extract
@@ -197,3 +230,8 @@ class TestSmartTagsFilter:
         assert main(argv + ["-S", "tags=natural=water"], spark=spark) == 0
         got = {(r.type, r.id) for r in spark.read.parquet(out).collect()}
         assert got == EXTRACT1_EXPECTED["complete_ways"]
+
+
+@pytest.mark.usefixtures("distributed_ids")
+class TestSmartTagsFilterDistributed(TestSmartTagsFilter):
+    in_ram = False

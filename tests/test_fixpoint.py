@@ -120,10 +120,7 @@ def test_getid_recursive_matches_reference_distributed(spark, distributed_ids, g
     check_getid_recursive(spark, g, picks)
 
 
-@PROPS
-@given(g=graphs())
-@example(g=NESTED)
-def test_tags_filter_relation_closure_matches_reference(spark, g):
+def check_tags_filter_relation_closure(spark, g):
     nodes, ways, rels, tagged = g
     rel_ids = closure(tagged & set(rels), lambda r: rel_children(rels, r))
     way_ids = members_of(rels, rel_ids, WAY)
@@ -135,13 +132,24 @@ def test_tags_filter_relation_closure_matches_reference(spark, g):
     assert result_set(got) == want
 
 
-BOXES = [Extract.bbox(0, 0, 0, 1.5, 1.5), Extract.bbox(1, 1, 1, 3, 3)]
-
-
 @PROPS
 @given(g=graphs())
 @example(g=NESTED)
-def test_extract_complete_ways_matches_reference(spark, g):
+def test_tags_filter_relation_closure_matches_reference(spark, g):
+    check_tags_filter_relation_closure(spark, g)
+
+
+@settings(PROPS, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(g=graphs())
+@example(g=NESTED)
+def test_tags_filter_relation_closure_matches_reference_distributed(spark, distributed_ids, g):
+    check_tags_filter_relation_closure(spark, g)
+
+
+BOXES = [Extract.bbox(0, 0, 0, 1.5, 1.5), Extract.bbox(1, 1, 1, 3, 3)]
+
+
+def check_extract_complete_ways(spark, g):
     nodes, ways, rels, _ = g
     parents = {}
     for r, mem in rels.items():
@@ -164,6 +172,20 @@ def test_extract_complete_ways_matches_reference(spark, g):
 
     got = extract_mod.extract(entities(spark, g), BOXES, strategy="complete_ways")
     assert result_set(got, "extract_id") == want
+
+
+@PROPS
+@given(g=graphs())
+@example(g=NESTED)
+def test_extract_complete_ways_matches_reference(spark, g):
+    check_extract_complete_ways(spark, g)
+
+
+@settings(PROPS, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(g=graphs())
+@example(g=NESTED)
+def test_extract_complete_ways_matches_reference_distributed(spark, distributed_ids, g):
+    check_extract_complete_ways(spark, g)
 
 
 @settings(max_examples=5, deadline=None)
@@ -229,7 +251,7 @@ CHAIN = (
 )
 
 
-@pytest.mark.parametrize(
+CLOSURE_CALLERS = pytest.mark.parametrize(
     "module, run",
     [
         (idops, lambda ents: idops.getid(ents, {RELATION: [1]}, recursive=True)),
@@ -238,11 +260,19 @@ CHAIN = (
     ],
     ids=["getid", "tags_filter", "extract"],
 )
+
+
+@CLOSURE_CALLERS
 def test_closure_callers_raise_at_round_cap(spark, monkeypatch, module, run):
     ents = entities(spark, CHAIN)
     monkeypatch.setattr(module, "CLOSURE_ROUNDS", 2)
     with pytest.raises(ValueError, match=r"relations nested over 2 deep, frontier sizes \[1, 1\]"):
         run(ents).collect()
+
+
+@CLOSURE_CALLERS
+def test_closure_callers_raise_at_round_cap_distributed(spark, distributed_ids, monkeypatch, module, run):
+    test_closure_callers_raise_at_round_cap(spark, monkeypatch, module, run)
 
 
 def test_one_job_per_frontier(spark):

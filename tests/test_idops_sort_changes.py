@@ -3,7 +3,11 @@
 import pytest
 from pyspark.sql import functions as F
 
+from osmium_tool_spark.functions.geometry import Extract
+from osmium_tool_spark.functions.idsets import broadcastable, ids_frame
 from osmium_tool_spark.operators import aggregates, changes, idops, sort_merge
+from osmium_tool_spark.operators.extract import extract
+from osmium_tool_spark.operators.tags_filter import tags_filter
 from osmium_tool_spark.schema import NODE, RELATION, WAY
 from tests import fixtures
 from tests.conftest import job_count
@@ -21,6 +25,13 @@ def inp(spark):
 
 
 @pytest.fixture(scope="module")
+def site(spark):
+    df = fixtures.tags_filter_site(spark).cache()
+    df.count()
+    return df
+
+
+@pytest.fixture(scope="module")
 def hist(spark):
     df = fixtures.history_input(spark).cache()
     df.count()
@@ -32,7 +43,7 @@ DANGLING = f"NOT ((type = {NODE} AND id = 12) OR (type = {RELATION} AND id = 35)
 
 
 def id_path_is(inp, in_ram):
-    return idops._broadcastable(inp.select("type", "id", "refs", "members")) is in_ram
+    return broadcastable(inp.select("type", "id", "refs", "members")) is in_ram
 
 
 class GetIdRecursive:
@@ -150,7 +161,7 @@ def test_in_ram_job_counts(spark, inp):
     closure = {RELATION: {31, 35, 36}, NODE: {10}}
     final = job_count(
         spark,
-        lambda: canonical_sort(inp.join(idops._ids_frame(spark, closure), ["type", "id"], "left_semi")).collect(),
+        lambda: canonical_sort(inp.join(ids_frame(spark, closure), ["type", "id"], "left_semi")).collect(),
     )
     assert job_count(spark, lambda: idops.getid(inp, {RELATION: [36]}, recursive=True).collect()) == 3 + final
     assert job_count(spark, lambda: idops.renumber(inp).collect()) == 1 + 1 + final
@@ -210,21 +221,64 @@ def test_renumber_paths_agree(spark):
     }
 
 
-def test_in_ram_path_persists_nothing(spark, inp):
+STRATEGIES = ("simple", "complete_ways", "smart")
+BBOX = [Extract.bbox(0, 0, 0, 1.5, 10)]
+
+
+def test_mark_sets_in_ram_job_counts(spark, inp, site):
+    """extract collects the node assignment, then the ways' refs and the
+    relations' members; tags-filter collects the ways and relations its
+    passes need. Each emit then takes three jobs: the broadcast of one
+    join side, the sort's range sample and the result. An eager probe or
+    a persisted frame would add a job."""
+    assert id_path_is(inp, True) and id_path_is(site, True)
+    for strategy in STRATEGIES:
+        assert job_count(spark, lambda: extract(inp, BBOX, strategy=strategy).collect()) == 2 + 3, strategy
+    assert job_count(spark, lambda: tags_filter(site, ["r/site"]).collect()) == 1 + 3
+
+
+def test_mark_sets_distributed_job_counts(spark, inp, site, distributed_ids):
+    """The distributed path's counts, pinned. tags-filter on the nested
+    site relations probes the relation edges once, then runs the
+    fixpoint."""
+    assert id_path_is(inp, False) and id_path_is(site, False)
+    counts = {s: job_count(spark, lambda: extract(inp, BBOX, strategy=s).collect()) for s in STRATEGIES}
+    assert counts == {"simple": 2, "complete_ways": 9, "smart": 9}
+    assert job_count(spark, lambda: tags_filter(site, ["r/site"]).collect()) == 7
+
+
+def persisted(spark):
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def test_in_ram_path_persists_nothing(spark, inp, site):
     """No RDD persisted by three calls each stays registered. RDD ids only
     grow, so the check looks at ids above the last one persisted before
     the calls: GC may drop older entries of earlier tests meanwhile, which
     makes a plain count flaky."""
-
-    def persisted():
-        return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
-
-    last = max(persisted(), default=-1)
+    last = max(persisted(spark), default=-1)
     for _ in range(3):
         idops.renumber(inp).collect()
         idops.getid(inp, {RELATION: [36]}, recursive=True).collect()
-    assert id_path_is(inp, True)
-    assert {i for i in persisted() if i > last} == set()
+        for strategy in STRATEGIES:
+            extract(inp, BBOX, strategy=strategy).collect()
+        tags_filter(site, ["r/site"], remove_tags=True).collect()
+    assert id_path_is(inp, True) and id_path_is(site, True)
+    assert {i for i in persisted(spark) if i > last} == set()
+
+
+def test_distributed_tags_filter_persists_nothing(spark, distributed_ids):
+    """tags-filter's join path leaves no RDD persisted either, when no
+    relation nests in another (the fixpoint's checkpoints, which it then
+    skips, stay registered until GC)."""
+    from tests.fixtures import _df, _node, _rel, _way
+
+    flat = _df(spark, [_node(1, 0, 0), _way(2, [1]), _rel(3, [(WAY, 2, "")], {"k": "a"}), _rel(4, [(NODE, 1, "")])])
+    last = max(persisted(spark), default=-1)
+    for _ in range(3):
+        assert rset(tags_filter(flat, ["r/k=a"])) == {(NODE, 1), (WAY, 2), (RELATION, 3)}
+    assert id_path_is(flat, False)
+    assert {i for i in persisted(spark) if i > last} == set()
 
 
 class TestCheckRefs:

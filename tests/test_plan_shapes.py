@@ -2,8 +2,10 @@
 
 One table-driven test over the 16 `bench.py` headline rows, the flagship
 `image_extract_tile` over a small parquet image table, and the operators
-whose plan shape is the point of their design. Each row's plan is read
-from `_jdf.queryExecution().executedPlan()` and checked for:
+whose plan shape is the point of their design. Rows named `*_distributed`
+run with broadcasts disabled (`distributed_ids`), which sends the ID
+engine down its join path. Each row's plan is read from
+`_jdf.queryExecution().executedPlan()` and checked for:
 
 - no CartesianProduct or BroadcastNestedLoopJoin, unless the row names one;
 - no Window fed by a SinglePartition exchange, unless the row names one;
@@ -311,12 +313,26 @@ SCALAR_CROSS = 1
 TYPES = ("EqualTo(type,0)", "EqualTo(type,1)", "EqualTo(type,2)")
 
 
+# the in-RAM mark sets of extract and tags-filter: one join of the input
+# against a local relation, then the sort's range exchange; nothing cached,
+# exploded or sort-merge joined
+IN_RAM_EMIT = Shape(
+    1, has={"BroadcastHashJoin", "LocalTableScan"}, lacks=PYTHON | {"SortMergeJoin", "InMemoryTableScan", "Generate"}
+)
+
+
 ROWS: dict[str, tuple[Callable, Shape]] = {
     # bench.py headline rows
-    "extract_bbox_simple": (headline("extract_bbox_simple"), Shape(4, pushed=TYPES)),
-    "extract_complete_ways": (headline("extract_complete_ways"), Shape(7, pushed=TYPES)),
+    "extract_bbox_simple": (headline("extract_bbox_simple"), IN_RAM_EMIT),
+    "extract_complete_ways": (headline("extract_complete_ways"), IN_RAM_EMIT),
     "extract_polygon": (headline("extract_polygon"), Shape(0, lacks=PYTHON)),
-    "tags_filter_closure": (headline("tags_filter_closure"), Shape(3, pushed=TYPES[:2])),
+    "tags_filter_closure": (headline("tags_filter_closure"), IN_RAM_EMIT),
+    # the same three on the ID engine's join path (rows named *_distributed
+    # run with broadcasts disabled): every join sort-merges, and each cached
+    # mark set's plan repeats under its InMemoryTableScan
+    "extract_bbox_simple_distributed": (headline("extract_bbox_simple"), Shape(18, pushed=TYPES)),
+    "extract_complete_ways_distributed": (headline("extract_complete_ways"), Shape(25, pushed=TYPES)),
+    "tags_filter_closure_distributed": (headline("tags_filter_closure"), Shape(7, pushed=TYPES[:2])),
     "getid_recursive": (headline("getid_recursive"), Shape(1)),
     "renumber": (headline("renumber"), Shape(3, lacks={"Window"})),
     # the registry row ranks with an unpartitioned Window: all rows meet in one task
@@ -488,8 +504,10 @@ def data(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("name", ROWS)
-def test_plan_shape(data, name):
+def test_plan_shape(data, name, request):
     build, shape = ROWS[name]
+    if name.endswith("_distributed"):
+        request.getfixturevalue("distributed_ids")
     assert violations(plan_of(build(data)), shape) == []
 
 

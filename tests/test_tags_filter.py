@@ -2,6 +2,7 @@
 
 import pytest
 
+from osmium_tool_spark.functions.idsets import broadcastable
 from osmium_tool_spark.functions.tagexpr import CompiledFilter, FilterExpression, StringMatcher
 from osmium_tool_spark.operators.tags_filter import tags_filter
 from tests import fixtures
@@ -48,6 +49,15 @@ class TestExpressionParser:
 
 
 class TestTagsFilterGoldens:
+    """Run once per path: the distributed twin below disables broadcasts,
+    so reference completion keeps its id sets as DataFrames."""
+
+    in_ram = True  # both fixtures are small enough to close on the driver
+
+    def test_path(self, inp, site):
+        for df in (inp, site):
+            assert broadcastable(df.select("type", "id", "refs", "members")) is self.in_ram
+
     @pytest.mark.parametrize("key", sorted(fixtures.TAGS_FILTER_EXPECTED, key=str))
     def test_input_goldens(self, inp, key):
         expr, invert, omit = key
@@ -87,6 +97,11 @@ class TestTagsFilterGoldens:
     def test_key_not_value(self, inp):
         got = result_set(tags_filter(inp, ["w/highway!=primary"], omit_referenced=True))
         assert got == {(1, 21)}
+
+
+@pytest.mark.usefixtures("distributed_ids")
+class TestTagsFilterGoldensDistributed(TestTagsFilterGoldens):
+    in_ram = False
 
 
 class TestAreaPseudoType:
