@@ -316,7 +316,7 @@ def q_getid_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmium_tool_spark.sources import testdata as td
 
     ents = td.entities(spark, sf_dir)
-    out = getid(ents, {NODE: [], WAY: [], RELATION: [1, 3, 5, 7]}, recursive=True, persist_input=False)
+    out = getid(ents, {NODE: [], WAY: [], RELATION: [1, 3, 5, 7]}, recursive=True)
     return out.select(_L("type").alias("type"), _L("id").alias("id"))
 
 

@@ -14,8 +14,9 @@ Architecture (NOT a port):
   - The only Python-side hot path is the vectorized (Arrow-batched)
     point-in-polygon kernel in ``functions/geometry.py``, driven through
     ``mapInPandas``/``pandas_udf`` — never per-row Python.
-  - Multi-pass streaming strategies of the reference become iterative
-    semi-join closures (bounded fixpoint loops) over id DataFrames.
+  - Multi-pass streaming strategies of the reference become semi-joins
+    over id DataFrames; relation nesting is closed on the driver, as the
+    reference keeps it in RAM (``functions/idsets.py``).
 """
 
 __version__ = "0.1.0"

@@ -38,8 +38,9 @@ chosen per call by Spark's own broadcast rule
     Nothing is persisted.
   - distributed, for larger inputs or a threshold of -1: mark sets are
     (extract_id, id) DataFrames, every join an equi-join on id that AQE
-    can convert to broadcast when a region is small, and the parent
-    closure a fixpoint of joins.
+    can convert to broadcast when a region is small. Only the parent
+    closure runs on the driver, over the collected relation-in-relation
+    edges (idsets.close_nested).
 """
 
 from __future__ import annotations
@@ -52,10 +53,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.fixpoint import CLOSURE_ROUNDS, fixpoint
 from ..functions.cells import MAX_RES
 from ..functions.geometry import CellCover, Extract, box_cells, ship_by_value
-from ..functions.idsets import broadcastable, close_relations, list_items
+from ..functions.idsets import CLOSURE_ROUNDS, broadcastable, close_nested, close_relations, edge_step, list_items
 from ..functions.sortkeys import canonical_sort
 from ..schema import NODE, RELATION, WAY
 
@@ -270,27 +270,6 @@ def _mark_relations_first_member(
     return _union([n, w]).select("extract_id", F.col("rel_id").alias("id")).distinct()
 
 
-def _relation_parent_closure(members: DataFrame, marked_rels: DataFrame) -> DataFrame:
-    """Fixpoint: add parents of marked relations, recursively
-    (strategy_complete_ways.cpp:36-43,178-186). Relation nesting is rare,
-    so the rel-in-rel edge set is probed once and the fixpoint skipped
-    when it is empty."""
-    edges = members.filter(F.col("mtype") == RELATION).select(F.col("ref").alias("id"), "rel_id").persist()
-    if edges.isEmpty():
-        edges.unpersist()
-        return marked_rels
-    closed, converged, sizes = fixpoint(
-        marked_rels,
-        lambda frontier, _: edges.join(frontier, "id").select("extract_id", F.col("rel_id").alias("id")),
-        ["extract_id", "id"],
-        CLOSURE_ROUNDS,
-    )
-    edges.unpersist()
-    if not converged:
-        raise ValueError(f"extract: relations nested over {CLOSURE_ROUNDS} deep, frontier sizes {sizes}")
-    return closed
-
-
 def _emit(entities: DataFrame, per_type_ids: dict[int, DataFrame]) -> DataFrame:
     """Join entity rows against per-type (extract_id, id) sets and restore
     the reference's output order contract (sorting=Type_then_ID)."""
@@ -412,13 +391,10 @@ def _marks_in_ram(
     if relations:
         if strategy != "simple":
             # parents of marked relations, recursively (strategy_complete_ways.cpp:36-43,178-186)
-            parents: dict[int, set[int]] = {}
             nested = members[members["mtype"] == RELATION]
-            for child, parent in zip(nested["ref"].tolist(), nested["rel"].tolist()):
-                parents.setdefault(child, set()).add(parent)
             closed = close_relations(
                 set(zip(rel_marks["extract_id"].tolist(), rel_marks["rel"].tolist())),
-                lambda frontier: {(e, p) for e, r in frontier for p in parents.get(r, ())},
+                edge_step(nested["ref"], nested["rel"]),
                 CLOSURE_ROUNDS,
                 "extract",
             )
@@ -469,11 +445,17 @@ def _extract_distributed(
         .distinct()
     )
 
-    members = _member_edges(rels).persist() if relations else None
+    # smart completes qualifying relations' members even with relations off
+    members = _member_edges(rels).persist() if relations or strategy == "smart" else None
     rel_ids = None
     if relations:
-        rel_ids = _mark_relations_any(members, marked_nodes, marked_ways)
-        rel_ids = _relation_parent_closure(members, rel_ids)
+        # parents of marked relations, recursively (strategy_complete_ways.cpp:36-43,178-186)
+        rel_ids = close_nested(
+            _mark_relations_any(members, marked_nodes, marked_ways),
+            members.filter(F.col("mtype") == RELATION).select(F.col("ref").alias("id"), F.col("rel_id").alias("to")),
+            CLOSURE_ROUNDS,
+            "extract",
+        )
 
     if strategy == "complete_ways":
         node_ids = marked_nodes.unionByName(extra_nodes).distinct()

@@ -15,7 +15,8 @@ spark.sql.autoBroadcastJoinThreshold, the id sets and the id map live on
 the driver (one collect per closure round plus one for the ways' refs,
 one Arrow collect for the map) and reach the executors as IN filters or
 local relations. Larger inputs, or a threshold of -1, keep
-them as DataFrames joined against the input. An input without a size
+them as DataFrames joined against the input; getid -r still closes the
+relation nesting on the driver (idsets.close_nested). An input without a size
 estimate never takes the driver path: read_osm_pbf, read_o5m and
 read_osm_xml build their frames from Python lists, whose estimate is
 unbounded. getid without -r, removeid, getparents and check-refs always
@@ -27,8 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.fixpoint import CLOSURE_ROUNDS, fixpoint
-from ..functions.idsets import broadcastable, close_relations, id_in, ids_frame
+from ..functions.idsets import CLOSURE_ROUNDS, broadcastable, close_nested, close_relations, id_in, ids_frame
 from ..functions.sortkeys import canonical_sort, id_sort_key, id_sort_keys
 from ..schema import NODE, RELATION, WAY
 
@@ -162,7 +162,6 @@ def getid(
     entities: DataFrame,
     ids: dict[int, list[int]],
     recursive: bool = False,
-    persist_input: bool = True,
 ) -> DataFrame:
     """Semi-join by explicit (type,id) list; `recursive` follows references
     downward until closed (command_getid.cpp:235-333): relation members
@@ -171,9 +170,9 @@ def getid(
     The recursive closure keeps its id sets on the driver when Spark would
     broadcast the input's (type, id, refs, members) projection
     (_closure_in_ram), then semi-joins the input with the closure shipped
-    as a local relation; larger inputs close them with joins. Set
-    persist_input=False when a larger input is an already-materialized
-    table (re-caching a scan is waste)."""
+    as a local relation. Larger inputs close the relation nesting on the
+    driver too (idsets.close_nested) and mark members and way nodes with
+    joins, so a planet-sized id set never reaches the driver."""
     if recursive and broadcastable(entities.select("type", "id", "refs", "members")):
         if isinstance(ids, DataFrame):
             present = _ids_df(entities, ids).join(entities.select("type", "id"), ["type", "id"], "left_semi")
@@ -186,29 +185,18 @@ def getid(
         return canonical_sort(entities.join(ids_frame(entities.sparkSession, closure), ["type", "id"], "left_semi"))
     sel = _ids_df(entities, ids)
     if recursive:
-        if persist_input:
-            entities = entities.persist()  # scanned per closure round
-        rels = entities.filter(F.col("type") == RELATION)
         rel_edges = (
-            rels.select("id", F.explode("members").alias("m"))
+            entities.filter(F.col("type") == RELATION)
+            .select("id", F.explode("members").alias("m"))
             .select("id", F.col("m.mtype").alias("mtype"), F.col("m.ref").alias("ref"))
-            .persist()
         )
-        # 1) close relation->relation downward. Rel-in-rel edges are rare
-        # (nesting depth ~0-2 in practice): probe the edge set ONCE and
-        # skip the fixpoint loop entirely when empty — saves two eager
-        # localCheckpoint materializations per call in the common case
-        rel_member_edges = rel_edges.filter(F.col("mtype") == RELATION)
-        rel_ids = sel.filter(F.col("type") == RELATION).select("id")
-        if not rel_member_edges.isEmpty():
-            rel_ids, converged, sizes = fixpoint(
-                rel_ids,
-                lambda frontier, _: rel_member_edges.join(frontier, "id").select(F.col("ref").alias("id")),
-                ["id"],
-                CLOSURE_ROUNDS,
-            )
-            if not converged:
-                raise ValueError(f"getid: relations nested over {CLOSURE_ROUNDS} deep, frontier sizes {sizes}")
+        # 1) close relation->relation downward
+        rel_ids = close_nested(
+            sel.filter(F.col("type") == RELATION).select("id"),
+            rel_edges.filter(F.col("mtype") == RELATION).select("id", F.col("ref").alias("to")),
+            CLOSURE_ROUNDS,
+            "getid",
+        )
         # 2) way/node members of all selected relations
         mem = rel_edges.join(rel_ids, "id")
         way_ids = (

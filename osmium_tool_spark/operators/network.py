@@ -13,10 +13,8 @@ the edge set, no driver-side graph.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-from ..functions.fixpoint import fixpoint
 
 
 def way_edges(ways: DataFrame, id_col: str = "id", refs_col: str = "refs") -> DataFrame:
@@ -86,11 +84,14 @@ def hop_distance(
     connected regions) against the edge table, anti-joins the settled
     set, and stamps the round number. O(radius) rounds of
     frontier-sized joins — the edge table is the only corpus-scale
-    side and is traversed once per round via an equi-join on u;
-    `localCheckpoint` truncates lineage per round (the dup_clusters
-    discipline). Unreached nodes are absent (the caller left-joins and
-    fills with NULL/inf); `max_hops` bounds the rounds, so a
-    pathological 10^6-long chain costs max_hops rounds, not 10^6.
+    side and is traversed once per round via an equi-join on u.
+    An eager `localCheckpoint` truncates lineage per round (the
+    dup_clusters discipline) and counts the frontier through an
+    Observation in the same job; a non-empty round adds one job that
+    checkpoints the settled set. Unreached nodes are absent (the
+    caller left-joins and fills with NULL/inf); `max_hops` bounds the
+    rounds, so a pathological 10^6-long chain costs max_hops rounds,
+    not 10^6.
 
     Returns (node, hops) with hops = minimal edge count from the
     nearest source (0 for the sources themselves). Weighted shortest
@@ -105,14 +106,24 @@ def hop_distance(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=True)
 
-    settled, _, _ = fixpoint(
-        sources.select(F.col(sources.columns[0]).alias("node"), F.lit(0).alias("hops")).distinct(),
-        lambda frontier, h: frontier.join(adj, frontier["node"] == adj["u"]).select(
-            F.col("v").alias("node"), F.lit(h).alias("hops")
-        ),
-        ["node"],
-        max_hops,
+    settled = frontier = (
+        sources.select(F.col(sources.columns[0]).alias("node"), F.lit(0).alias("hops"))
+        .distinct()
+        .localCheckpoint(eager=True)
     )
+    for h in range(1, max_hops + 1):
+        seen = Observation()
+        frontier = (
+            frontier.join(adj, frontier["node"] == adj["u"])
+            .select(F.col("v").alias("node"), F.lit(h).alias("hops"))
+            .join(settled.select("node"), "node", "left_anti")
+            .distinct()
+            .observe(seen, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        if seen.get["n"] == 0:
+            break
+        settled = settled.unionByName(frontier).localCheckpoint(eager=True)
     return settled
 
 
@@ -131,8 +142,8 @@ def shortest_distance(
     exit) or `max_rounds` (a distance then reflects the best path of
     <= max_rounds edges — the screening contract; weighted exact
     routing beyond that belongs to a router over the extracted
-    subgraph). localCheckpoint truncates lineage per round. Not
-    functions/fixpoint: a round replaces rows rather than appending.
+    subgraph). localCheckpoint truncates lineage per round. Unlike
+    hop_distance's rounds, a round replaces rows rather than appending.
 
     Returns (node, dist) — dist = minimal edge-weight sum from the
     nearest source (0 for sources). Unreached nodes are absent."""

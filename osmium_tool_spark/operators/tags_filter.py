@@ -27,10 +27,10 @@ reference's do: one Arrow collect fetches (type, id, matches XOR invert,
 refs, member types and refs) of the ways and relations the passes need,
 the driver closes the sets, and one left join against an Arrow local
 relation (type, id, __m, __r) emits (_marks_in_ram). Larger inputs, or a
-threshold of -1, keep the sets as DataFrames: a fixpoint of joins for the
-relation closure and one left join per set and type (_emit_distributed).
-The in-RAM path persists nothing; the join path only checkpoints the
-fixpoint's rounds, and only when relations nest.
+threshold of -1, keep the sets as DataFrames, joined once per set and
+type (_emit_distributed); only the relation closure runs on the driver
+there, over the collected relation-in-relation edges
+(idsets.close_nested). Neither path persists anything.
 """
 
 from __future__ import annotations
@@ -38,8 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.fixpoint import CLOSURE_ROUNDS, fixpoint
-from ..functions.idsets import broadcastable, close_relations, list_items
+from ..functions.idsets import CLOSURE_ROUNDS, broadcastable, close_nested, close_relations, edge_step, list_items
 from ..functions.sortkeys import canonical_sort
 from ..functions.tagexpr import CompiledFilter
 from ..schema import NODE, RELATION, WAY
@@ -107,19 +106,13 @@ def _marks_in_ram(entities: DataFrame, f: CompiledFilter, invert: bool, rel_pass
     row, mtype = list_items(rels["mt"])
     _, mref = list_items(rels["mr"])
     owner = rel_id[row]
-    children: dict[int, set[int]] = {}
     nested = mtype == RELATION
-    for p, c in zip(owner[nested].tolist(), mref[nested].tolist()):
-        children.setdefault(p, set()).add(c)
     # descendants over parent->member edges (mark_rel_ids, command_tags_filter.cpp:247-254);
     # the seed ids all match, so counting them as referenced leaves emit unchanged
     ref_rel = close_relations(
-        set(rel_id[rel_m].tolist()),
-        lambda frontier: set().union(*(children.get(r, ()) for r in frontier)),
-        CLOSURE_ROUNDS,
-        "tags_filter",
+        {(r,) for r in rel_id[rel_m].tolist()}, edge_step(owner[nested], mref[nested]), CLOSURE_ROUNDS, "tags_filter"
     )
-    ref_rel_ids = np.fromiter(ref_rel, np.int64, len(ref_rel))
+    ref_rel_ids = np.fromiter((r for (r,) in ref_rel), np.int64, len(ref_rel))
     in_ref = np.isin(owner, ref_rel_ids)
     ref_way = mref[in_ref & (mtype == WAY)]
 
@@ -167,25 +160,16 @@ def _emit_distributed(
 
     if run_rel_pass:
         matching_rel_ids = rels.filter(_xor(f.matches_relation(tags), invert)).select("id")
-        rel_edges = (
+        # descendants over parent->member edges (mark_rel_ids, command_tags_filter.cpp:247-254);
+        # the seed ids all match, so counting them as referenced leaves emit unchanged
+        ref_rel_ids = close_nested(
+            matching_rel_ids,
             rels.select("id", F.explode("members").alias("m"))
             .filter(F.col("m.mtype") == RELATION)
-            .select("id", F.col("m.ref").alias("member_id"))
+            .select("id", F.col("m.ref").alias("to")),
+            CLOSURE_ROUNDS,
+            "tags_filter",
         )
-        # descendants over parent->member edges (mark_rel_ids, command_tags_filter.cpp:247-254);
-        # the seed ids all match, so counting them as referenced leaves emit unchanged.
-        # Rel-in-rel edges are rare: one probe skips the fixpoint's eager
-        # checkpoints when there are none
-        ref_rel_ids = matching_rel_ids
-        if not rel_edges.isEmpty():
-            ref_rel_ids, converged, sizes = fixpoint(
-                matching_rel_ids,
-                lambda frontier, _: rel_edges.join(frontier, "id").select(F.col("member_id").alias("id")),
-                ["id"],
-                CLOSURE_ROUNDS,
-            )
-            if not converged:
-                raise ValueError(f"tags_filter: relations nested over {CLOSURE_ROUNDS} deep, frontier sizes {sizes}")
         ref_members = rels.join(ref_rel_ids, on="id", how="left_semi").select(
             F.explode("members").alias("m")
         ).select(F.col("m.mtype").alias("mtype"), F.col("m.ref").alias("ref"))
@@ -226,4 +210,4 @@ def _emit_distributed(
     out_ways = emit(ways, matching_way_ids, ref_way_ids, None)
     out_rels = emit(rels, matching_rel_ids, ref_rel_ids, None)
 
-    return canonical_sort(out_nodes.unionByName(out_ways).unionByName(out_rels))
+    return canonical_sort(out_nodes.unionByName(out_ways).unionByName(out_rels).select(*entities.columns))

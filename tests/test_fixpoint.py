@@ -1,22 +1,23 @@
-"""The semi-naive fixpoint helper and the four operators built on it,
-checked against pure-Python set / BFS references over random small
-entity graphs (relations nested in relations, cycles, self-members and
-dangling member refs included)."""
+"""The relation closures of getid -r, tags-filter and extract and the
+frontier loop of hop_distance, checked against pure-Python set / BFS
+references over random small entity graphs (relations nested in
+relations, cycles, self-members and dangling member refs included), and
+the in-RAM and join paths of the ID engine checked against each other."""
 
 from collections import deque
 
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
-from osmium_tool_spark.functions.fixpoint import fixpoint
+from osmium_tool_spark.functions import idsets
 from osmium_tool_spark.functions.geometry import Extract
 from osmium_tool_spark.operators import extract as extract_mod
 from osmium_tool_spark.operators import idops
 from osmium_tool_spark.operators import tags_filter as tags_filter_mod
 from osmium_tool_spark.operators.network import hop_distance
 from osmium_tool_spark.schema import NODE, RELATION, WAY
+from tests.conftest import job_count
 from tests.fixtures import _df, _node, _rel, _way
 
 # each example of the entity-graph properties costs 30-45 Spark jobs
@@ -26,8 +27,8 @@ PROPS = settings(max_examples=2, deadline=None)
 @st.composite
 def graphs(draw):
     """(nodes {id: (lon, lat)}, ways {id: refs}, rels {id: [(mtype, ref)]},
-    tagged rel ids). Each id range has one id past its end, so members
-    and refs may dangle."""
+    rel ids tagged k=a, rel ids tagged type=multipolygon). Each id range
+    has one id past its end, so members and refs may dangle."""
     n_nodes = draw(st.integers(1, 6))
     coord = st.integers(0, 3)
     nodes = {i: (draw(coord), draw(coord)) for i in range(1, n_nodes + 1)}
@@ -42,7 +43,8 @@ def graphs(draw):
     )
     rels = {i: draw(st.lists(member, max_size=4)) for i in range(1, n_rels + 1)}
     tagged = draw(st.sets(st.sampled_from(sorted(rels))))
-    return nodes, ways, rels, tagged
+    multipolygons = draw(st.sets(st.sampled_from(sorted(rels))))
+    return nodes, ways, rels, tagged, multipolygons
 
 
 # r1 -> r2 -> r3 -> r4 -> r2: a nesting chain that closes into a cycle
@@ -52,15 +54,20 @@ NESTED = (
     {1: [(RELATION, 2)], 2: [(RELATION, 3)], 3: [(RELATION, 4), (WAY, 1)],
      4: [(RELATION, 2), (NODE, 2)], 5: [(RELATION, 1)]},
     {1},
+    set(),
 )
 
 
 def entities(spark, g):
-    nodes, ways, rels, tagged = g
+    nodes, ways, rels, tagged, multipolygons = g
     rows = [_node(i, lon, lat) for i, (lon, lat) in nodes.items()]
     rows += [_way(i, refs) for i, refs in ways.items()]
     rows += [
-        _rel(i, [(t, r, "") for t, r in mem], {"k": "a"} if i in tagged else {})
+        _rel(
+            i,
+            [(t, r, "") for t, r in mem],
+            ({"k": "a"} if i in tagged else {}) | ({"type": "multipolygon"} if i in multipolygons else {}),
+        )
         for i, mem in rels.items()
     ]
     return _df(spark, rows)
@@ -84,7 +91,7 @@ def closure(start, succ):
 
 
 def present(g, per_type):
-    nodes, ways, rels, _ = g
+    nodes, ways, rels, *_ = g
     have = {NODE: nodes, WAY: ways, RELATION: rels}
     return {(t, i) for t, ids in per_type.items() for i in ids if i in have[t]}
 
@@ -94,7 +101,7 @@ def members_of(rels, rel_ids, mtype):
 
 
 def check_getid_recursive(spark, g, picks):
-    nodes, ways, rels, _ = g
+    nodes, ways, rels, *_ = g
     rel_ids = closure(picks, lambda r: rel_children(rels, r))
     way_ids = members_of(rels, rel_ids, WAY)
     node_ids = members_of(rels, rel_ids, NODE)
@@ -121,7 +128,7 @@ def test_getid_recursive_matches_reference_distributed(spark, distributed_ids, g
 
 
 def check_tags_filter_relation_closure(spark, g):
-    nodes, ways, rels, tagged = g
+    nodes, ways, rels, tagged, _ = g
     rel_ids = closure(tagged & set(rels), lambda r: rel_children(rels, r))
     way_ids = members_of(rels, rel_ids, WAY)
     node_ids = members_of(rels, rel_ids, NODE)
@@ -150,7 +157,7 @@ BOXES = [Extract.bbox(0, 0, 0, 1.5, 1.5), Extract.bbox(1, 1, 1, 3, 3)]
 
 
 def check_extract_complete_ways(spark, g):
-    nodes, ways, rels, _ = g
+    nodes, ways, rels, *_ = g
     parents = {}
     for r, mem in rels.items():
         for t, m in mem:
@@ -220,27 +227,6 @@ def test_hop_distance_matches_bfs(spark, chains, sources, max_hops):
     assert got == want
 
 
-def _chain(spark, n):
-    """Seed {0} and a step following the edge chain 0 -> 1 -> ... -> n."""
-    edges = spark.createDataFrame([(i, i + 1) for i in range(n)], "parent_id long, member_id long")
-    seed = spark.createDataFrame([(0,)], "id long")
-
-    def step(frontier, _):
-        return edges.join(frontier.withColumnRenamed("id", "parent_id"), "parent_id").select(
-            F.col("member_id").alias("id")
-        )
-
-    return seed, step
-
-
-def test_overrun_reports_not_converged(spark):
-    seed, step = _chain(spark, 5)
-    closed, converged, sizes = fixpoint(seed, step, ["id"], 3)
-    assert not converged
-    assert sizes == [1, 1, 1]
-    assert sorted(r.id for r in closed.collect()) == [0, 1, 2, 3]
-
-
 # r1 -> r2 -> r3 -> r4, tagged at the top and with a node at the bottom,
 # so every closure caller needs 4 rounds
 CHAIN = (
@@ -248,6 +234,7 @@ CHAIN = (
     {},
     {1: [(RELATION, 2)], 2: [(RELATION, 3)], 3: [(RELATION, 4)], 4: [(NODE, 1)]},
     {1},
+    set(),
 )
 
 
@@ -275,23 +262,84 @@ def test_closure_callers_raise_at_round_cap_distributed(spark, distributed_ids, 
     test_closure_callers_raise_at_round_cap(spark, monkeypatch, module, run)
 
 
-def test_one_job_per_frontier(spark):
-    """Without AQE (which runs each shuffle stage as its own job) every
-    eager checkpoint is exactly one job: the seed, then per round the
-    frontier, plus the grown set when the frontier is non-empty. A separate
-    emptiness probe would add one job per round."""
-    sc = spark.sparkContext
-    seed, step = _chain(spark, 3)
-    conf = {"spark.sql.adaptive.enabled": "false", "spark.sql.autoBroadcastJoinThreshold": "-1"}
-    saved = {k: spark.conf.get(k) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
+@CLOSURE_CALLERS
+def test_closure_callers_raise_past_edge_cap_distributed(spark, distributed_ids, monkeypatch, module, run):
+    monkeypatch.setattr(idsets, "MAX_NESTED_EDGES", 2)
+    with pytest.raises(ValueError, match=r"3 relation-in-relation edges > MAX_NESTED_EDGES=2"):
+        run(entities(spark, CHAIN)).collect()
+
+
+def test_one_job_per_frontier(spark, distributed_ids):
+    """Without AQE (which runs each shuffle stage as its own job) or
+    broadcasts, every eager checkpoint of hop_distance is exactly one
+    job: the adjacency, the sources, then per round the frontier, plus
+    the settled set when the frontier is non-empty. A separate emptiness
+    probe would add one job per round."""
+    ways = spark.createDataFrame([(1, [0, 1, 2, 3])], "id long, refs array<long>")
+    sources = spark.createDataFrame([(0,)], "node long")
+    assert job_count(spark, lambda: hop_distance(ways, sources, max_hops=10)) == 1 + 1 + 2 * 3 + 1
+
+
+@st.composite
+def extract_options(draw):
+    strategy = draw(st.sampled_from(["simple", "complete_ways", "smart"]))
+    opts = {"strategy": strategy, "relations": draw(st.booleans())}
+    if strategy == "smart":
+        opts["smart_types"] = draw(st.sampled_from([None, [], ["multipolygon"], ["boundary"]]))
+        opts["smart_tags"] = draw(st.sampled_from([None, ["k=a"]]))
+        opts["complete_partial_relations_pct"] = draw(st.sampled_from([None, 50, 100]))
+    return opts
+
+
+@st.composite
+def tags_filter_options(draw):
+    return {
+        "expressions": draw(st.sampled_from([["r/k=a"], ["r/type=multipolygon"], ["k=a"], ["n/k=a", "w/k=a"]])),
+        "invert": draw(st.booleans()),
+        "omit_referenced": draw(st.booleans()),
+        "remove_tags": draw(st.booleans()),
+    }
+
+
+def outputs(ents, picks, ex, tf):
+    """Each ID-engine operator with a relation closure, as (columns, rows)."""
+    frames = [
+        idops.getid(ents, {RELATION: sorted(picks)}, recursive=True),
+        extract_mod.extract(ents, BOXES, **ex),
+        tags_filter_mod.tags_filter(ents, tf["expressions"], **{k: v for k, v in tf.items() if k != "expressions"}),
+    ]
+    return [(df.columns, [r.asDict(recursive=True) for r in df.collect()]) for df in frames]
+
+
+DEFAULT_TAGS_FILTER = {"expressions": ["r/k=a"], "invert": False, "omit_referenced": False, "remove_tags": False}
+
+
+# one example of the join path crashing on smart without relations, one
+# of its tags-filter returning `id` as the first column
+@settings(max_examples=3, deadline=None)
+@given(
+    g=graphs(),
+    picks=st.sets(st.integers(1, 7), max_size=3),
+    ex=extract_options(),
+    tf=tags_filter_options(),
+)
+@example(
+    g=(*NESTED[:4], {3}),
+    picks={1},
+    ex={"strategy": "smart", "relations": False, "smart_types": None, "smart_tags": None,
+        "complete_partial_relations_pct": None},
+    tf=DEFAULT_TAGS_FILTER,
+)
+@example(g=NESTED, picks={5}, ex={"strategy": "complete_ways", "relations": True}, tf=DEFAULT_TAGS_FILTER)
+def test_paths_agree(spark, g, picks, ex, tf):
+    """The in-RAM and join paths give the same rows, in the same order and
+    with the same columns, for every drawn option."""
+    ents = entities(spark, g)
+    in_ram = outputs(ents, picks, ex, tf)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
     try:
-        sc.setJobGroup("fixpoint-jobs", "fixpoint job count")
-        _, converged, sizes = fixpoint(seed, step, ["id"], 10)
+        assert outputs(ents, picks, ex, tf) == in_ram
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-    assert converged and sizes == [1, 1, 1, 0]
-    assert len(sc.statusTracker().getJobIdsForGroup("fixpoint-jobs")) == 1 + 2 * 3 + 1
+        spark.conf.set(key, saved)

@@ -168,10 +168,11 @@ def test_in_ram_job_counts(spark, inp):
 
 
 def test_distributed_job_counts(spark, inp, distributed_ids):
-    """The distributed path's counts, pinned: getid -r on r36 and renumber
-    launch 16 and 8 jobs."""
+    """The distributed path's counts, pinned. getid -r on r36 collects the
+    relation-in-relation edges and the seed rows they touch, then sorts
+    (range sample and result); renumber launches 8 jobs."""
     assert id_path_is(inp, False)
-    assert job_count(spark, lambda: idops.getid(inp, {RELATION: [36]}, recursive=True).collect()) == 16
+    assert job_count(spark, lambda: idops.getid(inp, {RELATION: [36]}, recursive=True).collect()) == 2 + 2
     assert job_count(spark, lambda: idops.renumber(inp).collect()) == 8
 
 
@@ -238,13 +239,14 @@ def test_mark_sets_in_ram_job_counts(spark, inp, site):
 
 
 def test_mark_sets_distributed_job_counts(spark, inp, site, distributed_ids):
-    """The distributed path's counts, pinned. tags-filter on the nested
-    site relations probes the relation edges once, then runs the
-    fixpoint."""
+    """The distributed path's counts, pinned. The relation closures of
+    extract (complete_ways and smart) and of tags-filter on the nested
+    site relations each collect the relation-in-relation edges and the
+    seed rows they touch, then sort (range sample and result)."""
     assert id_path_is(inp, False) and id_path_is(site, False)
     counts = {s: job_count(spark, lambda: extract(inp, BBOX, strategy=s).collect()) for s in STRATEGIES}
-    assert counts == {"simple": 2, "complete_ways": 9, "smart": 9}
-    assert job_count(spark, lambda: tags_filter(site, ["r/site"]).collect()) == 7
+    assert counts == {"simple": 2, "complete_ways": 2 + 2, "smart": 2 + 2}
+    assert job_count(spark, lambda: tags_filter(site, ["r/site"]).collect()) == 2 + 2
 
 
 def persisted(spark):
@@ -269,8 +271,7 @@ def test_in_ram_path_persists_nothing(spark, inp, site):
 
 def test_distributed_tags_filter_persists_nothing(spark, distributed_ids):
     """tags-filter's join path leaves no RDD persisted either, when no
-    relation nests in another (the fixpoint's checkpoints, which it then
-    skips, stay registered until GC)."""
+    relation nests in another."""
     from tests.fixtures import _df, _node, _rel, _way
 
     flat = _df(spark, [_node(1, 0, 0), _way(2, [1]), _rel(3, [(WAY, 2, "")], {"k": "a"}), _rel(4, [(NODE, 1, "")])])
@@ -278,6 +279,18 @@ def test_distributed_tags_filter_persists_nothing(spark, distributed_ids):
     for _ in range(3):
         assert rset(tags_filter(flat, ["r/k=a"])) == {(NODE, 1), (WAY, 2), (RELATION, 3)}
     assert id_path_is(flat, False)
+    assert {i for i in persisted(spark) if i > last} == set()
+
+
+def test_distributed_closures_persist_nothing(spark, inp, site, distributed_ids):
+    """Nor do the join paths of getid -r and tags-filter when relations
+    nest (r36 -> r35 -> r31, and the site relations): the closure runs on
+    the driver, with no checkpoint to leave behind."""
+    last = max(persisted(spark), default=-1)
+    for _ in range(3):
+        idops.getid(inp, {RELATION: [36]}, recursive=True).collect()
+        tags_filter(site, ["r/site"]).collect()
+    assert id_path_is(inp, False) and id_path_is(site, False)
     assert {i for i in persisted(spark) if i > last} == set()
 
 
