@@ -2,10 +2,12 @@
 
 The reference keeps every id set in RAM (IdSetDense) and streams its
 input past them. getid -r, renumber, extract and tags-filter do the same
-whenever Spark would broadcast their input (`broadcastable`): they
-collect ids, refs and members to the driver, close their sets there
-(`close_relations`) and send the result back to the executors as an IN
-filter (`id_in`) or an Arrow-backed local relation (`ids_frame`).
+whenever Spark would broadcast what they collect (`broadcastable`) and
+close their sets there (`close_relations`, over `edge_step` and
+`list_items`). getid -r and renumber collect the whole input once and
+return their result as an Arrow local relation in canonical order
+(`canonical_order`, `sorted_frame`); extract and tags-filter collect the
+(type, id, refs, members) projection and emit with one join.
 
 Relation nesting stays on the driver for larger inputs too, as the
 reference keeps it in RAM whatever the file size (RelationsMapStash):
@@ -17,8 +19,9 @@ from __future__ import annotations
 
 from typing import Callable, Hashable, TypeVar
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from .sortkeys import id_sort_keys
 
 T = TypeVar("T", bound=Hashable)
 
@@ -41,32 +44,29 @@ def broadcastable(df: DataFrame) -> bool:
     return 0 <= size <= conf.autoBroadcastJoinThreshold()
 
 
-def id_in(sel: dict[int, set[int]]) -> Column:
-    """(type, id) in a driver-side id set, as one filter that the scan can
-    take as a pushed-down IN. Built from SQL text: Column.isin makes one
-    JVM call per value, about 0.5 ms each."""
-    conds = [
-        f"(`type` = {t} AND `id` IN ({','.join(map(str, sorted(ids)))}))"
-        for t, ids in sorted(sel.items())
-        if ids
-    ]
-    return F.expr(" OR ".join(conds) or "false")
+def canonical_order(table):
+    """The permutation that puts the rows of an Arrow entity table in
+    canonical (type, id_sort_key(id), version) order, a null version
+    first, as canonical_sort orders them in Spark. The sort is stable."""
+    import numpy as np
+    import pyarrow.compute as pc
 
-
-def ids_frame(spark, sel: dict[int, set[int]]) -> DataFrame:
-    """A driver-side id set as a (type, id) frame: an Arrow-backed local
-    relation, so a join reads the ids as a table rather than as SQL
-    literals."""
-    import pyarrow as pa
-
-    return spark.createDataFrame(
-        pa.table(
-            {
-                "type": pa.array([t for t, ids in sel.items() for _ in ids], pa.int32()),
-                "id": pa.array([i for ids in sel.values() for i in ids], pa.int64()),
-            }
+    version = table["version"]
+    return np.lexsort(
+        (
+            pc.fill_null(version, 0).to_numpy(),
+            pc.is_valid(version).to_numpy(),
+            id_sort_keys(table["id"].to_numpy()),
+            table["type"].to_numpy(),
         )
     )
+
+
+def sorted_frame(entities: DataFrame, table) -> DataFrame:
+    """`table`, an Arrow table of `entities` rows, as an Arrow local
+    relation with the input's schema and in canonical order. An action on
+    it launches no job, and no sort is left to run."""
+    return entities.sparkSession.createDataFrame(table.take(canonical_order(table)), schema=entities.schema)
 
 
 def close_relations(seed: set[T], step: Callable[[set[T]], set[T]], rounds: int, who: str) -> set[T]:

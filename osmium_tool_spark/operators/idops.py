@@ -6,21 +6,21 @@ command_getparents.cpp (inverse reference semi-join), command_renumber.cpp
 (order-preserving dense re-id), command_check_refs.cpp (referential
 integrity anti-join).
 
-The reference keeps its id sets (IdSetDense) and renumber's id_map in RAM.
-getid -r and renumber have two paths, chosen per call by Spark's own
-broadcast rule (functions/idsets.broadcastable, which extract and
-tags-filter share): when the plan's size estimate for the input's (type,
-id, refs, members) projection is within
-spark.sql.autoBroadcastJoinThreshold, the id sets and the id map live on
-the driver (one collect per closure round plus one for the ways' refs,
-one Arrow collect for the map) and reach the executors as IN filters or
-local relations. Larger inputs, or a threshold of -1, keep
-them as DataFrames joined against the input; getid -r still closes the
-relation nesting on the driver (idsets.close_nested). An input without a size
-estimate never takes the driver path: read_osm_pbf, read_o5m and
-read_osm_xml build their frames from Python lists, whose estimate is
-unbounded. getid without -r, removeid, getparents and check-refs always
-use (semi/anti) joins, which AQE broadcasts when the id set is small.
+The reference keeps its id sets (IdSetDense) and renumber's id_map in RAM
+and reads its input once. getid -r and renumber have two paths, chosen
+per call by Spark's own broadcast rule (functions/idsets.broadcastable):
+when the plan's size estimate for the whole input is within
+spark.sql.autoBroadcastJoinThreshold, one Arrow collect brings the input
+to the driver, numpy closes the id sets or builds and applies the id map,
+and the result goes back as an Arrow local relation already in canonical
+order (idsets.sorted_frame), so an action on it launches no job. Larger
+inputs, or a threshold of -1, keep the sets and the map as DataFrames
+joined against the input; getid -r still closes the relation nesting on
+the driver (idsets.close_nested). An input without a size estimate never
+takes the driver path: read_osm_pbf, read_o5m and read_osm_xml build
+their frames from Python lists, whose estimate is unbounded. getid
+without -r, removeid, getparents and check-refs always use (semi/anti)
+joins, which AQE broadcasts when the id set is small.
 """
 
 from __future__ import annotations
@@ -28,7 +28,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.idsets import CLOSURE_ROUNDS, broadcastable, close_nested, close_relations, id_in, ids_frame
+from ..functions.idsets import (
+    CLOSURE_ROUNDS,
+    broadcastable,
+    canonical_order,
+    close_nested,
+    close_relations,
+    edge_step,
+    list_items,
+    sorted_frame,
+)
 from ..functions.sortkeys import canonical_sort, id_sort_key, id_sort_keys
 from ..schema import NODE, RELATION, WAY
 
@@ -128,36 +137,6 @@ def merge_id_sets(*id_sets: dict[int, list[int]]) -> dict[int, list[int]]:
     return {t: sorted(set(lst)) for t, lst in out.items()}
 
 
-def _closure_in_ram(entities: DataFrame, sel: dict[int, set[int]]) -> dict[int, set[int]]:
-    """getid -r's reference closure with its id sets on the driver, the
-    way the reference keeps IdSetDense in RAM: each closure round collects
-    the members of the relations the previous round reached, then one
-    collect fetches the refs of every way reached (nodes reference
-    nothing and are never fetched)."""
-    have = {t: set(sel.get(t, ())) for t in (NODE, WAY, RELATION)}
-
-    def members(frontier: set[int]) -> set[int]:
-        rows = (
-            entities.filter(id_in({RELATION: frontier}))
-            .select(F.col("members.mtype").alias("mt"), F.col("members.ref").alias("mr"))
-            .collect()
-        )
-        found = set()
-        for r in rows:
-            for t, ref in zip(r["mt"] or (), r["mr"] or ()):
-                if t == RELATION:
-                    found.add(ref)
-                elif t in have:
-                    have[t].add(ref)
-        return found
-
-    have[RELATION] = close_relations(have[RELATION], members, CLOSURE_ROUNDS, "getid")
-    if have[WAY]:
-        for r in entities.filter(id_in({WAY: have[WAY]})).select("refs").collect():
-            have[NODE].update(r["refs"] or ())
-    return have
-
-
 def getid(
     entities: DataFrame,
     ids: dict[int, list[int]],
@@ -167,13 +146,14 @@ def getid(
     downward until closed (command_getid.cpp:235-333): relation members
     (incl. nested relations), way nodes.
 
-    The recursive closure keeps its id sets on the driver when Spark would
-    broadcast the input's (type, id, refs, members) projection
-    (_closure_in_ram), then semi-joins the input with the closure shipped
-    as a local relation. Larger inputs close the relation nesting on the
+    When Spark would broadcast the whole input, the recursive closure
+    collects it once and runs on the driver (_getid_in_ram), returning a
+    sorted local relation. Larger inputs close the relation nesting on the
     driver too (idsets.close_nested) and mark members and way nodes with
-    joins, so a planet-sized id set never reaches the driver."""
-    if recursive and broadcastable(entities.select("type", "id", "refs", "members")):
+    joins, so a planet-sized id set never reaches the driver. An `ids`
+    DataFrame (--id-osm-file) is first cut to the ids present in the
+    input, so what reaches the driver is bounded by the input."""
+    if recursive and broadcastable(entities):
         if isinstance(ids, DataFrame):
             present = _ids_df(entities, ids).join(entities.select("type", "id"), ["type", "id"], "left_semi")
             sel: dict[int, set[int]] = {}
@@ -181,8 +161,7 @@ def getid(
                 sel.setdefault(r["type"], set()).add(r["id"])
         else:
             sel = {t: set(lst) for t, lst in ids.items()}
-        closure = _closure_in_ram(entities, sel)
-        return canonical_sort(entities.join(ids_frame(entities.sparkSession, closure), ["type", "id"], "left_semi"))
+        return _getid_in_ram(entities, sel)
     sel = _ids_df(entities, ids)
     if recursive:
         rel_edges = (
@@ -226,6 +205,35 @@ def getid(
         )
     out = entities.join(sel, on=["type", "id"], how="left_semi")
     return canonical_sort(out)
+
+
+def _getid_in_ram(entities: DataFrame, sel: dict[int, set[int]]) -> DataFrame:
+    """getid -r on one Arrow collect of the whole input, the way the
+    reference keeps IdSetDense in RAM and reads its file once: the
+    relation nesting closes over the collected members, then the way and
+    node members of the relations reached and the refs of the ways
+    reached join the sets, and np.isin selects the rows."""
+    import numpy as np
+
+    t = entities.toArrow().combine_chunks()
+    typ, ids = t["type"].to_numpy(), t["id"].to_numpy()
+    wrow, wref = list_items(t["refs"])
+    mrow, mtype, mref = _members(t)
+    in_rel = typ[mrow] == RELATION
+    nested = in_rel & (mtype == RELATION)
+    rels = close_relations(
+        {(r,) for r in sel.get(RELATION, ())}, edge_step(ids[mrow[nested]], mref[nested]), CLOSURE_ROUNDS, "getid"
+    )
+    have = {RELATION: np.array([r for (r,) in rels], np.int64)}
+    reached = in_rel & np.isin(ids[mrow], have[RELATION])
+    have[WAY] = np.concatenate([np.fromiter(sel.get(WAY, ()), np.int64), mref[reached & (mtype == WAY)]])
+    way_refs = wref[(typ[wrow] == WAY) & np.isin(ids[wrow], have[WAY])]
+    have[NODE] = np.concatenate([np.fromiter(sel.get(NODE, ()), np.int64), mref[reached & (mtype == NODE)], way_refs])
+    keep = np.zeros(len(typ), bool)
+    for ty, found in have.items():
+        of_type = typ == ty
+        keep[of_type] = np.isin(ids[of_type], found)
+    return sorted_frame(entities, t.filter(keep))
 
 
 def removeid(entities: DataFrame, ids: dict[int, list[int]]) -> DataFrame:
@@ -291,16 +299,17 @@ def renumber(
     (the maximum, or the minimum for a type that counts down).
 
     Scale note: the mapping (type, id, new_id) is built one of two ways.
-    When Spark would broadcast the input's (type, id, refs, members)
-    projection, and the persisted index if there is one, the driver
-    builds it from one Arrow collect, as the reference builds its in-RAM
-    id_map, and ships it back as a local relation (_mapping_in_ram).
-    Larger inputs number their ids with functions/zipindex.dense_index, a
-    range partition plus per-partition prefix-sum offsets, instead of a
-    per-type global window that would serialize 10^12 rows through <=3
-    tasks (_mapping_distributed). Either mapping then rewrites node ids
-    in one join, and way and relation ids, refs and members in one
-    exploded join and one regroup (_remap).
+    When Spark would broadcast the whole input, and the persisted index
+    if there is one, renumber collects the input once, builds the map on
+    the driver as the reference builds its in-RAM id_map
+    (_mapping_in_ram), rewrites ids, refs and members with np.searchsorted
+    (_remap_in_ram) and returns a sorted local relation. Larger inputs
+    number their ids with functions/zipindex.dense_index, a range
+    partition plus per-partition prefix-sum offsets, instead of a per-type
+    global window that would serialize 10^12 rows through <=3 tasks
+    (_mapping_distributed); that map rewrites node ids in one join, and
+    way and relation ids, refs and members in one exploded join and one
+    regroup (_remap).
     """
     import os
 
@@ -311,55 +320,63 @@ def renumber(
     prior = None
     if index_dir and os.path.exists(os.path.join(index_dir, "_SUCCESS")):
         prior = spark.read.parquet(index_dir)
-    in_ram = broadcastable(entities.select("type", "id", "refs", "members")) and (
-        prior is None or broadcastable(prior)
-    )
-    build = _mapping_in_ram if in_ram else _mapping_distributed
-    mapping = build(entities, types, start_ids, prior)
-
+    if broadcastable(entities) and (prior is None or broadcastable(prior)):
+        t = entities.toArrow().combine_chunks()
+        table = _mapping_in_ram(t, types, start_ids, prior)
+        if index_dir:
+            _write_index(spark.createDataFrame(table), index_dir)
+        return sorted_frame(entities, _remap_in_ram(t, table))
+    mapping = _mapping_distributed(entities, types, start_ids, prior)
     if index_dir:
-        import shutil
-
-        # the distributed mapping reads the old index lazily: write aside,
-        # then swap the directories
-        mapping.write.mode("overwrite").parquet(index_dir + ".tmp")
-        shutil.rmtree(index_dir, ignore_errors=True)
-        os.rename(index_dir + ".tmp", index_dir)
-        if not in_ram:
-            mapping = spark.read.parquet(index_dir)
-
+        _write_index(mapping, index_dir)
+        mapping = spark.read.parquet(index_dir)
     return canonical_sort(_remap(entities, mapping))
 
 
-def _mapping_in_ram(
-    entities: DataFrame, types: set[int], start_ids: dict[int, int], prior: DataFrame | None
-) -> DataFrame:
-    """renumber's (type, id, new_id) map built on the driver from one Arrow
-    collect of all ids, way refs and relation members: per type, the
-    input's ids in canonical order, then the absent refs in the order
-    they are first seen (ways before relations, each in canonical
-    (id, version) order, then by position). Shipped back as a local
-    relation."""
-    import numpy as np
-    import pyarrow as pa
+def _write_index(mapping: DataFrame, index_dir: str) -> None:
+    """Persist renumber's map as index_dir. The distributed map reads the
+    old index lazily, so it is written aside and the directories swapped."""
+    import os
+    import shutil
+
+    mapping.write.mode("overwrite").parquet(index_dir + ".tmp")
+    shutil.rmtree(index_dir, ignore_errors=True)
+    os.rename(index_dir + ".tmp", index_dir)
+
+
+def _members(t) -> tuple:
+    """(row index, mtype, ref) numpy arrays of every member in the
+    `members` column of the Arrow entity table `t`, rows in order and
+    each list in order."""
     import pyarrow.compute as pc
 
-    t = entities.select(
-        "type", "id", "version", "refs", F.col("members.mtype").alias("mt"), F.col("members.ref").alias("mr")
-    ).toArrow()
+    members = t["members"].combine_chunks()
+    flat = pc.list_flatten(members)
+    return (
+        pc.list_parent_indices(members).to_numpy(),
+        flat.field("mtype").to_numpy(),
+        flat.field("ref").to_numpy(),
+    )
+
+
+def _mapping_in_ram(t, types: set[int], start_ids: dict[int, int], prior: DataFrame | None):
+    """renumber's (type, id, new_id) map as an Arrow table, built on the
+    driver from the collected input `t` as the reference builds its
+    in-RAM id_map: per type, the input's ids in canonical order, then the
+    absent refs in the order they are first seen (ways before relations,
+    each in canonical (id, version) order, then by position)."""
+    import numpy as np
+    import pyarrow as pa
+
     typ, ids = t["type"].to_numpy(), t["id"].to_numpy()
-
-    def flat(src_type, col):
-        """The list column of src_type rows, concatenated in canonical
-        (id, version) order; a null version sorts first, as in Spark."""
-        sub = t.filter(pc.equal(t["type"], src_type))
-        version = pc.fill_null(sub["version"], -(1 << 31)).to_numpy()
-        order = np.lexsort((version, id_sort_keys(sub["id"].to_numpy())))
-        return pc.list_flatten(sub[col].take(order)).to_numpy().astype(np.int64)
-
-    wrefs = flat(WAY, "refs")
-    ref_t = np.concatenate([np.full(len(wrefs), NODE), flat(RELATION, "mt")])
-    ref_id = np.concatenate([wrefs, flat(RELATION, "mr")])
+    rank = np.empty(len(typ), np.int64)
+    rank[canonical_order(t)] = np.arange(len(typ))
+    wrow, wref = list_items(t["refs"])
+    mrow, mtype, mref = _members(t)
+    way, rel = typ[wrow] == WAY, typ[mrow] == RELATION
+    seen = np.argsort(rank[np.concatenate([wrow[way], mrow[rel]])], kind="stable")
+    ref_t = np.concatenate([np.full(way.sum(), NODE), mtype[rel]])[seen]
+    ref_id = np.concatenate([wref[way], mref[rel]])[seen]
 
     cols = ("type", "id", "new_id")
     empty = pa.table({c: pa.array([], pa.int64()) for c in cols})
@@ -384,8 +401,57 @@ def _mapping_in_ram(
         ids_ty = np.concatenate([known, absent])
         parts.append((np.full(len(ids_ty), ty), ids_ty, np.concatenate([new, ext])))
     out_t, out_id, out_new = (np.concatenate(c) for c in zip(*parts))
-    table = pa.table({"type": pa.array(out_t, pa.int32()), "id": out_id, "new_id": out_new})
-    return entities.sparkSession.createDataFrame(table)
+    return pa.table({"type": pa.array(out_t, pa.int32()), "id": out_id, "new_id": out_new})
+
+
+def _remap_in_ram(t, mapping):
+    """The collected input `t` with its ids, way refs and relation member
+    refs rewritten through the Arrow (type, id, new_id) table `mapping`,
+    one np.searchsorted per type; ids the mapping lacks keep their
+    value."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    mt, mid, mnew = (mapping[c].to_numpy() for c in ("type", "id", "new_id"))
+    maps = {}
+    for ty in np.unique(mt):
+        order = np.argsort(mid[mt == ty])
+        maps[ty] = mid[mt == ty][order], mnew[mt == ty][order]
+
+    def remap(types, values):
+        out = values.copy()
+        for ty, (keys, new) in maps.items():
+            of_type = types == ty
+            i = np.minimum(np.searchsorted(keys, values[of_type]), len(keys) - 1)
+            out[of_type] = np.where(keys[i] == values[of_type], new[i], values[of_type])
+        return out
+
+    def relist(lists, values):
+        """`values`, one per element of the list column `lists`, in its shape."""
+        lists = lists.combine_chunks()
+        lengths = pc.fill_null(pc.list_value_length(lists), 0).to_numpy()
+        offsets = pa.array(np.concatenate([[0], np.cumsum(lengths)]), pa.int32())
+        return pa.ListArray.from_arrays(offsets, values, lists.type, mask=lists.is_null() if lists.null_count else None)
+
+    typ = t["type"].to_numpy()
+    wrow, wref = list_items(t["refs"])
+    mrow, mtype, mref = _members(t)
+    # nodes reference nothing: only way refs and relation members move
+    refs = remap(np.where(typ[wrow] == WAY, NODE, -1), wref)
+    flat = pc.list_flatten(t["members"].combine_chunks())
+    members = pa.StructArray.from_arrays(
+        [flat.field("mtype"), pa.array(remap(np.where(typ[mrow] == RELATION, mtype, -1), mref)), flat.field("role")],
+        fields=list(flat.type),
+        mask=flat.is_null() if flat.null_count else None,
+    )
+    for name, col in (
+        ("id", pa.array(remap(typ, t["id"].to_numpy()))),
+        ("refs", relist(t["refs"], refs)),
+        ("members", relist(t["members"], members)),
+    ):
+        t = t.set_column(t.schema.get_field_index(name), name, col)
+    return t
 
 
 def _mapping_distributed(

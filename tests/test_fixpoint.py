@@ -2,7 +2,8 @@
 frontier loop of hop_distance, checked against pure-Python set / BFS
 references over random small entity graphs (relations nested in
 relations, cycles, self-members and dangling member refs included), and
-the in-RAM and join paths of the ID engine checked against each other."""
+the in-RAM and join paths of the ID engine (getid -r, renumber, extract
+and tags-filter) checked against each other."""
 
 from collections import deque
 
@@ -301,10 +302,22 @@ def tags_filter_options(draw):
     }
 
 
-def outputs(ents, picks, ex, tf):
-    """Each ID-engine operator with a relation closure, as (columns, rows)."""
+@st.composite
+def renumber_options(draw):
+    """start_ids positive, negative or mixed per type, and object_types."""
+    start = st.one_of(st.integers(-5, -1), st.integers(1, 5))
+    types = st.sampled_from([NODE, WAY, RELATION])
+    return {
+        "start_ids": draw(st.dictionaries(types, start)),
+        "object_types": draw(st.one_of(st.none(), st.lists(types, min_size=1, unique=True))),
+    }
+
+
+def outputs(ents, picks, ex, tf, rn):
+    """Each ID-engine operator with two paths, as (columns, rows)."""
     frames = [
         idops.getid(ents, {RELATION: sorted(picks)}, recursive=True),
+        idops.renumber(ents, **rn),
         extract_mod.extract(ents, BOXES, **ex),
         tags_filter_mod.tags_filter(ents, tf["expressions"], **{k: v for k, v in tf.items() if k != "expressions"}),
     ]
@@ -322,6 +335,7 @@ DEFAULT_TAGS_FILTER = {"expressions": ["r/k=a"], "invert": False, "omit_referenc
     picks=st.sets(st.integers(1, 7), max_size=3),
     ex=extract_options(),
     tf=tags_filter_options(),
+    rn=renumber_options(),
 )
 @example(
     g=(*NESTED[:4], {3}),
@@ -329,17 +343,24 @@ DEFAULT_TAGS_FILTER = {"expressions": ["r/k=a"], "invert": False, "omit_referenc
     ex={"strategy": "smart", "relations": False, "smart_types": None, "smart_tags": None,
         "complete_partial_relations_pct": None},
     tf=DEFAULT_TAGS_FILTER,
+    rn={"start_ids": {}, "object_types": None},
 )
-@example(g=NESTED, picks={5}, ex={"strategy": "complete_ways", "relations": True}, tf=DEFAULT_TAGS_FILTER)
-def test_paths_agree(spark, g, picks, ex, tf):
+@example(
+    g=NESTED,
+    picks={5},
+    ex={"strategy": "complete_ways", "relations": True},
+    tf=DEFAULT_TAGS_FILTER,
+    rn={"start_ids": {NODE: -1, WAY: 3, RELATION: -2}, "object_types": [RELATION, NODE]},
+)
+def test_paths_agree(spark, g, picks, ex, tf, rn):
     """The in-RAM and join paths give the same rows, in the same order and
     with the same columns, for every drawn option."""
     ents = entities(spark, g)
-    in_ram = outputs(ents, picks, ex, tf)
+    in_ram = outputs(ents, picks, ex, tf, rn)
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        assert outputs(ents, picks, ex, tf) == in_ram
+        assert outputs(ents, picks, ex, tf, rn) == in_ram
     finally:
         spark.conf.set(key, saved)

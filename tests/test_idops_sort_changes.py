@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osmium_tool_spark.functions.geometry import Extract
-from osmium_tool_spark.functions.idsets import broadcastable, ids_frame
+from osmium_tool_spark.functions.idsets import broadcastable
 from osmium_tool_spark.operators import aggregates, changes, idops, sort_merge
 from osmium_tool_spark.operators.extract import extract
 from osmium_tool_spark.operators.tags_filter import tags_filter
@@ -42,8 +42,12 @@ def hist(spark):
 DANGLING = f"NOT ((type = {NODE} AND id = 12) OR (type = {RELATION} AND id = 35))"
 
 
-def id_path_is(inp, in_ram):
-    return broadcastable(inp.select("type", "id", "refs", "members")) is in_ram
+def id_path_is(inp, in_ram, whole_rows=False):
+    """Whether `inp` takes the ID engine's in-RAM path. getid -r and
+    renumber collect whole rows and size them (`whole_rows`); extract and
+    tags-filter size the (type, id, refs, members) projection they
+    collect."""
+    return broadcastable(inp if whole_rows else inp.select("type", "id", "refs", "members")) is in_ram
 
 
 class GetIdRecursive:
@@ -52,7 +56,7 @@ class GetIdRecursive:
     in_ram = True  # the fixture is small enough to keep its id sets on the driver
 
     def test_path(self, inp):
-        assert id_path_is(inp, self.in_ram)
+        assert id_path_is(inp, self.in_ram, whole_rows=True)
 
     def test_recursive_way(self, inp):
         got = rset(idops.getid(inp, {WAY: [20]}, recursive=True))
@@ -66,6 +70,10 @@ class GetIdRecursive:
     def test_recursive_dangling_refs(self, inp):
         got = rset(idops.getid(inp.filter(DANGLING), {WAY: [20], RELATION: [36]}, recursive=True))
         assert got == {(WAY, 20), (NODE, 11), (NODE, 13), (RELATION, 36)}
+
+    def test_empty_input(self, inp):
+        got = idops.getid(inp.filter("id < 0"), {WAY: [20], RELATION: [36]}, recursive=True)
+        assert got.schema == inp.schema and got.collect() == []
 
     def test_recursive_nesting_over_round_cap_raises(self, inp, monkeypatch):
         # r36 -> r35 -> r31 needs a third round to find nothing new
@@ -99,7 +107,7 @@ class TestRenumber:
     in_ram = True
 
     def test_path(self, inp):
-        assert id_path_is(inp, self.in_ram)
+        assert id_path_is(inp, self.in_ram, whole_rows=True)
 
     def test_dense_and_refs_remapped(self, inp):
         out = idops.renumber(inp).collect()
@@ -131,6 +139,12 @@ class TestRenumber:
         assert by[(WAY, 1)]["refs"] == [2, 7, 3]
         assert [m["ref"] for m in by[(RELATION, 5)]["members"]] == [6]
 
+    def test_empty_input(self, inp):
+        got = idops.renumber(inp.filter("id < 0"), start_ids={NODE: -1})
+        assert got.collect() == [] and got.dtypes == inp.dtypes
+        if self.in_ram:  # the join path's regroup makes every column nullable
+            assert got.schema == inp.schema
+
     def test_empty_refs_and_members_stay_empty(self, spark):
         from tests.fixtures import _df, _rel, _way
 
@@ -150,28 +164,22 @@ class TestRenumberDistributed(TestRenumber):
 
 
 def test_in_ram_job_counts(spark, inp):
-    """getid -r on r36 (r36 -> r35 -> r31) collects once per closure level,
-    then semi-joins the closure and sorts. renumber makes one Arrow
-    collect; its final action broadcasts the mapping twice (the node join
-    reads only the node part of it) and sorts. An eager probe would add a
-    job to either."""
-    from osmium_tool_spark.functions.sortkeys import canonical_sort
-
-    assert id_path_is(inp, True)
-    closure = {RELATION: {31, 35, 36}, NODE: {10}}
-    final = job_count(
-        spark,
-        lambda: canonical_sort(inp.join(ids_frame(spark, closure), ["type", "id"], "left_semi")).collect(),
-    )
-    assert job_count(spark, lambda: idops.getid(inp, {RELATION: [36]}, recursive=True).collect()) == 3 + final
-    assert job_count(spark, lambda: idops.renumber(inp).collect()) == 1 + 1 + final
+    """getid -r on r36 (r36 -> r35 -> r31) and renumber each collect the
+    whole input once, do the rest on the driver and return a sorted Arrow
+    local relation: collecting that launches no job. An eager probe, a
+    second read or a Spark-side sort would add one."""
+    assert id_path_is(inp, True, whole_rows=True)
+    for run in (lambda: idops.getid(inp, {RELATION: [36]}, recursive=True), lambda: idops.renumber(inp)):
+        out = []
+        assert job_count(spark, lambda: out.append(run())) == 1
+        assert job_count(spark, out[0].collect) == 0
 
 
 def test_distributed_job_counts(spark, inp, distributed_ids):
     """The distributed path's counts, pinned. getid -r on r36 collects the
     relation-in-relation edges and the seed rows they touch, then sorts
     (range sample and result); renumber launches 8 jobs."""
-    assert id_path_is(inp, False)
+    assert id_path_is(inp, False, whole_rows=True)
     assert job_count(spark, lambda: idops.getid(inp, {RELATION: [36]}, recursive=True).collect()) == 2 + 2
     assert job_count(spark, lambda: idops.renumber(inp).collect()) == 8
 
@@ -222,6 +230,43 @@ def test_renumber_paths_agree(spark):
     }
 
 
+def local_relation(df):
+    return df._jdf.queryExecution().executedPlan().toString().startswith("LocalTableScan")
+
+
+def test_whole_rows_decide_the_path(spark, tmp_path):
+    """getid -r and renumber size the whole rows they collect, not their
+    (type, id, refs, members) projection: with the threshold between the
+    two estimates of an input with padded tags, both take the join path
+    and give the rows of the in-RAM path, in the same order."""
+    path = str(tmp_path / "padded")
+    pad = F.create_map(F.lit("pad"), F.lit("x" * 4000))
+    fixtures.extract_input1(spark).withColumn("tags", F.map_concat("tags", pad)).write.parquet(path)
+    padded = spark.read.parquet(path)
+    runs = [
+        lambda: idops.getid(padded, {WAY: [20], RELATION: [36]}, recursive=True),
+        lambda: idops.renumber(padded, start_ids={NODE: -1}),
+    ]
+    assert id_path_is(padded, True, whole_rows=True)
+    in_ram = [run() for run in runs]
+    assert all(map(local_relation, in_ram))
+
+    def size(df):
+        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str((size(padded.select("type", "id", "refs", "members")) + size(padded)) // 2))
+    try:
+        assert id_path_is(padded, True) and id_path_is(padded, False, whole_rows=True)
+        for run, want in zip(runs, in_ram):
+            got = run()
+            assert not local_relation(got)
+            assert got.collect() == want.collect()
+    finally:
+        spark.conf.set(key, saved)
+
+
 STRATEGIES = ("simple", "complete_ways", "smart")
 BBOX = [Extract.bbox(0, 0, 0, 1.5, 10)]
 
@@ -265,7 +310,7 @@ def test_in_ram_path_persists_nothing(spark, inp, site):
         for strategy in STRATEGIES:
             extract(inp, BBOX, strategy=strategy).collect()
         tags_filter(site, ["r/site"], remove_tags=True).collect()
-    assert id_path_is(inp, True) and id_path_is(site, True)
+    assert id_path_is(inp, True, whole_rows=True) and id_path_is(site, True)
     assert {i for i in persisted(spark) if i > last} == set()
 
 
@@ -290,7 +335,7 @@ def test_distributed_closures_persist_nothing(spark, inp, site, distributed_ids)
     for _ in range(3):
         idops.getid(inp, {RELATION: [36]}, recursive=True).collect()
         tags_filter(site, ["r/site"]).collect()
-    assert id_path_is(inp, False) and id_path_is(site, False)
+    assert id_path_is(inp, False, whole_rows=True) and id_path_is(site, False)
     assert {i for i in persisted(spark) if i > last} == set()
 
 

@@ -25,6 +25,7 @@ import ast
 import collections
 import functools
 import inspect
+import itertools
 import warnings
 from pathlib import Path
 
@@ -72,7 +73,6 @@ COLUMN_NAMES = {"lon", "lat", "text", "doc_id", "query_id", "query_text", "poly_
 ALLOWED_KNOBS = {
     ("main", "argv"): "the CLI entry point; tests pass an argv list",
     ("main", "spark"): "the CLI entry point; tests pass their session",
-    ("entities", "materialize"): "perfbench/workloads.py sets it through an alias",
     # set only by tests that read the reference fixtures, which fail without them
     ("read_osm_xml", "distributed_min_bytes"): "reference-fixture tests force the split reader",
     ("_read_osm_xml_distributed", "split_bytes"): "reference-fixture tests split tiny inputs",
@@ -141,12 +141,45 @@ def called_name(call: ast.Call):
     return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
 
 
-@functools.cache
-def unset_knobs() -> dict[tuple[str, str], str]:
+def bound_names(value: ast.expr) -> set[str]:
+    """The names an assigned value may hold a function by: a name or
+    attribute, every value of a dict (indexed or not) and both arms of a
+    conditional expression."""
+    if isinstance(value, ast.Name):
+        return {value.id}
+    if isinstance(value, ast.Attribute):
+        return {value.attr}
+    if isinstance(value, ast.Subscript):
+        return bound_names(value.value)
+    if isinstance(value, ast.Dict):
+        return set().union(*map(bound_names, value.values))
+    if isinstance(value, ast.IfExp):
+        return bound_names(value.body) | bound_names(value.orelse)
+    return set()
+
+
+def aliases(tree: ast.Module) -> dict[str, set[str]]:
+    """{alias: names} of a module's names and `self.` attributes assigned a
+    function, as in `range_fn = {"morton": morton_ranges, ...}[curve]` or
+    `self._derive = testdata.entities`. A call through the alias counts
+    as a call of each name; aliases of one module share one namespace."""
+    out = collections.defaultdict(set)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign) and (names := bound_names(node.value)):
+            for target in node.targets:
+                if isinstance(target, ast.Name):
+                    out[target.id] |= names
+                elif isinstance(target, ast.Attribute) and getattr(target.value, "id", None) == "self":
+                    out[target.attr] |= names
+    return out
+
+
+def unset_knobs_in(package: list[Path], callers: list[Path]) -> dict[tuple[str, str], str]:
     """{(function, parameter): "module.py:line"} of the defaulted parameters
-    that no call in CALLERS passes, column names included."""
+    of the functions in `package` that no call in `callers` passes, column
+    names included."""
     defs = collections.defaultdict(list)
-    for path in py_files(PACKAGE):
+    for path in package:
         tree = parsed(path)
         methods = {f for c in ast.walk(tree) if isinstance(c, ast.ClassDef) for f in c.body}
         for node in ast.walk(tree):
@@ -154,11 +187,14 @@ def unset_knobs() -> dict[tuple[str, str], str]:
                 defs[node.name].append((path, node, node in methods))
     keywords = collections.defaultdict(set)
     positional = collections.defaultdict(int)  # most positional arguments any call passes
-    for path in (f for p in CALLERS for f in py_files(p)):
-        for call in ast.walk(parsed(path)):
+    for path in callers:
+        tree = parsed(path)
+        bound = aliases(tree)
+        for call in ast.walk(tree):
             if isinstance(call, ast.Call) and (name := called_name(call)):
-                keywords[name] |= {k.arg for k in call.keywords}
-                positional[name] = max(positional[name], len(call.args))
+                for fn in {name} | bound.get(name, set()):
+                    keywords[fn] |= {k.arg for k in call.keywords}
+                    positional[fn] = max(positional[fn], len(call.args))
     knobs = {}
     for name, [(path, node, method)] in ((n, d) for n, d in defs.items() if len(d) == 1):
         if name not in positional:
@@ -170,8 +206,14 @@ def unset_knobs() -> dict[tuple[str, str], str]:
         defaulted += [p.arg for p, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None]
         for param in defaulted:
             if param not in keywords[name]:
-                knobs[(name, param)] = f"{path.relative_to(ROOT)}:{node.lineno}"
+                knobs[(name, param)] = f"{path.relative_to(ROOT) if path.is_relative_to(ROOT) else path}:{node.lineno}"
     return knobs
+
+
+@functools.cache
+def unset_knobs() -> dict[tuple[str, str], str]:
+    """unset_knobs_in over the package and CALLERS."""
+    return unset_knobs_in(py_files(PACKAGE), [f for p in CALLERS for f in py_files(p)])
 
 
 def knobs() -> dict[tuple[str, str], str]:
@@ -186,3 +228,32 @@ def test_every_knob_is_set_outside_tests():
 def test_knob_allowlist_is_current():
     stale = sorted(set(ALLOWED_KNOBS) - set(knobs()))
     assert not stale, f"allowlisted knobs that now have a caller or are gone: {stale}"
+
+
+PLANTED = {
+    "name": "fn = measure\n",
+    "indexed dict": 'fn = {"a": measure, "b": measure}["a"]\n',
+    "conditional": "fn = measure if True else len\n",
+}
+
+
+def test_alias_calls_are_credited(tmp_path):
+    """A call through an alias sets the knobs it passes, and only those: a
+    planted alias call that passes no keyword still leaves the knob."""
+    pkg = tmp_path / "pkg" / "lib.py"
+    pkg.parent.mkdir()
+    pkg.write_text("def measure(x, step=1):\n    return x * step\n")
+    calls = (("fn(1)", {("measure", "step")}), ("fn(1, step=2)", set()), ("fn(1, 2)", set()))
+    for i, ((label, bind), (call, want)) in enumerate(itertools.product(PLANTED.items(), calls)):
+        caller = tmp_path / f"caller_{i}.py"
+        caller.write_text(bind + call + "\n")
+        assert set(unset_knobs_in([pkg], [caller])) == want, (label, call)
+    holder = tmp_path / "holder.py"
+    holder.write_text(
+        "class W:\n    def __init__(self):\n        self.run = lib.measure\n\n"
+        "    def go(self):\n        return self.run(1)\n"
+    )
+    assert set(unset_knobs_in([pkg], [holder])) == {("measure", "step")}
+    holder.write_text(holder.read_text().replace("self.run(1)", "self.run(1, step=3)"))
+    parsed.cache_clear()
+    assert set(unset_knobs_in([pkg], [holder])) == set()

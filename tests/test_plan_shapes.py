@@ -321,6 +321,12 @@ IN_RAM_EMIT = Shape(
 )
 
 
+# a result computed on the driver: nothing left to scan, shuffle or run in Python
+IN_RAM_RESULT = Shape(
+    0, has={"LocalTableScan"}, lacks=PYTHON | {"FileScan", "BroadcastExchange", "Sort", "InMemoryTableScan"}
+)
+
+
 ROWS: dict[str, tuple[Callable, Shape]] = {
     # bench.py headline rows
     "extract_bbox_simple": (headline("extract_bbox_simple"), IN_RAM_EMIT),
@@ -333,8 +339,14 @@ ROWS: dict[str, tuple[Callable, Shape]] = {
     "extract_bbox_simple_distributed": (headline("extract_bbox_simple"), Shape(18, pushed=TYPES)),
     "extract_complete_ways_distributed": (headline("extract_complete_ways"), Shape(25, pushed=TYPES)),
     "tags_filter_closure_distributed": (headline("tags_filter_closure"), Shape(7, pushed=TYPES[:2])),
-    "getid_recursive": (headline("getid_recursive"), Shape(1)),
-    "renumber": (headline("renumber"), Shape(3, lacks={"Window"})),
+    # getid -r and renumber on small inputs: one Arrow collect, the rest on
+    # the driver, and the sorted result comes back as a local relation
+    "getid_recursive": (headline("getid_recursive"), IN_RAM_RESULT),
+    "renumber": (headline("renumber"), IN_RAM_RESULT),
+    # their join paths: getid -r's member and way-node joins sort-merge, and
+    # renumber numbers with dense_index, not a global Window
+    "getid_recursive_distributed": (headline("getid_recursive"), Shape(13)),
+    "renumber_distributed": (headline("renumber"), Shape(8, lacks={"Window"})),
     # the registry row ranks with an unpartitioned Window: all rows meet in one task
     "sort_canonical": (headline("sort_canonical"), Shape(1, single_windows=1)),
     "time_filter_range": (headline("time_filter_range"), Shape(3)),
